@@ -1,0 +1,6 @@
+"""Make ``benchmark`` importable when pytest is started from anywhere."""
+
+import sys
+from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[2]))
