@@ -3,7 +3,7 @@
 Two tiers:
 
 - **Brute-force cosine** (`cosine_topk`, `cosine_pairs`) — exact baseline.
-  The dot product is ``F.zip_with`` + ``F.aggregate`` array math (JVM-side,
+  The dot product is ``zip_with`` + ``aggregate`` array math (JVM-side,
   no Python). Top-k against a query vector is a narrow map +
   TakeOrderedAndProject: perfectly scalable (one pass, no shuffle beyond
   the k-row heap merge). All-pairs is O(n²) — correct at fixture scale,
@@ -12,9 +12,26 @@ Two tiers:
 - **ANN via random-hyperplane LSH** (`ann_lsh_topk`) — the scale path.
   Sign-bit signatures bucket vectors so the pairwise work happens only
   within buckets (multi-probe = compare against all buckets at Hamming
-  distance ≤ 1 of the query's signature). Recall/latency trades via
+  distance ≤ radius of the query's signature). Recall/latency trades via
   ``num_planes``. Hyperplanes are derived deterministically from a seed so
   runs are reproducible.
+
+Building a single-query plan costs a few Python→JVM gateway calls, not
+one per vector element. Every query-dependent constant — the query
+vector, a PQ lookup table, an LSH hyperplane — is ONE SQL literal,
+``CAST(split('<repr list>', ',') AS ARRAY<DOUBLE>)`` (``_sql_doubles``):
+Python's ``repr`` is the shortest round-trip decimal and Java parses it
+back to the same double (−0.0, NaN, ±inf and subnormals included), and
+constant folding turns the cast into the same array Literal that a
+per-element ``F.array(F.lit(x), …)`` built with one gateway call per
+element. Every per-row fold is one SQL expression over column names
+(``_sql_dot``, ``_sql_sum_sq``, ``_sql_sq_l2``) with the fold tree of the
+Column helpers ``dot``/``norm``, so answers are bit-identical. Constants
+stay out of generated code: an array Literal is held by reference, and
+the LSH probe is ``sig IN (<Hamming ball>)``, which the optimizer turns
+into an ``InSet`` (also by reference) once the ball has more values than
+``spark.sql.optimizer.inSetConversionThreshold`` — so a new query
+vector reuses the cached codegen classes instead of compiling new ones.
 """
 
 from __future__ import annotations
@@ -26,6 +43,8 @@ from pyspark.sql import functions as F
 
 
 def dot(a: Column, b: Column) -> Column:
+    """Dot product of two array columns (the Column-pair twin of
+    ``_sql_dot``, for callers that hold Columns rather than names)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -41,6 +60,55 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _sql_col(name: str) -> str:
+    """A top-level column name as SQL expression text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_vec(name: str) -> str:
+    """``F.col(name).cast("array<double>")`` as SQL expression text."""
+    return f"CAST({_sql_col(name)} AS ARRAY<DOUBLE>)"
+
+
+def _sql_doubles(xs) -> str:
+    """A constant ``ARRAY<DOUBLE>`` as SQL expression text that folds to
+    the same Literal as ``F.array(*[F.lit(float(x)) for x in xs])``,
+    bit for bit: ``repr`` is the shortest decimal that round-trips, and
+    the string→double cast parses it back exactly, including ``-0.0``,
+    ``nan`` and ``±inf`` (pinned by ``test_sql_doubles_round_trip``).
+    The folded Literal's type admits NULL elements (a string→double
+    cast can yield NULL), which no value here uses."""
+    if not len(xs):
+        return "CAST(array() AS ARRAY<DOUBLE>)"
+    text = ",".join(repr(float(x)) for x in xs)
+    return f"CAST(split('{text}', ',') AS ARRAY<DOUBLE>)"
+
+
+def _sql_in(col: str, values) -> str:
+    """``F.col(col).isin(values)`` for integer values, as SQL text."""
+    return f"{_sql_col(col)} IN ({', '.join(str(int(v)) for v in values)})"
+
+
+# The SQL folds name their lambda variables x, y as PySpark names a
+# Python lambda's, so optimized plans print as the Column spelling's do.
+def _sql_dot(a: str, b: str) -> str:
+    """``dot(a, b)``'s sequential left fold over two SQL array expressions."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (x, y) -> x + y)"
+
+
+def _sql_sum_sq(a: str) -> str:
+    """The squared norm under ``norm()``'s sqrt, as SQL text."""
+    return f"aggregate({a}, 0D, (x, y) -> x + y * y)"
+
+
+def _sql_sq_l2(a: str, b: str) -> str:
+    """Squared L2 distance, the sequential fold every L2 tier ranks by."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
+        "0D, (x, y) -> x + y)"
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -51,9 +119,11 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine against a constant query vector.
 
-    The query vector is a literal array (broadcast by constant folding);
-    scoring is a narrow projection; ordering+limit compiles to
-    TakeOrderedAndProject — a per-partition k-heap, no global sort.
+    The query vector is one SQL array literal, built in one gateway
+    call and broadcast by constant folding (``_sql_doubles``); scoring
+    is a narrow projection whose fold is one SQL expression over the
+    vector column; ordering+limit compiles to TakeOrderedAndProject — a
+    per-partition k-heap, no global sort.
 
     Zero-norm vectors are EXCLUDED from the candidate set (ADVICE r14):
     their cosine is 0/0, which under the driver's ANSI session is a
@@ -64,12 +134,10 @@ def cosine_topk(
     every cosine tier shares one candidate rule; pinned by
     ``test_cosine_family_excludes_zero_norm_vectors``.
     """
-    vec = F.col(vec_col).cast("array<double>")
-    norm_sq = F.aggregate(vec, F.lit(0.0), lambda acc, v: acc + v * v)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = df.filter(norm_sq != 0).select(
-        F.col(id_col),
-        F.round(cosine(vec, q), 4).alias("cos_sim"),
+    v, q = _sql_vec(vec_col), _sql_doubles(query_vec)
+    cos = f"{_sql_dot(v, q)} / (sqrt({_sql_sum_sq(v)}) * sqrt({_sql_sum_sq(q)}))"
+    scored = df.filter(f"{_sql_sum_sq(v)} != 0").selectExpr(
+        _sql_col(id_col), f"round({cos}, 4) AS cos_sim"
     )
     if exclude_ids:
         scored = scored.filter(~F.col(id_col).isin(*exclude_ids))
@@ -98,18 +166,9 @@ def l2_topk(
     cross-engine mismatch and a polluted top-k the moment a fixture
     carries null embeddings. ``round_dp`` is threaded like the PQ
     family's so the two tiers can never silently diverge in rounding."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    vec = F.col(vec_col).cast("array<double>")
-    scored = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col),
-        F.round(
-            F.aggregate(
-                F.zip_with(vec, q, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ),
-            round_dp,
-        ).alias("l2"),
+    l2 = _sql_sq_l2(_sql_vec(vec_col), _sql_doubles(query_vec))
+    scored = df.filter(f"{_sql_col(vec_col)} IS NOT NULL").selectExpr(
+        _sql_col(id_col), f"round({l2}, {round_dp}) AS l2"
     )
     if exclude_ids:
         scored = scored.filter(~F.col(id_col).isin(*exclude_ids))
@@ -429,6 +488,8 @@ def lsh_cosine_near_pairs(
     ``lsh_candidate_pairs``. The verify join touches candidate ids only —
     embeddings shuffle once per side, not per pair.
     """
+    if verify_impl not in ("kernel", "jvm"):
+        raise ValueError(f"verify_impl must be 'kernel' or 'jvm', got {verify_impl!r}")
     if num_tables < 1:
         raise ValueError(f"num_tables must be >= 1, got {num_tables}")
     if dim is None:
@@ -554,9 +615,19 @@ def _lsh_verify_broadcast(
     final ``dot / (norm_a * norm_b)`` matches ``cosine()``'s expression
     tree. Norms are computed once per vector at broadcast-build time
     (a per-vector pure function — same doubles as the per-pair fold).
-    NULL vectors and vectors with NULL elements score NULL against
-    everything, exactly like the JVM fold (a NULL product poisons the
-    whole fold)."""
+    Edge values, each matching what the JVM join + fold path emits:
+
+    - NULL vectors, vectors with NULL elements and vectors of another
+      length (``bad[]``) score NULL against everything: a NULL product
+      poisons the whole fold.
+    - Vectors with NaN (or ±inf) elements score the IEEE result, NaN
+      included — the fold's own value, which Spark's NaN-greatest
+      comparison keeps above any threshold, so the pair is emitted.
+    - A zero divisor (a zero-norm vector) scores NULL: there the ANSI
+      JVM fold raises DIVIDE_BY_ZERO, and undefined similarity never
+      passes the threshold.
+    - A candidate id absent from ``df`` scores NULL, as the verify
+      join would drop the pair."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
@@ -595,11 +666,12 @@ def _lsh_verify_broadcast(
     )
 
     def _lookup(col, sorted_ids_, perm_, id2row_):
+        """Matrix row per id, -1 for an id the matrix does not hold."""
         if sorted_ids_ is not None:
-            return perm_[
-                np.searchsorted(sorted_ids_, col.to_numpy(dtype=np.int64))
-            ]
-        return col.map(id2row_).to_numpy(dtype=np.int64)
+            want = col.to_numpy(dtype=np.int64)
+            idx = np.minimum(np.searchsorted(sorted_ids_, want), len(sorted_ids_) - 1)
+            return np.where(sorted_ids_[idx] == want, perm_[idx], -1)
+        return col.map(id2row_).fillna(-1).to_numpy(dtype=np.int64)
 
     def _cos(ia, ib):
         # Broadcast.value caches after the first deref in each worker, so
@@ -611,11 +683,13 @@ def _lsh_verify_broadcast(
         d = np.zeros(len(ra), dtype=np.float64)
         for j in range(dim_):
             d = d + a[:, j] * b[:, j]
+        den = norms_[ra] * norms_[rb]
         with np.errstate(divide="ignore", invalid="ignore"):
-            cos = d / (norms_[ra] * norms_[rb])
-        out = pd.array(cos, dtype="Float64")
-        out[bad_[ra] | bad_[rb]] = pd.NA
-        return pd.Series(out)
+            cos = d / den
+        # an explicit mask, not pd.array(cos, "Float64"): that conversion
+        # turns every NaN into NULL, while the JVM fold keeps NaN
+        null = bad_[ra] | bad_[rb] | (ra < 0) | (rb < 0) | (den == 0)
+        return pd.Series(pd.arrays.FloatingArray(cos, null))
 
     # asNondeterministic stops the threshold filter's pushdown from
     # duplicating the ArrowEvalPython node (guide §4.4, the PQ precedent)
@@ -686,15 +760,19 @@ def _hyperplanes(num_planes: int, dim: int, seed: int = 42) -> list[list[float]]
     return planes
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit signature: bit p set iff dot(vec, plane_p) ≥ 0."""
-    sig = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        pl = F.array(*[F.lit(float(x)) for x in plane])
-        sig = sig + F.when(dot(vec, pl) >= 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return sig
+def lsh_signature(vec_col: str, planes: list[list[float]]) -> Column:
+    """Sign-bit signature of the array column ``vec_col`` (read as
+    array<double>): bit p set iff dot(vec, plane_p) ≥ 0. One SQL
+    expression — each hyperplane one array literal — so a table costs
+    one gateway call however many planes and dims it has. A NULL
+    vector folds every dot to NULL and gets signature 0."""
+    v = _sql_vec(vec_col)
+    terms = ["CAST(0 AS BIGINT)"] + [
+        f"CASE WHEN {_sql_dot(v, _sql_doubles(plane))} >= 0 "
+        f"THEN CAST({1 << p} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for p, plane in enumerate(planes)
+    ]
+    return F.expr(" + ".join(terms))
 
 
 def ivf_fit_centroids(
@@ -957,7 +1035,7 @@ def ivf_topk(
     if cell_col is None:
         df = ivf_assign(df, centroids, vec_col, "__ivf_cell", metric)
         cell_col = "__ivf_cell"
-    probed = df.filter(F.col(cell_col).isin(probe_cells)).drop("__ivf_cell")
+    probed = df.filter(_sql_in(cell_col, probe_cells)).drop("__ivf_cell")
     if metric == "l2":
         return l2_topk(probed, query_vec, k, id_col, vec_col, exclude_ids)
     return cosine_topk(probed, query_vec, k, id_col, vec_col, exclude_ids)
@@ -1148,21 +1226,26 @@ def ann_lsh_topk(
     if num_tables < 1:
         raise ValueError(f"num_tables must be >= 1, got {num_tables}")
     dim = len(query_vec)
-    vec = F.col(vec_col).cast("array<double>")
-    probe_any = F.lit(False)
-    sigs = df
     persisted = sig_cols is not None
     if not persisted:
         # collision-safe temp-column prefix: user frames may legitimately
         # carry columns named lsh_sig_* (e.g. persisted signatures)
         sig_cols = [f"__ann_lsh_sig_{t}" for t in range(num_tables)]
-    for t, col in enumerate(sig_cols):
-        planes = _hyperplanes(num_planes, dim, seed + 1000003 * t)
-        qsig = _lsh_query_sig(query_vec, planes)
-        if not persisted:
-            sigs = sigs.withColumn(col, lsh_signature(vec, planes))
-        probe_any = probe_any | (
-            F.bit_count(F.col(col).bitwiseXOR(F.lit(qsig))) <= radius
+    planes_t = [
+        _hyperplanes(num_planes, dim, seed + 1000003 * t) for t in range(num_tables)
+    ]
+    # the probe is a membership test against the driver-enumerated
+    # Hamming ball, not a scan-side bit_count(sig ^ qsig): the query
+    # signature would be inlined into generated code (one new class per
+    # request), while the IN list becomes an InSet held by reference
+    probe_any = " OR ".join(
+        _sql_in(col, _hamming_ball(_lsh_query_sig(query_vec, planes), num_planes, radius))
+        for col, planes in zip(sig_cols, planes_t)
+    )
+    sigs = df
+    if not persisted:
+        sigs = df.withColumns(
+            {col: lsh_signature(vec_col, planes) for col, planes in zip(sig_cols, planes_t)}
         )
     probe = sigs.filter(probe_any)
     if not persisted:
@@ -1210,12 +1293,13 @@ def lsh_persist_signatures(
         if row is None:
             raise ValueError(f"no non-null {vec_col} rows to derive dim from")
         dim = int(row[0])
-    vec = F.col(vec_col).cast("array<double>")
     cols = [f"{prefix}_{t}" for t in range(num_tables)]
-    out = df
-    for t, col in enumerate(cols):
-        planes = _hyperplanes(num_planes, dim, seed + 1000003 * t)
-        out = out.withColumn(col, lsh_signature(vec, planes))
+    out = df.withColumns(
+        {
+            col: lsh_signature(vec_col, _hyperplanes(num_planes, dim, seed + 1000003 * t))
+            for t, col in enumerate(cols)
+        }
+    )
     return out, cols
 
 
@@ -1321,13 +1405,13 @@ def ann_lsh_topk_multi(
     persisted = sig_cols is not None
     if not persisted:
         sig_cols = [f"__ann_lsh_sig_{t}" for t in range(num_tables)]
-    tables = []  # (col, planes)
+    tables = [  # (col, planes)
+        (col, _hyperplanes(num_planes, dim, seed + 1000003 * t))
+        for t, col in enumerate(sig_cols)
+    ]
     sigs = df
-    for t, col in enumerate(sig_cols):
-        planes = _hyperplanes(num_planes, dim, seed + 1000003 * t)
-        if not persisted:
-            sigs = sigs.withColumn(col, lsh_signature(vec, planes))
-        tables.append((col, planes))
+    if not persisted:
+        sigs = df.withColumns({col: lsh_signature(vec_col, planes) for col, planes in tables})
     # per (query, table): the query's signature and its probe ball
     balls = {
         qid: [
@@ -2486,25 +2570,23 @@ def pq_adc_topk(
     """
     m = len(codebooks)
     lut = _pq_lut(query_vec, codebooks)
-    # ONE flat literal array + an unrolled m-term sum — constant-folds
-    # to a single Literal and stays inside whole-stage codegen; the
+    # ONE flat LUT literal + an unrolled m-term sum — constant-folds to
+    # a single Literal (held by reference, so a new query reuses the
+    # generated class) and stays inside whole-stage codegen; the
     # higher-order-function spelling (aggregate over transform with
-    # nested F.get) evaluates interpreted and re-walks the literal per
+    # nested get) evaluates interpreted and re-walks the literal per
     # row — measured 14× slower at n=200k/m=8/k_sub=256 (SCALING.md).
     # Left-to-right adds keep the sequential IEEE order the oracle
-    # replays (list_sum over the j-ordered lut terms).
-    # Round 16: ONE F.lit(list) call — a single ArrayType Literal node —
-    # instead of m × k_sub separate F.lit py4j round-trips feeding a
-    # CreateArray of as many child nodes (same values; the m F.get
-    # references then share one leaf instead of re-walking ~256
-    # children each at analysis).
-    flat_lit = F.lit([float(d) for row in lut for d in row])
-    adc = None
-    for j in range(m):
-        term = F.get(flat_lit, F.lit(j * len(lut[j])) + F.get(codes_col, j))
-        adc = term if adc is None else adc + term
-    scored = encoded.filter(F.col(codes_col).isNotNull()).select(
-        F.col(id_col), F.round(adc, round_dp).alias("adc")
+    # replays (list_sum over the j-ordered lut terms). The whole
+    # projection is one SQL expression: the literal is one gateway call
+    # however large the table (``_sql_doubles``).
+    table = _sql_doubles([d for row in lut for d in row])
+    codes = _sql_col(codes_col)
+    adc = " + ".join(
+        f"get({table}, {j * len(lut[j])} + get({codes}, {j}))" for j in range(m)
+    )
+    scored = encoded.filter(f"{codes} IS NOT NULL").selectExpr(
+        _sql_col(id_col), f"round({adc}, {round_dp}) AS adc"
     )
     if exclude_ids:
         scored = scored.filter(~F.col(id_col).isin(*exclude_ids))
@@ -2513,30 +2595,33 @@ def pq_adc_topk(
     if vectors is None:
         raise ValueError("refine_n > 0 needs the raw `vectors` frame")
     shortlist = scored.orderBy("adc", id_col).limit(max(k, refine_n))
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    vcol = F.col(vec_col).cast("array<double>")
-    # broadcast the tiny shortlist INTO the vector scan so the exact
-    # re-rank touches only refine_n raw vectors, never the full corpus.
-    # NULL raw vectors are dropped BEFORE scoring (the l2_topk
-    # isNotNull discipline — ADVICE r13): a codes-only store joined to
-    # a raw table carrying null embeddings would otherwise yield NULL
-    # l2, which ASC NULLS FIRST ranks above every real candidate.
-    candidates = vectors.filter(F.col(vec_col).isNotNull()).join(
-        F.broadcast(shortlist), id_col, "inner"
-    )
+    return _refine_l2(vectors, shortlist, query_vec, k, id_col, vec_col, round_dp)
+
+
+def _refine_l2(
+    vectors: DataFrame,
+    shortlist: DataFrame,
+    query_vec: list[float],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    round_dp: int,
+) -> DataFrame:
+    """The exact re-rank leg of the two-stage single-query search:
+    broadcast the (id, adc) shortlist INTO the raw-vector scan so only
+    the shortlisted vectors are scored (exact squared L2 against the
+    query literal, HALF_UP-rounded), then the final k-heap — ascending
+    rounded l2, ties to the lower id.
+
+    NULL raw vectors are dropped BEFORE scoring (the l2_topk isNotNull
+    discipline — ADVICE r13): a codes-only store joined to a raw table
+    carrying null embeddings would otherwise yield NULL l2, which ASC
+    NULLS FIRST ranks above every real candidate."""
+    l2 = _sql_sq_l2(_sql_vec(vec_col), _sql_doubles(query_vec))
     return (
-        candidates.select(
-            F.col(id_col),
-            F.col("adc"),
-            F.round(
-                F.aggregate(
-                    F.zip_with(vcol, qlit, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, d: acc + d,
-                ),
-                round_dp,
-            ).alias("l2"),
-        )
+        vectors.filter(f"{_sql_col(vec_col)} IS NOT NULL")
+        .join(F.broadcast(shortlist), id_col, "inner")
+        .selectExpr(_sql_col(id_col), "adc", f"round({l2}, {round_dp}) AS l2")
         .orderBy("l2", id_col)
         .limit(k)
     )
@@ -2759,7 +2844,7 @@ def ivfpq_topk(
     if codes_col is None:
         work = pq_encode(work, codebooks, vec_col, "__ivfpq_code", mode="arrow")
         codes_col = "__ivfpq_code"
-    probed = work.filter(F.col(cell_col).isin(probe_cells))
+    probed = work.filter(_sql_in(cell_col, probe_cells))
     return pq_adc_topk(
         probed,
         query_vec,
@@ -2799,25 +2884,13 @@ def _exact_rerank_multi(
         [(int(qid), [float(x) for x in v]) for qid, v in queries.items()],
         "query_id int, __qv array<double>",
     )
-    vcol = F.col(vec_col).cast("array<double>")
+    l2 = _sql_sq_l2(_sql_vec(vec_col), "__qv")
     cand = (
         vectors.select(id_col, vec_col)
         .filter(F.col(vec_col).isNotNull())
         .join(F.broadcast(shortlist), id_col)
         .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.col("adc"),
-            F.round(
-                F.aggregate(
-                    F.zip_with(vcol, F.col("__qv"), lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, d: acc + d,
-                ),
-                round_dp,
-            ).alias("l2"),
-        )
+        .selectExpr("query_id", _sql_col(id_col), "adc", f"round({l2}, {round_dp}) AS l2")
     )
     w = Window.partitionBy("query_id").orderBy(F.col("l2").asc(), F.col(id_col))
     return (
@@ -3082,7 +3155,7 @@ def ivfpq_residual_topk(
     for cell in probe_cells:
         q_res = [float(x) for x in (qv - c[cell])]
         branch = pq_adc_topk(
-            work.filter(F.col(cell_col) == cell),
+            work.filter(f"{_sql_col(cell_col)} = {int(cell)}"),
             q_res,
             codebooks,
             k=branch_k,
@@ -3098,29 +3171,7 @@ def ivfpq_residual_topk(
     # max(k, refine_n), not refine_n: a refine_n < k call must still
     # yield k rows and match the multi path's shortlist width (ADVICE r14)
     shortlist = branches.orderBy("adc", id_col).limit(max(k, refine_n))
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    vcol = F.col(vec_col).cast("array<double>")
-    # NULL raw vectors filtered before exact scoring (the r14 refine-leg
-    # discipline: NULL l2 sorts ASC NULLS FIRST, above real candidates)
-    candidates = df.filter(F.col(vec_col).isNotNull()).join(
-        F.broadcast(shortlist), id_col, "inner"
-    )
-    return (
-        candidates.select(
-            F.col(id_col),
-            F.col("adc"),
-            F.round(
-                F.aggregate(
-                    F.zip_with(vcol, qlit, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, d: acc + d,
-                ),
-                round_dp,
-            ).alias("l2"),
-        )
-        .orderBy("l2", id_col)
-        .limit(k)
-    )
+    return _refine_l2(df, shortlist, query_vec, k, id_col, vec_col, round_dp)
 
 
 def ivfpq_residual_topk_multi(

@@ -942,6 +942,8 @@ def encode_tokens(
     collect. Same rows either way (parity:
     test_encode_tokens_local_matches_checkpoint).
     """
+    if impl not in ("local", "checkpoint"):
+        raise ValueError(f"impl must be 'local' or 'checkpoint', got {impl!r}")
     if impl == "local":
         import pandas as pd  # noqa: PLC0415
 

@@ -480,7 +480,7 @@ def test_lsh_signature_pandas_matches_jvm(spark, sf_dir):
         for r in emb.select(
             "vec_id",
             *[
-                similarity.lsh_signature(vec, planes).alias(f"s{t}")
+                similarity.lsh_signature("embedding", planes).alias(f"s{t}")
                 for t, planes in enumerate(planes_t)
             ],
         ).collect()
@@ -639,6 +639,95 @@ def test_lsh_verify_kernel_matches_jvm(spark):
     }
     assert got[(1, 2)] is None or math.isnan(got[(1, 2)])
     assert got[(2, 3)] == 1.0
+
+
+def _nan_key(row):
+    """A result row with NaN made comparable (NaN != NaN in Python)."""
+    return tuple("nan" if isinstance(v, float) and v != v else v for v in row)
+
+
+def test_lsh_verify_nan_vectors_match_jvm(spark):
+    """Vectors with NaN or inf elements: the JVM fold scores such a pair
+    NaN, and Spark's NaN-greatest comparison passes it through the
+    threshold — the kernel must emit the same rows (it used to turn the
+    NaN into NULL and drop them)."""
+    from datapipelineetl_spark.operators import similarity as sim
+
+    schema = "vec_id long, embedding array<double>"
+    rows = [
+        (i, [float((i * 13 + j * 7) % 11) / 3.0 - 1.5 for j in range(8)])
+        for i in range(30)
+    ]
+    # built by SQL, not createDataFrame: the test session routes lists
+    # through pandas/Arrow, which reads a NaN element as NULL
+    odd = [(93, [float("nan")] + [0.5] * 7), (94, [float("inf")] + [-0.25] * 7)]
+    df = spark.createDataFrame(rows, schema)
+    for i, v in odd:
+        df = df.unionByName(
+            spark.range(1).selectExpr(f"{i}L AS vec_id", f"{sim._sql_doubles(v)} AS embedding")
+        )
+    kw = dict(threshold=0.3, num_planes=2, num_tables=3, dim=8)
+    jvm = sorted(
+        _nan_key(r) for r in sim.lsh_cosine_near_pairs(df, verify_impl="jvm", **kw).collect()
+    )
+    ker = sorted(
+        _nan_key(r) for r in sim.lsh_cosine_near_pairs(df, verify_impl="kernel", **kw).collect()
+    )
+    assert jvm == ker
+    assert any(93 in r[:2] and r[2] == "nan" for r in ker)
+    assert any(94 in r[:2] and r[2] == "nan" for r in ker)
+
+
+def test_lsh_verify_absent_ids_score_null(spark):
+    """A candidate id the vector frame does not hold (below, inside or
+    above its id range) scores NULL, so the threshold drops the pair as
+    the JVM verify join does; present pairs keep their exact cosine.
+    Integer ids take the searchsorted lookup, string ids the dict one."""
+    import math
+
+    from datapipelineetl_spark.operators import similarity as sim
+
+    vecs = [(i, [float(i % 5) - 2.0, float(i % 3) + 0.5, 1.0]) for i in (2, 4, 6, 8)]
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    vec = F.col("embedding").cast("array<double>")
+    pairs = [(2, 4), (4, 8), (-5, 2), (2, 5), (6, 7), (8, 999), (1, 3)]
+    cand = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {
+        (r.id_a, r.id_b): r["__cos"]
+        for r in sim._lsh_verify_broadcast(cand, df, "vec_id", vec).collect()
+    }
+    v = df.select(F.col("vec_id"), vec.alias("__v"))
+    jvm = {
+        (r.id_a, r.id_b): r.c
+        for r in cand.join(v.withColumnsRenamed({"vec_id": "id_a", "__v": "__va"}), "id_a")
+        .join(v.withColumnsRenamed({"vec_id": "id_b", "__v": "__vb"}), "id_b")
+        .select("id_a", "id_b", sim.cosine(F.col("__va"), F.col("__vb")).alias("c"))
+        .collect()
+    }
+    assert set(jvm) == {(2, 4), (4, 8)}
+    for k in pairs:
+        assert got[k] == jvm[k] if k in jvm else got[k] is None, (k, got[k])
+    sdf = spark.createDataFrame(
+        [(f"d{i}", v) for i, v in vecs], "vec_id string, embedding array<double>"
+    )
+    scand = spark.createDataFrame([("d2", "d4"), ("d2", "zz")], "id_a string, id_b string")
+    sgot = {
+        (r.id_a, r.id_b): r["__cos"]
+        for r in sim._lsh_verify_broadcast(scand, sdf, "vec_id", vec).collect()
+    }
+    assert math.isclose(sgot[("d2", "d4")], jvm[(2, 4)], rel_tol=0, abs_tol=0)
+    assert sgot[("d2", "zz")] is None
+
+
+def test_unknown_impl_values_raise(spark):
+    """A misspelled implementation switch fails fast instead of silently
+    taking the other branch (the corpus annot_impl precedent)."""
+    df = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="verify_impl"):
+        similarity.lsh_cosine_near_pairs(df, 0.5, dim=2, verify_impl="JVM")
+    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="impl"):
+        text.encode_tokens(docs, docs, impl="locale")
 
 
 def test_fingerprint_collision_pairs_and_bucket_cap(spark):
@@ -2125,13 +2214,12 @@ def test_ann_lsh_persisted_sig_cols_match_computed(spark, sf_dir, tmp_path):
     emb = catalog.load(spark, sf_dir, "embeddings")
     dim = len(emb.select("embedding").first()[0])
     kwargs = dict(num_planes=6, num_tables=2, radius=1)
-    vec = F.col("embedding").cast("array<double>")
     store_df = emb
     cols = []
     for t in range(kwargs["num_tables"]):
         planes = similarity._hyperplanes(6, dim, 42 + 1000003 * t)
         col = f"lsh_sig_{t}"
-        store_df = store_df.withColumn(col, similarity.lsh_signature(vec, planes))
+        store_df = store_df.withColumn(col, similarity.lsh_signature("embedding", planes))
         cols.append(col)
     path = str(tmp_path / "lsh_store")
     store_df.write.parquet(path)
@@ -2183,11 +2271,10 @@ def test_lsh_persist_signatures_owns_canonical_derivation(spark, sf_dir):
     )
     assert cols == ["lsh_sig_0", "lsh_sig_1"]
     # column t == lsh_signature under the canonical table-t hyperplanes
-    vec = F.col("embedding").cast("array<double>")
     for t, col in enumerate(cols):
         planes = similarity._hyperplanes(6, dim, 42 + 1000003 * t)
         diff = (
-            store.withColumn("__ref", similarity.lsh_signature(vec, planes))
+            store.withColumn("__ref", similarity.lsh_signature("embedding", planes))
             .filter(F.col(col) != F.col("__ref"))
             .count()
         )

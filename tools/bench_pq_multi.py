@@ -186,24 +186,9 @@ def main() -> int:
 
             # the PERSISTED-signature store (round 14 sig_cols): the
             # production form — hashing written once, queries skip it
-            from datapipelineetl_spark.operators.similarity import (
-                _hyperplanes,
-                lsh_signature,
+            sig_df, cols = similarity.lsh_persist_signatures(
+                raw2, num_planes=8, num_tables=2, dim=DIM
             )
-            from pyspark.sql import functions as F  # noqa: PLC0415
-
-            sig_df = raw2
-            cols = []
-            for t in range(2):
-                planes = _hyperplanes(8, DIM, 42 + 1000003 * t)
-                col = f"lsh_sig_{t}"
-                sig_df = sig_df.withColumn(
-                    col,
-                    lsh_signature(
-                        F.col("embedding").cast("array<double>"), planes
-                    ),
-                )
-                cols.append(col)
             lshp_path = str(Path(tmp) / "lsh_store")
             sig_df.write.parquet(lshp_path)
             lsh_store = spark.read.parquet(lshp_path)

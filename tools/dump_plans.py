@@ -1,17 +1,46 @@
-"""Regenerate PLANS.md: formatted physical plans of representative queries.
+"""Dump query plans.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Usage:
+  python tools/dump_plans.py [sf_dir]
+      Regenerate PLANS.md: formatted physical plans of representative
+      queries.
+  python tools/dump_plans.py --shapes OUT_DIR [sf_dir]
+      Write the optimized logical plan of every rewritten shape (the
+      round-17 plan rewrites, SHAPE_QUERIES, and the four single-query
+      top-k requests of the vector_topk benchmark) to OUT_DIR/<name>.txt, with
+      expression ids and lambda-variable counters normalized away.
+  python tools/dump_plans.py --diff OTHER_CHECKOUT [sf_dir]
+      Dump the shapes once with OTHER_CHECKOUT's package (before) and
+      once with this one (after) and print a unified diff of the two.
+
+sf_dir is a generated fixture directory (PLANS.md is written from the
+sf0.1 one); it defaults to $SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations
 
+import argparse
+import difflib
+import importlib
+import os
+import pkgutil
+import re
+import subprocess
 import sys
+import tempfile
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
 
-import __spark_entry__ as entrymod
-from datapipelineetl_spark.session import get_session
+# registered queries whose plans a recent round rewrote
+SHAPE_QUERIES = [
+    "q_lsh_cosine_near_pairs",
+    "q_range_join_ship_windows",
+    "q_pack_sequences",
+    "q_encode_tokens",
+]
+# the single-query top-k requests of benchmark/vector_topk.py
+TOPK_KINDS = ("exact", "pq_adc", "ivfpq", "lsh")
 
 PICK = {
     "q1_pricing_summary": "Flagship aggregate: filter pushed to parquet, 7-column ReadSchema, partial+final hash agg — shuffle carries ~6 rows/task.",
@@ -71,17 +100,89 @@ PICK = {
 }
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+def _optimized(df) -> str:
+    """The optimized logical plan, with the run-specific numbering
+    (expression ids, lambda-variable counters) normalized so that two
+    runs — or two checkouts — diff only where the plans differ."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = re.sub(r"#\d+L?", "", plan)
+    return re.sub(r"\b([xyz])_\d+\b", r"\1", plan)
+
+
+def _topk_requests(spark) -> dict:
+    """The four request kinds of the vector_topk benchmark against one
+    fitted index in its geometry (dim 32; PQ m=8 x 16; 8 IVF cells,
+    nprobe 2; 8 planes x 4 LSH tables, radius 2; refine 100)."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+    from pyspark.sql import types as T  # noqa: PLC0415
+
+    from datapipelineetl_spark.operators import similarity as sim  # noqa: PLC0415
+
+    n, dim = 500, 32
+    rng = np.random.default_rng(0)
+    schema = T.StructType([T.StructField("vec_id", T.LongType()),
+                           T.StructField("embedding", T.ArrayType(T.FloatType()))])
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(n, dtype=np.int64),
+                      "embedding": list(rng.normal(size=(n, dim)).astype(np.float32))}),
+        schema,
+    )
+    books = sim.pq_fit(df, m=8, k_sub=16, iters=1, dim=dim)
+    cents = sim.ivf_fit_centroids(df, k_cells=8, iters=1, dim=dim)
+    store = sim.ivf_assign(sim.pq_encode(df, books), cents)
+    store, sig_cols = sim.lsh_persist_signatures(store, num_planes=8, num_tables=4, dim=dim)
+    store = store.localCheckpoint(eager=True)
+    q = [float(v) for v in rng.normal(size=dim)]
+    return {
+        "topk_exact": sim.cosine_topk(store, q, k=10),
+        "topk_pq_adc": sim.pq_adc_topk(store, q, books, k=10, refine_n=100, vectors=store),
+        "topk_ivfpq": sim.ivfpq_topk(store, q, cents, books, k=10, nprobe=2,
+                                     cell_col="ivf_cell", codes_col="pq_code", refine_n=100),
+        "topk_lsh": sim.ann_lsh_topk(store, q, k=10, num_planes=8, sig_cols=sig_cols, radius=2),
+    }
+
+
+def dump_shapes(out_dir: Path, sf_dir: str) -> None:
+    import __spark_entry__ as entrymod  # noqa: PLC0415
+    from datapipelineetl_spark.session import get_session  # noqa: PLC0415
+
+    out_dir.mkdir(parents=True, exist_ok=True)
+    spark = get_session("dump-shapes")
+    qs = entrymod.queries()
+    frames = {name: qs[name](spark, sf_dir) for name in SHAPE_QUERIES}
+    frames.update(_topk_requests(spark))
+    for name, df in frames.items():
+        (out_dir / f"{name}.txt").write_text(_optimized(df))
+        print(f"wrote {out_dir / name}.txt", file=sys.stderr)
+    spark.stop()
+
+
+def diff_shapes(other: str, sf_dir: str) -> None:
+    with tempfile.TemporaryDirectory() as tmp:
+        before, after = Path(tmp) / "before", Path(tmp) / "after"
+        for root, out in ((other, before), (str(ROOT), after)):
+            subprocess.run(
+                [sys.executable, __file__, "--root", root, "--shapes", str(out), sf_dir],
+                check=True, cwd=root,
+            )
+        for name in SHAPE_QUERIES + [f"topk_{k}" for k in TOPK_KINDS]:
+            a = (before / f"{name}.txt").read_text().splitlines(keepends=True)
+            b = (after / f"{name}.txt").read_text().splitlines(keepends=True)
+            d = list(difflib.unified_diff(a, b, f"before/{name}", f"after/{name}"))
+            sys.stdout.writelines(d if d else [f"= {name}: unchanged\n"])
+
+
+def dump_picks(sf_dir: str) -> None:
+    import __spark_entry__ as entrymod  # noqa: PLC0415
+    from datapipelineetl_spark.session import get_session  # noqa: PLC0415
+
+    import datapipelineetl_spark as _pkg  # noqa: PLC0415
+
     spark = get_session("plans")
     # pkgutil-discover every staged battery (the check_correctness r12
     # fix): a hand-kept import list silently drops the newest batch's
     # plans from this file
-    import importlib
-    import pkgutil
-
-    import datapipelineetl_spark as _pkg
-
     qs = dict(entrymod.queries())
     for info in sorted(pkgutil.iter_modules(_pkg.__path__), key=lambda i: i.name):
         if info.name.startswith("queries_batch"):
@@ -91,7 +192,7 @@ def main() -> None:
     lines = [
         "# PLANS — physical plans of representative queries (sf0.1, AQE on)",
         "",
-        "Regenerate: `python tools/dump_plans.py`. What to look for per query is",
+        "Regenerate: `python tools/dump_plans.py <sf0.1 dir>`. What to look for per query is",
         "noted above each plan; the full formatted output is verbatim from",
         "`df.explain('formatted')`.",
         "",
@@ -111,6 +212,25 @@ def main() -> None:
         lines += [f"## {name}", "", note, "", "```", plan.strip(), "```", ""]
     Path("PLANS.md").write_text("\n".join(lines))
     print(f"wrote PLANS.md ({len(PICK)} plans)")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir", nargs="?", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
+                    help="fixture directory (default: $SPARK_GRAFT_SF_DIR)")
+    ap.add_argument("--shapes", metavar="OUT_DIR")
+    ap.add_argument("--diff", metavar="OTHER_CHECKOUT")
+    ap.add_argument("--root", default=str(ROOT), help=argparse.SUPPRESS)
+    args = ap.parse_args()
+    if not args.sf_dir:
+        ap.error("pass sf_dir or set SPARK_GRAFT_SF_DIR")
+    sys.path.insert(0, os.path.abspath(args.root))
+    if args.diff:
+        diff_shapes(args.diff, args.sf_dir)
+    elif args.shapes:
+        dump_shapes(Path(args.shapes), args.sf_dir)
+    else:
+        dump_picks(args.sf_dir)
 
 
 if __name__ == "__main__":
