@@ -121,65 +121,63 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver verifies the FIRST 50 entries of queries() in dict order.
-# Round-17 rotation (tools/rotate_window.py — the perennial round-start
-# task, skipped by round 16's interruption): 52 queries hit their
-# re-verification horizon at once (the r15/r16 driver samples were
-# fully disjoint, so both rounds refreshed different halves of the
-# registry), 2 more than the window holds; the 50 oldest-green take
-# the slots and the 2 overflow rows (q_hll_distinct, q_bloom_decontam)
-# are the first forced picks of any subsequent rotation. No
-# staged promotions this round (optimization round - no new features).
+# Round-18 rotation (tools/rotate_window.py): the four round-17 plan
+# rewrites (q_lsh_cosine_near_pairs, q_range_join_ship_windows,
+# q_pack_sequences, q_encode_tokens) and the two round-17 overflow rows
+# (q_hll_distinct, q_bloom_decontam) lead, so the next CORRECTNESS
+# record hashes each of them; the other 32 queries at their re-verification
+# horizon follow, then the oldest-green rows fill the free slots.
 PRIORITY: list[str] = [
-    "q1_pricing_summary",
-    "q5_local_supplier_volume",
-    "q_events_pivot",
-    "q_envelope_roundtrip",
-    "q_meascollec_flatten",
-    "q_clean_cell_metrics",
-    "q_clean_kpi_int",
-    "q_cube_lineitem",
-    "q19_bracket_revenue",
-    "q_union_parties_by_nation",
-    "q_intersect_nations",
-    "q_parts_never_ordered",
-    "q_window_order_seq",
-    "q_window_trailing_revenue",
-    "q_percentiles_by_priority",
-    "q_json_props",
-    "q_ngram_jaccard_pairs",
-    "q_ann_lsh_topk",
-    "q_multimodal_features",
-    "q_frame_sample_plan",
-    "q_multimodal_meta",
-    "q15_top_suppliers",
-    "q2_cheapest_part_per_type",
-    "q22_idle_rich_customers",
-    "q_lineitems_above_order_avg",
-    "q_name_word_counts",
-    "q_order_quantity_profile",
-    "q_conditional_counts",
-    "q_weekly_order_volume",
-    "q_sql_regional_revenue",
-    "q_nation_lookup",
-    "q_text_token_stats",
-    "q_text_quality",
-    "q_lang_id",
-    "q_ann_recall",
-    "q_approx_sketches",
-    "q_range_join_event_windows",
-    "q9_product_type_profit",
-    "q11_important_parts",
-    "q16_supplier_part_counts",
-    "q20_top_part_shippers",
-    "q_vocab_growth",
-    "q_kmeans_clusters",
-    "q_dsir_resample",
-    "q_pack_best_fit",
-    "q_cluster_balanced_sample",
-    "q_perplexity_buckets",
-    "q_train_bpe",
-    "q_bpe_segment",
-    "q_countmin_counts",
+    "q_lsh_cosine_near_pairs",
+    "q_range_join_ship_windows",
+    "q_pack_sequences",
+    "q_encode_tokens",
+    "q_hll_distinct",
+    "q_bloom_decontam",
+    "q_dedup_token_set",
+    "q_cosine_topk",
+    "q_cosine_near_pairs",
+    "q_tf_idf",
+    "q7_volume_shipping",
+    "q13_order_count_distribution",
+    "q17_small_quantity_revenue",
+    "q_profile_orders",
+    "q_kpi_pivot",
+    "q_session_window_events",
+    "q_grouping_sets",
+    "q_posexplode_embedding",
+    "q_array_lambda_battery",
+    "q_null_semantics",
+    "q_nullsafe_join",
+    "q8_market_share",
+    "q_fuzzy_name_pairs",
+    "q21_blamable_suppliers",
+    "q_price_histogram",
+    "q_regex_extract_ldn",
+    "q_bigram_logprob",
+    "q_pmi_bigrams",
+    "q_vocab_overlap",
+    "q_token_entropy",
+    "q_oov_rate",
+    "q_blocklist_filter",
+    "q_zipf_fit",
+    "q_pq_codes",
+    "q_pq_topk",
+    "q_temperature_mix",
+    "q_pq_refine_recall",
+    "q_l2_topk",
+    "q_retention_cohorts",
+    "q_pack_greedy",
+    "q_boilerplate_removal",
+    "q_repetition_stats",
+    "q_semdedup",
+    "q_gopher_rules",
+    "q_ivfpq_topk",
+    "q_pq_topk_multi",
+    "q_resize_media",
+    "q_sample_stratified",
+    "q_corpus_mix",
+    "q_pack_chunks",
 ]
 
 

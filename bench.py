@@ -281,18 +281,11 @@ EXPECTED_SEC = {
     "q_gram_novelty": 1.48,  # ngram kernel; 1.34 / 1.62 same-day
     "q_doc_containment": 1.18,  # ngram kernel; 1.04 / 1.32 same-day
     "q_token_fertility": 1.10,  # single-pass BPE trainer; 1.04 bench / 0.92-1.01 A/B
-    # batch-19 rows: measured same-day as the round-13 promotion, AFTER
-    # the _pq_argmin nested-HOF rewrite (the struct-forest spelling
-    # read 19.0/~19 s — SCALING.md "Round 13: PQ argmin spelling"; the
-    # remaining cost is the fixed analysis of the oracle geometry's
-    # literal codebooks plus the sample fit; the production encode is
-    # the Arrow kernel, 1.9 s on the same data). Calibration: the two
-    # same-day FULL-gate readings were 9.5/7.8 and 12.0/10.4 with
-    # byte-identical plans — ambient machine drift, the widest same-day
-    # spread any row has shown — so these reference values sit at the
-    # readings' midpoint to keep the 1.35× gate meaningful in both
-    # halves of the band (standalone warm best-of-3: 8.0/6.2, and
-    # 9.5/7.1 after the fit dim-probe fusion).
+    # batch-19 rows: PQ fit and encode run the bit-exact seq kernels;
+    # the JVM fold over literal codewords was dropped because it paid
+    # its m × k_sub × dim/m literal tree at plan construction, analysis
+    # and per-row interpretation for the same values. The remaining
+    # cost is the sample fit.
     "q_pq_codes": 1.20,  # seq kernels (466f882); 0.84 / 1.00 same-day
     "q_pq_topk": 1.55,  # re-pinned round 17 (VERDICT r16 item 5: the 2.20 pin sat
     # 1.9x above best and could hide a real 2x drift): same-day 2026-08-18 bench

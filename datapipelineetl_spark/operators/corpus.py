@@ -412,53 +412,48 @@ def _quality_lang_stage(
     text_col: str,
     min_quality: float | None,
     langs: tuple[str, ...] | None,
-    annot_impl: str = "fused",
 ) -> DataFrame:
     """Stage 1 of the prepare ladder (shared with ``attrition_report`` —
     ONE implementation, so the report counts the real pipeline by
     construction): quality + language annotation and filtering.
 
-    ``annot_impl="fused"`` computes quality + lang + the stage-2
-    token-set fingerprint (as ``__fp``) in ONE Arrow pass sharing one
-    tokenize (``text._annot_kernel_udf``); ``_exact_dedup_stage`` then
-    reuses the column instead of re-tokenizing. Bit-identical output
-    (parity pinned by ``test_prepare_annotations_fused_matches_jvm``).
-    The fingerprint lands BEFORE the quality/lang filters under the
-    fused impl — per-row function of the text, so values are unchanged;
-    the md5 spent on filtered-out rows is the price of sharing the
-    tokenize, settled by the interleaved A/B in OPTIMIZATION_r16.md."""
-    if annot_impl not in ("fused", "jvm"):
-        raise ValueError(f"annot_impl must be 'fused' or 'jvm', got {annot_impl!r}")
-    if annot_impl == "fused":
-        tmp = "__annot_struct"
-        st = text._annot_kernel_udf()(F.col(text_col))
-        # exclude colliding names from the carried-through columns so a
-        # caller df that already has annotation columns is OVERWRITTEN
-        # (withColumn replace semantics, matching the jvm path) instead
-        # of duplicated into an AMBIGUOUS_REFERENCE at the filters
-        # (ADVICE r16)
-        annot_names = {
-            "n_chars_m",
-            "punct_ratio",
-            "stopword_ratio",
-            "alpha_ratio",
-            "quality_score",
-            "lang_pred",
-            "__fp",
-        }
-        carried = [c for c in df.columns if c not in annot_names]
-        out = df.withColumn(tmp, st).select(
-            *carried,
-            F.col(tmp)["n_chars_m"].alias("n_chars_m"),
-            F.col(tmp)["punct_ratio"].alias("punct_ratio"),
-            F.col(tmp)["stopword_ratio"].alias("stopword_ratio"),
-            F.col(tmp)["alpha_ratio"].alias("alpha_ratio"),
-            F.col(tmp)["quality_score"].alias("quality_score"),
-            F.col(tmp)["lang_pred"].alias("lang_pred"),
-            F.col(tmp)["ts_fingerprint"].alias("__fp"),
-        )
-    else:
-        out = text.with_lang_id(text.with_quality_score(df, text_col), text_col)
+    Quality + lang + the stage-2 token-set fingerprint (as ``__fp``)
+    come from ONE Arrow pass sharing one tokenize
+    (``text._annot_kernel_udf``); ``_exact_dedup_stage`` then reuses the
+    column instead of re-tokenizing. The values are bit-identical to
+    ``with_quality_score`` / ``with_lang_id`` /
+    ``with_token_set_fingerprint`` (parity pinned by
+    ``test_prepare_annotations_fused_matches_jvm``). The fingerprint
+    lands BEFORE the quality/lang filters — a per-row function of the
+    text, so values are unchanged; the md5 spent on filtered-out rows is
+    the price of sharing the tokenize."""
+    tmp = "__annot_struct"
+    st = text._annot_kernel_udf()(F.col(text_col))
+    # exclude colliding names from the carried-through columns so a
+    # caller df that already has annotation columns is OVERWRITTEN
+    # (withColumn replace semantics) instead of duplicated into an
+    # AMBIGUOUS_REFERENCE at the filters; a caller's own ``__fp`` is
+    # replaced the same way, so stale data never reaches the dedup
+    annot_names = {
+        "n_chars_m",
+        "punct_ratio",
+        "stopword_ratio",
+        "alpha_ratio",
+        "quality_score",
+        "lang_pred",
+        "__fp",
+    }
+    carried = [c for c in df.columns if c not in annot_names]
+    out = df.withColumn(tmp, st).select(
+        *carried,
+        F.col(tmp)["n_chars_m"].alias("n_chars_m"),
+        F.col(tmp)["punct_ratio"].alias("punct_ratio"),
+        F.col(tmp)["stopword_ratio"].alias("stopword_ratio"),
+        F.col(tmp)["alpha_ratio"].alias("alpha_ratio"),
+        F.col(tmp)["quality_score"].alias("quality_score"),
+        F.col(tmp)["lang_pred"].alias("lang_pred"),
+        F.col(tmp)["ts_fingerprint"].alias("__fp"),
+    )
     if min_quality is not None:
         out = out.filter(F.col("quality_score") >= min_quality)
     if langs:
@@ -466,23 +461,12 @@ def _quality_lang_stage(
     return out
 
 
-def _exact_dedup_stage(
-    df: DataFrame, id_col: str, text_col: str, fp_precomputed: bool = False
-) -> DataFrame:
-    """Stage 2 (shared): keep the min-id row per token-set fingerprint.
-    ``fp_precomputed=True`` (threaded EXPLICITLY from stage 1's fused
-    kernel — ADVICE r16: never inferred from column presence, so a
-    caller df that happens to carry a ``__fp`` column can't smuggle
-    stale data into the dedup) reuses the ``__fp`` column instead of
-    re-tokenizing."""
-    out = (
-        df
-        if fp_precomputed
-        else text.with_token_set_fingerprint(df, text_col, out="__fp")
-    )
+def _exact_dedup_stage(df: DataFrame, id_col: str) -> DataFrame:
+    """Stage 2 (shared): keep the min-id row per token-set fingerprint,
+    reading the ``__fp`` column stage 1 computed."""
     w = Window.partitionBy("__fp").orderBy(id_col)
     return (
-        out.withColumn("__rn", F.row_number().over(w))
+        df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__fp")
     )
@@ -547,7 +531,6 @@ def prepare_corpus(
     semantic_vec_col: str = "embedding",
     normalize: bool = False,
     with_attrition: bool = False,
-    annot_impl: str = "fused",
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """One-call training-corpus preparation — the §2.11 ladder composed
     in its production order:
@@ -565,8 +548,9 @@ def prepare_corpus(
        ``max_dup_line_frac`` drops documents whose duplicate-line
        fraction exceeds it (``repetition_stats`` — intra-doc repetition
        is low quality regardless of corpus-wide uniqueness),
-    1. quality + language annotation (narrow; ``text.with_quality_score``,
-       ``with_lang_id``) and filtering,
+    1. quality + language annotation (narrow; the values of
+       ``text.with_quality_score`` and ``with_lang_id``, computed with
+       the stage-2 fingerprint in one fused Arrow pass) and filtering,
     2. EXACT dedup first (token-set fingerprint groupBy — O(n), removes
        identical copies before any pairwise machinery sees them),
     3. near-dup removal: capped MinHash-LSH pairs → connected components
@@ -605,16 +589,6 @@ def prepare_corpus(
     one narrow pass + one partial-agg shuffle. The quality-ranked
     selection adds one window over the cluster METADATA frame
     ((id, cluster, score) — never the document bodies).
-
-    ``annot_impl`` picks stage 1/2's annotation form: ``"fused"``
-    (default, round 16) computes quality + lang + the exact-dedup
-    fingerprint in ONE Arrow pass sharing one tokenize (bit-identical
-    rows — see ``_quality_lang_stage``); ``"jvm"`` is the original
-    per-operator column expressions. The INDIVIDUAL kernels lost their
-    A/Bs (text.py docstrings) — fusing flips the economics because the
-    boundary is paid once for three operators' work and the text is
-    tokenized once instead of three times (interleaved A/B: prepare med
-    3.40 → 2.84 s, attrition 3.27 → 3.01 s; OPTIMIZATION_r16.md).
     """
     if representative not in ("min_id", "quality"):
         raise ValueError(
@@ -652,11 +626,9 @@ def prepare_corpus(
             .filter(F.col("dup_line_frac") <= max_dup_line_frac)
             .drop("dup_line_frac", "dup_line_char_frac")
         )
-    out = _quality_lang_stage(df, text_col, min_quality, langs, annot_impl=annot_impl)
+    out = _quality_lang_stage(df, text_col, min_quality, langs)
     out = _observed(out, "1_quality_lang")
-    out = _exact_dedup_stage(
-        out, id_col, text_col, fp_precomputed=(annot_impl == "fused")
-    )
+    out = _exact_dedup_stage(out, id_col)
     out = _observed(out, "2_exact_dedup")
     if near_dup_threshold is not None or embeddings is not None or with_attrition:
         # pipeline-level materialization: the filtered+deduped base is
@@ -1230,7 +1202,7 @@ def _repetition_kernel_udf(gram_ns: tuple[int, ...]):
                         cols[f"dup_{n}gram_frac"].append(0.0)
         return pd.DataFrame(cols)
 
-    # no type hints on _rep (module convention — see text._quality_kernel_udf)
+    # no type hints on _rep (module convention — see text._annot_kernel_udf)
     return pandas_udf(_rep, f"struct<{ftypes}>").asNondeterministic()
 
 

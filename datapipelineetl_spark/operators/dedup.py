@@ -633,7 +633,6 @@ def duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    impl: str = "jvm",
 ) -> DataFrame:
     """Cross-document EXACT duplicated-span detection (the
     substring-level dedup of "Deduplicating Training Data Makes
@@ -654,84 +653,33 @@ def duplicate_spans(
     pairwise blowup: a window repeated a million times costs a million
     JOIN rows, never a million² (contrast candidate-pair LSH).
 
-    ``impl`` picks the window-hash pass's physical form (round 16):
-
-    - ``"jvm"`` (default): the transform/posexplode_outer chain (the
-      explode is _outer per the InferFiltersFromGenerate rule, NOTES.md
-      — the window array is computed, and a non-outer Generate would
-      re-inline it below the inferred size() filter). The round-16
-      interleaved A/B read jvm med 2.41 s vs kernel 2.50 s on the
-      q_dedup_spans body: unlike ngram_hashes (distinct grams), the
-      window rows are TOKEN-cardinality, so the Arrow transfer of
-      (id, start, hash) back to the JVM eats the interpreted-HOF
-      savings. Measured, not assumed — see OPTIMIZATION_r16.md.
-    - ``"kernel"``: ONE Arrow-batched ``mapInPandas`` pass emitting the
-      (id, start, hash) window rows directly — tokenize once
-      (established parity), join each n-token window, md5-60.
-      Bit-identical rows (parity pinned by
-      ``test_duplicate_spans_kernel_matches_jvm``); the right form if
-      windows get sparser (e.g. distinct-per-doc or a stride) or docs
-      get longer — re-measure before flipping.
+    The window hashes are column expressions: a transform over
+    ``sequence`` + ``posexplode_outer`` (_outer per the
+    InferFiltersFromGenerate rule, NOTES.md — the window array is
+    computed, and a non-outer Generate would re-inline it below the
+    inferred size() filter). A mapInPandas kernel emitting the same
+    (id, start, hash) rows measured slower on the q_dedup_spans body
+    (2.50 vs 2.41 s): the rows are TOKEN-cardinality, so the Arrow
+    transfer back to the JVM eats the interpreted-HOF savings.
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
-    if impl == "kernel":
-        import pandas as pd  # noqa: PLC0415
-
-        idt = df.schema[id_col].dataType.simpleString()
-        nn, iname, tname = int(n), id_col, text_col
-
-        def gen(batches):
-            import hashlib as _hl  # noqa: PLC0415
-            import re as _re  # noqa: PLC0415
-
-            # re.ASCII pins \s+ to Java's default [ \t\n\x0b\f\r]
-            sre = _re.compile(r"\s+", _re.ASCII)
-            for pdf in batches:
-                idxs: list[int] = []
-                starts: list[int] = []
-                hs: list[int] = []
-                for ridx, txt in enumerate(pdf[tname].tolist()):
-                    if not isinstance(txt, str):
-                        continue  # NULL text → no rows (the JVM filter)
-                    toks = [t for t in sre.split(txt.lower()) if t]
-                    for i in range(len(toks) - nn + 1):
-                        g = " ".join(toks[i : i + nn])
-                        idxs.append(ridx)
-                        starts.append(i)
-                        hs.append(int(_hl.md5(g.encode("utf-8")).hexdigest()[:15], 16))
-                # carry the id through its ORIGINAL pandas dtype (no
-                # int round-trip) so null ids survive as nulls
-                yield pd.DataFrame(
-                    {
-                        iname: pdf[iname].iloc[idxs].reset_index(drop=True),
-                        "start": pd.Series(starts, dtype="int32"),
-                        "__gh": pd.Series(hs, dtype="int64"),
-                    }
-                )
-
-        wins = df.select(id_col, text_col).mapInPandas(
-            gen, schema=f"`{id_col}` {idt}, `start` int, `__gh` long"
+    toks = tokens(text_col)
+    base = df.select(F.col(id_col), toks.alias("__toks")).filter(
+        F.size("__toks") >= n
+    )
+    win_hashes = F.transform(
+        F.sequence(F.lit(0), F.size("__toks") - n),
+        lambda i: token_hash60(
+            F.array_join(F.slice(F.col("__toks"), i + 1, n), " ")
+        ),
+    )
+    wins = (
+        base.select(
+            F.col(id_col), F.posexplode_outer(win_hashes).alias("start", "__gh")
         )
-    else:
-        toks = tokens(text_col)
-        base = df.select(F.col(id_col), toks.alias("__toks")).filter(
-            F.size("__toks") >= n
-        )
-        win_hashes = F.transform(
-            F.sequence(F.lit(0), F.size("__toks") - n),
-            lambda i: token_hash60(
-                F.array_join(F.slice(F.col("__toks"), i + 1, n), " ")
-            ),
-        )
-        wins = (
-            base.select(
-                F.col(id_col), F.posexplode_outer(win_hashes).alias("start", "__gh")
-            )
-            .filter(F.col("__gh").isNotNull())
-        )
+        .filter(F.col("__gh").isNotNull())
+    )
     first = wins.groupBy("__gh").agg(
         F.min(F.struct(F.col(id_col).alias("i"), F.col("start").alias("s"))).alias(
             "__first"
@@ -752,7 +700,6 @@ def remove_duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    impl: str = "jvm",
 ) -> DataFrame:
     """Rewrite each document's TOKEN stream with every token covered by
     any duplicated ``n``-token window (``duplicate_spans``) removed —
@@ -773,7 +720,7 @@ def remove_duplicate_spans(
     groupBy(doc) in-aggregate ordered rebuild — the
     remove_boilerplate_lines rebuild shape, at token granularity.
     """
-    spans = duplicate_spans(df, id_col, text_col, n, impl=impl)
+    spans = duplicate_spans(df, id_col, text_col, n)
     masked = (
         spans.select(
             F.col(id_col),

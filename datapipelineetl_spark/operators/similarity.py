@@ -927,53 +927,29 @@ def ivf_assign_fold(
     centroids: list[list[float]],
     vec_col: str = "embedding",
     out: str = "ivf_cell",
-    impl: str = "seq",
 ) -> DataFrame:
-    """``ivf_assign``'s ORACLE-REPLAYABLE twin (L2 metric only): the
-    cell id as a pure JVM expression — one ``transform`` over the
-    literal centroid array computing each squared-L2 distance as the
-    sequential left-to-right fold DuckDB's ``list_sum`` replays
-    term-for-term, ties to the LOWER cell via first-index-of-min
-    (the ``_pq_argmin`` spelling at full dim).
+    """``ivf_assign``'s ORACLE-REPLAYABLE twin (L2 metric only): each
+    squared-L2 distance is the sequential left-to-right sum DuckDB's
+    ``list_sum`` replays term-for-term, ties go to the LOWER cell
+    (first-index-of-min), NULL vectors get NULL cells — computed by the
+    bit-exact ``_seq_l2_assign_udf`` kernel.
 
     Why it exists: ``ivf_fit_centroids``/``ivf_assign`` run the
     assignment through the Arrow matmul kernel — the right production
     plan, but its BLAS summation order is not value-replayable
     cross-engine, which is why the IVF family's driver oracles were
     recall BOOLEANS (q_ivf_recall) rather than value checks. With
-    FIXED centroids (seeds, or a frozen fit artifact) this fold makes
-    the whole composed IVF-PQ query value-checkable — the batch-20
+    FIXED centroids (seeds, or a frozen fit artifact) this assigner
+    makes the whole composed IVF-PQ query value-checkable — the
     q_ivfpq_topk oracle replays cell assignment, probe selection, and
-    the ADC scan end to end.
-
-    Scale: k_cells × dim literal tree evaluated interpreted per row —
-    fine for oracle geometries (k_cells in the tens); a production
-    store assigns with the Arrow kernel and PERSISTS the column, so
-    this fold is never in a hot path. NULL vectors get NULL cells.
-
-    ``impl`` (round 16): ``"jvm"`` is the original literal-tree fold;
-    ``"seq"`` routes through ``_seq_l2_assign_udf`` — bit-identical
-    values (explicit sequential IEEE accumulation, first-min argmin)
-    without the k_cells × dim literal tree's plan-construction /
-    analysis / interpretation cost (parity pinned by
+    the ADC scan end to end. A JVM fold over the literal centroid
+    array gives the same values but pays a k_cells × dim literal tree
+    at plan construction, analysis and interpreted per-row evaluation,
+    so the kernel is the only implementation (values pinned by
     ``test_ivf_assign_fold_matches_python_replay_random``).
     """
-    if impl not in ("jvm", "seq"):
-        raise ValueError(f"impl must be 'jvm' or 'seq', got {impl!r}")
     vec = F.col(vec_col).cast("array<double>")
-    if impl == "seq":
-        return df.withColumn(out, _seq_l2_assign_udf(centroids)(vec))
-    cents = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in centroids])
-    dists = F.transform(
-        cents,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        ),
-    )
-    cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    return df.withColumn(out, F.when(vec.isNotNull(), cell))
+    return df.withColumn(out, _seq_l2_assign_udf(centroids)(vec))
 
 
 def _probe_cells(
@@ -1548,40 +1524,33 @@ def kmeans(
     ``assignment`` picks the physical plan of every assignment pass
     (each Lloyd iteration AND the final labeling):
 
-    - ``"seq"`` (default since round 16, the oracle path): the
-      BIT-EXACT vectorized kernel ``_seq_l2_assign_udf`` — the fold's
-      sequential IEEE sums and lower-id tiebreak reproduced
-      elementwise, with no literal tree to build, analyze or
-      interpret.
-    - ``"fold"``: the original JVM fold over LITERAL
-      centroid arrays — identical bit-exact sequential sums, which the
-      value-checked oracle needs. The k×dim-literal plan makes
-      ANALYSIS time the bottleneck as k grows (measured: the semdedup
-      geometry grid, SCALING.md) — and past k ≈ several hundred the
-      codegen'd expression tree OOMs the driver JVM outright
-      (measured at k=1024/dim=64, SCALING.md round-11 addendum):
-      the fold's k-ceiling is a cliff, not a slope.
+    - ``"seq"`` (default, the oracle path): the BIT-EXACT vectorized
+      kernel ``_seq_l2_assign_udf`` — each squared distance summed
+      sequentially left to right (the order DuckDB's ``list_sum``
+      replays), ties to the lower cluster id. A JVM fold over literal
+      centroid arrays computes the same values but was dropped: its
+      k×dim literal tree made analysis time the bottleneck as k grew
+      and OOMed the driver JVM at k=1024/dim=64 (SCALING.md).
     - ``"arrow"``: the ``assign_clusters_arrow`` matmul kernel, one
       fresh pandas_udf per iteration closing over that iteration's
       centroid matrix; ``transport`` ("closure"/"broadcast") chooses
       the data movement exactly as documented there. Production k in
       the hundreds and beyond — trading oracle-grade tie determinism
       (BLAS summation order) for throughput, exactly as IVF does;
-      parity-tested against the fold on the fixture. Under this mode
+      parity-tested against ``"seq"`` on the fixture. Under this mode
       the MEAN UPDATE also leaves the JVM: the default
       ``groupBy(cell).agg(dim × F.avg(__v[i]))`` builds one aggregate
       expression per DIMENSION and hits its own wall as dim grows
       (measured: OOMs the 1 GiB local JVM at dim=1024/n=20k while the
       Arrow path completes — SCALING.md "Round 12"), so each Lloyd
       pass folds per-cell running sums via ``_mean_update_arrow``
-      (two Arrow passes, HALF_UP-rounded means) instead.
+      (two Arrow passes) and rounds the means with
+      ``_round_half_up_np``.
     """
     if k < 1 or iters < 0:
         raise ValueError(f"need k >= 1 and iters >= 0, got {k}, {iters}")
-    if assignment not in ("fold", "seq", "arrow"):
-        raise ValueError(
-            f"assignment must be 'fold', 'seq' or 'arrow', got {assignment!r}"
-        )
+    if assignment not in ("seq", "arrow"):
+        raise ValueError(f"assignment must be 'seq' or 'arrow', got {assignment!r}")
     vec = F.col(vec_col).cast("array<double>")
     seeds = (
         df.filter(vec.isNotNull())
@@ -1602,36 +1571,7 @@ def kmeans(
                 df.sparkSession, cents, transport, return_handle=True
             )
             return udf(vec), bc
-        if assignment == "seq":
-            # bit-exact fold values without the k × dim literal tree —
-            # see _seq_l2_assign_udf (round 16)
-            return _seq_l2_assign_udf(cents)(vec), None
-        # array of (dist, cid) structs → array_min compares
-        # lexicographically: min distance, ties to the lower cid
-        entries = [
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        F.array(*[F.lit(c) for c in cvec]),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, d: acc + d,
-                ).alias("d"),
-                F.lit(cid).alias("c"),
-            )
-            for cid, cvec in enumerate(cents)
-        ]
-        return F.array_min(F.array(*entries))["c"].cast("int"), None
-
-    import numpy as np  # noqa: PLC0415
-
-    def _half_up(arr, dp: int):
-        # Spark F.round semantics (HALF_UP, away from zero) — the
-        # _semdedup_pairs_kernel discipline, applied to the mean
-        scale = 10.0 ** dp
-        return (np.sign(arr) * np.floor(np.abs(arr) * scale + 0.5) / scale).tolist()
+        return _seq_l2_assign_udf(cents)(vec), None
 
     for _ in range(iters):
         assign_col, iter_bc = assign(cents)
@@ -1644,7 +1584,8 @@ def kmeans(
             # dim=1024 — SCALING.md); two Arrow passes replace it
             upd = _mean_update_arrow(members, dim)
             updated = {
-                c: _half_up(sums / n, round_dp) for c, (n, sums) in upd.items()
+                c: _round_half_up_np(sums / n, round_dp).tolist()
+                for c, (n, sums) in upd.items()
             }
         else:
             means = members.groupBy("__c").agg(
@@ -1923,7 +1864,7 @@ def semdedup(
     ``assignment="arrow", transport="broadcast", pair_stage="kernel"``:
     matmul assignment passes, one broadcast of the centroid matrix per
     executor, BLAS pair stage — while the default keeps every stage on
-    the oracle-deterministic JVM-fold path.
+    the oracle-deterministic sequential-sum path.
     """
     if pair_stage not in ("join", "kernel"):
         raise ValueError(f"pair_stage must be 'join' or 'kernel', got {pair_stage!r}")
@@ -1937,10 +1878,10 @@ def semdedup(
         round_dp=round_dp, assignment=assignment, transport=transport,
     )
     if materialize:
-        # the assignment (a k×dim JVM argmin fold per row) feeds the
-        # pair join TWICE (both sides) and the output join once —
-        # materialize the narrow (id, cluster) rows instead of running
-        # the fold three times (opt-in, keeps the operator lazy)
+        # the assignment (a k×dim argmin per row) feeds the pair join
+        # TWICE (both sides) and the output join once — materialize the
+        # narrow (id, cluster) rows instead of running the assignment
+        # three times (opt-in, keeps the operator lazy)
         assign = assign.localCheckpoint(eager=True)
     # UNIT-normalize once per vector (O(n) folds), so the pair stage —
     # the O(Σ|cluster|²) hot path — is a single dot fold per pair
@@ -2028,8 +1969,8 @@ def assign_clusters_arrow(
 ) -> DataFrame:
     """The Arrow-matmul cluster assignment — the production swap the
     ``kmeans`` docstring promises for k in the hundreds, where the
-    JVM-fold form's k×dim-LITERAL plan makes analysis time the
-    bottleneck (measured: the semdedup geometry grid, SCALING.md).
+    sequential-sum ``"seq"`` kernel pays k × dim elementwise passes
+    per batch.
     Returns (id_col, cluster) with the same contract as ``kmeans``'s
     assignment: NULL vector → NULL cluster, distance ties → the lower
     cluster id (``np.argmin`` returns the first minimum).
@@ -2053,10 +1994,11 @@ def assign_clusters_arrow(
     broadcast lifetime, fine for a model that outlives the query.
 
     Float caveat, why this is NOT the oracle path: BLAS dot products
-    sum in a different order than the JVM fold, so a vector equidistant
-    to two centroids at the last ulp can flip — the fixture-scale
-    parity test passes exactly, but oracle-grade determinism keeps the
-    fold form (``kmeans`` default) for value-checked queries.
+    sum in a different order than the sequential fold, so a vector
+    equidistant to two centroids at the last ulp can flip — the
+    fixture-scale parity test passes exactly, but oracle-grade
+    determinism keeps the ``"seq"`` kernel (``kmeans`` default) for
+    value-checked queries.
     """
     assign = _arrow_assign_udf(df.sparkSession, centroids, transport)
     return df.select(
@@ -2155,9 +2097,10 @@ def _pq_half_up(x: float, dp: int) -> float:
 
 
 def _round_half_up_np(arr, dp: int):
-    """ONE vectorized HALF_UP kernel shared by every Arrow serving path
-    (``pq_adc_topk_multi``/``ivfpq_topk_multi`` arrow modes — ADVICE
-    r13: the two private copies had already drifted on sign handling).
+    """ONE vectorized HALF_UP kernel shared by every Arrow path
+    (``pq_adc_topk_multi``/``ivfpq_topk_multi`` arrow modes and the
+    ``kmeans(assignment="arrow")`` mean update — ADVICE r13: private
+    copies had already drifted on sign handling).
 
     Rounds the scaled DOUBLE: ``floor(|x|·10^dp + 0.5)·sign(x)/10^dp``,
     with exact zeros forced to +0.0. This is deliberately NOT
@@ -2168,53 +2111,14 @@ def _round_half_up_np(arr, dp: int):
     80.59): the arrow modes trade that last-ulp boundary for the
     single-scan vectorized plan. The divergence is pinned by
     ``test_round_half_up_np_boundary_divergence``; oracle-grade paths
-    use the fold modes, which round with ``F.round`` exactly."""
+    (the multi-query fold modes, ``kmeans`` ``"seq"``) round with
+    ``F.round`` exactly."""
     import numpy as np  # noqa: PLC0415
 
     scale = 10.0 ** dp
     out = np.floor(np.abs(arr) * scale + 0.5) / scale * np.sign(arr)
     out[arr == 0.0] = 0.0
     return out
-
-
-def _pq_subvec(vec: Column, j: int, sub: int) -> Column:
-    """Subspace ``j``'s slice of an array<double> vector (1-based slice)."""
-    return F.slice(vec, j * sub + 1, sub)
-
-
-def _pq_argmin(vec: Column, j: int, book: list[list[float]], sub: int) -> Column:
-    """Nearest-codeword id for subspace ``j``, bit-exact and oracle-
-    replayable: each distance is the sequential left-to-right squared-L2
-    fold (matches DuckDB's list_sum term-for-term in IEEE double) and
-    ties go to the LOWER code id.
-
-    Spelling (round 13): ONE ``transform`` over a literal array of
-    codewords feeding ``array_position(d, array_min(d))`` — first index
-    of the min, i.e. ties to the lower code. The previous per-codeword
-    struct forest (k_sub × aggregate-over-zip_with subtrees under one
-    array_min) computed the IDENTICAL values but paid a k_sub-times
-    larger expression tree at ANALYSIS time: HOFs never enter codegen,
-    so both spellings run interpreted per row — the struct forest's
-    only extra cost was Catalyst walking ~1,500 nodes per subspace.
-    Measured at the oracle geometry (m=16, k_sub=16, sf0.1): encode
-    9.1 s → 3.5 s, fit iteration similarly; per-row work unchanged
-    (parity asserted exactly before the swap, and the pure-Python
-    replay tests in test_pq.py re-pin it). The fully-unrolled
-    ``F.get``+add-chain spelling that wins for ADC (flat LUT) is a
-    CLIFF here: m × k_sub × sub codegen'd distance expressions blow
-    the janino heap at this very geometry (OOM reproduced before this
-    rewrite — the pq_fit fold-cliff family)."""
-    s = _pq_subvec(vec, j, sub)
-    cws = F.array(*[F.array(*[F.lit(x) for x in cw]) for cw in book])
-    dists = F.transform(
-        cws,
-        lambda cw: F.aggregate(
-            F.zip_with(s, cw, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        ),
-    )
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
 def pq_fit(
@@ -2255,29 +2159,24 @@ def pq_fit(
     doubles (the codebooks) ever reach the driver.
 
     ``assignment`` picks the physical plan of each iteration's argmin,
-    exactly the ``kmeans`` split: ``"seq"`` (default since round 16,
-    the oracle path) is the BIT-EXACT vectorized kernel
-    (``_pq_seq_codes_udf`` — the fold's IEEE operation chain
-    reproduced elementwise, first-min ties; measured 8.7× faster
-    fit+encode at the oracle geometry); ``"fold"`` is the original
-    JVM fold over literal codewords — identical values, but the
-    m × k_sub × dim/m literal expression tree is paid at plan
-    construction (py4j), analysis (Catalyst) AND interpreted eval
-    (HOFs never codegen), and it is a CLIFF, not a slope
-    (measured: executor OOM at m=8/k_sub=256/n=10k — SCALING.md round
-    12); ``"arrow"`` routes every assignment through the shared
-    ``_pq_arrow_codes_udf`` matmul kernel — the k_sub=256 production
-    path, trading oracle-grade tie determinism exactly as kmeans does
-    (parity-tested on the fixture; the mean agg is unchanged — sub
-    stays small in PQ, so the agg width never walls like wide-dim
-    kmeans).
+    exactly the ``kmeans`` split: ``"seq"`` (default, the oracle path)
+    is the BIT-EXACT vectorized kernel ``_pq_seq_codes_udf`` (each
+    subspace distance summed sequentially, first-min ties). A JVM fold
+    over literal codewords computes the same values but was dropped:
+    its m × k_sub × dim/m literal tree was paid at plan construction,
+    analysis and interpreted evaluation (8.7× slower fit+encode at the
+    oracle geometry) and OOMed executors at m=8/k_sub=256/n=10k
+    (SCALING.md round 12). ``"arrow"`` routes every assignment through
+    the shared ``_pq_arrow_codes_udf`` matmul kernel — the k_sub=256
+    production path, trading oracle-grade tie determinism exactly as
+    kmeans does (parity-tested against ``"seq"`` on the fixture; the
+    mean agg is unchanged — sub stays small in PQ, so the agg width
+    never walls like wide-dim kmeans).
     """
     if m < 1 or k_sub < 1 or iters < 0:
         raise ValueError(f"need m, k_sub >= 1 and iters >= 0, got {m}, {k_sub}, {iters}")
-    if assignment not in ("fold", "seq", "arrow"):
-        raise ValueError(
-            f"assignment must be 'fold', 'seq' or 'arrow', got {assignment!r}"
-        )
+    if assignment not in ("seq", "arrow"):
+        raise ValueError(f"assignment must be 'seq' or 'arrow', got {assignment!r}")
     vec = F.col(vec_col).cast("array<double>")
     seeds = (
         df.filter(vec.isNotNull())
@@ -2307,33 +2206,24 @@ def pq_fit(
         for j in range(m)
     ]
     for _ in range(iters):
-        base = df.filter(vec.isNotNull())
-        if assignment in ("seq", "arrow"):
-            # materialize the kernel's codes as ONE column first so the
-            # m struct references below cannot re-evaluate the UDF
-            kernel = (
-                _pq_seq_codes_udf(books)
-                if assignment == "seq"
-                else _pq_arrow_codes_udf(books)
+        # materialize the kernel's codes as ONE column first so the m
+        # struct references below cannot re-evaluate the UDF
+        kernel = (
+            _pq_seq_codes_udf(books)
+            if assignment == "seq"
+            else _pq_arrow_codes_udf(books)
+        )
+        base = df.filter(vec.isNotNull()).select(
+            vec.alias("__v"), kernel(vec).alias("__codes")
+        )
+        structs = [
+            F.struct(
+                F.lit(j).alias("j"),
+                F.get("__codes", j).alias("c"),
+                F.slice("__v", j * sub + 1, sub).alias("s"),
             )
-            base = base.select(vec.alias("__v"), kernel(vec).alias("__codes"))
-            structs = [
-                F.struct(
-                    F.lit(j).alias("j"),
-                    F.get("__codes", j).alias("c"),
-                    F.slice("__v", j * sub + 1, sub).alias("s"),
-                )
-                for j in range(m)
-            ]
-        else:
-            structs = [
-                F.struct(
-                    F.lit(j).alias("j"),
-                    _pq_argmin(vec, j, books[j], sub).alias("c"),
-                    _pq_subvec(vec, j, sub).alias("s"),
-                )
-                for j in range(m)
-            ]
+            for j in range(m)
+        ]
         rows = base.select(F.explode(F.array(*structs)).alias("e")).select(
             "e.j", "e.c", "e.s"
         )
@@ -2369,18 +2259,13 @@ def pq_encode(
     of) the raw vectors: ADC queries (``pq_adc_topk``) then scan only
     these few bytes per row.
 
-    ``mode`` picks the physical plan, exactly the ``kmeans`` split:
+    ``mode`` picks the physical plan, exactly the ``pq_fit`` split:
 
-    - ``"seq"`` (default since round 16, the oracle path): one
-      Arrow-batched BIT-EXACT kernel for all subspaces
-      (``_pq_seq_codes_udf``) — the fold's sequential IEEE sums and
-      first-min ties reproduced elementwise, without the literal
-      tree's plan-construction / analysis / interpretation cost
-      (measured 5–14× on the encode pass at the oracle geometry).
-    - ``"fold"``: the original per-subspace argmin as a JVM fold over
-      literal codewords — identical values, value-replayable. Literal
-      count is m × k_sub × dim/m; the same analysis-cost ceiling as
-      the kmeans fold as k_sub grows.
+    - ``"seq"`` (default, the oracle path): one Arrow-batched BIT-EXACT
+      kernel for all subspaces (``_pq_seq_codes_udf``). The JVM fold
+      over literal codewords it replaced computes the same values at
+      5–14× the cost on the encode pass (oracle geometry), so it was
+      dropped.
     - ``"arrow"``: one Arrow-batched kernel for ALL subspaces — per
       batch, m small matmuls via the ‖x‖² − 2x·c + ‖c‖² expansion,
       argmin per subspace. The production path for k_sub=256
@@ -2389,14 +2274,9 @@ def pq_encode(
 
     NULL vectors get NULL codes (no crash) in every mode.
     """
-    if mode not in ("fold", "seq", "arrow"):
-        raise ValueError(f"mode must be 'fold', 'seq' or 'arrow', got {mode!r}")
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
+    if mode not in ("seq", "arrow"):
+        raise ValueError(f"mode must be 'seq' or 'arrow', got {mode!r}")
     vec = F.col(vec_col).cast("array<double>")
-    if mode == "fold":
-        codes = F.array(*[_pq_argmin(vec, j, codebooks[j], sub) for j in range(m)])
-        return df.withColumn(out, F.when(vec.isNotNull(), codes))
     if mode == "seq":
         return df.withColumn(out, _pq_seq_codes_udf(codebooks)(vec))
     return df.withColumn(out, _pq_arrow_codes_udf(codebooks)(vec))
@@ -2406,10 +2286,9 @@ def _pq_arrow_codes_udf(codebooks: list[list[list[float]]]):
     """Arrow-batched all-subspace PQ codes: per batch, one small matmul
     per subspace via the ‖x‖² − 2x·c + ‖c‖² expansion, argmin per
     subspace → array<int>. Shared by ``pq_encode(mode="arrow")`` and
-    ``pq_fit(assignment="arrow")`` — the production kernel wherever the
-    fold's m × k_sub × dim/m literal expression tree stops scaling
-    (measured: executor OOM at m=8/k_sub=256 — SCALING.md round 12,
-    the kmeans fold k-cliff reproduced in PQ)."""
+    ``pq_fit(assignment="arrow")`` — the production kernel for large
+    k_sub, where the sequential sums of ``_pq_seq_codes_udf`` cost
+    k_sub × sub elementwise passes per batch."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
@@ -2436,27 +2315,22 @@ def _pq_arrow_codes_udf(codebooks: list[list[list[float]]]):
 
 
 def _pq_seq_codes_udf(codebooks: list[list[list[float]]]):
-    """Arrow-batched BIT-EXACT PQ codes — the fold's values at kernel
-    speed (round 16). Each subspace distance is accumulated over the
-    sub dimensions with EXPLICIT elementwise numpy adds in the fold's
-    left-to-right order — ``(0 + t₀²) + t₁² + …`` element for element
-    the same IEEE-double operation chain as
-    ``aggregate(zip_with(s, cw, (x-y)²), 0.0, acc+d)`` — and
-    ``argmin`` takes the FIRST minimum (ties to the lower code), so
-    the result is bit-identical to ``_pq_argmin``'s fold, unlike the
-    BLAS ``‖x‖² − 2x·c + ‖c‖²`` expansion in ``_pq_arrow_codes_udf``
+    """Arrow-batched BIT-EXACT PQ codes — the oracle path of
+    ``pq_fit`` / ``pq_encode``. Each subspace distance is accumulated
+    over the sub dimensions with EXPLICIT elementwise numpy adds in
+    left-to-right order — ``(0 + t₀²) + t₁² + …``, the IEEE-double
+    operation chain DuckDB's ``list_sum`` replays term for term — and
+    ``argmin`` takes the FIRST minimum (ties to the lower code), unlike
+    the BLAS ``‖x‖² − 2x·c + ‖c‖²`` expansion in ``_pq_arrow_codes_udf``
     (pairwise summation, different rounding). NaN distances rank last
-    (the JVM ``array_min`` treats NaN as greatest); NULL vectors get
+    (as the JVM ``array_min`` ranks NaN greatest); NULL vectors get
     NULL codes.
 
-    Why it exists: the fold's m × k_sub × dim/m literal tree is paid
-    THREE times per query — ~1,000 py4j ``F.lit`` round-trips at plan
-    construction, Catalyst walking the tree at analysis, and
-    interpreted (never codegen'd) HOF evaluation per row. This kernel
-    moves the same arithmetic into one vectorized pass per Arrow
-    batch with the codebooks riding the closure — no literals, no
-    interpretation — while keeping every bit of the oracle contract
-    (pinned by the python-replay tests in test_pq.py)."""
+    The codebooks ride the closure, so the plan carries no literals:
+    the JVM-fold spelling of the same arithmetic (a literal codeword
+    tree of m × k_sub × dim/m elements) was paid at plan construction,
+    analysis and interpreted per-row evaluation, and was dropped for
+    this kernel. Pinned by the python-replay tests in test_pq.py."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
@@ -2496,14 +2370,15 @@ def _pq_seq_codes_udf(codebooks: list[list[list[float]]]):
 
 
 def _seq_l2_assign_udf(centroids: list[list[float]]):
-    """Arrow-batched BIT-EXACT L2 argmin assignment (round 16): the
-    full-dim twin of ``_pq_seq_codes_udf`` — explicit elementwise
-    left-to-right accumulation reproduces the JVM fold's IEEE sum
-    term for term, first-min ``argmin`` reproduces the
-    ``array_min``-over-(d, c)-structs tiebreak (lower id wins), NaN
-    distances rank last, NULL vectors → NULL. Shared by the ``"seq"``
-    assignment modes of ``kmeans`` and ``ivf_assign_fold`` — fold
-    values without the k × dim literal tree."""
+    """Arrow-batched BIT-EXACT L2 argmin assignment: the full-dim twin
+    of ``_pq_seq_codes_udf`` — explicit elementwise left-to-right
+    accumulation gives the sequential IEEE sum DuckDB's ``list_sum``
+    replays term for term, first-min ``argmin`` sends ties to the lower
+    id, NaN distances rank last, NULL vectors → NULL. The one
+    implementation behind ``kmeans(assignment="seq")`` and
+    ``ivf_assign_fold``; the JVM fold over a k × dim literal centroid
+    tree it replaced gave the same values at a plan-size cost that grew
+    with k (and OOMed the driver at k=1024/dim=64)."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415

@@ -78,51 +78,20 @@ def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def with_quality_score(
-    df: DataFrame, text_col: str = "text", impl: str = "jvm"
-) -> DataFrame:
+def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality scoring: length, punctuation ratio, stopword ratio, alpha
     ratio, and a composite [0,1] score (heuristics in the C4/Gopher-rule
     style — deterministic, tune weights per corpus).
 
-    ``impl`` picks the physical form (round 16):
-
-    - ``"jvm"`` (default): the original column expressions. The
-      stopword ``F.filter`` chain is an interpreted higher-order
-      function, but the per-row work here is LIGHT (one split + one
-      membership test per token) — the round-16 interleaved A/B at the
-      sf0.1 geometry read jvm 0.87 s vs kernel 0.99 s median for the
-      full quality+lang stage, i.e. the Arrow boundary's fixed
-      per-batch cost exceeds the interpreted-HOF savings (unlike the
-      minhash/ngram kernels, whose per-token work is 10–30× heavier).
-      Measured, not assumed — see OPTIMIZATION_r16.md.
-    - ``"kernel"``: ONE Arrow-batched pass computing all five columns
-      as a struct — bit-identical to the JVM form (parity pinned by
-      ``test_quality_score_kernel_matches_jvm``, incl. the
-      ``round(x, 4)`` HALF-UP-on-shortest-decimal-repr semantics, NULL
-      text → NULL ratios but score 0.25, and the Java-regex-parity
-      ``re.ASCII`` classes). Marked non-deterministic so the
-      ``quality_score`` filter every caller applies cannot duplicate
-      the ArrowEvalPython node. The right form when documents are long
-      (per-row token work amortizes the boundary) — re-measure before
-      flipping the default.
+    Column expressions only. The stopword ``F.filter`` chain is an
+    interpreted higher-order function, but the per-row work is light
+    (one split + one membership test per token), so a standalone Arrow
+    kernel loses to it: the Python boundary's fixed per-batch cost
+    exceeds the interpreted-HOF savings (sf0.1 A/B of the quality+lang
+    stage: kernel 0.99 s vs JVM 0.87 s median). The prepare ladder,
+    which needs quality + language + fingerprint together, gets all
+    three from one fused kernel instead (``_annot_kernel_udf``).
     """
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
-    if impl == "kernel":
-        st = _quality_kernel_udf()(F.col(text_col))
-        tmp = "__quality_struct"
-        return (
-            df.withColumn(tmp, st)
-            .select(
-                *df.columns,
-                F.col(tmp)["n_chars_m"].alias("n_chars_m"),
-                F.col(tmp)["punct_ratio"].alias("punct_ratio"),
-                F.col(tmp)["stopword_ratio"].alias("stopword_ratio"),
-                F.col(tmp)["alpha_ratio"].alias("alpha_ratio"),
-                F.col(tmp)["quality_score"].alias("quality_score"),
-            )
-        )
     txt = F.col(text_col)
     length = F.length(txt)
     # single-char class counts via length difference — same values as
@@ -162,76 +131,8 @@ def _round4_half_up():
     return rnd
 
 
-def _quality_kernel_udf():
-    """Arrow-batched BIT-EXACT quality scoring — ``with_quality_score``'s
-    JVM values in one Python pass (round 16; non-default — see the
-    operator docstring for the measured A/B). Parity notes: tokenization is
-    the established ``str.lower()`` + ``re.ASCII``-pinned ``\\s+`` split
-    (Java-``\\s`` parity); the punct/alpha character classes are
-    ``re.ASCII`` (Java's default ``\\w`` is ASCII); lengths count code
-    points on both sides; ratio rounding is ``_round4_half_up``; the
-    composite score sums exact binary quarters. NULL text reproduces the
-    JVM's NULL ratios with score 0.25 (the CASE-over-NULL fallthrough)."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    import re as _re  # noqa: PLC0415
-
-    sre = _re.compile(r"\s+", _re.ASCII)
-    punct_re = _re.compile(r"[^\w\s]", _re.ASCII)
-    alpha_re = _re.compile(r"[A-Za-z]")
-    stop_set = frozenset(LANG_MARKERS["en"])
-    rnd = _round4_half_up()
-
-    def _q(s):
-        n_chars, p_r, s_r, a_r, score = [], [], [], [], []
-        for txt in s.tolist():
-            if not isinstance(txt, str):
-                n_chars.append(None)
-                p_r.append(None)
-                s_r.append(None)
-                a_r.append(None)
-                score.append(0.25)  # len<20 NULL → otherwise-1.0 quarter
-                continue
-            length = len(txt)
-            d = max(length, 1)
-            pr = rnd((length - len(punct_re.sub("", txt))) / d)
-            toks = [t for t in sre.split(txt.lower()) if t]
-            sr = rnd(sum(1 for t in toks if t in stop_set) / max(len(toks), 1))
-            ar = rnd((length - len(alpha_re.sub("", txt))) / d)
-            sc = (
-                (0.0 if length < 20 else 1.0) * 0.25
-                + (1.0 if 0.01 <= sr <= 0.6 else 0.0) * 0.25
-                + (1.0 if pr <= 0.2 else 0.0) * 0.25
-                + (1.0 if ar >= 0.5 else 0.0) * 0.25
-            )
-            n_chars.append(length)
-            p_r.append(pr)
-            s_r.append(sr)
-            a_r.append(ar)
-            score.append(rnd(sc))
-        return pd.DataFrame(
-            {
-                "n_chars_m": pd.array(n_chars, dtype="Int32"),
-                "punct_ratio": p_r,
-                "stopword_ratio": s_r,
-                "alpha_ratio": a_r,
-                "quality_score": score,
-            }
-        )
-
-    # no type hints on _q: `from __future__ import annotations`
-    # stringifies them before pandas_udf can inspect them (module
-    # convention, see similarity._lsh_signatures_pandas)
-    return pandas_udf(
-        _q,
-        "struct<n_chars_m:int,punct_ratio:double,stopword_ratio:double,"
-        "alpha_ratio:double,quality_score:double>",
-    ).asNondeterministic()
-
-
 def with_lang_id(
-    df: DataFrame, text_col: str = "text", out: str = "lang_pred", impl: str = "jvm"
+    df: DataFrame, text_col: str = "text", out: str = "lang_pred"
 ) -> DataFrame:
     """Language-ID via stopword-marker voting (n-gram heuristic class).
 
@@ -239,18 +140,10 @@ def with_lang_id(
     with deterministic tie-break on the LANG_MARKERS declaration order.
     ``und`` (undetermined) when no marker hits at all.
 
-    ``impl="jvm"`` (default): the original expressions — the round-16
-    A/B (measured with the quality stage, see ``with_quality_score``)
-    read the Arrow form slightly slower at the sf0.1 geometry; the
-    per-token work is too light to amortize the Python boundary.
-    ``impl="kernel"``: one Arrow-batched pass — bit-identical
-    predictions (parity pinned by ``test_lang_id_kernel_matches_jvm``);
-    the right form for long documents.
+    Column expressions only: the per-token work is too light for a
+    standalone Arrow kernel to amortize the Python boundary (measured
+    with the quality stage, see ``with_quality_score``).
     """
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
-    if impl == "kernel":
-        return df.withColumn(out, _lang_id_kernel_udf()(F.col(text_col)))
     toks = tokens(text_col, distinct=True)
     scores = [
         (lang, F.size(F.array_intersect(toks, F.array(*[F.lit(m) for m in markers]))))
@@ -267,42 +160,6 @@ def with_lang_id(
     return df.withColumn(out, F.when(best["s"] > 0, best["lang"]).otherwise(F.lit("und")))
 
 
-def _lang_id_kernel_udf():
-    """Arrow-batched BIT-EXACT language-ID — ``with_lang_id``'s JVM
-    values in one Python pass (round 16; non-default — measured A/B in
-    the operator docstring): distinct-token ∩ marker-set
-    counts per language, argmax with declaration-order tie-break
-    (``max`` over (score, priority) mirrors the greatest-of-structs),
-    ``und`` for zero hits and for NULL text (the JVM's NULL-struct
-    fallthrough)."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    import re as _re  # noqa: PLC0415
-
-    sre = _re.compile(r"\s+", _re.ASCII)
-    markers = [(lang, frozenset(ms)) for lang, ms in LANG_MARKERS.items()]
-
-    def _lang(s):
-        out: list[str] = []
-        for txt in s.tolist():
-            if not isinstance(txt, str):
-                out.append("und")
-                continue
-            tok_set = {t for t in sre.split(txt.lower()) if t}
-            best_s, best_lang = 0, "und"
-            for lang, ms in markers:
-                sc = len(tok_set & ms)
-                # strict >: earlier declaration (higher prio) wins ties
-                if sc > best_s:
-                    best_s, best_lang = sc, lang
-            out.append(best_lang)
-        return pd.Series(out)
-
-    # no type hints on _lang (module convention — see _quality_kernel_udf)
-    return pandas_udf(_lang, "string").asNondeterministic()
-
-
 def with_fingerprint(df: DataFrame, text_col: str = "text", out: str = "fingerprint") -> DataFrame:
     """Exact-content fingerprint: md5 of the raw text (reference K4 parity:
     MD5 whole-file dedup, mypy/streaming.py:31-46)."""
@@ -310,8 +167,7 @@ def with_fingerprint(df: DataFrame, text_col: str = "text", out: str = "fingerpr
 
 
 def with_token_set_fingerprint(
-    df: DataFrame, text_col: str = "text", out: str = "ts_fingerprint",
-    impl: str = "jvm",
+    df: DataFrame, text_col: str = "text", out: str = "ts_fingerprint"
 ) -> DataFrame:
     """Canonicalized-content fingerprint: md5 of the sorted distinct token
     set — invariant to word order and repetition, i.e. exact detection of
@@ -320,71 +176,42 @@ def with_token_set_fingerprint(
     Scale: one narrow projection + one groupBy on the fingerprint — the
     O(n²) similarity join disappears for the equality case.
 
-    ``impl="jvm"`` (default): the original expressions — the round-16
-    interleaved A/B read jvm 0.19 s vs kernel 0.54 s median at the
-    sf0.1 geometry (md5 dominates and is equally fast in the JVM; the
-    interpreted sort/join chain is a minority cost), so the Arrow form
-    is strictly worse here. ``impl="kernel"``: one Arrow-batched pass —
-    bit-identical digests (parity pinned by
-    ``test_token_set_fingerprint_kernel_matches_jvm``; Python's
-    code-point string sort equals ``array_sort``'s unsigned-UTF-8-byte
-    order because UTF-8 preserves code-point order).
+    Column expressions only: md5 dominates and is as fast in the JVM, so
+    a standalone Arrow kernel is strictly slower (sf0.1 A/B: 0.54 s vs
+    0.19 s median).
     """
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
-    if impl == "kernel":
-        return df.withColumn(out, _ts_fingerprint_kernel_udf()(F.col(text_col)))
     canon = F.array_join(F.array_sort(tokens(text_col, distinct=True)), " ")
     return df.withColumn(out, F.md5(canon))
 
 
-def _ts_fingerprint_kernel_udf():
-    """Arrow-batched BIT-EXACT token-set fingerprint —
-    ``with_token_set_fingerprint``'s JVM values in one Python pass
-    (round 16; non-default — measured A/B in the operator docstring):
-    established tokenizer parity, ``sorted`` == array_sort
-    (UTF-8 byte order preserves code-point order), md5 of the
-    space-joined set; NULL text → NULL (the JVM md5-of-NULL), zero
-    tokens → md5 of the empty string (join of an empty array)."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    import hashlib as _hl  # noqa: PLC0415
-    import re as _re  # noqa: PLC0415
-
-    sre = _re.compile(r"\s+", _re.ASCII)
-
-    def _fp(s):
-        out: list[str | None] = []
-        for txt in s.tolist():
-            if not isinstance(txt, str):
-                out.append(None)
-                continue
-            toks = sorted({t for t in sre.split(txt.lower()) if t})
-            out.append(_hl.md5(" ".join(toks).encode("utf-8")).hexdigest())
-        return pd.Series(out)
-
-    # no type hints on _fp (module convention — see _quality_kernel_udf)
-    return pandas_udf(_fp, "string").asNondeterministic()
-
-
 def _annot_kernel_udf():
-    """FUSED Arrow-batched annotation kernel (round 16): quality struct
-    + language-ID + token-set fingerprint in ONE boundary crossing,
-    tokenizing ONCE — the prepare-ladder's stage-1/2 annotations
-    (``with_quality_score`` + ``with_lang_id`` +
-    ``with_token_set_fingerprint``) each re-tokenize the text, so
-    fusing shares the split/lower pass three ways and pays the Arrow
-    round-trip once instead of three times (the economics that made the
-    INDIVIDUAL kernels lose their A/Bs — see the operator docstrings).
-    Every field reuses the individually-pinned parity logic verbatim:
-    quality = ``_quality_kernel_udf`` (re.ASCII classes,
-    ``_round4_half_up``, NULL text → NULL ratios + score 0.25), lang =
-    ``_lang_id_kernel_udf`` (distinct-token marker votes,
-    declaration-order tie-break, NULL → 'und'), fingerprint =
-    ``_ts_fingerprint_kernel_udf`` (sorted distinct tokens, md5, NULL
-    text → NULL). Parity pinned end-to-end by
-    ``test_prepare_annotations_fused_matches_jvm``."""
+    """FUSED Arrow-batched annotation kernel: quality struct +
+    language-ID + token-set fingerprint in ONE boundary crossing,
+    tokenizing ONCE — the prepare ladder's stage-1/2 annotations, which
+    as ``with_quality_score`` + ``with_lang_id`` +
+    ``with_token_set_fingerprint`` tokenize the text three times. Each
+    of those operators is cheaper as column expressions on its own (see
+    their docstrings); fused, the Arrow round-trip is paid once for
+    three operators' work, which wins (prepare A/B 3.40 → 2.84 s).
+
+    Bit-exact against the three operators (parity rows in
+    ``test_prepare_annotations_fused_matches_jvm``):
+
+    - tokens: ``str.lower()`` + ``re.ASCII``-pinned ``\\s+`` split
+      (Java ``\\s``), empty tokens dropped;
+    - quality: ``re.ASCII`` punct/alpha classes (Java's default
+      ``\\w`` is ASCII), lengths in code points, ratios rounded by
+      ``_round4_half_up``, the score a sum of exact binary quarters;
+    - lang: distinct-token ∩ marker-set votes, declaration-order
+      tie-break (the greatest-of-structs), ``und`` for zero hits;
+    - fingerprint: md5 of the space-joined sorted distinct tokens
+      (code-point sort = ``array_sort``'s UTF-8 byte order), zero
+      tokens → md5 of the empty string;
+    - NULL text: NULL ratios with score 0.25 (the CASE-over-NULL
+      fallthrough), ``und``, NULL fingerprint.
+
+    Marked non-deterministic so the ``quality_score`` filter every
+    caller applies cannot duplicate the ArrowEvalPython node."""
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
@@ -454,7 +281,9 @@ def _annot_kernel_udf():
             }
         )
 
-    # no type hints on _a (module convention — see _quality_kernel_udf)
+    # no type hints on _a: `from __future__ import annotations`
+    # stringifies them before pandas_udf can inspect them (module
+    # convention, see similarity._lsh_signatures_pandas)
     return pandas_udf(
         _a,
         "struct<n_chars_m:int,punct_ratio:double,stopword_ratio:double,"
@@ -712,7 +541,7 @@ def _simhash_kernel_udf(bits: int):
             out.append(int(weights[2 * ones > len(toks)].sum()))
         return pd.Series(out, dtype="int64")
 
-    # no type hints on _sig (module convention — see _quality_kernel_udf)
+    # no type hints on _sig (module convention — see _annot_kernel_udf)
     return pandas_udf(_sig, "long").asNondeterministic()
 
 

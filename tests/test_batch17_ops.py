@@ -437,7 +437,7 @@ def test_assign_clusters_arrow_matches_fold(spark):
 def test_kmeans_arrow_assignment_matches_fold(spark):
     """kmeans(assignment='arrow') runs every assignment pass (each
     Lloyd iteration AND the final labeling) through the matmul kernel
-    and must reproduce the fold form on the fixture — same trajectory,
+    and must reproduce the default seq form on the fixture — same trajectory,
     same final labels — under both transports; invalid knob rejected."""
     from datapipelineetl_spark import catalog
 

@@ -146,3 +146,11 @@ def test_nested_loop_joins_only_where_justified(plans):
         n for n in NESTED_LOOP_ALLOWED if "BroadcastNestedLoopJoin" not in plans[n]
     ]
     assert not unused, f"allowlist entries no longer needed: {unused}"
+
+
+def test_lsh_cosine_near_pairs_single_repartition_exchange(plans):
+    """The LSH-cosine verify rewrite's shape: ONE repartition-by-number
+    exchange serves both the candidate dedup and the broadcast-matrix
+    verify. A second one means the verify re-shuffles the pairs."""
+    n = plans["q_lsh_cosine_near_pairs"].count("REPARTITION_BY_NUM")
+    assert n == 1, f"q_lsh_cosine_near_pairs has {n} REPARTITION_BY_NUM exchanges"

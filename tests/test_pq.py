@@ -1,7 +1,7 @@
 """Product-quantization family (similarity.pq_fit / pq_encode /
-pq_adc_topk): pure-Python trajectory replay, fold↔arrow encode parity,
-measured recall gates, and the contract corners (nulls, exclusions,
-validation errors)."""
+pq_adc_topk): pure-Python trajectory replay of the bit-exact seq path,
+seq↔arrow fit and encode parity, measured recall gates, and the
+contract corners (nulls, exclusions, validation errors)."""
 
 from __future__ import annotations
 
@@ -158,7 +158,10 @@ def test_pq_adc_matches_python_replay(pq_frame):
     assert all(r.vec_id != 9 for r in got)
 
 
-def test_pq_encode_arrow_matches_fold(spark, sf_dir):
+def test_pq_encode_arrow_matches_seq(spark, sf_dir):
+    """The matmul encode kernel agrees with the bit-exact seq kernel
+    (the default, pinned by test_pq_fit_encode_matches_python_replay)
+    on the fixture, NULL vector → NULL code in both."""
     emb = catalog.load(spark, sf_dir, "embeddings")
     with_null = emb.unionByName(
         spark.createDataFrame([(10**9, None)], _SCHEMA).withColumn(
@@ -166,28 +169,28 @@ def test_pq_encode_arrow_matches_fold(spark, sf_dir):
         )
     )
     books = similarity.pq_fit(emb, m=16, k_sub=16, iters=1)
-    fold = {
+    seq = {
         r.vec_id: r.pq_code
-        for r in similarity.pq_encode(with_null, books, mode="fold").collect()
+        for r in similarity.pq_encode(with_null, books, mode="seq").collect()
     }
     arrow = {
         r.vec_id: r.pq_code
         for r in similarity.pq_encode(with_null, books, mode="arrow").collect()
     }
-    assert fold == arrow
-    assert fold[10**9] is None
+    assert seq == arrow
+    assert seq[10**9] is None
 
 
-def test_pq_fit_arrow_matches_fold(spark, sf_dir):
+def test_pq_fit_arrow_matches_seq(spark, sf_dir):
     """pq_fit(assignment="arrow") routes each iteration's argmin through
-    the matmul kernel instead of the literal fold (whose expression
-    tree OOMs executors at m=8/k_sub=256 — SCALING.md round 12). On the
-    fixture the two must produce IDENTICAL codebooks (no distance ties
-    at fixture geometry, and the mean agg is shared)."""
+    the matmul kernel instead of the bit-exact seq kernel (the default,
+    pinned by test_pq_fit_encode_matches_python_replay). On the fixture
+    the two must produce IDENTICAL codebooks (no distance ties at
+    fixture geometry, and the mean agg is shared)."""
     emb = catalog.load(spark, sf_dir, "embeddings")
-    fold = similarity.pq_fit(emb, m=16, k_sub=16, iters=2, assignment="fold")
+    seq = similarity.pq_fit(emb, m=16, k_sub=16, iters=2, assignment="seq")
     arrow = similarity.pq_fit(emb, m=16, k_sub=16, iters=2, assignment="arrow")
-    assert fold == arrow
+    assert seq == arrow
     with pytest.raises(ValueError, match="assignment"):
         similarity.pq_fit(emb, m=16, assignment="nope")
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import gc
 import struct
+import threading
 from contextlib import contextmanager
 
 import numpy as np
@@ -29,14 +30,19 @@ N, DIM, K, REFINE = 400, 32, 10, 100
 @contextmanager
 def _gateway_calls(spark):
     """Count py4j ``send_command`` calls (every gateway round trip,
-    including object releases) made inside the block. Cyclic GC is
-    paused so a collection of unrelated Java handles cannot land in it."""
+    including object releases) made by this thread inside the block.
+    Cyclic GC is paused so a collection of unrelated Java handles cannot
+    land in it, and calls from other threads are not counted: py4j
+    releases handles of earlier, unrelated objects from a background
+    thread, at times of its own choosing."""
     client = spark.sparkContext._gateway._gateway_client
     orig = client.send_command
+    owner = threading.get_ident()
     n = [0]
 
     def counting(*a, **kw):
-        n[0] += 1
+        if threading.get_ident() == owner:
+            n[0] += 1
         return orig(*a, **kw)
 
     client.send_command = counting

@@ -11,6 +11,7 @@ from __future__ import annotations
 import hashlib
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -62,12 +63,44 @@ def test_duplicate_spans_match_python_reference(spark, texts, n):
     docs = list(enumerate(texts))
     df = spark.createDataFrame(docs, "doc_id long, text string")
     want_flags, want_text = _ref_spans(docs, n)
-    for impl in ("kernel", "jvm"):
+    got_flags = {(r.doc_id, r.start)
+                 for r in dedup.duplicate_spans(df, n=n).collect()}
+    assert got_flags == want_flags
+    got_text = {r.doc_id: r.text
+                for r in dedup.remove_duplicate_spans(df, n=n).collect()}
+    # NULL text passes through the rewrite as the empty token stream
+    assert got_text == {i: want_text[i] for i in got_text}
+    assert set(got_text) == {i for i, _ in docs}  # no dropped rows
+
+
+def test_duplicate_spans_edge_rows_match_python_reference(spark):
+    """The fixed edge rows on top of the property: NBSP (not a split,
+    lives inside window text), unicode case, NULL/empty/short text,
+    exactly-n-token docs and within-doc repeats, for n in {2, 8} — both
+    the flagged windows and the removal rewrite replayed in Python."""
+    span = "a b c d e f g h"
+    docs = [
+        (1, span + " i j"),
+        (2, "z y " + span),
+        (3, "p q r"),
+        (4, "m n o p q r s t m n o p q r s t"),
+        (5, None),
+        (6, ""),
+        (7, "one two three four five six seven eight"),  # exactly 8
+        (8, "a b\xa0c d e f g h i"),                     # NBSP glues b c
+        (9, "İstanbul ΣΟΦΟΣ " + span),
+    ]
+    df = spark.createDataFrame(docs, "doc_id int, text string")
+    for n in (2, 8):
+        want_flags, want_text = _ref_spans(docs, n)
         got_flags = {(r.doc_id, r.start)
-                     for r in dedup.duplicate_spans(df, n=n, impl=impl).collect()}
-        assert got_flags == want_flags, impl
+                     for r in dedup.duplicate_spans(df, n=n).collect()}
+        assert got_flags == want_flags, n
         got_text = {r.doc_id: r.text
-                    for r in dedup.remove_duplicate_spans(df, n=n, impl=impl).collect()}
-        # NULL text passes through the rewrite as the empty token stream
-        assert got_text == {i: want_text[i] for i in got_text}, impl
-        assert set(got_text) == {i for i, _ in docs}  # no dropped rows
+                    for r in dedup.remove_duplicate_spans(df, n=n).collect()}
+        assert got_text == want_text, n
+    # the implementation switch is gone, not silently ignored
+    with pytest.raises(TypeError):
+        dedup.duplicate_spans(df, impl="kernel")
+    with pytest.raises(TypeError):
+        dedup.remove_duplicate_spans(df, impl="kernel")

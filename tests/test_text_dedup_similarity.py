@@ -91,99 +91,6 @@ def test_minhash_bucket_cap_drops_hot_buckets(spark, docs_df):
     assert dedup.lsh_candidate_pairs(sigs, "doc_id").count() > 0
 
 
-def test_quality_score_kernel_matches_jvm(spark):
-    """Round-16 optimization guard: the Arrow quality-scoring kernel
-    must emit row-identical (n_chars_m, punct_ratio, stopword_ratio,
-    alpha_ratio, quality_score) to the original JVM expressions —
-    including every filter boundary (punct exactly 0.2, stopword 0.01
-    and 0.6, alpha 0.5, length 19/20), HALF-UP rounding cases (1/3 →
-    0.3333, 2/3 → 0.6667), Java-regex-parity classes (underscore is
-    \\w, emoji is punct, NBSP not \\s), and NULL/empty/whitespace text
-    (NULL ratios but score 0.25)."""
-    rows = [
-        (1, None),
-        (2, ""),
-        (3, " \t\n "),
-        (4, "the and of to is a b c d"),          # stopword 5/9 → 0.5556
-        (5, "the " + "b " * 199),                  # stopword 1/200 = 0.005 < 0.01
-        (6, "the " + ("b " * 99).strip()),         # stopword 1/100 = 0.01 boundary
-        (7, "the the the of of xx"),               # stopword 5/6 → 0.8333 > 0.6
-        (8, "the of and xy"),                      # stopword 3/5... actually 3/4? pin it
-        (9, "aaaa,,,, aaaa,,,, a.."),              # punct 10/20 > 0.2
-        (10, "aaaaaaaaaaaaaaaa,,,."),              # punct 4/20 = 0.2 boundary
-        (11, "aaaaaaaaaa__________"),              # underscore is \w → punct 0
-        (12, "abcdefghij0123456789"),              # alpha 10/20 = 0.5 boundary
-        (13, "abcdefghi 0123456789"),              # alpha 9/20 < 0.5
-        (14, "shortdoc hey"),                      # length 12 < 20
-        (15, "exactly nineteen ch"),               # length 19
-        (16, "exactly twenty chars"),              # length 20
-        (17, "😀😀😀 aaaaaaaaaaaaaaaa"),           # emoji = punct, astral length
-        (18, "x y the of and to is qq"),      # NBSP glues x y into one token
-        (19, "Ångström STRASSE ẞ İstanbul ΣΟΦΟΣ maße the of"),
-        (20, "of de la und le 的 the et die es"),  # multilingual marker soup
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    cols = ["doc_id", "n_chars_m", "punct_ratio", "stopword_ratio",
-            "alpha_ratio", "quality_score"]
-    jvm = {r.doc_id: tuple(r)[1:]
-           for r in text.with_quality_score(df, impl="jvm").select(*cols).collect()}
-    ker = {r.doc_id: tuple(r)[1:]
-           for r in text.with_quality_score(df, impl="kernel").select(*cols).collect()}
-    assert jvm == ker
-    assert ker[1] == (None, None, None, None, 0.25)
-    assert ker[10][1] == 0.2 and ker[12][3] == 0.5
-    with pytest.raises(ValueError, match="impl"):
-        text.with_quality_score(df, impl="nope")
-
-
-def test_lang_id_kernel_matches_jvm(spark):
-    """Round-16 optimization guard: the Arrow language-ID kernel must
-    match the JVM greatest-of-structs voting — including declaration
-    -order tie-breaks ('la' is both es and fr → es; equal de/en votes →
-    en), zero-hit → 'und', and NULL/empty text → 'und'."""
-    rows = [
-        (1, None), (2, ""), (3, "xyzzy plugh"),
-        (4, "the and of to is"),
-        (5, "la"),                                  # es vs fr tie → es
-        (6, "the der"),                             # en vs de tie → en
-        (7, "der die und das ist"),
-        (8, "le et les des la"),                    # fr 5 vs es 1
-        (9, "的 是 了"),
-        (10, "THE AND OF"),                         # case-folded markers
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    jvm = {r.doc_id: r.lang_pred for r in text.with_lang_id(df, impl="jvm").collect()}
-    ker = {r.doc_id: r.lang_pred for r in text.with_lang_id(df, impl="kernel").collect()}
-    assert jvm == ker
-    assert ker[5] == "es" and ker[6] == "en" and ker[8] == "fr" and ker[1] == "und"
-    with pytest.raises(ValueError, match="impl"):
-        text.with_lang_id(df, impl="nope")
-
-
-def test_token_set_fingerprint_kernel_matches_jvm(spark):
-    """Round-16 optimization guard: the Arrow token-set-fingerprint
-    kernel must emit byte-identical md5 digests to the JVM
-    sort/join/md5 chain — including the Python-sort-vs-array_sort
-    byte-order equivalence on mixed-script tokens, repetition/word-order
-    invariance, NULL → NULL and zero tokens → md5('')."""
-    rows = [
-        (1, None), (2, ""), (3, " \t "),
-        (4, "b a c a b"), (5, "a b c"), (6, "c b a a a"),
-        (7, "z ä 中 😀 Z _x 0 ! ' ~"),
-        (8, "The QUICK the quick"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    jvm = {r.doc_id: r.ts_fingerprint
-           for r in text.with_token_set_fingerprint(df, impl="jvm").collect()}
-    ker = {r.doc_id: r.ts_fingerprint
-           for r in text.with_token_set_fingerprint(df, impl="kernel").collect()}
-    assert jvm == ker
-    assert ker[1] is None and ker[4] == ker[5] == ker[6]
-    assert ker[2] == ker[3]  # both canonicalize to the empty join
-    with pytest.raises(ValueError, match="impl"):
-        text.with_token_set_fingerprint(df, impl="nope")
-
-
 def test_minhash_signature_kernel_matches_jvm(spark):
     """Round-16 optimization guard: the Arrow ``minhash_signature``
     kernel (str.lower + re.ASCII ``\\s+`` split + md5-60 + vectorized
@@ -721,7 +628,7 @@ def test_lsh_verify_absent_ids_score_null(spark):
 
 def test_unknown_impl_values_raise(spark):
     """A misspelled implementation switch fails fast instead of silently
-    taking the other branch (the corpus annot_impl precedent)."""
+    taking the other branch."""
     df = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="verify_impl"):
         similarity.lsh_cosine_near_pairs(df, 0.5, dim=2, verify_impl="JVM")
@@ -1177,50 +1084,6 @@ def test_duplicate_spans_and_removal(spark):
     assert set(kept[1].asDict()) == {"doc_id", "text", "source", "lang"}
     assert (kept[2].source, kept[2].lang) == ("wiki", "fr")
     assert kept[2].text == "z y"
-
-
-def test_duplicate_spans_kernel_matches_jvm(spark):
-    """Round-16 optimization guard: the Arrow span-window kernel
-    (tokenize once, join each n-token window, md5-60, (id, start, hash)
-    rows) must make duplicate_spans and remove_duplicate_spans emit
-    row-identical output to the JVM transform/posexplode chain —
-    including NBSP (not a split, lives inside window text), unicode
-    case, NULL/empty/short text, exactly-n-token docs, and within-doc
-    repeats."""
-    span = "a b c d e f g h"
-    rows = [
-        (1, span + " i j"),
-        (2, "z y " + span),
-        (3, "p q r"),
-        (4, "m n o p q r s t m n o p q r s t"),
-        (5, None),
-        (6, ""),
-        (7, "one two three four five six seven eight"),  # exactly 8
-        (8, "a b c d e f g h i"),                   # NBSP glues b c
-        (9, "İstanbul ΣΟΦΟΣ " + span),
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    for n in (2, 8):
-        jvm_spans = {
-            (r.doc_id, r.start)
-            for r in dedup.duplicate_spans(df, n=n, impl="jvm").collect()
-        }
-        ker_spans = {
-            (r.doc_id, r.start)
-            for r in dedup.duplicate_spans(df, n=n, impl="kernel").collect()
-        }
-        assert jvm_spans == ker_spans, n
-        jvm_txt = {
-            r.doc_id: r.text
-            for r in dedup.remove_duplicate_spans(df, n=n, impl="jvm").collect()
-        }
-        ker_txt = {
-            r.doc_id: r.text
-            for r in dedup.remove_duplicate_spans(df, n=n, impl="kernel").collect()
-        }
-        assert jvm_txt == ker_txt, n
-    with pytest.raises(ValueError, match="impl"):
-        dedup.duplicate_spans(df, impl="nope")
 
 
 def test_read_media_chunks_reassembles_exactly(spark, tmp_path):

@@ -1,9 +1,8 @@
-"""Measure kmeans assignment-plan cost: JVM fold over k×dim LITERAL
-centroid arrays vs the Arrow matmul kernel (``assignment="arrow"``),
-as k grows. The fold's plan carries k×dim literals per assignment pass
-— ANALYSIS time scales with the plan size (the semdedup geometry grid
-first measured this); the matmul's plan is one pandas_udf node of
-constant size. Warm best-of-2 per (k, mode); results recorded in
+"""Measure kmeans assignment cost as k grows: the bit-exact
+sequential-sum kernel (``assignment="seq"``, the oracle path — k × dim
+elementwise numpy passes per Arrow batch) vs the Arrow matmul kernel
+(``assignment="arrow"``, one BLAS matmul per batch). Warm best-of-2
+per (k, mode); the earlier fold-vs-arrow crossover is recorded in
 SCALING.md ("Round 11: kmeans assignment crossover").
 
     python tools/bench_kmeans_assign.py [k ...]    # default 16 64 128 256
@@ -34,11 +33,11 @@ def main() -> int:
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     ).localCheckpoint(eager=True)
-    print(f"| k (n={N}, dim={DIM}, iters={ITERS}) | fold (s) | arrow (s) | ratio |")
+    print(f"| k (n={N}, dim={DIM}, iters={ITERS}) | seq (s) | arrow (s) | ratio |")
     print("| --- | --- | --- | --- |")
     for k in ks:
         timings = {}
-        for mode in ("fold", "arrow"):
+        for mode in ("seq", "arrow"):
             best = float("inf")
             for _ in range(2):
                 t0 = time.perf_counter()
@@ -48,8 +47,8 @@ def main() -> int:
                 best = min(best, time.perf_counter() - t0)
             timings[mode] = best
         print(
-            f"| {k} | {timings['fold']:.2f} | {timings['arrow']:.2f} "
-            f"| {timings['fold'] / timings['arrow']:.1f}x |"
+            f"| {k} | {timings['seq']:.2f} | {timings['arrow']:.2f} "
+            f"| {timings['seq'] / timings['arrow']:.1f}x |"
         )
     return 0
 

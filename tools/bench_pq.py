@@ -17,17 +17,13 @@ Two claims to pin with numbers, not arguments:
 Fit is on a SAMPLE (the ivf_fit_centroids practice) — fit cost is
 excluded from the scan comparison on purpose; encode cost (one Arrow
 pass, mode="arrow") is reported once. The fit runs
-``assignment="arrow"``: the fold's m × k_sub × dim/m literal tree is a
-measured CLIFF at this geometry (executor OOM at m=8/k_sub=256/n=10k —
-re-probe with SPARK_GRAFT_PQ_FOLD=1, single run, expect the JVM to die).
+``assignment="arrow"``, the production path for k_sub=256.
 
-    python tools/bench_pq.py [n ...]    # default 50000 200000
-    SPARK_GRAFT_PQ_FOLD=1 python tools/bench_pq.py 50000   # fold-fit OOM probe
+    python tools/bench_pq.py [n ...]    # default 200000 1000000
 """
 
 from __future__ import annotations
 
-import os
 import sys
 import tempfile
 import time
@@ -92,12 +88,9 @@ def main() -> int:
                 .write.parquet(f"{td}/vec")
             )
             vec_store = spark.read.parquet(f"{td}/vec")
-            fit_mode = (
-                "fold" if os.environ.get("SPARK_GRAFT_PQ_FOLD") == "1" else "arrow"
-            )
             books = similarity.pq_fit(
                 vec_store.filter(F.col("vec_id") < FIT_N),
-                m=M, k_sub=KSUB, iters=ITERS, dim=DIM, assignment=fit_mode,
+                m=M, k_sub=KSUB, iters=ITERS, dim=DIM, assignment="arrow",
             )
             t0 = time.perf_counter()
             similarity.pq_encode(vec_store, books, mode="arrow").select(
