@@ -184,95 +184,39 @@ def test_prepare_annotations_fused_matches_jvm(spark):
     """The FUSED annotation kernel behind prepare_corpus stage 1
     (quality + lang + exact-dedup fingerprint in one Arrow pass, one
     tokenize) must emit, column for column, exactly what the three
-    column-expression operators emit — over every edge row: the quality
-    filter boundaries (punct exactly 0.2, stopword 0.01 and 0.6, alpha
-    0.5, length 19/20), HALF-UP rounding (1/3 → 0.3333, 2/3 → 0.6667),
-    Java-regex-parity classes (underscore is \\w, emoji is punct, NBSP
-    not \\s), NULL/empty/whitespace text (NULL ratios but score 0.25,
-    'und', NULL fingerprint), language tie-breaks in declaration order
-    ('la' is es and fr → es; equal de/en votes → en), and the
-    fingerprint's Python-sort = array_sort byte order on mixed-script
-    tokens, its repetition/word-order invariance and md5('') for zero
-    tokens."""
+    column-expression operators emit on ladder-shaped rows: duplicates,
+    near-duplicates, PII, NULL text, unicode case/NBSP edges and
+    repetition. The per-operator edge rows (filter boundaries, HALF-UP
+    rounding, regex-parity classes, language tie-breaks, fingerprint
+    byte order) run through the same comparison in
+    test_text_dedup_similarity's ``*_kernel_matches_jvm`` tests."""
     from datapipelineetl_spark.operators import text
 
-    quality_rows = [
-        (1, None),
-        (2, ""),
-        (3, " \t\n "),
-        (4, "the and of to is a b c d"),          # stopword 5/9 → 0.5556
-        (5, "the " + "b " * 199),                  # stopword 1/200 = 0.005 < 0.01
-        (6, "the " + ("b " * 99).strip()),         # stopword 1/100 = 0.01 boundary
-        (7, "the the the of of xx"),               # stopword 5/6 → 0.8333 > 0.6
-        (8, "the of and xy"),                      # stopword 3/4
-        (9, "aaaa,,,, aaaa,,,, a.."),              # punct 10/20 > 0.2
-        (10, "aaaaaaaaaaaaaaaa,,,."),              # punct 4/20 = 0.2 boundary
-        (11, "aaaaaaaaaa__________"),              # underscore is \w → punct 0
-        (12, "abcdefghij0123456789"),              # alpha 10/20 = 0.5 boundary
-        (13, "abcdefghi 0123456789"),              # alpha 9/20 < 0.5
-        (14, "shortdoc hey"),                      # length 12 < 20
-        (15, "exactly nineteen ch"),               # length 19
-        (16, "exactly twenty chars"),              # length 20
-        (17, "😀😀😀 aaaaaaaaaaaaaaaa"),           # emoji = punct, astral length
-        (18, "x\xa0y the of and to is qq"),        # NBSP glues x y into one token
-        (19, "Ångström STRASSE ẞ İstanbul ΣΟΦΟΣ maße the of"),
-        (20, "of de la und le 的 the et die es"),  # multilingual marker soup
-    ]
-    lang_rows = [
-        (21, "xyzzy plugh"),
-        (22, "the and of to is"),
-        (23, "la"),                                # es vs fr tie → es
-        (24, "the der"),                           # en vs de tie → en
-        (25, "der die und das ist"),
-        (26, "le et les des la"),                  # fr 5 vs es 1
-        (27, "的 是 了"),
-        (28, "THE AND OF"),                        # case-folded markers
-    ]
-    fingerprint_rows = [
-        (31, "b a c a b"), (32, "a b c"), (33, "c b a a a"),
-        (34, "z ä 中 😀 Z _x 0 ! ' ~"),
-        (35, "The QUICK the quick"),
-    ]
     base = "the quick brown fox jumps over the lazy dog near the riverbank today"
-    ladder_rows = [
-        (41, base),
-        (42, base + " extra"),
-        (43, "reach me at someone@example.com " + base + " totally new words"),
-        (44, "Ångström STRASSE ẞ İstanbul ΣΟΦΟΣ maße plus the filler and with for that"),
-        (45, "a\xa0b " + base),                      # NBSP inside a token
-        (46, "fox " * 7),                          # repetition, trailing space
+    rows = [
+        (1, base),
+        (2, base),                                 # exact dup
+        (3, base + " extra"),                      # near dup
+        (4, "x y"),                                # low quality
+        (5, "reach me at someone@example.com " + base + " totally new words"),
+        (6, None),                                 # NULL text
+        (7, "Ångström STRASSE ẞ İstanbul ΣΟΦΟΣ maße plus the filler and with for that"),
+        (8, "a\xa0b " + base),                     # NBSP inside a token
+        (9, "fox " * 7),                           # repetition, trailing space
     ]
-    df = spark.createDataFrame(
-        quality_rows + lang_rows + fingerprint_rows + ladder_rows,
-        "doc_id long, text string",
-    )
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     want = text.with_token_set_fingerprint(
         text.with_lang_id(text.with_quality_score(df)), out="__fp"
     )
     got = corpus._quality_lang_stage(df, "text", None, None)
     assert got.columns == want.columns
-    want_rows = {r.doc_id: r.asDict() for r in want.collect()}
     got_rows = {r.doc_id: r.asDict() for r in got.collect()}
-    assert got_rows == want_rows and len(got_rows) == df.count()
-
-    def ann(i):
-        r = got_rows[i]
-        return (r["n_chars_m"], r["punct_ratio"], r["stopword_ratio"],
-                r["alpha_ratio"], r["quality_score"])
-
-    assert ann(1) == (None, None, None, None, 0.25)
-    assert ann(10)[1] == 0.2 and ann(12)[3] == 0.5
-    lang = {i: r["lang_pred"] for i, r in got_rows.items()}
-    assert lang[23] == "es" and lang[24] == "en" and lang[26] == "fr"
-    assert lang[1] == lang[2] == lang[21] == "und"
-    fp = {i: r["__fp"] for i, r in got_rows.items()}
-    assert fp[1] is None and fp[31] == fp[32] == fp[33]
-    assert fp[2] == fp[3]  # both canonicalize to the empty join
-    # the implementation switches are gone, not silently ignored
-    for op in (text.with_quality_score, text.with_lang_id,
-               text.with_token_set_fingerprint):
-        with pytest.raises(TypeError):
-            op(df, impl="kernel")
+    assert got_rows == {r.doc_id: r.asDict() for r in want.collect()}
+    assert len(got_rows) == len(rows)
+    r = got_rows[6]
+    assert (r["n_chars_m"], r["quality_score"], r["lang_pred"], r["__fp"]) == (
+        None, 0.25, "und", None)
+    assert got_rows[1]["__fp"] == got_rows[2]["__fp"] != got_rows[3]["__fp"]
 
 
 def test_prepare_corpus_overwrites_existing_annotation_columns(spark):

@@ -91,6 +91,111 @@ def test_minhash_bucket_cap_drops_hot_buckets(spark, docs_df):
     assert dedup.lsh_candidate_pairs(sigs, "doc_id").count() > 0
 
 
+def _fused_annotations(spark, rows):
+    """Run prepare_corpus's fused annotation stage (quality + lang +
+    token-set fingerprint in one Arrow pass, filters off) and the three
+    column-expression operators it stands in for on ``rows``; assert
+    they agree column for column and return the fused rows by doc_id."""
+    from datapipelineetl_spark.operators import corpus
+
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    want = text.with_token_set_fingerprint(
+        text.with_lang_id(text.with_quality_score(df)), out="__fp"
+    )
+    got = corpus._quality_lang_stage(df, "text", None, None)
+    assert got.columns == want.columns
+    got_rows = {r.doc_id: r.asDict() for r in got.collect()}
+    assert got_rows == {r.doc_id: r.asDict() for r in want.collect()}
+    assert len(got_rows) == len(rows)
+    return df, got_rows
+
+
+def test_quality_score_kernel_matches_jvm(spark):
+    """The Arrow quality-scoring logic (now only in the fused annotation
+    kernel; the standalone kernel measured slower and was dropped) must
+    emit row-identical (n_chars_m, punct_ratio, stopword_ratio,
+    alpha_ratio, quality_score) to the JVM expressions — including every
+    filter boundary (punct exactly 0.2, stopword 0.01 and 0.6, alpha
+    0.5, length 19/20), HALF-UP rounding cases (1/3 → 0.3333, 2/3 →
+    0.6667), Java-regex-parity classes (underscore is \\w, emoji is
+    punct, NBSP not \\s), and NULL/empty/whitespace text (NULL ratios
+    but score 0.25)."""
+    rows = [
+        (1, None),
+        (2, ""),
+        (3, " \t\n "),
+        (4, "the and of to is a b c d"),          # stopword 5/9 → 0.5556
+        (5, "the " + "b " * 199),                  # stopword 1/200 = 0.005 < 0.01
+        (6, "the " + ("b " * 99).strip()),         # stopword 1/100 = 0.01 boundary
+        (7, "the the the of of xx"),               # stopword 5/6 → 0.8333 > 0.6
+        (8, "the of and xy"),                      # stopword 3/4
+        (9, "aaaa,,,, aaaa,,,, a.."),              # punct 10/20 > 0.2
+        (10, "aaaaaaaaaaaaaaaa,,,."),              # punct 4/20 = 0.2 boundary
+        (11, "aaaaaaaaaa__________"),              # underscore is \w → punct 0
+        (12, "abcdefghij0123456789"),              # alpha 10/20 = 0.5 boundary
+        (13, "abcdefghi 0123456789"),              # alpha 9/20 < 0.5
+        (14, "shortdoc hey"),                      # length 12 < 20
+        (15, "exactly nineteen ch"),               # length 19
+        (16, "exactly twenty chars"),              # length 20
+        (17, "😀😀😀 aaaaaaaaaaaaaaaa"),           # emoji = punct, astral length
+        (18, "x\xa0 y the of and to is qq"),       # NBSP glues x to its token
+        (19, "Ångström STRASSE ẞ İstanbul ΣΟΦΟΣ maße the of"),
+        (20, "of de la und le 的 the et die es"),  # multilingual marker soup
+    ]
+    df, got = _fused_annotations(spark, rows)
+    cols = ["n_chars_m", "punct_ratio", "stopword_ratio", "alpha_ratio",
+            "quality_score"]
+    ann = {i: tuple(r[c] for c in cols) for i, r in got.items()}
+    assert ann[1] == (None, None, None, None, 0.25)
+    assert ann[10][1] == 0.2 and ann[12][3] == 0.5
+    # the implementation switch is gone, not silently ignored
+    with pytest.raises(TypeError):
+        text.with_quality_score(df, impl="kernel")
+
+
+def test_lang_id_kernel_matches_jvm(spark):
+    """The Arrow language-ID logic (now only in the fused annotation
+    kernel) must match the JVM greatest-of-structs voting — including
+    declaration-order tie-breaks ('la' is both es and fr → es; equal
+    de/en votes → en), zero-hit → 'und', and NULL/empty text → 'und'."""
+    rows = [
+        (1, None), (2, ""), (3, "xyzzy plugh"),
+        (4, "the and of to is"),
+        (5, "la"),                                  # es vs fr tie → es
+        (6, "the der"),                             # en vs de tie → en
+        (7, "der die und das ist"),
+        (8, "le et les des la"),                    # fr 5 vs es 1
+        (9, "的 是 了"),
+        (10, "THE AND OF"),                         # case-folded markers
+    ]
+    df, got = _fused_annotations(spark, rows)
+    lang = {i: r["lang_pred"] for i, r in got.items()}
+    assert lang[5] == "es" and lang[6] == "en" and lang[8] == "fr"
+    assert lang[1] == lang[2] == lang[3] == "und"
+    with pytest.raises(TypeError):
+        text.with_lang_id(df, impl="kernel")
+
+
+def test_token_set_fingerprint_kernel_matches_jvm(spark):
+    """The Arrow token-set-fingerprint logic (now only in the fused
+    annotation kernel) must emit byte-identical md5 digests to the JVM
+    sort/join/md5 chain — including the Python-sort-vs-array_sort
+    byte-order equivalence on mixed-script tokens, repetition/word-order
+    invariance, NULL → NULL and zero tokens → md5('')."""
+    rows = [
+        (1, None), (2, ""), (3, " \t "),
+        (4, "b a c a b"), (5, "a b c"), (6, "c b a a a"),
+        (7, "z ä 中 😀 Z _x 0 ! ' ~"),
+        (8, "The QUICK the quick"),
+    ]
+    df, got = _fused_annotations(spark, rows)
+    fp = {i: r["__fp"] for i, r in got.items()}
+    assert fp[1] is None and fp[4] == fp[5] == fp[6]
+    assert fp[2] == fp[3]  # both canonicalize to the empty join
+    with pytest.raises(TypeError):
+        text.with_token_set_fingerprint(df, impl="kernel")
+
+
 def test_minhash_signature_kernel_matches_jvm(spark):
     """Round-16 optimization guard: the Arrow ``minhash_signature``
     kernel (str.lower + re.ASCII ``\\s+`` split + md5-60 + vectorized
