@@ -2425,8 +2425,8 @@ def pq_adc_topk(
     literal; each row's approximate squared L2 is then a pure JVM fold
     of m table lookups over its code — no Python, no join, no shuffle
     beyond the TakeOrderedAndProject k-heap. This is what makes PQ the
-    100 TB scan tier: the pass reads m small ints per row instead of
-    the dim-sized vector.
+    100 TB scan tier: without ``refine_n`` the pass reads m small ints
+    per row instead of the dim-sized vector.
 
     Output: (id_col, ``adc`` = the approximate distance HALF_UP-rounded
     to ``round_dp``), ascending, ties to the lower id — ordering is on
@@ -2434,15 +2434,60 @@ def pq_adc_topk(
     order itself is hash-stable cross-engine. LUT entries are
     left-to-right sequential sums over each subspace, the fold over m
     is sequential in j — both match DuckDB's list_sum term-for-term.
+    Rows with a NULL code are never scored.
 
     ``refine_n`` > 0 with ``vectors`` enables the standard two-stage
     search: ADC shortlists ``max(k, refine_n)`` candidates (widened so
     a ``refine_n < k`` call still yields k rows and matches the multi
     path's width — ADVICE r14), then EXACT squared L2 against the raw
-    vectors re-ranks the shortlist to the final k (one narrow join
-    against the shortlist ids — recall of exact search whenever the
-    true top-k survives the shortlist).
+    vectors re-ranks the shortlist to the final k, adding column
+    ``l2`` (recall of exact search whenever the true top-k survives the
+    shortlist). Which re-rank leg runs follows frame identity:
+
+    - ``vectors is encoded`` (a store holding codes and vectors side by
+      side): the shortlist heap CARRIES ``vec_col`` next to (id, adc),
+      so filter and refine are one Spark job of two stages — one scan
+      of codes + vectors instead of two scans and a broadcast exchange.
+      Each code is scored against its own row's vector.
+    - any other frame (a codes-only store whose raw vectors live
+      elsewhere): ``_refine_l2`` broadcast-joins the shortlist back
+      into a scan of ``vectors``, pairing each shortlisted code with
+      EVERY ``vectors`` row sharing its id.
+
+    With unique ids the two legs return bit-identical rows. Either way
+    a shortlisted row whose raw vector is NULL takes its shortlist slot
+    and is then dropped (never ranked with a NULL ``l2``), and a
+    NaN-element vector scores NaN, which sorts after every number.
     """
+    if refine_n > 0 and vectors is None:
+        raise ValueError("refine_n > 0 needs the raw `vectors` frame")
+    carried = refine_n > 0 and vectors is encoded
+    ranked = _adc_scored(
+        encoded, query_vec, codebooks, id_col, codes_col, round_dp, exclude_ids,
+        carry=vec_col if carried else None,
+    ).orderBy("adc", id_col)
+    if refine_n <= 0:
+        return ranked.limit(k)
+    return _refine_l2(
+        ranked.limit(max(k, refine_n)), query_vec, k, id_col, vec_col, round_dp,
+        vectors=None if carried else vectors,
+    )
+
+
+def _adc_scored(
+    encoded: DataFrame,
+    query_vec: list[float],
+    codebooks: list[list[list[float]]],
+    id_col: str,
+    codes_col: str,
+    round_dp: int,
+    exclude_ids: tuple[int, ...],
+    carry: str | None = None,
+) -> DataFrame:
+    """The ADC projection every single-query PQ search ranks: (id_col,
+    ``adc``) over the rows whose code is not NULL and whose id is not
+    excluded, plus column ``carry`` unchanged when given (the raw
+    vector a one-job exact re-rank reads from the shortlist)."""
     m = len(codebooks)
     lut = _pq_lut(query_vec, codebooks)
     # ONE flat LUT literal + an unrolled m-term sum — constant-folds to
@@ -2460,43 +2505,48 @@ def pq_adc_topk(
     adc = " + ".join(
         f"get({table}, {j * len(lut[j])} + get({codes}, {j}))" for j in range(m)
     )
-    scored = encoded.filter(f"{codes} IS NOT NULL").selectExpr(
-        _sql_col(id_col), f"round({adc}, {round_dp}) AS adc"
-    )
+    cols = [_sql_col(id_col), f"round({adc}, {round_dp}) AS adc"]
+    if carry is not None:
+        cols.append(_sql_col(carry))
+    scored = encoded.filter(f"{codes} IS NOT NULL").selectExpr(*cols)
     if exclude_ids:
         scored = scored.filter(~F.col(id_col).isin(*exclude_ids))
-    if refine_n <= 0:
-        return scored.orderBy("adc", id_col).limit(k)
-    if vectors is None:
-        raise ValueError("refine_n > 0 needs the raw `vectors` frame")
-    shortlist = scored.orderBy("adc", id_col).limit(max(k, refine_n))
-    return _refine_l2(vectors, shortlist, query_vec, k, id_col, vec_col, round_dp)
+    return scored
 
 
 def _refine_l2(
-    vectors: DataFrame,
     shortlist: DataFrame,
     query_vec: list[float],
     k: int,
     id_col: str,
     vec_col: str,
     round_dp: int,
+    vectors: DataFrame | None = None,
 ) -> DataFrame:
     """The exact re-rank leg of the two-stage single-query search:
-    broadcast the (id, adc) shortlist INTO the raw-vector scan so only
-    the shortlisted vectors are scored (exact squared L2 against the
-    query literal, HALF_UP-rounded), then the final k-heap — ascending
-    rounded l2, ties to the lower id.
+    exact squared L2 of each shortlisted vector against the query
+    literal, HALF_UP-rounded, then the final k-heap — (id_col, adc,
+    ``l2``), ascending rounded l2, ties to the lower id.
+
+    With ``vectors`` None the shortlist already carries ``vec_col``
+    (the one-job leg: the ADC heap and this re-rank share one job).
+    Otherwise the raw vectors live in a separate frame, and the (id,
+    adc) shortlist is broadcast INTO a scan of ``vectors`` so only the
+    shortlisted ids are scored — the codes-only-store shape the
+    refine oracles declare; it runs the shortlist as its own job and
+    pairs each shortlisted id with every ``vectors`` row sharing it.
 
     NULL raw vectors are dropped BEFORE scoring (the l2_topk isNotNull
-    discipline — ADVICE r13): a codes-only store joined to a raw table
-    carrying null embeddings would otherwise yield NULL l2, which ASC
-    NULLS FIRST ranks above every real candidate."""
+    discipline — ADVICE r13): they would otherwise yield NULL l2, which
+    ASC NULLS FIRST ranks above every real candidate."""
     l2 = _sql_sq_l2(_sql_vec(vec_col), _sql_doubles(query_vec))
+    present = f"{_sql_col(vec_col)} IS NOT NULL"
+    if vectors is None:
+        rows = shortlist.filter(present)
+    else:
+        rows = vectors.filter(present).join(F.broadcast(shortlist), id_col, "inner")
     return (
-        vectors.filter(f"{_sql_col(vec_col)} IS NOT NULL")
-        .join(F.broadcast(shortlist), id_col, "inner")
-        .selectExpr(_sql_col(id_col), "adc", f"round({l2}, {round_dp}) AS l2")
+        rows.selectExpr(_sql_col(id_col), "adc", f"round({l2}, {round_dp}) AS l2")
         .orderBy("l2", id_col)
         .limit(k)
     )
@@ -2708,8 +2758,13 @@ def ivfpq_topk(
     narrow predicate + literal-LUT scan + k-heap — no Python, no
     shuffle. Missing columns are attached on the fly (one Arrow pass
     each) for ad-hoc use. ``refine_n`` re-ranks an ADC shortlist
-    against the raw vectors in ``df`` (exact squared L2, broadcast
-    shortlist join), the standard two-stage recipe.
+    against the raw vectors in ``df``, the standard two-stage recipe:
+    the shortlist carries ``vec_col`` out of the probed-cell scan
+    (``pq_adc_topk``'s one-job leg), so the re-rank reads no vector of
+    an unprobed cell and needs no second scan or broadcast join. Edge
+    values follow ``pq_adc_topk``: NULL codes are not scored, a NULL
+    vector gives up its shortlist slot, and each code is scored
+    against its own row's vector even when ids repeat.
     """
     probe_cells = _probe_cells(centroids, query_vec, nprobe, coarse_metric)
     work = df
@@ -2730,7 +2785,7 @@ def ivfpq_topk(
         round_dp=round_dp,
         exclude_ids=exclude_ids,
         refine_n=refine_n,
-        vectors=df if refine_n > 0 else None,
+        vectors=probed if refine_n > 0 else None,
         vec_col=vec_col,
     )
 
@@ -2995,8 +3050,13 @@ def ivfpq_residual_topk(
     trade is NOT — residual codes are coupled to the coarse tier, so
     re-clustering means re-encoding the corpus. Accuracy is measured
     against the global variant in SCALING.md ("Round 12: residual vs
-    global PQ"). ``refine_n`` re-ranks against raw vectors exactly as
-    everywhere else.
+    global PQ"). ``refine_n`` re-ranks against the raw vectors in
+    ``df`` exactly as everywhere else: each per-cell branch carries
+    ``vec_col`` next to (id, adc) into the shared shortlist, so the
+    re-rank is part of the same job — no second scan of ``df`` and no
+    broadcast join. Edge values follow ``pq_adc_topk``: NULL codes are
+    not scored, a NULL vector gives up its shortlist slot, and each
+    code is scored against its own row's vector even when ids repeat.
     """
     import numpy as np  # noqa: PLC0415
 
@@ -3026,27 +3086,31 @@ def ivfpq_residual_topk(
     # per-cell LUTs force per-branch scans, so the width goes per
     # branch). Still nprobe tiny k-heaps — no plan-shape change.
     branch_k = max(k, refine_n)
+    carry = vec_col if refine_n > 0 else None
     branches = None
     for cell in probe_cells:
         q_res = [float(x) for x in (qv - c[cell])]
-        branch = pq_adc_topk(
-            work.filter(f"{_sql_col(cell_col)} = {int(cell)}"),
-            q_res,
-            codebooks,
-            k=branch_k,
-            id_col=id_col,
-            codes_col=codes_col,
-            round_dp=round_dp,
-            exclude_ids=exclude_ids,
+        branch = (
+            _adc_scored(
+                work.filter(f"{_sql_col(cell_col)} = {int(cell)}"),
+                q_res,
+                codebooks,
+                id_col,
+                codes_col,
+                round_dp,
+                exclude_ids,
+                carry=carry,
+            )
+            .orderBy("adc", id_col)
+            .limit(branch_k)
         )
         branches = branch if branches is None else branches.unionByName(branch)
-    merged = branches.orderBy("adc", id_col).limit(k)
-    if refine_n <= 0:
-        return merged
     # max(k, refine_n), not refine_n: a refine_n < k call must still
     # yield k rows and match the multi path's shortlist width (ADVICE r14)
-    shortlist = branches.orderBy("adc", id_col).limit(max(k, refine_n))
-    return _refine_l2(df, shortlist, query_vec, k, id_col, vec_col, round_dp)
+    merged = branches.orderBy("adc", id_col).limit(branch_k)
+    if refine_n <= 0:
+        return merged
+    return _refine_l2(merged, query_vec, k, id_col, vec_col, round_dp)
 
 
 def ivfpq_residual_topk_multi(

@@ -104,7 +104,23 @@ def spark():
     # and keep honoring SPARK_GRAFT_CPUS.
     s = get_session("tests", master="local[8]", shuffle_partitions=8)
     s.createDataFrame = _fast_createDataFrame(s, s.createDataFrame)
+    _unpatched_create_canary(s)
     yield s
+
+
+def _unpatched_create_canary(spark) -> None:
+    """Library code never sees the pandas/Arrow shortcut above, so the
+    suite runs the real list-backed createDataFrame once, end to end:
+    the class method bypasses the instance patch, the plan must be the
+    pickled-row RDD (not the LocalRelation the shortcut builds) and the
+    rows, NULL included, must come back as given."""
+    df = type(spark).createDataFrame(
+        spark, [(1, "a"), (None, "b")], "x int, y string"
+    )
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" in plan, f"canary took the patched path:\n{plan}"
+    got = [tuple(r) for r in df.orderBy("y").collect()]
+    assert got == [(1, "a"), (None, "b")], f"unpatched createDataFrame: {got}"
 
 
 @pytest.fixture(scope="session")

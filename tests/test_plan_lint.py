@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from datapipelineetl_spark.operators import similarity as sim
 
 # name → why a BroadcastNestedLoopJoin is legitimate there
 NESTED_LOOP_ALLOWED = {
@@ -154,3 +155,64 @@ def test_lsh_cosine_near_pairs_single_repartition_exchange(plans):
     verify. A second one means the verify re-shuffles the pairs."""
     n = plans["q_lsh_cosine_near_pairs"].count("REPARTITION_BY_NUM")
     assert n == 1, f"q_lsh_cosine_near_pairs has {n} REPARTITION_BY_NUM exchanges"
+
+
+@pytest.fixture(scope="module")
+def topk_store(spark):
+    """A fitted vector index in the vector_topk request shape: vectors,
+    PQ codes and IVF cells side by side in one checkpointed store."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    n, dim = 300, 16
+    rng = np.random.default_rng(0)
+    schema = T.StructType([T.StructField("vec_id", T.LongType()),
+                           T.StructField("embedding", T.ArrayType(T.FloatType()))])
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(n, dtype=np.int64),
+                      "embedding": list(rng.normal(size=(n, dim)).astype(np.float32))}),
+        schema,
+    )
+    books = sim.pq_fit(df, m=4, k_sub=8, iters=1, dim=dim)
+    cents = sim.ivf_fit_centroids(df, k_cells=4, iters=1, dim=dim)
+    store = sim.ivf_assign(sim.pq_encode(df, books), cents).localCheckpoint(eager=True)
+    q = [float(v) for v in rng.normal(size=dim)]
+    return store, books, cents, q
+
+
+def _jobs_of_one_collect(spark, df, group: str) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_single_query_pq_refine_is_one_job_without_broadcast(spark, topk_store):
+    """The two-stage PQ searches over a store holding codes and vectors
+    together carry the vector through the ADC shortlist: no broadcast
+    exchange or join in the executed plan, and one Spark job per
+    request. A codes-only store (raw vectors in a separate frame, the
+    refine oracles' shape) keeps the broadcast-join leg and its second
+    job."""
+    store, books, cents, q = topk_store
+    carried = {
+        "pq_adc_topk": sim.pq_adc_topk(store, q, books, k=10, refine_n=50, vectors=store),
+        "ivfpq_topk": sim.ivfpq_topk(store, q, cents, books, k=10, nprobe=2,
+                                     cell_col="ivf_cell", codes_col="pq_code",
+                                     refine_n=50),
+    }
+    for name, df in carried.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan, name
+        assert _jobs_of_one_collect(spark, df, f"plan-lint-{name}") == 1, name
+    joined = sim.pq_adc_topk(store, q, books, k=10, refine_n=50,
+                             vectors=store.select("vec_id", "embedding"))
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan and "BroadcastHashJoin" in plan
+    assert _jobs_of_one_collect(spark, joined, "plan-lint-pq-join") == 2

@@ -859,8 +859,12 @@ def test_refine_paths_filter_null_vectors(spark):
     table that carries NULL embeddings must FILTER them before the
     exact re-rank — NULL l2 sorts ASC NULLS FIRST in Spark, ranking a
     vectorless id ABOVE every real candidate (DuckDB's NULLS LAST would
-    silently diverge). Covers BOTH refine legs: pq_adc_topk's
-    single-query join and _exact_rerank_multi (via ivfpq_topk_multi)."""
+    silently diverge). Covers every refine leg: pq_adc_topk's
+    single-query join, the carried leg of a store holding codes and
+    vectors together (pq_adc_topk with vectors=store, ivfpq_topk,
+    ivfpq_residual_topk — the NULL-vector row takes a shortlist slot
+    and is then dropped) and _exact_rerank_multi (via
+    ivfpq_topk_multi)."""
     dim = 4
     rows = [
         (1, [1.0, 0.0, 0.0, 0.0]),
@@ -872,25 +876,160 @@ def test_refine_paths_filter_null_vectors(spark):
     # degenerate single-codeword books: every ADC ties → the whole
     # corpus (incl. the NULL-embedding id) reaches the shortlist
     books = [[[0.0, 0.0]], [[0.0, 0.0]]]
-    enc = vectors.select(
-        "vec_id", F.array(F.lit(0), F.lit(0)).cast("array<int>").alias("pq_code")
-    )
+    code = F.array(F.lit(0), F.lit(0)).cast("array<int>").alias("pq_code")
+    enc = vectors.select("vec_id", code)
     q = [0.0] * dim
-    got = similarity.pq_adc_topk(
-        enc, q, books, k=3, refine_n=4, vectors=vectors
-    ).collect()
-    assert [r.vec_id for r in got] == [1, 4, 3]
-    assert all(r.l2 is not None for r in got)
-
     cents = [[0.0] * dim]
-    store = enc.select("vec_id", "pq_code", F.lit(0).alias("ivf_cell"))
+    store = vectors.select("vec_id", "embedding", code, F.lit(0).alias("ivf_cell"))
+    legs = {
+        "join": similarity.pq_adc_topk(enc, q, books, k=3, refine_n=4, vectors=vectors),
+        "carried": similarity.pq_adc_topk(
+            store, q, books, k=3, refine_n=4, vectors=store
+        ),
+        "ivfpq": similarity.ivfpq_topk(
+            store, q, cents, books, k=3, nprobe=1, cell_col="ivf_cell",
+            codes_col="pq_code", refine_n=4,
+        ),
+        "residual": similarity.ivfpq_residual_topk(
+            store, q, cents, books, k=3, nprobe=1, cell_col="ivf_cell",
+            codes_col="pq_code", refine_n=4,
+        ),
+    }
+    for leg, df in legs.items():
+        got = df.collect()
+        assert [r.vec_id for r in got] == [1, 4, 3], leg
+        assert all(r.l2 is not None for r in got), leg
+
     multi = similarity.ivfpq_topk_multi(
-        store, {9: q}, cents, books, k=3, nprobe=1, cell_col="ivf_cell",
-        codes_col="pq_code", refine_n=4, vectors=vectors,
+        store.drop("embedding"), {9: q}, cents, books, k=3, nprobe=1,
+        cell_col="ivf_cell", codes_col="pq_code", refine_n=4, vectors=vectors,
         exclude_query_ids=False,
     ).collect()
     assert [r.vec_id for r in multi] == [1, 4, 3]
     assert all(r.l2 is not None for r in multi)
+
+
+def test_refine_duplicate_ids_follow_the_leg(spark):
+    """Duplicate ids are where the two single-query re-rank legs part
+    ways, by design (documented in pq_adc_topk): the carried leg scores
+    each code against its OWN row's vector, while the broadcast-join
+    leg pairs each shortlisted code with EVERY vectors row sharing its
+    id. ADC here is code[0] + code[1] (unit codewords), q = 0, so
+    l2 is the squared first element."""
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0], [0, 0]),  # adc 0, l2 1
+        (1, [2.0, 0.0, 0.0, 0.0], [1, 1]),  # adc 2, l2 4
+        (2, [3.0, 0.0, 0.0, 0.0], [1, 0]),  # adc 1, l2 9
+    ]
+    store = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, pq_code array<int>"
+    ).withColumn("ivf_cell", F.lit(0))
+    books = [[[0.0, 0.0], [1.0, 0.0]], [[0.0, 0.0], [0.0, 1.0]]]
+    q = [0.0] * 4
+
+    def got(df):
+        return sorted((r.vec_id, r.adc, r.l2) for r in df.collect())
+
+    own = [(1, 0.0, 1.0), (1, 2.0, 4.0), (2, 1.0, 9.0)]
+    assert got(similarity.pq_adc_topk(
+        store, q, books, k=10, refine_n=3, vectors=store
+    )) == own
+    assert got(similarity.ivfpq_topk(
+        store, q, [[0.0] * 4], books, k=10, nprobe=1, cell_col="ivf_cell",
+        codes_col="pq_code", refine_n=3,
+    )) == own
+    assert got(similarity.pq_adc_topk(
+        store, q, books, k=10, refine_n=3, vectors=store.select("*")
+    )) == [(1, 0.0, 1.0), (1, 0.0, 4.0), (1, 2.0, 1.0), (1, 2.0, 4.0),
+           (2, 1.0, 9.0)]
+
+
+def _carry_store(spark):
+    """A persisted-store frame (id, vector, code, cell) over 3
+    partitions with the refine legs' edge rows: 9 distinct codes over
+    24 rows (ADC ties, broken by the lower id), a NULL code (id 5, never
+    scored), a NULL vector (id 11, dropped after the shortlist) and a
+    NaN-element vector (id 7, l2 NaN ranks last)."""
+    rows = []
+    for i in range(24):
+        vec = None if i == 11 else [((i * 7 + d * 3) % 11) / 4.0 - 1.0 for d in range(4)]
+        rows.append((i, vec, None if i == 5 else [i % 3, (i // 3) % 3], i % 2))
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, pq_code array<int>, ivf_cell int"
+    )
+    nan_vec = F.expr("array(double('NaN'), 0D, 0D, 0D)")
+    return (
+        df.withColumn(
+            "embedding",
+            F.when(F.col("vec_id") == 7, nan_vec).otherwise(F.col("embedding")),
+        )
+        .repartition(3, "vec_id")
+        .localCheckpoint(eager=True)
+    )
+
+
+def test_refine_carried_leg_matches_join_leg(spark):
+    """The one-job re-rank (the shortlist carries the raw vector) must
+    return exactly the rows of the broadcast-join leg it replaced —
+    floats compared by bit pattern — for pq_adc_topk, ivfpq_topk and
+    ivfpq_residual_topk, over tied ADC values, a NULL code, a
+    NaN-element vector, exclude_ids, refine_n < k and refine_n ≥ n.
+    The join leg is reached by passing the raw vectors as a separate
+    frame: ``store.select("*")`` holds the same rows but is not the
+    encoded frame itself."""
+    import struct
+
+    store = _carry_store(spark)
+    books = [
+        [[0.0, 0.0], [1.0, 0.0], [0.0, 1.0]],
+        [[0.0, 0.0], [-1.0, 0.5], [0.5, 0.5]],
+    ]
+    cents = [[1.0, 0.0, 0.0, 0.0], [-1.0, 0.0, 0.0, 0.0]]
+    q = [0.25, -0.5, 0.75, 0.0]
+    cols = dict(cell_col="ivf_cell", codes_col="pq_code")
+
+    def bits(df):
+        return [
+            tuple(
+                struct.pack("<d", v) if isinstance(v, float) else v for v in r
+            )
+            for r in df.collect()
+        ]
+
+    seen_nan = seen_tie = False
+    for k, refine_n, exclude in ((3, 8, ()), (5, 2, ()), (4, 100, (0, 2)), (40, 40, ())):
+        kw = dict(k=k, refine_n=refine_n, exclude_ids=exclude)
+        carried = bits(similarity.pq_adc_topk(store, q, books, vectors=store, **kw))
+        joined = bits(similarity.pq_adc_topk(
+            store, q, books, vectors=store.select("*"), **kw
+        ))
+        assert carried == joined, ("pq_adc_topk", kw)
+        seen_nan |= any(r[0] == 7 for r in carried)
+        adcs = [r[1] for r in carried]
+        seen_tie |= len(set(adcs)) < len(adcs)
+        assert all(r[0] not in (5, 11) + exclude for r in carried)
+        for nprobe in (1, 2):
+            probe = similarity._probe_cells(cents, q, nprobe, "cosine")
+            carried = bits(similarity.ivfpq_topk(
+                store, q, cents, books, nprobe=nprobe, **cols, **kw
+            ))
+            probed = store.filter(F.col("ivf_cell").isin(probe))
+            joined = bits(similarity.pq_adc_topk(
+                probed, q, books, vectors=store.select("*"), **kw
+            ))
+            assert carried == joined, ("ivfpq_topk", nprobe, kw)
+            carried = bits(similarity.ivfpq_residual_topk(
+                store, q, cents, books, nprobe=nprobe, **cols, **kw
+            ))
+            shortlist = similarity.ivfpq_residual_topk(
+                store, q, cents, books, nprobe=nprobe, **cols,
+                k=max(k, refine_n), exclude_ids=exclude,
+            )
+            joined = bits(similarity._refine_l2(
+                shortlist, q, k, "vec_id", "embedding", 6, vectors=store.select("*")
+            ))
+            assert carried == joined, ("ivfpq_residual_topk", nprobe, kw)
+    assert seen_nan and seen_tie
 
 
 def test_probe_cells_sequential_fold_order():
