@@ -121,13 +121,26 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver verifies the FIRST 50 entries of queries() in dict order.
-# Round-18 rotation (tools/rotate_window.py): the four round-17 plan
-# rewrites (q_lsh_cosine_near_pairs, q_range_join_ship_windows,
+# The nine queries whose plans the single batched top-k engine changed
+# lead: the five batched oracles (their per-query branches became one
+# Arrow pass) and the four whose cosine candidate filter became
+# 0 < |v|^2 < inf. Then the round-18 rotation (tools/rotate_window.py):
+# the four round-17 plan rewrites (q_lsh_cosine_near_pairs, q_range_join_ship_windows,
 # q_pack_sequences, q_encode_tokens) and the two round-17 overflow rows
 # (q_hll_distinct, q_bloom_decontam) lead, so the next CORRECTNESS
 # record hashes each of them; the other 32 queries at their re-verification
-# horizon follow, then the oldest-green rows fill the free slots.
+# horizon follow, then the oldest-green rows fill the free slots (the
+# last seven fillers gave their slots to the nine above).
 PRIORITY: list[str] = [
+    "q_pq_topk_multi",
+    "q_pq_multi_refine",
+    "q_l2_topk_multi",
+    "q_ann_lsh_topk_multi",
+    "q_ivf_topk_multi",
+    "q_cosine_topk",
+    "q_ann_lsh_topk",
+    "q_ann_recall",
+    "q_ivf_recall",
     "q_lsh_cosine_near_pairs",
     "q_range_join_ship_windows",
     "q_pack_sequences",
@@ -135,7 +148,6 @@ PRIORITY: list[str] = [
     "q_hll_distinct",
     "q_bloom_decontam",
     "q_dedup_token_set",
-    "q_cosine_topk",
     "q_cosine_near_pairs",
     "q_tf_idf",
     "q7_volume_shipping",
@@ -170,14 +182,6 @@ PRIORITY: list[str] = [
     "q_pack_greedy",
     "q_boilerplate_removal",
     "q_repetition_stats",
-    "q_semdedup",
-    "q_gopher_rules",
-    "q_ivfpq_topk",
-    "q_pq_topk_multi",
-    "q_resize_media",
-    "q_sample_stratified",
-    "q_corpus_mix",
-    "q_pack_chunks",
 ]
 
 

@@ -296,9 +296,9 @@ EXPECTED_SEC = {
     # best-of-3 under bench conditions: 8.34 / 13.49). Both carry the
     # q_pq_codes-class fixed cost — the sample Lloyd fit plus analysis
     # of the 16×16 literal codebooks (constant in corpus size);
-    # q_pq_topk_multi's delta over q_pq_topk is its two extra fold-mode
-    # query branches (the oracle-grade plan — the arrow mode is the
-    # measured single-scan serving form, parity-tested). References sit
+    # q_pq_topk_multi's delta over q_pq_topk is its batched top-k pass
+    # (one mapInPandas over the code column plus the per-query window
+    # cut; it replaced Q unioned query branches). References sit
     # slightly above the best-of-3 per the PQ rows' documented same-day
     # ambient band.
     "q_ivfpq_topk": 2.10,  # re-pinned round 17 (same item): 2026-08-18 bench rows

@@ -32,6 +32,16 @@ the LSH probe is ``sig IN (<Hamming ball>)``, which the optimizer turns
 into an ``InSet`` (also by reference) once the ball has more values than
 ``spark.sql.optimizer.inSetConversionThreshold`` — so a new query
 vector reuses the cached codegen classes instead of compiling new ones.
+
+Edge values follow one rule in every tier, single-query and batched
+alike. A NULL vector is never scored. A cosine candidate must have a
+positive, finite squared norm: a zero vector's cosine is 0/0 and a
+vector with a NaN or infinite element scores NaN, which Spark's DESC
+ranks first and numpy ranks last, so neither is a candidate. An L2 tier
+scores a NaN-element vector NaN and ranks it after every number. The
+batched operators (``*_topk_multi``) share one Arrow kernel,
+``_batched_topk``, which puts that NaN back after the pass, because
+pandas NaN crosses Arrow as NULL and ASC NULLS FIRST would rank it first.
 """
 
 from __future__ import annotations
@@ -125,18 +135,17 @@ def cosine_topk(
     vector column; ordering+limit compiles to TakeOrderedAndProject — a
     per-partition k-heap, no global sort.
 
-    Zero-norm vectors are EXCLUDED from the candidate set (ADVICE r14):
-    their cosine is 0/0, which under the driver's ANSI session is a
-    DIVIDE_BY_ZERO error and in the Arrow kernels a NaN that numpy and
-    Spark rank OPPOSITELY under DESC — undefined similarity has no
-    place in a top-k either way. The same squared-norm predicate also
-    drops NULL vectors (a NULL fold compares NULL to 0 → filtered), so
-    every cosine tier shares one candidate rule; pinned by
-    ``test_cosine_family_excludes_zero_norm_vectors``.
+    Only vectors whose squared norm is positive and finite are
+    candidates (the module docstring's cosine rule, pinned by
+    ``test_cosine_family_excludes_zero_norm_vectors``). The filter is
+    ``ln(‖v‖²) < ∞``: Spark's ``ln`` is NULL at or below zero, NaN at
+    NaN and ∞ at ∞, and Spark orders NaN above every number, so it holds
+    exactly when 0 < ‖v‖² < ∞ and folds the norm once per row. A plain
+    ``‖v‖² > 0`` would keep a NaN-element vector, which DESC ranks first.
     """
     v, q = _sql_vec(vec_col), _sql_doubles(query_vec)
     cos = f"{_sql_dot(v, q)} / (sqrt({_sql_sum_sq(v)}) * sqrt({_sql_sum_sq(q)}))"
-    scored = df.filter(f"{_sql_sum_sq(v)} != 0").selectExpr(
+    scored = df.filter(f"ln({_sql_sum_sq(v)}) < double('Infinity')").selectExpr(
         _sql_col(id_col), f"round({cos}, 4) AS cos_sim"
     )
     if exclude_ids:
@@ -183,7 +192,6 @@ def l2_topk_multi(
     vec_col: str = "embedding",
     exclude_query_ids: bool = True,
     round_dp: int = 6,
-    mode: str = "fold",
 ) -> DataFrame:
     """Exact squared-L2 top-k for a BATCH of queries in one operator —
     the brute-force serving shape (the expensive thing is scanning the
@@ -191,25 +199,20 @@ def l2_topk_multi(
     (query_id, id_col, l2), each query's top-k ascending rounded l2,
     ties to the lower id — per-query rows identical to ``l2_topk``
     (parity-tested). NULL vectors are filtered (the ``l2_topk``
-    isNotNull discipline).
+    isNotNull discipline); a NaN-element vector scores NaN and ranks
+    last, as in ``l2_topk``.
 
-    ``mode`` is the ``pq_adc_topk_multi`` split:
-
-    - ``"fold"`` (oracle path): Q ``l2_topk`` branches — literal query,
-      sequential zip_with fold, TakeOrderedAndProject heap — over the
-      same scan, unioned under a query_id column.
-    - ``"arrow"``: ONE mapInPandas pass — per Arrow batch the kernel
-      stacks the vectors once and computes ALL Q distance columns via
-      the ‖x‖² − 2·X@Qᵀ + ‖q‖² expansion (one matmul instead of Q
-      folds), emits local top-k per query, so the global re-rank
-      shuffles ≤ partitions × Q × k rows. Rounding is the shared
-      vectorized HALF_UP kernel and the matmul re-associates the sum —
-      the same last-ulp trade every Arrow kernel here makes
-      (parity-tested on the fixture).
+    One ``_batched_topk`` pass: per Arrow batch the vectors are stacked
+    once and ALL Q distance columns come from the ‖x‖² − 2·X@Qᵀ + ‖q‖²
+    expansion (one matmul instead of Q folds). Rounding is the shared
+    vectorized HALF_UP kernel and the matmul re-associates the sum —
+    the last-ulp trade every Arrow kernel here makes (the batch-21
+    oracle and the parity tests pin the answers).
     """
-    return _exact_topk_multi(
-        df, queries, k, id_col, vec_col, exclude_query_ids, round_dp,
-        mode, metric="l2",
+    qids = _query_ids(queries)
+    return _batched_topk(
+        df, [vec_col], qids, _matmul_scores(queries, qids, vec_col, "l2"),
+        k, id_col, "l2", round_dp, exclude_query_ids,
     )
 
 
@@ -220,128 +223,159 @@ def cosine_topk_multi(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     exclude_query_ids: bool = True,
-    mode: str = "fold",
 ) -> DataFrame:
     """Batched ``cosine_topk``: output (query_id, id_col, cos_sim),
     each query's top-k DESCENDING rounded similarity (4 dp, the
-    ``cosine_topk`` contract), ties to the lower id. Same mode split
-    and cost shape as ``l2_topk_multi`` — arrow mode's matmul computes
-    all Q similarity columns from one stacked batch. NULL vectors are
-    filtered in both modes (``cosine_topk`` leaves them to DESC
-    NULLS LAST, which never reaches a top-k; the batched kernel drops
-    them explicitly)."""
-    return _exact_topk_multi(
-        df, queries, k, id_col, vec_col, exclude_query_ids, 4,
-        mode, metric="cosine",
+    ``cosine_topk`` contract), ties to the lower id. Same cost shape as
+    ``l2_topk_multi`` — one matmul computes all Q similarity columns
+    from one stacked batch — and the same candidate rule as
+    ``cosine_topk``: only vectors whose squared norm is positive and
+    finite are scored (module docstring)."""
+    qids = _query_ids(queries)
+    return _batched_topk(
+        df, [vec_col], qids, _matmul_scores(queries, qids, vec_col, "cosine"),
+        k, id_col, "cos_sim", 4, exclude_query_ids, ascending=False,
     )
 
 
-def _exact_topk_multi(
-    df: DataFrame,
-    queries: dict[int, list[float]],
-    k: int,
-    id_col: str,
-    vec_col: str,
-    exclude_query_ids: bool,
-    round_dp: int,
-    mode: str,
-    metric: str,
-) -> DataFrame:
-    """Shared engine for the batched exact top-k pair — fold = unioned
-    single-query branches (oracle-grade), arrow = one stacked-matmul
-    mapInPandas pass with partition-local per-query heaps."""
+def _query_ids(queries: dict[int, list[float]]) -> list[int]:
+    """The batch's query ids in output order; an empty batch is an error."""
     if not queries:
         raise ValueError("need at least one query")
-    if mode not in ("fold", "arrow"):
-        raise ValueError(f"mode must be 'fold' or 'arrow', got {mode!r}")
-    id_t = _validated_id_type(df, id_col)
-    qids = sorted(queries)
-    score_col = "l2" if metric == "l2" else "cos_sim"
-    if mode == "fold":
-        out = None
-        for qid in qids:
-            excl = (qid,) if exclude_query_ids else ()
-            if metric == "l2":
-                branch = l2_topk(
-                    df, queries[qid], k, id_col, vec_col, excl, round_dp
-                )
-            else:
-                branch = cosine_topk(
-                    df.filter(F.col(vec_col).isNotNull()),
-                    queries[qid], k, id_col, vec_col, excl,
-                )
-            branch = branch.select(
-                F.lit(int(qid)).cast("int").alias("query_id"),
-                F.col(id_col),
-                F.col(score_col),
-            )
-            out = branch if out is None else out.unionByName(branch)
-        return out
+    return sorted(queries)
 
+
+def _batched_topk(
+    scoped: DataFrame,
+    cols: list[str],
+    qids: list[int],
+    score,
+    width: int,
+    id_col: str,
+    score_col: str,
+    round_dp: int,
+    exclude_query_ids: bool,
+    ascending: bool = True,
+) -> DataFrame:
+    """The one Arrow pass behind every ``*_topk_multi``: (query_id,
+    id_col, score_col), each query's first ``width`` rows of
+    ``scoped`` by rounded score (ascending, or descending), ties to the
+    lower id.
+
+    ``scoped`` is the operator's candidate scan (the union of every
+    query's probed cells or Hamming balls, or the whole store), and
+    ``score(pdf)`` is its score block. It gets one Arrow batch of
+    (id_col, *cols) as pandas and returns ``(rows, scores, ok)``: the
+    positions of the rows it scored, their n×Q score matrix (column i
+    is query ``qids[i]``) and an n×Q eligibility mask, or None when
+    every scored row is a candidate of every query. The kernel drops
+    each query's own id when ``exclude_query_ids``, rounds HALF_UP to
+    ``round_dp`` (``_round_half_up_np``), keeps a per-query local top
+    ``width`` with one ``lexsort`` each, and a single
+    ``Window.partitionBy("query_id")`` cut merges the tasks — at most
+    partitions × Q × width rows are shuffled, never n × Q.
+
+    pandas NaN crosses Arrow as NULL, so the score column is put back
+    to NaN after the pass: no scored row has a NULL input, so a NULL
+    score IS a NaN score, and it must rank last as its single-query
+    twin ranks it, not first under ASC NULLS FIRST."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
-    dim = len(queries[qids[0]])
-    qm = np.asarray([queries[qid] for qid in qids], dtype=np.float64)  # Q×dim
+    id_t = _validated_id_type(scoped, id_col)
     qid_arr = np.asarray(qids, dtype=np.int64)
-    q_norm = np.sqrt((qm * qm).sum(axis=1))
-    q_sq = (qm * qm).sum(axis=1)
-    asc = metric == "l2"
 
     def gen(batches):
         for pdf in batches:
-            x, null_mask = _stack_nullable(pdf[vec_col].to_numpy(), dim)
-            keep0 = ~null_mask
-            if metric == "cosine":
-                # zero-norm rows score 0/0 → NaN, which numpy ranks
-                # LAST while Spark's DESC ranks NaN FIRST (ADVICE r14)
-                # — excluded from candidates, the cosine_topk rule
-                keep0 &= (x * x).sum(axis=1) > 0
-            if not keep0.any():
+            rows, scores, ok = score(pdf)
+            if not len(rows):
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)[keep0]
-            x = x[keep0]
-            if metric == "l2":
-                scores = (
-                    (x * x).sum(axis=1)[:, None]
-                    - 2.0 * (x @ qm.T)
-                    + q_sq[None, :]
-                )
-            else:
-                scores = (x @ qm.T) / (
-                    np.sqrt((x * x).sum(axis=1))[:, None] * q_norm[None, :]
-                )
+            ids = pdf[id_col].to_numpy(dtype=np.int64)[rows]
+            if ok is None:
+                ok = np.ones(scores.shape, dtype=bool)
+            if exclude_query_ids:
+                ok &= ids[:, None] != qid_arr[None, :]
             r = _round_half_up_np(scores, round_dp)
+            key = r if ascending else -r
             parts = []
-            for qi, qid in enumerate(qid_arr):
-                keep = np.ones(len(ids), dtype=bool)
-                if exclude_query_ids:
-                    keep = ids != qid
-                col = r[keep, qi]
-                order = np.lexsort((ids[keep], col if asc else -col))[:k]
+            for qi, qid in enumerate(qids):
+                cand = np.flatnonzero(ok[:, qi])
+                top = cand[np.lexsort((ids[cand], key[cand, qi]))[:width]]
                 parts.append(
                     pd.DataFrame(
                         {
-                            "query_id": np.full(
-                                int(order.size), qid, dtype=np.int32
-                            ),
-                            id_col: ids[keep][order],
-                            score_col: col[order],
+                            "query_id": np.full(top.size, qid, dtype=np.int32),
+                            id_col: ids[top],
+                            score_col: r[top, qi],
                         }
                     )
                 )
-            yield pd.concat(parts, ignore_index=True)
+            out = pd.concat(parts, ignore_index=True)
+            if len(out):
+                yield out
 
-    local = df.select(id_col, vec_col).mapInPandas(
+    local = scoped.select(id_col, *cols).mapInPandas(
         gen, schema=f"query_id int, {id_col} {id_t}, {score_col} double"
-    )
-    order_col = F.col(score_col).asc() if asc else F.col(score_col).desc()
-    w = Window.partitionBy("query_id").orderBy(order_col, F.col(id_col))
+    ).withColumn(score_col, F.coalesce(F.col(score_col), F.lit(float("nan"))))
+    return _first_per_query(local, width, score_col, id_col, ascending)
+
+
+def _first_per_query(
+    df: DataFrame, n: int, score_col: str, id_col: str, ascending: bool = True
+) -> DataFrame:
+    """Each query's first ``n`` rows by ``score_col``, ties to the lower id."""
+    order = F.col(score_col).asc() if ascending else F.col(score_col).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col(id_col))
     return (
-        local.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= n)
         .drop("__rn")
     )
+
+
+def _matmul_scores(
+    queries: dict[int, list[float]], qids: list[int], vec_col: str, metric: str
+):
+    """The raw-vector score block: squared L2 by the ‖x‖² − 2·X@Qᵀ + ‖q‖²
+    expansion, or cosine as X@Qᵀ over the norms. NULL vectors are not
+    scored, and for cosine neither is a vector whose squared norm is
+    not positive and finite (the ``cosine_topk`` rule)."""
+    import numpy as np  # noqa: PLC0415
+
+    qm = np.asarray([queries[qid] for qid in qids], dtype=np.float64)  # Q×dim
+    q_sq = (qm * qm).sum(axis=1)
+    q_norm = np.sqrt(q_sq)
+
+    def score(pdf):
+        x, null_mask = _stack_nullable(pdf[vec_col].to_numpy(), qm.shape[1])
+        x_sq = (x * x).sum(axis=1)
+        keep = ~null_mask
+        if metric == "cosine":
+            keep &= (x_sq > 0) & (x_sq < np.inf)
+        rows = np.flatnonzero(keep)
+        x, x_sq = x[rows], x_sq[rows]
+        if metric == "l2":
+            return rows, x_sq[:, None] - 2.0 * (x @ qm.T) + q_sq[None, :], None
+        return rows, (x @ qm.T) / (np.sqrt(x_sq)[:, None] * q_norm[None, :]), None
+
+    return score
+
+
+def _in_probed_cells(score, probes: dict[int, list[int]], qids: list[int],
+                     n_cells: int, cell_col: str):
+    """``score`` with each query's mask set to the rows of its own probed
+    cells (every cell of the scan is some query's probe, < n_cells)."""
+    import numpy as np  # noqa: PLC0415
+
+    member = np.zeros((n_cells, len(qids)), dtype=bool)
+    for qi, qid in enumerate(qids):
+        member[probes[qid], qi] = True
+
+    def masked(pdf):
+        rows, scores, _ = score(pdf)
+        return rows, scores, member[pdf[cell_col].to_numpy()[rows].astype(np.int64)]
+
+    return masked
 
 
 def cosine_pairs(
@@ -400,9 +434,9 @@ def _validated_id_type(df: DataFrame, id_col: str) -> str:
     int64 inside its Arrow kernels, so a non-integral id column must
     fail fast HERE instead of erroring (or silently casting) deep in
     Arrow conversion (ADVICE r14 — the resize_media id-dtype lesson
-    applied family-wide). The returned name feeds each kernel's
-    mapInPandas output schema, so arrow mode preserves the input's
-    integer width exactly like fold mode's pass-through column does."""
+    applied family-wide). The returned name feeds the
+    ``_batched_topk`` output schema, so the batched result keeps the
+    input's integer width."""
     t = df.schema[id_col].dataType.simpleString()
     if t not in _INTEGRAL_TYPES:
         raise TypeError(
@@ -1029,130 +1063,32 @@ def ivf_topk_multi(
     exclude_query_ids: bool = True,
     metric: str = "cosine",
     round_dp: int = 6,
-    mode: str = "fold",
 ) -> DataFrame:
-    """Batched ``ivf_topk`` — the raw-vector IVF tier's serving form
-    (round 14 completes the batched family: every ANN tier now has a
-    multi-query path). Per-query probe cells are selected driver-side;
-    the store is scanned ONCE over the UNION of all probed cells
-    (directory pruning when ``cell_col`` is the partition column); each
-    query scores only ITS OWN probed rows. Output (query_id, id_col,
-    l2|cos_sim), per-query rows identical to ``ivf_topk``
-    (parity-tested).
+    """Batched ``ivf_topk`` — the raw-vector IVF tier's serving form.
+    Per-query probe cells are selected driver-side; the store is
+    scanned ONCE over the UNION of all probed cells (directory pruning
+    when ``cell_col`` is the partition column); each query scores only
+    ITS OWN probed rows. Output (query_id, id_col, l2|cos_sim),
+    per-query rows identical to ``ivf_topk`` (parity-tested).
 
-    ``mode``: ``"fold"`` = per-query exact-scoring branches over the
-    shared pruned scan (oracle-grade sequential folds); ``"arrow"`` =
-    ONE mapInPandas pass — the kernel stacks each Arrow batch once,
-    computes all Q score columns by matmul, masks each query to its
-    probed cells, and emits local top-k per (task, query), so the
-    global re-rank shuffles ≤ partitions × Q × k rows.
+    One ``_batched_topk`` pass over the union-pruned scan: the
+    ``l2_topk_multi``/``cosine_topk_multi`` matmul score block, masked
+    per query to its own probed cells.
     """
-    if not queries:
-        raise ValueError("need at least one query")
-    if mode not in ("fold", "arrow"):
-        raise ValueError(f"mode must be 'fold' or 'arrow', got {mode!r}")
-    id_t = _validated_id_type(df, id_col)
-    probes = {
-        qid: _probe_cells(centroids, q, nprobe, metric)
-        for qid, q in queries.items()
-    }
+    qids = _query_ids(queries)
+    probes = {qid: _probe_cells(centroids, queries[qid], nprobe, metric) for qid in qids}
     work = df
     if cell_col is None:
         work = ivf_assign(work, centroids, vec_col, "__ivf_cell", metric)
         cell_col = "__ivf_cell"
-    union_cells = sorted({c for p in probes.values() for c in p})
-    scoped = work.filter(F.col(cell_col).isin(union_cells))
-    qids = sorted(queries)
-    score_col = "l2" if metric == "l2" else "cos_sim"
-    if mode == "fold":
-        out = None
-        for qid in qids:
-            probed = scoped.filter(F.col(cell_col).isin(probes[qid]))
-            excl = (qid,) if exclude_query_ids else ()
-            if metric == "l2":
-                branch = l2_topk(
-                    probed, queries[qid], k, id_col, vec_col, excl, round_dp
-                )
-            else:
-                branch = cosine_topk(
-                    probed.filter(F.col(vec_col).isNotNull()),
-                    queries[qid], k, id_col, vec_col, excl,
-                )
-            out_branch = branch.select(
-                F.lit(int(qid)).cast("int").alias("query_id"),
-                F.col(id_col),
-                F.col(score_col),
-            )
-            out = out_branch if out is None else out.unionByName(out_branch)
-        return out
-
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    dim = len(queries[qids[0]])
-    qm = np.asarray([queries[qid] for qid in qids], dtype=np.float64)
-    qid_arr = np.asarray(qids, dtype=np.int64)
-    q_sq = (qm * qm).sum(axis=1)
-    q_norm = np.sqrt(q_sq)
-    probe_sets = [frozenset(probes[qid]) for qid in qids]
-    dp = round_dp if metric == "l2" else 4
-    asc = metric == "l2"
-
-    def gen(batches):
-        for pdf in batches:
-            x, null_mask = _stack_nullable(pdf[vec_col].to_numpy(), dim)
-            keep0 = ~null_mask & pdf[cell_col].notna().to_numpy()
-            if metric == "cosine":
-                # zero-norm exclusion — the cosine_topk candidate rule
-                # (ADVICE r14: numpy ranks the NaN last, Spark first)
-                keep0 &= (x * x).sum(axis=1) > 0
-            if not keep0.any():
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)[keep0]
-            cells = pdf[cell_col].to_numpy()[keep0].astype(np.int64)
-            x = x[keep0]
-            if metric == "l2":
-                scores = (
-                    (x * x).sum(axis=1)[:, None] - 2.0 * (x @ qm.T)
-                    + q_sq[None, :]
-                )
-            else:
-                scores = (x @ qm.T) / (
-                    np.sqrt((x * x).sum(axis=1))[:, None] * q_norm[None, :]
-                )
-            r = _round_half_up_np(scores, dp)
-            parts = []
-            for qi, qid in enumerate(qid_arr):
-                keep = np.isin(cells, list(probe_sets[qi]))
-                if exclude_query_ids:
-                    keep &= ids != qid
-                if not keep.any():
-                    continue
-                col = r[keep, qi]
-                order = np.lexsort((ids[keep], col if asc else -col))[:k]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(
-                                int(order.size), qid, dtype=np.int32
-                            ),
-                            id_col: ids[keep][order],
-                            score_col: col[order],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    local = scoped.select(id_col, vec_col, cell_col).mapInPandas(
-        gen, schema=f"query_id int, {id_col} {id_t}, {score_col} double"
+    scoped = work.filter(F.col(cell_col).isin(sorted(set().union(*probes.values()))))
+    score = _in_probed_cells(
+        _matmul_scores(queries, qids, vec_col, metric), probes, qids, len(centroids), cell_col
     )
-    order_col = F.col(score_col).asc() if asc else F.col(score_col).desc()
-    w = Window.partitionBy("query_id").orderBy(order_col, F.col(id_col))
-    return (
-        local.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    l2 = metric == "l2"
+    return _batched_topk(
+        scoped, [vec_col, cell_col], qids, score, k, id_col, "l2" if l2 else "cos_sim",
+        round_dp if l2 else 4, exclude_query_ids, ascending=l2,
     )
 
 
@@ -1342,7 +1278,6 @@ def ann_lsh_topk_multi(
     num_tables: int = 1,
     radius: int = 1,
     exclude_query_ids: bool = True,
-    mode: str = "fold",
     sig_cols: list[str] | None = None,
 ) -> DataFrame:
     """Batched ``ann_lsh_topk`` — the SRP-LSH tier's serving form. The
@@ -1353,31 +1288,25 @@ def ann_lsh_topk_multi(
     (query_id, id_col, cos_sim), per-query rows identical to
     ``ann_lsh_topk`` (parity-tested).
 
-    ``mode``: ``"fold"`` = per-query cosine branches over the shared
-    bucket-pruned scan; ``"arrow"`` = ONE mapInPandas pass — per Arrow
-    batch one matmul scores all Q columns and each query's mask is an
-    ``isin`` against its driver-enumerated Hamming ball
-    (Σ_{i≤r} C(planes, i) ints per table — probe-set literals, never a
-    scan-side popcount), local top-k per (task, query).
+    One ``_batched_topk`` pass: the ``cosine_topk_multi`` matmul score
+    block, each query's mask an ``isin`` against its driver-enumerated
+    Hamming ball (Σ_{i≤r} C(planes, i) ints per table — probe-set
+    literals, never a scan-side popcount).
 
     ``sig_cols`` names PERSISTED signature columns (the ``ann_lsh_topk``
     contract: written by ``lsh_signature`` under the same
     (num_planes, dim, seed) derivation) — the whole batch then skips
     the hashing pass, the dominant cost the round-14 bench measured.
     """
-    if not queries:
-        raise ValueError("need at least one query")
-    if mode not in ("fold", "arrow"):
-        raise ValueError(f"mode must be 'fold' or 'arrow', got {mode!r}")
+    import numpy as np  # noqa: PLC0415
+
+    qids = _query_ids(queries)
     if sig_cols is not None:
         _validate_sig_cols(df, sig_cols)
         num_tables = len(sig_cols)
     if num_tables < 1:
         raise ValueError(f"num_tables must be >= 1, got {num_tables}")
-    id_t = _validated_id_type(df, id_col)
-    qids = sorted(queries)
     dim = len(queries[qids[0]])
-    vec = F.col(vec_col).cast("array<double>")
     persisted = sig_cols is not None
     if not persisted:
         sig_cols = [f"__ann_lsh_sig_{t}" for t in range(num_tables)]
@@ -1402,93 +1331,20 @@ def ann_lsh_topk_multi(
     for ti, (col, _) in enumerate(tables):
         union_ball = sorted({b for qid in qids for b in balls[qid][ti]})
         union_probe = union_probe | F.col(col).isin(union_ball)
-    scoped = sigs.filter(union_probe)
-    if mode == "fold":
-        out = None
-        for qid in qids:
-            probe_any = F.lit(False)
-            for ti, (col, _) in enumerate(tables):
-                probe_any = probe_any | F.col(col).isin(balls[qid][ti])
-            excl = (qid,) if exclude_query_ids else ()
-            probed = scoped.filter(probe_any & vec.isNotNull())
-            if not persisted:
-                probed = probed.drop(*sig_cols)
-            branch = cosine_topk(
-                probed,
-                queries[qid], k, id_col, vec_col, excl,
-            ).select(
-                F.lit(int(qid)).cast("int").alias("query_id"),
-                F.col(id_col),
-                F.col("cos_sim"),
-            )
-            out = branch if out is None else out.unionByName(branch)
-        return out
+    scores = _matmul_scores(queries, qids, vec_col, "cosine")
 
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
+    def score(pdf):
+        rows, s, _ = scores(pdf)
+        ok = np.zeros(s.shape, dtype=bool)
+        for ti, col in enumerate(sig_cols):
+            sig = pdf[col].to_numpy()[rows].astype(np.int64)
+            for qi, qid in enumerate(qids):
+                ok[:, qi] |= np.isin(sig, balls[qid][ti])
+        return rows, s, ok
 
-    qm = np.asarray([queries[qid] for qid in qids], dtype=np.float64)
-    qid_arr = np.asarray(qids, dtype=np.int64)
-    q_norm = np.sqrt((qm * qm).sum(axis=1))
-    ball_sets = {
-        int(qid): [frozenset(b) for b in balls[qid]] for qid in qids
-    }
-
-    def gen(batches):
-        for pdf in batches:
-            x, null_mask = _stack_nullable(pdf[vec_col].to_numpy(), dim)
-            # zero-norm exclusion — the cosine_topk candidate rule
-            # (ADVICE r14: numpy ranks the NaN last, Spark first)
-            keep0 = ~null_mask & ((x * x).sum(axis=1) > 0)
-            if not keep0.any():
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)[keep0]
-            sig_mat = np.stack(
-                [pdf[c].to_numpy(dtype=np.int64)[keep0] for c in sig_cols],
-                axis=1,
-            )
-            x = x[keep0]
-            sims = (x @ qm.T) / (
-                np.sqrt((x * x).sum(axis=1))[:, None] * q_norm[None, :]
-            )
-            r = _round_half_up_np(sims, 4)
-            parts = []
-            for qi, qid in enumerate(qid_arr):
-                keep = np.zeros(len(ids), dtype=bool)
-                for ti in range(len(sig_cols)):
-                    keep |= np.isin(
-                        sig_mat[:, ti], list(ball_sets[int(qid)][ti])
-                    )
-                if exclude_query_ids:
-                    keep &= ids != qid
-                if not keep.any():
-                    continue
-                col = r[keep, qi]
-                order = np.lexsort((ids[keep], -col))[:k]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(
-                                int(order.size), qid, dtype=np.int32
-                            ),
-                            id_col: ids[keep][order],
-                            "cos_sim": col[order],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    local = scoped.select(id_col, vec_col, *sig_cols).mapInPandas(
-        gen, schema=f"query_id int, {id_col} {id_t}, cos_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        local.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    return _batched_topk(
+        sigs.filter(union_probe), [vec_col, *sig_cols], qids, score, k, id_col,
+        "cos_sim", 4, exclude_query_ids, ascending=False,
     )
 
 
@@ -2098,9 +1954,9 @@ def _pq_half_up(x: float, dp: int) -> float:
 
 def _round_half_up_np(arr, dp: int):
     """ONE vectorized HALF_UP kernel shared by every Arrow path
-    (``pq_adc_topk_multi``/``ivfpq_topk_multi`` arrow modes and the
-    ``kmeans(assignment="arrow")`` mean update — ADVICE r13: private
-    copies had already drifted on sign handling).
+    (``_batched_topk``, the one engine of the ``*_topk_multi`` family,
+    and the ``kmeans(assignment="arrow")`` mean update — ADVICE r13:
+    private copies had already drifted on sign handling).
 
     Rounds the scaled DOUBLE: ``floor(|x|·10^dp + 0.5)·sign(x)/10^dp``,
     with exact zeros forced to +0.0. This is deliberately NOT
@@ -2108,11 +1964,12 @@ def _round_half_up_np(arr, dp: int):
     measure-zero boundary set where ``|x|·10^dp`` FP-rounds across the
     .5 boundary (80.585·100 = 8058.4999…9 → this kernel 80.58,
     BigDecimal HALF_UP on the shortest decimal 80.585 gives
-    80.59): the arrow modes trade that last-ulp boundary for the
+    80.59): the batched top-k trades that last-ulp boundary for the
     single-scan vectorized plan. The divergence is pinned by
-    ``test_round_half_up_np_boundary_divergence``; oracle-grade paths
-    (the multi-query fold modes, ``kmeans`` ``"seq"``) round with
-    ``F.round`` exactly."""
+    ``test_round_half_up_np_boundary_divergence``. The single-query
+    operators and ``kmeans`` ``"seq"`` round with ``F.round`` exactly;
+    the batched oracles (batches 20–22) are value-checked against this
+    kernel's answers on the fixtures."""
     import numpy as np  # noqa: PLC0415
 
     scale = 10.0 ** dp
@@ -2583,7 +2440,6 @@ def pq_adc_topk_multi(
     codes_col: str = "pq_code",
     round_dp: int = 6,
     exclude_query_ids: bool = True,
-    mode: str = "fold",
     refine_n: int = 0,
     vectors: DataFrame | None = None,
     vec_col: str = "embedding",
@@ -2600,124 +2456,77 @@ def pq_adc_topk_multi(
     queries drawn from the corpus — ids must share the id_col space;
     pass False for external queries).
 
-    ``mode`` picks the physical plan, the established split:
+    One ``_batched_topk`` pass: per Arrow batch the Q × m × k_sub LUT
+    tensor gathers all Q distances from the codes matrix, j-ordered
+    sequential adds as in the single-query fold, HALF_UP-rounded by the
+    vectorized kernel. Rows with a NULL code are never scored.
 
-    - ``"fold"`` (oracle path): per query, the same flat-literal-LUT
-      unrolled-add projection and k-heap as ``pq_adc_topk``, unioned
-      under a query_id column. Q branches over the same narrow code
-      scan — the engine serves them from one cached/columnar read; the
-      per-branch plan stays inside whole-stage codegen, and every adc
-      value is the j-ordered sequential sum the batch-20 oracle
-      replays.
-    - ``"arrow"``: ONE mapInPandas pass — per Arrow batch the Q × m ×
-      k_sub LUT tensor gathers all Q distances from the codes matrix
-      in vectorized numpy, and each task emits only its LOCAL top-k
-      per query, so the global re-rank shuffles ≤ partitions × Q × k
-      rows (never n × Q). The true single-scan form; rounding is the
-      vectorized HALF_UP kernel, trading the last-ulp rounding
-      boundary exactly as every Arrow kernel here does
-      (parity-tested on the fixture).
-
-    ``refine_n`` > 0 enables the standard two-stage search per query
-    (the ``ivfpq_topk_multi`` leg, completed here for the flat-scan
-    form — VERDICT r13 item 7a): each query shortlists
-    ``max(k, refine_n)`` ADC candidates (the r12 ADVICE width lesson),
-    then ONE broadcast join (``_exact_rerank_multi``) re-ranks all Q
-    shortlists against the raw vectors together — output gains the
-    exact ``l2`` column and ordering switches to it. ``vectors``
-    defaults to ``encoded`` (the single-query convention; pass the raw
-    table when the store is codes-only).
+    ``refine_n`` > 0 enables the standard two-stage search per query:
+    each query shortlists ``max(k, refine_n)`` ADC candidates (the r12
+    ADVICE width lesson), then ONE broadcast join
+    (``_exact_rerank_multi``) re-ranks all Q shortlists against the raw
+    vectors together — output gains the exact ``l2`` column and
+    ordering switches to it. ``vectors`` defaults to ``encoded`` (the
+    single-query convention; pass the raw table when the store is
+    codes-only).
     """
-    if not queries:
-        raise ValueError("need at least one query")
-    if mode not in ("fold", "arrow"):
-        raise ValueError(f"mode must be 'fold' or 'arrow', got {mode!r}")
-    id_t = _validated_id_type(encoded, id_col)
-    qids = sorted(queries)
-    branch_k = max(k, refine_n) if refine_n > 0 else k
-    if mode == "fold":
-        out = None
-        for qid in qids:
-            branch = pq_adc_topk(
-                encoded,
-                queries[qid],
-                codebooks,
-                k=branch_k,
-                id_col=id_col,
-                codes_col=codes_col,
-                round_dp=round_dp,
-                exclude_ids=(qid,) if exclude_query_ids else (),
-            ).select(
-                F.lit(int(qid)).cast("int").alias("query_id"),
-                F.col(id_col),
-                F.col("adc"),
-            )
-            out = branch if out is None else out.unionByName(branch)
-        if refine_n <= 0:
-            return out
-        return _exact_rerank_multi(
-            out, vectors if vectors is not None else encoded,
-            queries, k, id_col, vec_col, round_dp,
-        )
-
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
-    m = len(codebooks)
-    luts = np.asarray(
-        [_pq_lut(queries[qid], codebooks) for qid in qids], dtype=np.float64
-    )  # Q × m × k_sub
-    qid_arr = np.asarray(qids, dtype=np.int64)
+    qids = _query_ids(queries)
+    luts = np.asarray([_pq_lut(queries[qid], codebooks) for qid in qids], dtype=np.float64)
+    ranked = _batched_topk(
+        encoded, [codes_col], qids, _adc_scores(luts, codes_col),
+        max(k, refine_n), id_col, "adc", round_dp, exclude_query_ids,
+    )
+    if refine_n > 0:
+        vectors = encoded if vectors is None else vectors
+        ranked = _exact_rerank_multi(ranked, vectors, queries, k, id_col, vec_col, round_dp)
+    return ranked
 
-    def gen(batches):
-        for pdf in batches:
-            mask = pdf[codes_col].notna()
-            ids = pdf.loc[mask, id_col].to_numpy(dtype=np.int64)
-            if not len(ids):
-                continue
-            codes = np.stack(pdf.loc[mask, codes_col].to_numpy()).astype(
-                np.int64
-            )  # n × m
-            # adc[n, Q]: sequential j-ordered adds — 0 + t_0 + t_1 + …
-            # matches the fold's left-to-right IEEE order term for term
-            adc = np.zeros((len(ids), len(qids)), dtype=np.float64)
-            for j in range(m):
-                adc += luts[:, j, :][:, codes[:, j]].T
-            r = _round_half_up_np(adc, round_dp)
-            parts = []
-            for qi, qid in enumerate(qid_arr):
-                col = r[:, qi]
-                keep = np.ones(len(ids), dtype=bool)
-                if exclude_query_ids:
-                    keep = ids != qid
-                order = np.lexsort((ids[keep], col[keep]))[:branch_k]
-                sel_ids, sel_adc = ids[keep][order], col[keep][order]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(sel_ids), qid, dtype=np.int32),
-                            id_col: sel_ids,
-                            "adc": sel_adc,
-                        }
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
 
-    local = encoded.mapInPandas(
-        gen, schema=f"query_id int, {id_col} {id_t}, adc double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col(id_col))
-    ranked = (
-        local.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= branch_k)
-        .drop("__rn")
-    )
-    if refine_n <= 0:
-        return ranked
-    return _exact_rerank_multi(
-        ranked, vectors if vectors is not None else encoded,
-        queries, k, id_col, vec_col, round_dp,
-    )
+def _adc_scores(luts, codes_col: str):
+    """The PQ score block: ``luts`` is the Q × m × k_sub tensor of the
+    batch's lookup tables; adc[n, Q] is the j-ordered sequential sum
+    0 + t_0 + t_1 + … the single-query fold adds, term for term. Rows
+    with a NULL code are not scored."""
+    import numpy as np  # noqa: PLC0415
+
+    def score(pdf):
+        codes, null_mask = _stack_nullable(pdf[codes_col].to_numpy(), luts.shape[1])
+        rows = np.flatnonzero(~null_mask)
+        codes = codes[rows].astype(np.int64)  # n × m
+        adc = np.zeros((len(rows), luts.shape[0]), dtype=np.float64)
+        for j in range(luts.shape[1]):
+            adc += luts[:, j, :][:, codes[:, j]].T
+        return rows, adc, None
+
+    return score
+
+
+def _ivfpq_store(
+    df: DataFrame,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]],
+    vec_col: str,
+    cell_col: str | None,
+    codes_col: str | None,
+    coarse_metric: str,
+    residual: bool = False,
+) -> tuple[DataFrame, str, str]:
+    """``df`` with its IVF cell and PQ code columns, attaching whichever
+    is missing on the fly (one Arrow pass each; residual codes encode
+    x − centroid[cell]). Returns (frame, cell_col, codes_col)."""
+    if cell_col is None:
+        df = ivf_assign(df, centroids, vec_col, "__ivfpq_cell", coarse_metric)
+        cell_col = "__ivfpq_cell"
+    if codes_col is None:
+        src = vec_col
+        if residual:
+            df = residualize(df, centroids, vec_col, cell_col, "__ivfpq_res")
+            src = "__ivfpq_res"
+        df = pq_encode(df, codebooks, src, "__ivfpq_code", mode="arrow")
+        codes_col = "__ivfpq_code"
+    return df, cell_col, codes_col
 
 
 def ivfpq_topk(
@@ -2767,13 +2576,9 @@ def ivfpq_topk(
     against its own row's vector even when ids repeat.
     """
     probe_cells = _probe_cells(centroids, query_vec, nprobe, coarse_metric)
-    work = df
-    if cell_col is None:
-        work = ivf_assign(work, centroids, vec_col, "__ivfpq_cell", coarse_metric)
-        cell_col = "__ivfpq_cell"
-    if codes_col is None:
-        work = pq_encode(work, codebooks, vec_col, "__ivfpq_code", mode="arrow")
-        codes_col = "__ivfpq_code"
+    work, cell_col, codes_col = _ivfpq_store(
+        df, centroids, codebooks, vec_col, cell_col, codes_col, coarse_metric
+    )
     probed = work.filter(_sql_in(cell_col, probe_cells))
     return pq_adc_topk(
         probed,
@@ -2822,12 +2627,7 @@ def _exact_rerank_multi(
         .join(F.broadcast(qdf), "query_id")
         .selectExpr("query_id", _sql_col(id_col), "adc", f"round({l2}, {round_dp}) AS l2")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("l2").asc(), F.col(id_col))
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _first_per_query(cand, k, "l2", id_col)
 
 
 def ivfpq_topk_multi(
@@ -2843,7 +2643,6 @@ def ivfpq_topk_multi(
     codes_col: str | None = None,
     round_dp: int = 6,
     exclude_query_ids: bool = True,
-    mode: str = "fold",
     coarse_metric: str = "cosine",
     refine_n: int = 0,
     vectors: DataFrame | None = None,
@@ -2860,126 +2659,39 @@ def ivfpq_topk_multi(
     Cost shape at 100 TB: one pruned compressed scan of
     |∪ probe cells| / k_cells of the corpus serves the WHOLE request
     batch — overlapping probe sets (the common case: queries cluster
-    where the data does) are read once, not once per query.
-
-    ``mode`` is the ``pq_adc_topk_multi`` split: ``"fold"`` = per-query
-    literal-LUT branches over the shared pruned scan (oracle-grade
-    sequential sums); ``"arrow"`` = ONE mapInPandas pass over the
-    union-pruned scan — per Arrow batch the kernel gathers all Q
-    distances and masks each query to its own cells, emitting local
-    top-k per (task, query), so the global re-rank shuffles
-    ≤ partitions × Q × k rows. ``exclude_query_ids`` drops each
-    query's own id (corpus-drawn queries).
+    where the data does) are read once, not once per query. It is one
+    ``_batched_topk`` pass: the ``pq_adc_topk_multi`` LUT-gather score
+    block, masked per query to its own cells. ``exclude_query_ids``
+    drops each query's own id (corpus-drawn queries).
 
     ``refine_n`` > 0 enables the standard two-stage search per query
     (output gains the exact ``l2`` column, ordering switches to it):
-    each query shortlists refine_n ADC candidates — per-branch width
+    each query shortlists refine_n ADC candidates — per-query width
     is max(k, refine_n), the r12 ADVICE lesson — and ONE broadcast
     join re-ranks all Q shortlists against the raw vectors together
     (``vectors`` defaults to ``df``, the single-query convention;
     pass the raw table when the store is codes-only).
     """
-    if not queries:
-        raise ValueError("need at least one query")
-    if mode not in ("fold", "arrow"):
-        raise ValueError(f"mode must be 'fold' or 'arrow', got {mode!r}")
-    id_t = _validated_id_type(df, id_col)
-    shortlist_k = max(k, refine_n)
-    probes = {
-        qid: _probe_cells(centroids, q, nprobe, coarse_metric)
-        for qid, q in queries.items()
-    }
-    work = df
-    if cell_col is None:
-        work = ivf_assign(work, centroids, vec_col, "__ivfpq_cell", coarse_metric)
-        cell_col = "__ivfpq_cell"
-    if codes_col is None:
-        work = pq_encode(work, codebooks, vec_col, "__ivfpq_code", mode="arrow")
-        codes_col = "__ivfpq_code"
-    union_cells = sorted({c for p in probes.values() for c in p})
-    scoped = work.filter(F.col(cell_col).isin(union_cells))
-    branch_k = shortlist_k if refine_n > 0 else k
-    if mode == "fold":
-        out = None
-        for qid in sorted(queries):
-            branch = pq_adc_topk(
-                scoped.filter(F.col(cell_col).isin(probes[qid])),
-                queries[qid],
-                codebooks,
-                k=branch_k,
-                id_col=id_col,
-                codes_col=codes_col,
-                round_dp=round_dp,
-                exclude_ids=(qid,) if exclude_query_ids else (),
-            ).select(
-                F.lit(int(qid)).cast("int").alias("query_id"),
-                F.col(id_col),
-                F.col("adc"),
-            )
-            out = branch if out is None else out.unionByName(branch)
-        if refine_n <= 0:
-            return out
-        return _exact_rerank_multi(
-            out, vectors if vectors is not None else df,
-            queries, k, id_col, vec_col, round_dp,
-        )
-
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
 
-    m = len(codebooks)
-    qids = sorted(queries)
-    luts = np.asarray(
-        [_pq_lut(queries[qid], codebooks) for qid in qids], dtype=np.float64
+    qids = _query_ids(queries)
+    probes = {q: _probe_cells(centroids, queries[q], nprobe, coarse_metric) for q in qids}
+    work, cell_col, codes_col = _ivfpq_store(
+        df, centroids, codebooks, vec_col, cell_col, codes_col, coarse_metric
     )
-    probe_sets = [frozenset(probes[qid]) for qid in qids]
-    qid_arr = np.asarray(qids, dtype=np.int64)
-
-    def gen(batches):
-        for pdf in batches:
-            mask = pdf[codes_col].notna() & pdf[cell_col].notna()
-            ids = pdf.loc[mask, id_col].to_numpy(dtype=np.int64)
-            if not len(ids):
-                continue
-            cells = pdf.loc[mask, cell_col].to_numpy(dtype=np.int64)
-            codes = np.stack(pdf.loc[mask, codes_col].to_numpy()).astype(np.int64)
-            adc = np.zeros((len(ids), len(qids)), dtype=np.float64)
-            for j in range(m):
-                adc += luts[:, j, :][:, codes[:, j]].T
-            r = _round_half_up_np(adc, round_dp)
-            parts = []
-            for qi, qid in enumerate(qid_arr):
-                keep = np.isin(cells, list(probe_sets[qi]))
-                if exclude_query_ids:
-                    keep &= ids != qid
-                col = r[keep, qi]
-                order = np.lexsort((ids[keep], col))[:branch_k]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(
-                                int(order.size), qid, dtype=np.int32
-                            ),
-                            id_col: ids[keep][order],
-                            "adc": col[order],
-                        }
-                    )
-                )
-            yield pd.concat(parts, ignore_index=True)
-
-    local = scoped.mapInPandas(gen, schema=f"query_id int, {id_col} {id_t}, adc double")
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col(id_col))
-    ranked = (
-        local.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= branch_k)
-        .drop("__rn")
+    luts = np.asarray([_pq_lut(queries[qid], codebooks) for qid in qids], dtype=np.float64)
+    score = _in_probed_cells(
+        _adc_scores(luts, codes_col), probes, qids, len(centroids), cell_col
     )
-    if refine_n <= 0:
-        return ranked
-    return _exact_rerank_multi(
-        ranked, vectors if vectors is not None else df,
-        queries, k, id_col, vec_col, round_dp,
+    scoped = work.filter(F.col(cell_col).isin(sorted(set().union(*probes.values()))))
+    ranked = _batched_topk(
+        scoped, [codes_col, cell_col], qids, score, max(k, refine_n), id_col, "adc",
+        round_dp, exclude_query_ids,
     )
+    if refine_n > 0:
+        vectors = df if vectors is None else vectors
+        ranked = _exact_rerank_multi(ranked, vectors, queries, k, id_col, vec_col, round_dp)
+    return ranked
 
 
 def residualize(
@@ -3063,20 +2775,10 @@ def ivfpq_residual_topk(
     c = np.asarray(centroids, dtype=np.float64)
     qv = np.asarray(query_vec, dtype=np.float64)
     probe_cells = _probe_cells(centroids, query_vec, nprobe, coarse_metric)
-    work = df
-    if cell_col is None or codes_col is None:
-        if cell_col is None:
-            work = ivf_assign(work, centroids, vec_col, "__ivfpq_cell", coarse_metric)
-            cell_col = "__ivfpq_cell"
-        if codes_col is None:
-            work = pq_encode(
-                residualize(work, centroids, vec_col, cell_col, "__ivfpq_res"),
-                codebooks,
-                "__ivfpq_res",
-                "__ivfpq_code",
-                mode="arrow",
-            )
-            codes_col = "__ivfpq_code"
+    work, cell_col, codes_col = _ivfpq_store(
+        df, centroids, codebooks, vec_col, cell_col, codes_col, coarse_metric,
+        residual=True,
+    )
     # each per-cell branch must shortlist max(k, refine_n) rows, not k:
     # with per-branch limit k the unioned shortlist tops out at
     # nprobe*k candidates, silently shrinking a refine_n=100/k=10/
@@ -3126,7 +2828,6 @@ def ivfpq_residual_topk_multi(
     codes_col: str | None = None,
     round_dp: int = 6,
     exclude_query_ids: bool = True,
-    mode: str = "fold",
     coarse_metric: str = "l2",
     refine_n: int = 0,
     vectors: DataFrame | None = None,
@@ -3142,17 +2843,9 @@ def ivfpq_residual_topk_multi(
     Cost shape at 100 TB vs the global-codebook ``ivfpq_topk_multi``:
     the pruned scan is the SAME (union of probed cells × m-int codes);
     the LUT metadata grows from Q×m×k_sub to Q×nprobe×m×k_sub — still
-    driver-side kilobytes. ``mode`` is the established split:
-
-    - ``"fold"``: one ``pq_adc_topk`` literal-LUT branch per
-      (query, probed cell) — Q×nprobe branches over the shared pruned
-      scan, each a cell-filtered codegen pass with the oracle-grade
-      sequential sums, merged per query by a k-heap window.
-    - ``"arrow"``: ONE mapInPandas pass over the union-pruned scan;
-      per Arrow batch the kernel scores each query's rows cell-group
-      by cell-group with that cell's LUT (sequential j-ordered adds —
-      the fold order), emits local top-``branch_k`` per (task, query),
-      so the global re-rank shuffles ≤ partitions × Q × branch_k rows.
+    driver-side kilobytes. It is one ``_batched_topk`` pass whose score
+    block gathers each query's rows from the LUT of the row's own cell
+    (sequential j-ordered adds — the single-query fold order).
 
     ``refine_n`` > 0 re-ranks all Q shortlists (each max(k, refine_n)
     wide — the r12 ADVICE width lesson) against the raw vectors with
@@ -3161,145 +2854,50 @@ def ivfpq_residual_topk_multi(
     """
     import numpy as np  # noqa: PLC0415
 
-    if not queries:
-        raise ValueError("need at least one query")
-    if mode not in ("fold", "arrow"):
-        raise ValueError(f"mode must be 'fold' or 'arrow', got {mode!r}")
-    id_t = _validated_id_type(df, id_col)
+    qids = _query_ids(queries)
     c = np.asarray(centroids, dtype=np.float64)
-    probes = {
-        qid: _probe_cells(centroids, q, nprobe, coarse_metric)
-        for qid, q in queries.items()
-    }
-    work = df
-    if cell_col is None:
-        work = ivf_assign(work, centroids, vec_col, "__ivfpq_cell", coarse_metric)
-        cell_col = "__ivfpq_cell"
-    if codes_col is None:
-        work = pq_encode(
-            residualize(work, centroids, vec_col, cell_col, "__ivfpq_res"),
-            codebooks,
-            "__ivfpq_res",
-            "__ivfpq_code",
-            mode="arrow",
-        )
-        codes_col = "__ivfpq_code"
-    union_cells = sorted({cell for p in probes.values() for cell in p})
-    scoped = work.filter(F.col(cell_col).isin(union_cells))
-    branch_k = max(k, refine_n) if refine_n > 0 else k
-    qids = sorted(queries)
-    # per-(query, cell) residual LUTs — Q×nprobe×m×k_sub driver floats
-    res_luts = {
-        qid: {
-            cell: _pq_lut(
-                [float(x) for x in (np.asarray(queries[qid]) - c[cell])],
-                codebooks,
-            )
-            for cell in probes[qid]
-        }
-        for qid in qids
-    }
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col(id_col))
-    if mode == "fold":
-        out = None
-        for qid in qids:
-            for cell in probes[qid]:
-                branch = pq_adc_topk(
-                    scoped.filter(F.col(cell_col) == cell),
-                    # LUT recomputed inside pq_adc_topk from this
-                    # residual query — same values as res_luts
-                    [float(x) for x in (np.asarray(queries[qid]) - c[cell])],
-                    codebooks,
-                    k=branch_k,
-                    id_col=id_col,
-                    codes_col=codes_col,
-                    round_dp=round_dp,
-                    exclude_ids=(qid,) if exclude_query_ids else (),
-                ).select(
-                    F.lit(int(qid)).cast("int").alias("query_id"),
-                    F.col(id_col),
-                    F.col("adc"),
-                )
-                out = branch if out is None else out.unionByName(branch)
-        # refine_n <= 0 ⇒ branch_k == k, so this single window IS the
-        # final per-query top-k; with refine it is the shortlist width
-        ranked = (
-            out.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= branch_k)
-            .drop("__rn")
-        )
-        if refine_n <= 0:
-            return ranked
-        return _exact_rerank_multi(
-            ranked, vectors if vectors is not None else df,
-            queries, k, id_col, vec_col, round_dp,
-        )
-
-    import pandas as pd  # noqa: PLC0415
-
+    probes = {q: _probe_cells(centroids, queries[q], nprobe, coarse_metric) for q in qids}
+    work, cell_col, codes_col = _ivfpq_store(
+        df, centroids, codebooks, vec_col, cell_col, codes_col, coarse_metric,
+        residual=True,
+    )
+    # per query: its probed cells' residual LUTs (nprobe × m × k_sub
+    # driver floats) and a cell → LUT slot map, −1 for unprobed cells
+    res_luts, slots = [], []
+    for qid in qids:
+        qv = np.asarray(queries[qid], dtype=np.float64)
+        res_luts.append(np.asarray(
+            [_pq_lut([float(x) for x in (qv - c[cell])], codebooks) for cell in probes[qid]],
+            dtype=np.float64,
+        ))
+        slot = np.full(len(centroids), -1, dtype=np.int64)
+        slot[probes[qid]] = np.arange(len(probes[qid]))
+        slots.append(slot)
     m = len(codebooks)
-    lut_arr = {
-        qid: {cell: np.asarray(tbl, dtype=np.float64)
-              for cell, tbl in res_luts[qid].items()}
-        for qid in qids
-    }
-    probe_sets = [frozenset(probes[qid]) for qid in qids]
-    qid_arr = np.asarray(qids, dtype=np.int64)
 
-    def gen(batches):
-        for pdf in batches:
-            mask = pdf[codes_col].notna() & pdf[cell_col].notna()
-            ids = pdf.loc[mask, id_col].to_numpy(dtype=np.int64)
-            if not len(ids):
-                continue
-            cells = pdf.loc[mask, cell_col].to_numpy(dtype=np.int64)
-            codes = np.stack(pdf.loc[mask, codes_col].to_numpy()).astype(np.int64)
-            parts = []
-            for qi, qid in enumerate(qid_arr):
-                keep = np.isin(cells, list(probe_sets[qi]))
-                if exclude_query_ids:
-                    keep &= ids != qid
-                if not keep.any():
-                    continue
-                sub_ids = ids[keep]
-                sub_cells = cells[keep]
-                sub_codes = codes[keep]
-                adc = np.zeros(len(sub_ids), dtype=np.float64)
-                for cell, lut in lut_arr[int(qid)].items():
-                    cmask = sub_cells == cell
-                    if not cmask.any():
-                        continue
-                    cc = sub_codes[cmask]
-                    s = np.zeros(int(cmask.sum()), dtype=np.float64)
-                    # sequential j-ordered adds — the fold's IEEE order
-                    for j in range(m):
-                        s += lut[j][cc[:, j]]
-                    adc[cmask] = s
-                r = _round_half_up_np(adc, round_dp)
-                order = np.lexsort((sub_ids, r))[:branch_k]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(
-                                int(order.size), qid, dtype=np.int32
-                            ),
-                            id_col: sub_ids[order],
-                            "adc": r[order],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
+    def score(pdf):
+        codes, null_mask = _stack_nullable(pdf[codes_col].to_numpy(), m)
+        rows = np.flatnonzero(~null_mask)
+        codes = codes[rows].astype(np.int64)
+        cells = pdf[cell_col].to_numpy()[rows].astype(np.int64)
+        adc = np.zeros((len(rows), len(qids)), dtype=np.float64)
+        ok = np.zeros(adc.shape, dtype=bool)
+        for qi in range(len(qids)):
+            slot = slots[qi][cells]
+            ok[:, qi] = slot >= 0
+            sel = np.flatnonzero(ok[:, qi])
+            s = np.zeros(len(sel), dtype=np.float64)
+            for j in range(m):
+                s += res_luts[qi][slot[sel], j, codes[sel, j]]
+            adc[sel, qi] = s
+        return rows, adc, ok
 
-    local = scoped.mapInPandas(gen, schema=f"query_id int, {id_col} {id_t}, adc double")
-    ranked = (
-        local.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= (k if refine_n <= 0 else branch_k))
-        .drop("__rn")
+    scoped = work.filter(F.col(cell_col).isin(sorted(set().union(*probes.values()))))
+    ranked = _batched_topk(
+        scoped, [codes_col, cell_col], qids, score, max(k, refine_n), id_col, "adc",
+        round_dp, exclude_query_ids,
     )
-    if refine_n <= 0:
-        return ranked
-    return _exact_rerank_multi(
-        ranked, vectors if vectors is not None else df,
-        queries, k, id_col, vec_col, round_dp,
-    )
+    if refine_n > 0:
+        vectors = df if vectors is None else vectors
+        ranked = _exact_rerank_multi(ranked, vectors, queries, k, id_col, vec_col, round_dp)
+    return ranked

@@ -43,7 +43,15 @@ FEED_TOPICS = {
 
 @dataclass
 class FeedResult:
-    """What a drain produced: rows written + leftover files (ST7 audit)."""
+    """What a drain produced (ST7 audit).
+
+    ``rows`` is not the count this drain wrote. For a Parquet sink it is
+    the feed's CUMULATIVE row count in the sink, read back after each
+    micro-batch, so rows from earlier drains are included; a drain that
+    commits no micro-batch reports 0. A Kafka sink has no count to read
+    back (``_sink`` returns −1), so ``rows`` stays 0.
+    ``leftovers`` lists the input files still in the input directory
+    after the drain, i.e. not consumed and archived."""
 
     rows: int
     leftovers: list[str]

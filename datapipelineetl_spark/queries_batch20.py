@@ -217,12 +217,11 @@ def q_pq_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     all of them). Self-neighbors excluded (queries drawn from the
     corpus).
 
-    Scale: mode="fold" here is the oracle-grade plan (Q codegen
-    branches over one narrow scan); mode="arrow" is the measured
-    single-pass form — one mapInPandas over the code column, Q × m ×
-    k_sub LUT tensor, partition-local top-k, ≤ partitions × Q × k rows
-    shuffled (parity-tested; SCALING.md "Round 13: multi-query
-    ADC")."""
+    Scale: one mapInPandas pass over the code column (the shared
+    batched kernel) — Q × m × k_sub LUT tensor, partition-local top-k,
+    ≤ partitions × Q × k rows shuffled (parity-tested; SCALING.md
+    "Round 13: multi-query ADC"). Its vectorized HALF_UP rounding
+    reproduces the oracle's values on the fixtures."""
     emb = _t(spark, sf_dir, "embeddings")
     books = similarity.pq_fit(
         emb, m=_PQ_M, k_sub=_PQ_K, iters=_PQ_ITERS, round_dp=_PQ_DP
@@ -233,7 +232,7 @@ def q_pq_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in emb.filter(F.col("vec_id").isin(*_MULTI_QIDS)).collect()
     }
     return similarity.pq_adc_topk_multi(
-        enc, queries, books, k=_MULTI_K, round_dp=_PQ_DP, mode="fold"
+        enc, queries, books, k=_MULTI_K, round_dp=_PQ_DP
     )
 
 

@@ -212,9 +212,10 @@ def q_pq_multi_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     `pq_adc_topk_multi`, which is the output shape a two-stage serving
     layer actually returns.
 
-    Scale: mode="fold" here is the oracle-grade plan; the re-rank
-    touches |shortlists| raw vectors total regardless of Q (one
-    broadcast join), never the corpus."""
+    Scale: the shortlists come from one mapInPandas pass over the
+    code column (the shared batched kernel); the re-rank touches
+    |shortlists| raw vectors total regardless of Q (one broadcast
+    join), never the corpus."""
     emb = _t(spark, sf_dir, "embeddings")
     books = similarity.pq_fit(
         emb, m=_PQ_M, k_sub=_PQ_K, iters=_PQ_ITERS, round_dp=_PQ_DP
@@ -230,7 +231,6 @@ def q_pq_multi_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         books,
         k=_MULTI_REFINE_K,
         round_dp=_PQ_DP,
-        mode="fold",
         refine_n=_MULTI_REFINE_N,
         vectors=emb,
     )
@@ -339,19 +339,19 @@ def q_l2_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     `similarity.l2_topk_multi`, the brute-force tier's batched form
     (round 14: every ANN tier serves batches).
 
-    Scale: mode="fold" here is the oracle-grade plan (Q sequential-fold
-    branches over one raw-vector scan); mode="arrow" is the measured
-    single-pass form — one mapInPandas, all Q distance columns from one
-    stacked matmul per Arrow batch, ≤ partitions × Q × k rows shuffled
-    (18.5× vs Q sequential scans at n=2M — SCALING round-14
-    addendum)."""
+    Scale: one mapInPandas pass over the raw vectors (the shared
+    batched kernel) — all Q distance columns from one stacked matmul
+    per Arrow batch, ≤ partitions × Q × k rows shuffled (18.5× vs Q
+    sequential scans at n=2M — SCALING round-14 addendum). The matmul
+    re-associates the oracle's sequential fold; the rounded values
+    agree on the fixtures."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = {
         int(r.vec_id): [float(x) for x in r.embedding]
         for r in emb.filter(F.col("vec_id").isin(*_EXACT_MULTI_QIDS)).collect()
     }
     return similarity.l2_topk_multi(
-        emb, queries, k=_EXACT_MULTI_K, round_dp=_PQ_DP, mode="fold"
+        emb, queries, k=_EXACT_MULTI_K, round_dp=_PQ_DP
     )
 
 

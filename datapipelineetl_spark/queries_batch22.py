@@ -178,7 +178,6 @@ def q_ann_lsh_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed=_LSH_SEED,
         num_tables=_LSH_TABLES,
         radius=_LSH_RADIUS,
-        mode="fold",
     )
 
 
@@ -237,8 +236,8 @@ def q_ivf_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: with the cell column persisted as the store's partition key
     the union filter is directory pruning; the batch scans the probed
     cells ONCE for all Q requests (13.5x vs sequential at n=2M —
-    SCALING round 14); mode="fold" here is the oracle-grade plan,
-    mode="arrow" the measured one-matmul serving kernel."""
+    SCALING round 14), scored by the shared one-matmul batched
+    kernel."""
     emb = _t(spark, sf_dir, "embeddings")
     cents = _fetch_seed_centroids(spark, sf_dir, _IVFPQ_CELLS)
     assigned = similarity.ivf_assign_fold(emb, cents)
@@ -264,7 +263,6 @@ def q_ivf_topk_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         cell_col="ivf_cell",
         metric="l2",
         round_dp=_PQ_DP,
-        mode="fold",
     )
 
 

@@ -13,7 +13,7 @@ every stage is an operator this engine ships, composed the way a
    (`maintenance.compact_ann_store` — listing cost back to O(cells),
    content and answers unchanged).
 5. **Serve**: single-query `ivfpq_topk` (directory-pruned, asserted via
-   PartitionFilters) and batched `pq_adc_topk_multi(mode="arrow")`
+   PartitionFilters) and batched `pq_adc_topk_multi`
    (one code scan for a whole request batch).
 
     python examples/ann_store_lifecycle.py [n_initial] [n_batches]
@@ -137,9 +137,7 @@ def main() -> int:
         for i in range(16)
     }
     enc = spark.read.parquet(store)
-    batch_ans = similarity.pq_adc_topk_multi(
-        enc, queries, books, k=10, mode="arrow"
-    ).count()
+    batch_ans = similarity.pq_adc_topk_multi(enc, queries, books, k=10).count()
     print(
         f"5. batched serve (16 queries, one arrow pass over the code "
         f"column): {batch_ans} result rows, {time.perf_counter() - t0:.2f}s"
@@ -152,7 +150,7 @@ def main() -> int:
     t0 = time.perf_counter()
     multi = similarity.ivfpq_topk_multi(
         enc, {**queries, 17: q}, cents, books, k=10, nprobe=NPROBE,
-        cell_col="ivf_cell", codes_col="pq_code", mode="arrow",
+        cell_col="ivf_cell", codes_col="pq_code",
         exclude_query_ids=False,
     )
     plan = multi._jdf.queryExecution().executedPlan().toString()

@@ -216,3 +216,36 @@ def test_single_query_pq_refine_is_one_job_without_broadcast(spark, topk_store):
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" in plan and "BroadcastHashJoin" in plan
     assert _jobs_of_one_collect(spark, joined, "plan-lint-pq-join") == 2
+
+
+def test_batched_topk_is_one_arrow_pass(spark, topk_store):
+    """Every batched top-k operator is one Arrow pass: the executed
+    plan holds exactly one MapInPandas (the shared ``_batched_topk``
+    kernel) and no Union of per-query branches. One ``collect()`` runs
+    two jobs (the shuffle map stage of the per-query window cut and
+    the result stage); with ``refine_n`` the exact re-rank (shortlist
+    broadcast, join, second window cut) brings it to five."""
+    store, books, cents, q = topk_store
+    qs = {0: q, 1: [-x for x in q], 2: [0.5 * x + 0.1 for x in q]}
+    cells = dict(cell_col="ivf_cell", nprobe=2)
+    pq = dict(cells, codes_col="pq_code")
+    cases = {
+        "l2_topk_multi": (sim.l2_topk_multi(store, qs), 2),
+        "cosine_topk_multi": (sim.cosine_topk_multi(store, qs), 2),
+        "ivf_topk_multi": (sim.ivf_topk_multi(store, qs, cents, **cells), 2),
+        "ann_lsh_topk_multi": (sim.ann_lsh_topk_multi(store, qs, num_planes=4, num_tables=2), 2),
+        "pq_adc_topk_multi": (sim.pq_adc_topk_multi(store, qs, books), 2),
+        "pq_adc_topk_multi-refine": (sim.pq_adc_topk_multi(store, qs, books, refine_n=20), 5),
+        "ivfpq_topk_multi": (sim.ivfpq_topk_multi(store, qs, cents, books, **pq), 2),
+        "ivfpq_topk_multi-refine": (
+            sim.ivfpq_topk_multi(store, qs, cents, books, refine_n=20, **pq), 5),
+        "ivfpq_residual_topk_multi": (
+            sim.ivfpq_residual_topk_multi(store, qs, cents, books, **pq), 2),
+        "ivfpq_residual_topk_multi-refine": (
+            sim.ivfpq_residual_topk_multi(store, qs, cents, books, refine_n=20, **pq), 5),
+    }
+    for name, (df, jobs) in cases.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, name
+        assert "Union" not in plan, name
+        assert _jobs_of_one_collect(spark, df, f"plan-lint-{name}") == jobs, name

@@ -612,9 +612,9 @@ def test_ivf_assign_fold_matches_arrow_and_handles_nulls(spark):
 
 
 def test_pq_adc_topk_multi_modes_match_single(spark, sf_dir):
-    """pq_adc_topk_multi must reproduce pq_adc_topk per query in BOTH
-    modes (fold = unioned literal-LUT branches; arrow = one mapInPandas
-    pass with partition-local top-k), including the self-exclusion."""
+    """pq_adc_topk_multi (one mapInPandas pass with partition-local
+    top-k) must reproduce pq_adc_topk per query, including the
+    self-exclusion."""
     emb = catalog.load(spark, sf_dir, "embeddings")
     books = similarity.pq_fit(emb, m=16, k_sub=16, iters=1)
     enc = similarity.pq_encode(emb, books).repartition(4)
@@ -629,27 +629,24 @@ def test_pq_adc_topk_multi_modes_match_single(spark, sf_dir):
                 enc, queries[qid], books, k=7, exclude_ids=(qid,)
             ).collect()
         ]
-    for mode in ("fold", "arrow"):
-        got = [
-            (r.query_id, r.vec_id, r.adc)
-            for r in similarity.pq_adc_topk_multi(
-                enc, queries, books, k=7, mode=mode
-            ).orderBy("query_id", "adc", "vec_id").collect()
-        ]
-        assert got == sorted(expected, key=lambda t: (t[0], t[2], t[1])), mode
+    got = [
+        (r.query_id, r.vec_id, r.adc)
+        for r in similarity.pq_adc_topk_multi(
+            enc, queries, books, k=7
+        ).orderBy("query_id", "adc", "vec_id").collect()
+    ]
+    assert got == sorted(expected, key=lambda t: (t[0], t[2], t[1]))
     # no self-exclusion: each query's own vector is its 0-distance top hit
     inc = similarity.pq_adc_topk_multi(
-        enc, queries, books, k=1, mode="arrow", exclude_query_ids=False
+        enc, queries, books, k=1, exclude_query_ids=False
     ).collect()
     assert {(r.query_id, r.vec_id) for r in inc} == {(q, q) for q in queries}
-    with pytest.raises(ValueError, match="mode"):
-        similarity.pq_adc_topk_multi(enc, queries, books, mode="nope")
     with pytest.raises(ValueError, match="query"):
         similarity.pq_adc_topk_multi(enc, {}, books)
 
 
 def test_pq_adc_topk_multi_matches_python_replay(pq_frame):
-    """Pure-Python replay of the multi-query fold path (the batch-20
+    """Pure-Python replay of the multi-query path (the batch-20
     oracle's guarantee, pinned locally the way the single-query path
     is): every (query, vector) ADC is the j-ordered sequential sum of
     LUT lookups over the replayed codes, HALF_UP-rounded; per-query
@@ -698,8 +695,8 @@ def test_pq_adc_topk_multi_matches_python_replay(pq_frame):
 
 
 def test_ivfpq_topk_multi_modes_match_single(spark, sf_dir, tmp_path):
-    """ivfpq_topk_multi must reproduce ivfpq_topk per query in BOTH
-    modes over a PERSISTED cell-partitioned store, each query scoring
+    """ivfpq_topk_multi must reproduce ivfpq_topk per query over a
+    PERSISTED cell-partitioned store, each query scoring
     only its own probed cells, and the shared scan must prune to the
     UNION of probed cells (PartitionFilters in the plan)."""
     emb = catalog.load(spark, sf_dir, "embeddings")
@@ -723,27 +720,26 @@ def test_ivfpq_topk_multi_modes_match_single(spark, sf_dir, tmp_path):
             ).collect()
         ]
     expected.sort(key=lambda t: (t[0], t[2], t[1]))
-    for mode in ("fold", "arrow"):
-        multi = similarity.ivfpq_topk_multi(
-            store, vecs, cents, books, k=5, nprobe=3,
-            cell_col="ivf_cell", codes_col="pq_code", mode=mode,
-        )
-        got = [
-            (r.query_id, r.vec_id, r.adc)
-            for r in multi.orderBy("query_id", "adc", "vec_id").collect()
-        ]
-        assert got == expected, mode
-        plan = multi._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters: [" in plan and "ivf_cell" in plan.split(
-            "PartitionFilters:"
-        )[1].split("]")[0]
+    multi = similarity.ivfpq_topk_multi(
+        store, vecs, cents, books, k=5, nprobe=3,
+        cell_col="ivf_cell", codes_col="pq_code",
+    )
+    got = [
+        (r.query_id, r.vec_id, r.adc)
+        for r in multi.orderBy("query_id", "adc", "vec_id").collect()
+    ]
+    assert got == expected
+    plan = multi._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [" in plan and "ivf_cell" in plan.split(
+        "PartitionFilters:"
+    )[1].split("]")[0]
     with pytest.raises(ValueError, match="query"):
         similarity.ivfpq_topk_multi(store, {}, cents, books)
 
 
 def test_ivfpq_topk_multi_refine_matches_single(spark, sf_dir):
     """The batched two-stage search: ivfpq_topk_multi(refine_n) must
-    equal per-query ivfpq_topk(refine_n) in BOTH modes — same exact-l2
+    equal per-query ivfpq_topk(refine_n) — same exact-l2
     re-rank, same output columns — with one broadcast join re-ranking
     ALL queries' shortlists together."""
     emb = catalog.load(spark, sf_dir, "embeddings")
@@ -766,16 +762,14 @@ def test_ivfpq_topk_multi_refine_matches_single(spark, sf_dir):
             ).collect()
         ]
     expected.sort(key=lambda t: (t[0], t[3], t[1]))
-    for mode in ("fold", "arrow"):
-        got = [
-            (r.query_id, r.vec_id, r.adc, r.l2)
-            for r in similarity.ivfpq_topk_multi(
-                work, vecs, cents, books, k=5, nprobe=3,
-                cell_col="ivf_cell", codes_col="pq_code",
-                mode=mode, refine_n=25,
-            ).orderBy("query_id", "l2", "vec_id").collect()
-        ]
-        assert got == expected, mode
+    got = [
+        (r.query_id, r.vec_id, r.adc, r.l2)
+        for r in similarity.ivfpq_topk_multi(
+            work, vecs, cents, books, k=5, nprobe=3,
+            cell_col="ivf_cell", codes_col="pq_code", refine_n=25,
+        ).orderBy("query_id", "l2", "vec_id").collect()
+    ]
+    assert got == expected
 
 
 def test_ivf_assign_fold_matches_python_replay_random(spark):
@@ -1067,7 +1061,7 @@ def test_probe_cells_sequential_fold_order():
 def test_pq_adc_topk_multi_refine_matches_single(spark, sf_dir):
     """VERDICT r13 item 7a: the flat-scan batched server's two-stage
     leg. pq_adc_topk_multi(refine_n) must equal per-query
-    pq_adc_topk(refine_n) in BOTH modes — same exact-l2 re-rank via the
+    pq_adc_topk(refine_n) — same exact-l2 re-rank via the
     shared _exact_rerank_multi broadcast join, same output columns,
     shortlists max(k, refine_n) wide (the r12 width lesson)."""
     emb = catalog.load(spark, sf_dir, "embeddings")
@@ -1085,20 +1079,19 @@ def test_pq_adc_topk_multi_refine_matches_single(spark, sf_dir):
             ).collect()
         ]
     expected.sort(key=lambda t: (t[0], t[3], t[1]))
-    for mode in ("fold", "arrow"):
-        got = [
-            (r.query_id, r.vec_id, r.adc, r.l2)
-            for r in similarity.pq_adc_topk_multi(
-                enc, vecs, books, k=5, mode=mode, refine_n=25, vectors=emb,
-            ).orderBy("query_id", "l2", "vec_id").collect()
-        ]
-        assert got == expected, mode
+    got = [
+        (r.query_id, r.vec_id, r.adc, r.l2)
+        for r in similarity.pq_adc_topk_multi(
+            enc, vecs, books, k=5, refine_n=25, vectors=emb,
+        ).orderBy("query_id", "l2", "vec_id").collect()
+    ]
+    assert got == expected
 
 
 def test_ivfpq_residual_topk_multi_modes_match_single(spark, sf_dir, tmp_path):
     """VERDICT r13 item 7b: batched serving over a RESIDUAL store.
     ivfpq_residual_topk_multi must reproduce per-query
-    ivfpq_residual_topk in BOTH modes over a persisted cell-partitioned
+    ivfpq_residual_topk over a persisted cell-partitioned
     residual store — per-(query,cell) LUTs, union-pruned shared scan
     (PartitionFilters asserted) — and the refine leg must match the
     single-query exact re-rank."""
@@ -1128,20 +1121,19 @@ def test_ivfpq_residual_topk_multi_modes_match_single(spark, sf_dir, tmp_path):
             ).collect()
         ]
     expected.sort(key=lambda t: (t[0], t[2], t[1]))
-    for mode in ("fold", "arrow"):
-        multi = similarity.ivfpq_residual_topk_multi(
-            store, vecs, cents, books, k=5, nprobe=3,
-            cell_col="ivf_cell", codes_col="pq_code", mode=mode,
-        )
-        got = [
-            (r.query_id, r.vec_id, r.adc)
-            for r in multi.orderBy("query_id", "adc", "vec_id").collect()
-        ]
-        assert got == expected, mode
-        plan = multi._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters: [" in plan and "ivf_cell" in plan.split(
-            "PartitionFilters:"
-        )[1].split("]")[0]
+    multi = similarity.ivfpq_residual_topk_multi(
+        store, vecs, cents, books, k=5, nprobe=3,
+        cell_col="ivf_cell", codes_col="pq_code",
+    )
+    got = [
+        (r.query_id, r.vec_id, r.adc)
+        for r in multi.orderBy("query_id", "adc", "vec_id").collect()
+    ]
+    assert got == expected
+    plan = multi._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [" in plan and "ivf_cell" in plan.split(
+        "PartitionFilters:"
+    )[1].split("]")[0]
     # refine leg: exact-l2 re-rank parity against the single-query path
     # (the store kept the raw embedding column; the multi call passes
     # the raw table explicitly — the codes-only-store convention)
@@ -1156,19 +1148,14 @@ def test_ivfpq_residual_topk_multi_modes_match_single(spark, sf_dir, tmp_path):
             ).collect()
         ]
     exp_ref.sort(key=lambda t: (t[0], t[3], t[1]))
-    for mode in ("fold", "arrow"):
-        got = [
-            (r.query_id, r.vec_id, r.adc, r.l2)
-            for r in similarity.ivfpq_residual_topk_multi(
-                store, vecs, cents, books, k=5, nprobe=3,
-                cell_col="ivf_cell", codes_col="pq_code", mode=mode,
-                refine_n=20, vectors=emb,
-            ).orderBy("query_id", "l2", "vec_id").collect()
-        ]
-        assert got == exp_ref, mode
+    got = [
+        (r.query_id, r.vec_id, r.adc, r.l2)
+        for r in similarity.ivfpq_residual_topk_multi(
+            store, vecs, cents, books, k=5, nprobe=3,
+            cell_col="ivf_cell", codes_col="pq_code",
+            refine_n=20, vectors=emb,
+        ).orderBy("query_id", "l2", "vec_id").collect()
+    ]
+    assert got == exp_ref
     with pytest.raises(ValueError, match="query"):
         similarity.ivfpq_residual_topk_multi(store, {}, cents, books)
-    with pytest.raises(ValueError, match="mode"):
-        similarity.ivfpq_residual_topk_multi(
-            store, vecs, cents, books, mode="nope"
-        )

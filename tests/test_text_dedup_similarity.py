@@ -2020,16 +2020,63 @@ def test_resize_media_real_png_pixels(spark):
     assert bytes(got16.payload) == b"P6\n2 1\n255\n" + bytes([1, 1, 11, 21, 21, 31])
 
 
+# The edge rule of the similarity module docstring on four rows: the
+# NaN-element vector (id 2) is no cosine candidate, and L2 scores it NaN
+# and ranks it last — in the single-query and the batched operator alike.
+_EDGE_ROWS = [(1, [1.0, 0.0]), (2, [float("nan"), 1.0]), (3, [0.9, 0.1]), (4, [0.0, 1.0])]
+_EDGE_WANT = {
+    "l2": [(1, 0.0), (3, 0.02), (4, 2.0), (2, "nan")],
+    "cos_sim": [(1, 1.0), (3, 0.9939), (4, 0.0)],
+}
+
+
+def _vector_frame(spark, rows):
+    """(vec_id, embedding) rows built by SQL, not createDataFrame: the
+    test session routes lists through pandas/Arrow, which reads a NaN
+    element as NULL."""
+    out = None
+    for i, v in rows:
+        row = spark.range(1).selectExpr(
+            f"{i}L AS vec_id", f"{similarity._sql_doubles(v)} AS embedding"
+        )
+        out = row if out is None else out.unionByName(row)
+    return out
+
+
+def _assert_edge_rows_match(spark, single, multi, score):
+    """``single(df, q)`` and ``multi(df, {9: q})`` over ``_EDGE_ROWS``
+    return ``_EDGE_WANT[score]``, row for row, NaN included."""
+    df = _vector_frame(spark, _EDGE_ROWS)
+    q = [1.0, 0.0]
+    want = _EDGE_WANT[score]
+    assert [_nan_key(r) for r in single(df, q).collect()] == want, score
+    order = F.col(score).asc() if score == "l2" else F.col(score).desc()
+    got = multi(df, {9: q}).orderBy(order, "vec_id").collect()
+    assert [_nan_key((r.vec_id, r[score])) for r in got] == want, score
+
+
+def _with_edge_vectors(spark, emb, dim):
+    """``emb`` plus a NaN-element and an all-zero vector (ids 10**9+1,
+    10**9+2), which the batched and single-query tiers must rank alike."""
+    return emb.unionByName(
+        _vector_frame(
+            spark, [(10**9 + 1, [float("nan")] + [1.0] * (dim - 1)), (10**9 + 2, [0.0] * dim)]
+        ).withColumn("label", F.lit(None).cast("int"))
+    )
+
+
 def test_exact_topk_multi_modes_match_single(spark, sf_dir):
     """Round-14 batched EXACT serving: l2_topk_multi / cosine_topk_multi
-    must reproduce per-query l2_topk / cosine_topk in BOTH modes (fold =
-    unioned single-query branches; arrow = one stacked-matmul
-    mapInPandas pass), including self-exclusion, NULL-vector filtering,
-    and the per-metric rounding/ordering contracts (l2 asc @ round_dp,
-    cosine desc @ 4dp, ties to the lower id)."""
+    (one stacked-matmul mapInPandas pass) must reproduce per-query
+    l2_topk / cosine_topk, including self-exclusion, NULL-vector
+    filtering, the NaN-element and zero vectors, and the per-metric
+    rounding/ordering contracts (l2 asc @ round_dp, cosine desc @ 4dp,
+    ties to the lower id)."""
     from datapipelineetl_spark import catalog
 
-    emb = catalog.load(spark, sf_dir, "embeddings").unionByName(
+    emb = catalog.load(spark, sf_dir, "embeddings")
+    dim = len(emb.select("embedding").first()[0])
+    emb = _with_edge_vectors(spark, emb, dim).unionByName(
         spark.createDataFrame(
             [(10**9, None)], "vec_id long, embedding array<double>"
         ).withColumn("label", F.lit(None).cast("int"))
@@ -2052,43 +2099,47 @@ def test_exact_topk_multi_modes_match_single(spark, sf_dir):
         key = (lambda t: (t[0], t[2], t[1])) if metric == "l2" else (
             lambda t: (t[0], -t[2], t[1]))
         expected.sort(key=key)
-        for mode in ("fold", "arrow"):
-            got = [
-                (r.query_id, r.vec_id, r[score])
-                for r in multi(emb, vecs, k=7, mode=mode)
-                .orderBy(
-                    "query_id",
-                    F.col(score).asc() if metric == "l2"
-                    else F.col(score).desc(),
-                    "vec_id",
-                ).collect()
-            ]
-            assert got == expected, (metric, mode)
-            assert all(v != 10**9 for _, v, _ in got), (metric, mode)
+        got = [
+            (r.query_id, r.vec_id, r[score])
+            for r in multi(emb, vecs, k=7)
+            .orderBy(
+                "query_id",
+                F.col(score).asc() if metric == "l2"
+                else F.col(score).desc(),
+                "vec_id",
+            ).collect()
+        ]
+        assert got == expected, metric
+        assert all(v != 10**9 for _, v, _ in got), metric
+        if metric == "cosine":
+            assert all(v < 10**9 for _, v, _ in got)
+        _assert_edge_rows_match(
+            spark, lambda df, q: single(df, q, 10), lambda df, qs: multi(df, qs), score
+        )
     # no self-exclusion: each query's own vector is its own top hit
     inc = similarity.l2_topk_multi(
-        emb, vecs, k=1, mode="arrow", exclude_query_ids=False
+        emb, vecs, k=1, exclude_query_ids=False
     ).collect()
     assert {(r.query_id, r.vec_id) for r in inc} == {(q, q) for q in vecs}
     inc_c = similarity.cosine_topk_multi(
-        emb, vecs, k=1, mode="arrow", exclude_query_ids=False
+        emb, vecs, k=1, exclude_query_ids=False
     ).collect()
     assert {(r.query_id, r.vec_id) for r in inc_c} == {(q, q) for q in vecs}
-    with pytest.raises(ValueError, match="mode"):
-        similarity.l2_topk_multi(emb, vecs, mode="nope")
     with pytest.raises(ValueError, match="query"):
         similarity.cosine_topk_multi(emb, {})
 
 
 def test_ivf_topk_multi_modes_match_single(spark, sf_dir, tmp_path):
     """Batched raw-vector IVF serving: ivf_topk_multi must reproduce
-    per-query ivf_topk in BOTH modes and BOTH metrics over a persisted
-    cell-partitioned store, each query scoring only its own probed
-    cells, the scan pruned to the union (PartitionFilters asserted)."""
+    per-query ivf_topk in BOTH metrics over a persisted cell-partitioned
+    store holding a NaN-element and a zero vector, each query scoring
+    only its own probed cells, the scan pruned to the union
+    (PartitionFilters asserted)."""
     from datapipelineetl_spark import catalog
 
     emb = catalog.load(spark, sf_dir, "embeddings")
     dim = len(emb.select("embedding").first()[0])
+    stored = _with_edge_vectors(spark, emb, dim)
     vecs = {r.vec_id: [float(x) for x in r.embedding]
             for r in emb.filter(F.col("vec_id") < 3).collect()}
     for metric, score in (("l2", "l2"), ("cosine", "cos_sim")):
@@ -2096,7 +2147,7 @@ def test_ivf_topk_multi_modes_match_single(spark, sf_dir, tmp_path):
             emb, k_cells=8, iters=2, dim=dim, metric=metric
         )
         path = str(tmp_path / f"ivf_{metric}")
-        similarity.ivf_assign(emb, cents, metric=metric).write.partitionBy(
+        similarity.ivf_assign(stored, cents, metric=metric).write.partitionBy(
             "ivf_cell"
         ).parquet(path)
         store = spark.read.parquet(path)
@@ -2112,39 +2163,45 @@ def test_ivf_topk_multi_modes_match_single(spark, sf_dir, tmp_path):
         key = (lambda t: (t[0], t[2], t[1])) if metric == "l2" else (
             lambda t: (t[0], -t[2], t[1]))
         expected.sort(key=key)
-        for mode in ("fold", "arrow"):
-            multi = similarity.ivf_topk_multi(
-                store, vecs, cents, k=5, nprobe=3, cell_col="ivf_cell",
-                metric=metric, mode=mode,
-            )
-            got = [
-                (r.query_id, r.vec_id, r[score])
-                for r in multi.orderBy(
-                    "query_id",
-                    F.col(score).asc() if metric == "l2"
-                    else F.col(score).desc(),
-                    "vec_id",
-                ).collect()
-            ]
-            assert got == expected, (metric, mode)
-            plan = multi._jdf.queryExecution().executedPlan().toString()
-            assert "PartitionFilters: [" in plan and "ivf_cell" in plan.split(
-                "PartitionFilters:"
-            )[1].split("]")[0], (metric, mode)
+        multi = similarity.ivf_topk_multi(
+            store, vecs, cents, k=5, nprobe=3, cell_col="ivf_cell",
+            metric=metric,
+        )
+        got = [
+            (r.query_id, r.vec_id, r[score])
+            for r in multi.orderBy(
+                "query_id",
+                F.col(score).asc() if metric == "l2"
+                else F.col(score).desc(),
+                "vec_id",
+            ).collect()
+        ]
+        assert got == expected, metric
+        plan = multi._jdf.queryExecution().executedPlan().toString()
+        assert "PartitionFilters: [" in plan and "ivf_cell" in plan.split(
+            "PartitionFilters:"
+        )[1].split("]")[0], metric
+        edge_cents = [[1.0, 0.0], [0.0, 1.0]]
+        _assert_edge_rows_match(
+            spark,
+            lambda df, q: similarity.ivf_topk(df, q, edge_cents, nprobe=2, metric=metric),
+            lambda df, qs: similarity.ivf_topk_multi(df, qs, edge_cents, nprobe=2, metric=metric),
+            score,
+        )
     with pytest.raises(ValueError, match="query"):
         similarity.ivf_topk_multi(store, {}, cents)
-    with pytest.raises(ValueError, match="mode"):
-        similarity.ivf_topk_multi(store, vecs, cents, mode="nope")
 
 
 def test_ann_lsh_topk_multi_modes_match_single(spark, sf_dir):
     """Batched SRP-LSH serving: ann_lsh_topk_multi must reproduce
-    per-query ann_lsh_topk in BOTH modes (driver-enumerated Hamming
-    balls == the single query's scan-side popcount predicate), incl.
-    multi-table OR-amplification and self-exclusion."""
+    per-query ann_lsh_topk (driver-enumerated Hamming balls == the
+    single query's probe predicate), incl. multi-table
+    OR-amplification, self-exclusion, and a NaN-element and a zero
+    vector in the store."""
     from datapipelineetl_spark import catalog
 
     emb = catalog.load(spark, sf_dir, "embeddings")
+    emb = _with_edge_vectors(spark, emb, len(emb.select("embedding").first()[0]))
     vecs = {r.vec_id: [float(x) for x in r.embedding]
             for r in emb.filter(F.col("vec_id") < 3).collect()}
     kwargs = dict(k=6, num_planes=6, num_tables=2, radius=1)
@@ -2157,14 +2214,19 @@ def test_ann_lsh_topk_multi_modes_match_single(spark, sf_dir):
             ).collect()
         ]
     expected.sort(key=lambda t: (t[0], -t[2], t[1]))
-    for mode in ("fold", "arrow"):
-        got = [
-            (r.query_id, r.vec_id, r.cos_sim)
-            for r in similarity.ann_lsh_topk_multi(
-                emb, vecs, mode=mode, **kwargs
-            ).orderBy("query_id", F.col("cos_sim").desc(), "vec_id").collect()
-        ]
-        assert got == expected, mode
+    got = [
+        (r.query_id, r.vec_id, r.cos_sim)
+        for r in similarity.ann_lsh_topk_multi(
+            emb, vecs, **kwargs
+        ).orderBy("query_id", F.col("cos_sim").desc(), "vec_id").collect()
+    ]
+    assert got == expected
+    _assert_edge_rows_match(
+        spark,
+        lambda df, q: similarity.ann_lsh_topk(df, q, num_planes=2, radius=2),
+        lambda df, qs: similarity.ann_lsh_topk_multi(df, qs, num_planes=2, radius=2),
+        "cos_sim",
+    )
     with pytest.raises(ValueError, match="query"):
         similarity.ann_lsh_topk_multi(emb, {})
     with pytest.raises(ValueError, match="num_tables"):
@@ -2202,21 +2264,19 @@ def test_ann_lsh_persisted_sig_cols_match_computed(spark, sf_dir, tmp_path):
         sig_cols=cols,
     )
     assert [(r.vec_id, r.cos_sim) for r in persisted.collect()] == computed
-    for mode in ("fold", "arrow"):
-        comp_m = [
-            (r.query_id, r.vec_id, r.cos_sim)
-            for r in similarity.ann_lsh_topk_multi(
-                emb, vecs, k=6, mode=mode, **kwargs
-            ).orderBy("query_id", F.col("cos_sim").desc(), "vec_id").collect()
-        ]
-        pers_m = [
-            (r.query_id, r.vec_id, r.cos_sim)
-            for r in similarity.ann_lsh_topk_multi(
-                store, vecs, k=6, mode=mode, num_planes=6, radius=1,
-                sig_cols=cols,
-            ).orderBy("query_id", F.col("cos_sim").desc(), "vec_id").collect()
-        ]
-        assert comp_m == pers_m, mode
+    comp_m = [
+        (r.query_id, r.vec_id, r.cos_sim)
+        for r in similarity.ann_lsh_topk_multi(
+            emb, vecs, k=6, **kwargs
+        ).orderBy("query_id", F.col("cos_sim").desc(), "vec_id").collect()
+    ]
+    pers_m = [
+        (r.query_id, r.vec_id, r.cos_sim)
+        for r in similarity.ann_lsh_topk_multi(
+            store, vecs, k=6, num_planes=6, radius=1, sig_cols=cols,
+        ).orderBy("query_id", F.col("cos_sim").desc(), "vec_id").collect()
+    ]
+    assert comp_m == pers_m
     with pytest.raises(ValueError, match="sig_cols"):
         similarity.ann_lsh_topk(store, qv, sig_cols=[])
     with pytest.raises(ValueError, match="sig_cols"):
@@ -2277,10 +2337,11 @@ def test_lsh_persist_signatures_owns_canonical_derivation(spark, sf_dir):
 
 def test_cosine_family_excludes_zero_norm_vectors(spark):
     """ADVICE r14: a zero-norm embedding's cosine is 0/0 — a
-    DIVIDE_BY_ZERO error under the fold path's ANSI session and a NaN
-    the arrow kernels and Spark would rank OPPOSITELY under DESC. The
-    whole cosine top-k family excludes zero-norm rows from the
-    candidate set instead; fold and arrow agree row for row."""
+    DIVIDE_BY_ZERO error under the driver's ANSI session — and a vector
+    with a NaN or infinite element scores NaN, which numpy and Spark
+    rank OPPOSITELY under DESC. The whole cosine top-k family keeps
+    only vectors whose squared norm is positive and finite; the batched
+    operator agrees with the single-query one row for row."""
     rows = [
         (0, [1.0, 0.0, 0.0]),
         (1, [0.9, 0.1, 0.0]),
@@ -2289,66 +2350,71 @@ def test_cosine_family_excludes_zero_norm_vectors(spark):
         (4, None),              # NULL: excluded everywhere
         (5, [-1.0, 0.0, 0.0]),
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    # NaN and infinite elements: excluded everywhere
+    odd = [(6, [float("nan"), 1.0, 0.0]), (7, [float("inf"), 0.0, 0.0])]
+    excluded = (2, 4, 6, 7)
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").unionByName(
+        _vector_frame(spark, odd)
+    )
     single = similarity.cosine_topk(df, [1.0, 0.0, 0.0], k=10)
     ids = [r.vec_id for r in single.collect()]
-    assert 2 not in ids and 4 not in ids
     assert set(ids) == {0, 1, 3, 5}
     vecs = {0: [1.0, 0.0, 0.0], 1: [0.9, 0.1, 0.0]}
-    got = {}
-    for mode in ("fold", "arrow"):
-        got[mode] = sorted(
-            (r.query_id, r.vec_id, r.cos_sim)
-            for r in similarity.cosine_topk_multi(
-                df, vecs, k=10, mode=mode
-            ).collect()
-        )
-        assert all(v != 2 and v != 4 for _, v, _s in got[mode]), mode
-    assert got["fold"] == got["arrow"]
+    expected = sorted(
+        (qid, r.vec_id, r.cos_sim)
+        for qid, q in vecs.items()
+        for r in similarity.cosine_topk(df, q, k=10, exclude_ids=(qid,)).collect()
+    )
+    got = sorted(
+        (r.query_id, r.vec_id, r.cos_sim)
+        for r in similarity.cosine_topk_multi(df, vecs, k=10).collect()
+    )
+    assert got == expected
+    assert all(v not in excluded for _, v, _s in got)
     # the LSH and IVF cosine tiers share the rule (radius wide enough
     # that the zero vector's bucket IS probed — exclusion must come
     # from the norm filter, not bucket luck)
-    for mode in ("fold", "arrow"):
-        lsh = similarity.ann_lsh_topk_multi(
-            df, vecs, k=10, num_planes=2, radius=2, mode=mode
-        )
-        assert all(r.vec_id not in (2, 4) for r in lsh.collect()), mode
+    q = vecs[0]
+    lsh = [
+        similarity.ann_lsh_topk(df, q, k=10, num_planes=2, radius=2),
+        similarity.ann_lsh_topk_multi(df, vecs, k=10, num_planes=2, radius=2),
+    ]
     cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
-    for mode in ("fold", "arrow"):
-        ivf = similarity.ivf_topk_multi(
-            df, vecs, cents, k=10, nprobe=2, metric="cosine", mode=mode
-        )
-        assert all(r.vec_id not in (2, 4) for r in ivf.collect()), mode
+    ivf = [
+        similarity.ivf_topk(df, q, cents, k=10, nprobe=2, metric="cosine"),
+        similarity.ivf_topk_multi(df, vecs, cents, k=10, nprobe=2, metric="cosine"),
+    ]
+    for out in lsh + ivf:
+        assert all(r.vec_id not in excluded for r in out.collect())
 
 
 def test_batched_serving_id_type_derived_and_validated(spark):
     """ADVICE r14: the *_multi kernels hardcoded `long` id schemas and
     silently coerced with to_numpy(int64). Now: a non-integral id fails
-    fast in BOTH modes with a clear message, and an `int` id column
-    keeps its width in arrow mode exactly like fold mode."""
+    fast with a clear message, and an `int` id column keeps its width
+    through the batched kernel."""
     rows = [(i, [float(i), 1.0]) for i in range(6)]
     df_int = spark.createDataFrame(
         rows, "vec_id int, embedding array<double>"
     )
     vecs = {0: [0.0, 1.0], 1: [1.0, 1.0]}
-    schemas = {}
-    for mode in ("fold", "arrow"):
-        out = similarity.l2_topk_multi(df_int, vecs, k=3, mode=mode)
-        schemas[mode] = dict(out.dtypes)["vec_id"]
-    assert schemas["fold"] == schemas["arrow"] == "int"
+    out = similarity.l2_topk_multi(df_int, vecs, k=3)
+    assert dict(out.dtypes)["vec_id"] == "int"
+    assert sorted(tuple(r) for r in out.collect()) == sorted(
+        (qid, r.vec_id, r.l2)
+        for qid, q in vecs.items()
+        for r in similarity.l2_topk(df_int, q, k=3, exclude_ids=(qid,)).collect()
+    )
     df_str = spark.createDataFrame(
         [(str(i), v) for i, v in rows],
         "vec_id string, embedding array<double>",
     )
-    for mode in ("fold", "arrow"):
-        with pytest.raises(TypeError, match="integral id"):
-            similarity.l2_topk_multi(df_str, vecs, k=3, mode=mode)
-        with pytest.raises(TypeError, match="integral id"):
-            similarity.ann_lsh_topk_multi(df_str, vecs, num_planes=2, mode=mode)
-        with pytest.raises(TypeError, match="integral id"):
-            similarity.ivf_topk_multi(
-                df_str, vecs, [[0.0, 1.0]], metric="l2", mode=mode
-            )
+    with pytest.raises(TypeError, match="integral id"):
+        similarity.l2_topk_multi(df_str, vecs, k=3)
+    with pytest.raises(TypeError, match="integral id"):
+        similarity.ann_lsh_topk_multi(df_str, vecs, num_planes=2)
+    with pytest.raises(TypeError, match="integral id"):
+        similarity.ivf_topk_multi(df_str, vecs, [[0.0, 1.0]], metric="l2")
     enc_str = df_str.withColumn("pq_code", F.array(F.lit(0)))
     with pytest.raises(TypeError, match="integral id"):
         similarity.pq_adc_topk_multi(enc_str, vecs, [[[0.0, 1.0]]])
@@ -2382,8 +2448,7 @@ def test_refine_narrower_than_k_still_yields_k(spark, sf_dir):
         (r.vec_id, r.adc, r.l2) for r in atk
     ]
     multi = similarity.pq_adc_topk_multi(
-        enc, {0: qv}, books, k=k, refine_n=2, vectors=emb, mode="fold",
-        round_dp=4,
+        enc, {0: qv}, books, k=k, refine_n=2, vectors=emb, round_dp=4,
     ).collect()
     assert sorted((r.vec_id, r.adc, r.l2) for r in multi) == sorted(
         (r.vec_id, r.adc, r.l2) for r in narrow

@@ -3,7 +3,7 @@ item 8b — "the per-query fixed overhead dominates below ~0.5M rows").
 
 A serving layer answers ANN requests in BATCHES; the expensive thing at
 100 TB is touching the code column, so the question is: what does
-answering Q queries cost as ONE `pq_adc_topk_multi(mode="arrow")` pass
+answering Q queries cost as ONE `pq_adc_topk_multi` pass
 (Q×m×k_sub LUT tensor gathered per Arrow batch, partition-local top-k,
 ≤ partitions×Q×k rows shuffled) vs Q sequential `pq_adc_topk` scans?
 
@@ -84,7 +84,7 @@ def main() -> int:
 
         def multi_arrow():
             similarity.pq_adc_topk_multi(
-                enc, queries, books, k=K, mode="arrow"
+                enc, queries, books, k=K
             ).collect()
 
         t_single = _timed(loop_single)
@@ -119,7 +119,7 @@ def main() -> int:
         def multi_ivfpq():
             similarity.ivfpq_topk_multi(
                 store, queries, cents, books, k=K, nprobe=4,
-                cell_col="ivf_cell", codes_col="pq_code", mode="arrow",
+                cell_col="ivf_cell", codes_col="pq_code",
             ).collect()
 
         t_ls = _timed(loop_ivfpq)
@@ -145,7 +145,7 @@ def main() -> int:
 
             def multi_exact():
                 similarity.l2_topk_multi(
-                    raw, queries, k=K, mode="arrow"
+                    raw, queries, k=K
                 ).collect()
 
             t_le = _timed(loop_exact)
@@ -173,7 +173,7 @@ def main() -> int:
             def multi_lsh():
                 similarity.ann_lsh_topk_multi(
                     raw2, queries, k=K, num_planes=8, num_tables=2,
-                    radius=1, mode="arrow",
+                    radius=1,
                 ).collect()
 
             t_ll = _timed(loop_lsh)
@@ -196,7 +196,7 @@ def main() -> int:
             def multi_lshp():
                 similarity.ann_lsh_topk_multi(
                     lsh_store, queries, k=K, num_planes=8, radius=1,
-                    mode="arrow", sig_cols=cols,
+                    sig_cols=cols,
                 ).collect()
 
             t_mp = _timed(multi_lshp)
@@ -230,7 +230,7 @@ def main() -> int:
             def multi_ivfraw():
                 similarity.ivf_topk_multi(
                     ivf_store, queries, cents2, k=K, nprobe=4,
-                    cell_col="ivf_cell", metric="l2", mode="arrow",
+                    cell_col="ivf_cell", metric="l2",
                 ).collect()
 
             t_li = _timed(loop_ivfraw)
@@ -271,7 +271,7 @@ def main() -> int:
         def multi_res():
             similarity.ivfpq_residual_topk_multi(
                 res_store, queries, cents, res_books, k=K, nprobe=4,
-                cell_col="ivf_cell", codes_col="pq_code", mode="arrow",
+                cell_col="ivf_cell", codes_col="pq_code",
             ).collect()
 
         t_lr = _timed(loop_res)

@@ -96,7 +96,7 @@ PICK = {
     "q_l2_topk": "Exact L2 top-k: NULL vectors filtered, one sequential fold per row against the literal query, ordering on the ROUNDED distance — TakeOrderedAndProject, zero Exchange beyond the heap merge.",
     "q_temperature_mix": "Temperature remix: the per-source thresholds ride as ONE nested-CASE expression over the hash gate (3 sources — the measured CASE regime; the >64-source broadcast-join dispatch is tools/bench_temperature_dispatch.py territory) — zero joins, the only Exchange is the source-count metadata aggregate that ran before this plan.",
     "q_ivfpq_topk": "Composed IVF-PQ (staged): fold cell assignment + literal-LUT ADC are narrow Projects; the probe filter is a 3-value IN predicate on the cell column (directory pruning once the store persists it); top-10 TakeOrderedAndProject; the trailing cell join rides broadcast.",
-    "q_pq_topk_multi": "Batched ADC (staged, fold form): Q unioned literal-LUT branches over the SAME narrow code scan, each a TakeOrderedAndProject heap; the arrow form is one mapInPandas pass with partition-local top-k (≤ partitions×Q×k rows shuffled).",
+    "q_pq_topk_multi": "Batched ADC: ONE MapInPandas pass (the shared batched top-k kernel) over the narrow (id, code) projection gathers all Q distances from the Q×m×k_sub LUT tensor and keeps each query's partition-local top-k; one Window on query_id cuts the final k (≤ partitions×Q×k rows shuffled) — no per-query branches, no Union.",
 }
 
 
