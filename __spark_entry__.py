@@ -121,7 +121,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver verifies the FIRST 50 entries of queries() in dict order.
-# The nine queries whose plans the single batched top-k engine changed
+# Five queries lead whose plans or cleaning chain changed: the cell-metrics
+# chain became one projection (q_clean_cell_metrics), and the four whose
+# L2 re-rank or top-k now scores a NULL-element vector NaN. Then the nine
+# queries whose plans the single batched top-k engine changed
 # lead: the five batched oracles (their per-query branches became one
 # Arrow pass) and the four whose cosine candidate filter became
 # 0 < |v|^2 < inf. Then the round-18 rotation (tools/rotate_window.py):
@@ -130,10 +133,14 @@ def entry(spark: SparkSession) -> DataFrame:
 # (q_hll_distinct, q_bloom_decontam) lead, so the next CORRECTNESS
 # record hashes each of them; the other 32 queries at their re-verification
 # horizon follow, then the oldest-green rows fill the free slots (the
-# last seven fillers gave their slots to the nine above).
+# last nine fillers gave their slots to the queries above).
 PRIORITY: list[str] = [
-    "q_pq_topk_multi",
+    "q_clean_cell_metrics",
+    "q_l2_topk",
+    "q_pq_refine_recall",
+    "q_ivfpq_refine_topk",
     "q_pq_multi_refine",
+    "q_pq_topk_multi",
     "q_l2_topk_multi",
     "q_ann_lsh_topk_multi",
     "q_ivf_topk_multi",
@@ -176,12 +183,8 @@ PRIORITY: list[str] = [
     "q_pq_codes",
     "q_pq_topk",
     "q_temperature_mix",
-    "q_pq_refine_recall",
-    "q_l2_topk",
     "q_retention_cohorts",
     "q_pack_greedy",
-    "q_boilerplate_removal",
-    "q_repetition_stats",
 ]
 
 

@@ -38,7 +38,9 @@ alike. A NULL vector is never scored. A cosine candidate must have a
 positive, finite squared norm: a zero vector's cosine is 0/0 and a
 vector with a NaN or infinite element scores NaN, which Spark's DESC
 ranks first and numpy ranks last, so neither is a candidate. An L2 tier
-scores a NaN-element vector NaN and ranks it after every number. The
+scores a vector with a NaN or a NULL element NaN and ranks it after every
+number: the SQL fold's NULL becomes NaN (``_sql_l2_score``), because ASC
+NULLS FIRST would rank a NULL score above every real neighbor. The
 batched operators (``*_topk_multi``) share one Arrow kernel,
 ``_batched_topk``, which puts that NaN back after the pass, because
 pandas NaN crosses Arrow as NULL and ASC NULLS FIRST would rank it first.
@@ -119,6 +121,12 @@ def _sql_sq_l2(a: str, b: str) -> str:
     )
 
 
+def _sql_l2_score(a: str, b: str, round_dp: int) -> str:
+    """The rounded squared L2 an L2 tier ranks by, NaN where the fold is
+    NULL (a NULL element), so that vector ranks last."""
+    return f"coalesce(round({_sql_sq_l2(a, b)}, {round_dp}), double('NaN'))"
+
+
 def cosine_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -173,11 +181,12 @@ def l2_topk(
     ASC default (NULLS FIRST) would place ABOVE every real neighbor
     while DuckDB's default (NULLS LAST) excludes it — a silent
     cross-engine mismatch and a polluted top-k the moment a fixture
-    carries null embeddings. ``round_dp`` is threaded like the PQ
-    family's so the two tiers can never silently diverge in rounding."""
-    l2 = _sql_sq_l2(_sql_vec(vec_col), _sql_doubles(query_vec))
+    carries null embeddings. A vector with a NULL element scores NaN
+    and ranks last (module docstring). ``round_dp`` is threaded like the
+    PQ family's so the two tiers can never silently diverge in rounding."""
+    l2 = _sql_l2_score(_sql_vec(vec_col), _sql_doubles(query_vec), round_dp)
     scored = df.filter(f"{_sql_col(vec_col)} IS NOT NULL").selectExpr(
-        _sql_col(id_col), f"round({l2}, {round_dp}) AS l2"
+        _sql_col(id_col), f"{l2} AS l2"
     )
     if exclude_ids:
         scored = scored.filter(~F.col(id_col).isin(*exclude_ids))
@@ -2395,15 +2404,16 @@ def _refine_l2(
 
     NULL raw vectors are dropped BEFORE scoring (the l2_topk isNotNull
     discipline — ADVICE r13): they would otherwise yield NULL l2, which
-    ASC NULLS FIRST ranks above every real candidate."""
-    l2 = _sql_sq_l2(_sql_vec(vec_col), _sql_doubles(query_vec))
+    ASC NULLS FIRST ranks above every real candidate. A vector with a
+    NULL element scores NaN and ranks last."""
+    l2 = _sql_l2_score(_sql_vec(vec_col), _sql_doubles(query_vec), round_dp)
     present = f"{_sql_col(vec_col)} IS NOT NULL"
     if vectors is None:
         rows = shortlist.filter(present)
     else:
         rows = vectors.filter(present).join(F.broadcast(shortlist), id_col, "inner")
     return (
-        rows.selectExpr(_sql_col(id_col), "adc", f"round({l2}, {round_dp}) AS l2")
+        rows.selectExpr(_sql_col(id_col), "adc", f"{l2} AS l2")
         .orderBy("l2", id_col)
         .limit(k)
     )
@@ -2619,13 +2629,13 @@ def _exact_rerank_multi(
         [(int(qid), [float(x) for x in v]) for qid, v in queries.items()],
         "query_id int, __qv array<double>",
     )
-    l2 = _sql_sq_l2(_sql_vec(vec_col), "__qv")
+    l2 = _sql_l2_score(_sql_vec(vec_col), "__qv", round_dp)
     cand = (
         vectors.select(id_col, vec_col)
         .filter(F.col(vec_col).isNotNull())
         .join(F.broadcast(shortlist), id_col)
         .join(F.broadcast(qdf), "query_id")
-        .selectExpr("query_id", _sql_col(id_col), "adc", f"round({l2}, {round_dp}) AS l2")
+        .selectExpr("query_id", _sql_col(id_col), "adc", f"{l2} AS l2")
     )
     return _first_per_query(cand, k, "l2", id_col)
 

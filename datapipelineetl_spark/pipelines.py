@@ -21,9 +21,11 @@ parquet that a Kafka/Elasticsearch stage can relay.
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from datapipelineetl_spark.operators import cleaning
@@ -41,20 +43,58 @@ FEED_TOPICS = {
 }
 
 
+# the checkpoint's cumulative row record: one small JSON file
+_ROWS_RECORD = "feed_rows.json"
+
+
 @dataclass
 class FeedResult:
     """What a drain produced (ST7 audit).
 
-    ``rows`` is not the count this drain wrote. For a Parquet sink it is
-    the feed's CUMULATIVE row count in the sink, read back after each
-    micro-batch, so rows from earlier drains are included; a drain that
-    commits no micro-batch reports 0. A Kafka sink has no count to read
-    back (``_sink`` returns −1), so ``rows`` stays 0.
+    ``rows`` is the cumulative count of rows this checkpointed query has
+    committed to its sink, over this drain and every earlier drain on the
+    same checkpoint, for Parquet and Kafka sinks alike. Each micro-batch
+    counts the rows it writes from the write itself (an ``Observation`` on
+    the written frame), and the running total is kept in the checkpoint,
+    so no sink is read back. A query that has committed no micro-batch
+    reports 0. An epoch replayed after a crash between its write and
+    Spark's commit is counted once, although its append can still leave
+    duplicate rows in a Parquet sink.
     ``leftovers`` lists the input files still in the input directory
     after the drain, i.e. not consumed and archived."""
 
     rows: int
     leftovers: list[str]
+
+
+def _read_rows_record(checkpoint: str) -> dict | None:
+    path = os.path.join(checkpoint, _ROWS_RECORD)
+    if not os.path.isfile(path):
+        return None
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def _record_rows(checkpoint: str, epoch: int, n: int) -> None:
+    """Fold epoch ``epoch``'s ``n`` written rows into the checkpoint's
+    ``(epoch, base, n)`` record, where ``base`` counts every earlier
+    epoch. A replayed epoch finds its own record and keeps its ``base``,
+    so it is counted once. The record is replaced atomically (write, then
+    rename), and its cost does not grow with the query's age — unlike
+    ``commits/``, whose old entries ``minBatchesToRetain`` purges."""
+    prev = _read_rows_record(checkpoint)
+    base = 0
+    if prev is not None:
+        base = prev["base"] if prev["epoch"] == epoch else prev["base"] + prev["n"]
+    path = os.path.join(checkpoint, _ROWS_RECORD)
+    with open(path + ".tmp", "w") as fh:
+        json.dump({"epoch": epoch, "base": base, "n": n}, fh)
+    os.replace(path + ".tmp", path)
+
+
+def _committed_rows(checkpoint: str) -> int:
+    rec = _read_rows_record(checkpoint)
+    return 0 if rec is None else rec["base"] + rec["n"]
 
 
 def _sink(
@@ -63,17 +103,21 @@ def _sink(
     sink: str,
     out_dir: str | None,
     bootstrap: str | None,
-) -> int:
+) -> None:
     if sink == "kafka":
         env = serde.to_envelope(cleaned, exclude=["input_file"])
         serde.write_kafka(env, FEED_TOPICS[feed], bootstrap or "localhost:9092")
-        return -1  # Kafka reports no count
+        return
     tagged = cleaned.drop(*(c for c in ("input_file",) if c in cleaned.columns))
-    tagged = tagged.withColumn("feed", F.lit(feed))
-    serde.write_routed_parquet(tagged, out_dir)
-    return tagged.sparkSession.read.parquet(out_dir).filter(
-        F.col("feed") == feed
-    ).count()
+    serde.write_routed_parquet(tagged.withColumn("feed", F.lit(feed)), out_dir)
+
+
+def _drain(stream: DataFrame, batch, checkpoint: str) -> int:
+    """Run ``batch`` over every micro-batch without the runner's
+    empty-batch probe (``runner.run_foreach_batch`` says why), then return
+    the cumulative row count the batches recorded in the checkpoint."""
+    runner.run_foreach_batch(stream, batch, checkpoint, skip_empty=False)
+    return _committed_rows(checkpoint)
 
 
 def run_csv_feed(
@@ -98,7 +142,6 @@ def run_csv_feed(
     dirty LINES."""
     from pyspark.sql import types as T  # noqa: PLC0415
 
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
     from datapipelineetl_spark.sources import tabular  # noqa: PLC0415
 
     checkpoint = checkpoint or f"{in_dir.rstrip('/')}__ckpt"
@@ -117,29 +160,31 @@ def run_csv_feed(
         spark, in_dir, "csv", schema,
         archive_dir=archive_dir, header="true", **extra,
     )
-
-    rows = 0
+    corrupt = F.col(tabular.CORRUPT_COL)
 
     def batch(df: DataFrame, epoch: int) -> None:
-        nonlocal rows
+        # one job for a clean batch: the sink write counts every row, good
+        # and bad together, above the corrupt-column filter
+        obs = Observation()
         if quarantine_dir:
-            good, bad = tabular.split_quarantine(df, keep_cols=("input_file",))
-            # skip the write job entirely on clean batches (the common
-            # case — df is cached by the split, so the probe is cheap)
-            if not bad.isEmpty():
-                maintenance.overwrite_partitions(
-                    bad.withColumn("__batch_id", F.lit(epoch)),
-                    quarantine_dir,
-                    ["__batch_id"],
-                )
+            good = df.observe(
+                obs, F.count(F.lit(1)).alias("n"), F.count(corrupt).alias("bad")
+            ).filter(corrupt.isNull()).drop(tabular.CORRUPT_COL)
         else:
-            good = df
-        cleaned = cleaning.clean_cell_metrics(good.drop("input_file"))
-        rows = max(rows, _sink(cleaned, "csv", sink, out_dir, bootstrap))
-        if quarantine_dir:
-            df.unpersist()
+            good = df.observe(obs, F.count(F.lit(1)).alias("n"))
+        _sink(cleaning.clean_cell_metrics(good.drop("input_file")),
+              "csv", sink, out_dir, bootstrap)
+        counts = obs.get
+        bad = counts.get("bad", 0)
+        if bad:
+            # a second job only for a dirty batch; overwriting the epoch's
+            # own partition directory keeps a replay idempotent
+            df.filter(corrupt.isNotNull()).select(corrupt, "input_file").write.mode(
+                "overwrite"
+            ).parquet(os.path.join(quarantine_dir, f"__batch_id={epoch}"))
+        _record_rows(checkpoint, epoch, counts["n"] - bad)
 
-    runner.run_foreach_batch(stream, batch, checkpoint)
+    rows = _drain(stream, batch, checkpoint)
     if archive_dir:
         runner.archive_committed_sources(checkpoint, archive_dir)
     return FeedResult(rows=rows, leftovers=runner.audit_leftovers(in_dir, "*.csv"))
@@ -170,17 +215,17 @@ def run_xml_feed(
     checkpoint = checkpoint or f"{in_dir.rstrip('/')}__ckpt_{variant}"
     raw = meascollec.read_meascollec(spark, in_dir, streaming=True, archive_dir=archive_dir)
 
-    rows = 0
-
-    def batch(df: DataFrame, _epoch: int) -> None:
-        nonlocal rows
+    def batch(df: DataFrame, epoch: int) -> None:
         flat = meascollec.flatten_meascollec(df, variant)
         cleaned = cleaning.clean_kpi_records(
             flat, "int" if variant == "gzip" else "double"
         )
-        rows = max(rows, _sink(cleaned, variant, sink, out_dir, bootstrap))
+        obs = Observation()
+        _sink(cleaned.observe(obs, F.count(F.lit(1)).alias("n")),
+              variant, sink, out_dir, bootstrap)
+        _record_rows(checkpoint, epoch, obs.get["n"])
 
-    runner.run_foreach_batch(raw, batch, checkpoint)
+    rows = _drain(raw, batch, checkpoint)
     if archive_dir:
         runner.archive_committed_sources(checkpoint, archive_dir)
     return FeedResult(rows=rows, leftovers=runner.audit_leftovers(in_dir, "*.xml*"))

@@ -158,6 +158,12 @@ def run_foreach_batch(
     (mypy/preprocessproduce.py:37-85) for sinks that need per-batch
     semantics (Kafka key = batch id, C11). The empty-batch early return is
     the reference's ``df.isEmpty()`` guard (mypy/streaming.py:111).
+
+    The probe is a Spark job of its own on every non-empty batch. The
+    feed pipelines (``pipelines.run_csv_feed`` / ``run_xml_feed``) pass
+    ``skip_empty=False``: each of their batches counts its rows from its
+    own write, so an empty batch costs the one write job that finds no
+    rows, and a non-empty batch no longer pays for the probe.
     """
 
     def wrapped(df: DataFrame, epoch_id: int) -> None:

@@ -8,7 +8,9 @@ out-of-range geo nulls. Locks in the load-bearing C2–C5 ordering.
 from __future__ import annotations
 
 import datetime
+import struct
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datapipelineetl_spark.operators import cleaning
@@ -219,3 +221,90 @@ def test_read_with_quarantine_splits_malformed_rows(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="fmt"):
         tabular.read_with_quarantine(spark, str(csv_dir), "orc", schema)
+
+
+# --- parity: the one-projection chain vs the step-by-step chain --------------
+_NAN, _INF = float("nan"), float("inf")
+# (Time, eNodeB Name, Cell Name, Frequency band, Downlink EARFCN, Downlink
+# bandwidth, LocalCell Id, Latitude, Longitude, Integrity, FT_UL.Interference,
+# DL thrput, PRB load, users, setup rate)
+_EDGE_ROWS = [
+    ("07-04-2025 13:45", "E", "C", "B3", 1, 2, 3, 1.5, -1.5, "OK", "nil", 1.0, 2.0, 4, 0.5),
+    (None, None, None, None, None, None, None, None, None, None, None, None, None, None, None),
+    ("not a date", "", "", "", 0, 0, 0, _NAN, _NAN, "", "NIL", _NAN, _NAN, 0, _NAN),
+    ("", "x", "y", "z", -1, -2, -3, _INF, -_INF, "BAD", " Nil ", _INF, -_INF, -4, -_INF),
+    (" 07-04-2025 13:45", None, "c", None, None, 5, None, -0.0, 0.0, None, "\tnil", -0.0, 0.0, None, -0.0),
+    ("13-45-2025 99:99", "e", None, "B7", 7, None, 8, None, -0.0, "OK", "nil0", None, -0.0, 9, None),
+    ("02-29-2024 00:00", "f", "g", "B1", None, None, None, 999.0, None, "OK", "", 0.0, None, None, _NAN),
+    ("07-04-2025 13:45", "h", "i", "B2", 2147483647, -2147483648, 0, -90.0, 180.0, "OK", "NiL  ", 1e308, -1e-308, 2147483647, 5e-324),
+]
+
+
+def _reference_clean_cell_metrics(df):
+    """The step-by-step chain ``clean_cell_metrics`` replaced: one
+    DataFrame per C-rule, each rule in the Column spelling its public
+    operator had before the rules became SQL helpers, so this shares no
+    code with the projection it checks."""
+    df = df.withColumn("Time", F.try_to_timestamp(F.col("Time"), F.lit("MM-dd-yyyy HH:mm")))
+    df = df.na.fill(0, subset=["Downlink EARFCN", "LocalCell Id", "Downlink bandwidth"])
+    df = df.na.fill("N/A", subset=["eNodeB Name", "Cell Name"])
+    df = df.withColumns({
+        c: F.when(F.col(c).isNull(), F.lit(999.0)).otherwise(F.col(c))
+        for c in ("Longitude", "Latitude")
+    })
+    df = df.na.fill(0)
+    df = df.withColumnRenamed("FT_UL.Interference", "FT_UL_Interference")
+    c = F.col("FT_UL_Interference")
+    df = df.withColumn(
+        "FT_UL_Interference",
+        F.when(F.lower(F.trim(c)) == "nil", F.lit(0).cast("string")).otherwise(c),
+    )
+    return df.drop("Integrity")
+
+
+def _bits(rows):
+    """Rows with every float replaced by its IEEE-754 bit pattern, so NaN
+    equals NaN and -0.0 differs from 0.0."""
+    return sorted(
+        (tuple(struct.pack(">d", v) if isinstance(v, float) else v for v in r) for r in rows),
+        key=repr,
+    )
+
+
+def _assert_same_frame(got, want):
+    assert got.schema == want.schema  # names, types and nullability
+    assert _bits(got.collect()) == _bits(want.collect())
+
+
+def test_clean_cell_metrics_matches_step_by_step_chain(spark):
+    """The one-``selectExpr`` chain against the step-by-step chain on an
+    edge table: NULL, NaN, ±inf, -0.0, int extremes, ``nil`` case and
+    space variants, and unparseable or empty times."""
+    # the class method keeps NaN: the suite's Arrow shortcut reads it as NULL
+    edge = type(spark).createDataFrame(spark, _EDGE_ROWS, CELL_METRICS_SCHEMA)
+    _assert_same_frame(cleaning.clean_cell_metrics(edge), _reference_clean_cell_metrics(edge))
+
+
+def test_public_c_rules_match_their_column_spelling(spark):
+    """Each public C-rule operator, now one SQL helper, against its former
+    Column spelling on the same edge table."""
+    edge = type(spark).createDataFrame(spark, _EDGE_ROWS, CELL_METRICS_SCHEMA)
+    edge = edge.withColumnRenamed("FT_UL.Interference", "ul")
+    ul = F.col("ul")
+    pairs = [
+        (cleaning.parse_timestamp(edge, "Time", out="t"),
+         edge.withColumn("t", F.try_to_timestamp(F.col("Time"), F.lit("MM-dd-yyyy HH:mm")))),
+        (cleaning.fill_nulls(edge, 0), edge.na.fill(0)),
+        (cleaning.fill_nulls(edge, 1.5, ["Latitude", "LocalCell Id"]),
+         edge.na.fill(1.5, subset=["Latitude", "LocalCell Id"])),
+        (cleaning.fill_nulls(edge, "N/A", ["Cell Name", "Latitude"]),
+         edge.na.fill("N/A", subset=["Cell Name", "Latitude"])),
+        (cleaning.replace_null_with_sentinel(edge, ["Latitude", "LocalCell Id"], 999.0),
+         edge.withColumns({c: F.when(F.col(c).isNull(), F.lit(999.0)).otherwise(F.col(c))
+                           for c in ("Latitude", "LocalCell Id")})),
+        (cleaning.string_sentinel_to_value(edge, "ul", "NIL", 0),
+         edge.withColumn("ul", F.when(F.lower(F.trim(ul)) == "nil", F.lit(0).cast("string"))
+                         .otherwise(ul))),
+    ]
+    for got, want in pairs:
+        _assert_same_frame(got, want)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import gzip
 
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from datapipelineetl_spark import pipelines
 
@@ -191,3 +192,132 @@ def test_ccnet_quality_stream_example_runs_end_to_end(spark, tmp_path):
     assert weighted.filter("dsir_weight IS NOT NULL").count() > 0
     train = spark.read.parquet(work + "/train_tier")
     assert 0 < train.count() < 500
+
+
+GOOD_LINE = '07-04-2025 13:45,,CellX,B3,,20,11,,,OK," NIL ",,55.5,,0.99\n'
+BAD_LINE = "not a date,,CellY,B3,,NOT_AN_INT,11,,,OK,x,,55.5,,0.99\n"
+
+
+def _csv_drain(spark, tmp_path, name, lines, **kw):
+    """Drop one CSV into ``tmp_path/in`` and drain it with quarantine and
+    archival onto the same sink and checkpoint as earlier calls."""
+    src = tmp_path / "in"
+    src.mkdir(exist_ok=True)
+    (src / name).write_text(CSV_HEADER + "\n" + "".join(lines))
+    return pipelines.run_csv_feed(
+        spark, str(src), out_dir=str(tmp_path / "out"), checkpoint=str(tmp_path / "ck"),
+        archive_dir=str(tmp_path / "done"), quarantine_dir=str(tmp_path / "quarantine"), **kw,
+    )
+
+
+def _parquet_files(path):
+    return sorted(str(p) for p in path.rglob("*.parquet")) if path.exists() else []
+
+
+def test_feed_rows_accumulate_across_drains(spark, tmp_path):
+    """``rows`` is the checkpointed query's cumulative committed count,
+    taken from the write: two drains of one row each report 1, then 2,
+    and a malformed line counts in neither."""
+    assert _csv_drain(spark, tmp_path, "a.csv", [GOOD_LINE]).rows == 1
+    assert _csv_drain(spark, tmp_path, "b.csv", [GOOD_LINE, BAD_LINE]).rows == 2
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 2
+
+
+def test_feed_header_only_csv_writes_nothing(spark, tmp_path):
+    """A header-only CSV is an empty micro-batch: it runs with no
+    emptiness probe, reports 0 rows and leaves no sink or quarantine
+    data file."""
+    res = _csv_drain(spark, tmp_path, "empty.csv", [])
+    assert res.rows == 0 and res.leftovers == []
+    assert _parquet_files(tmp_path / "out") == []
+    assert _parquet_files(tmp_path / "quarantine") == []
+
+
+def test_feed_replayed_epoch_counts_once(tmp_path):
+    """The checkpoint's row record: a replayed epoch (the same epoch
+    recorded again, as after a crash between write and commit) keeps its
+    base, so its rows count once."""
+    ck = str(tmp_path)
+    assert pipelines._committed_rows(ck) == 0
+    for epoch, n in ((0, 3), (1, 2), (1, 2), (2, 0), (3, 4)):
+        pipelines._record_rows(ck, epoch, n)
+    assert pipelines._committed_rows(ck) == 9
+
+
+class _RunIds(StreamingQueryListener):
+    """Collects the ``runId`` of every query started: Spark runs a
+    micro-batch's jobs, foreachBatch actions included, in that job group."""
+
+    def __init__(self):
+        self.ids = []
+
+    def onQueryStarted(self, event):
+        self.ids.append(str(event.runId))
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+def _plans_of_jobs(spark, job_ids):
+    """Plans of the SQL executions that ran any of ``job_ids``."""
+    store = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(store.size()):
+        ex = store.apply(i)
+        ids = {int(j) for j in ex.jobs().keys().mkString(",").split(",") if j}
+        if ids & set(job_ids):
+            plans.append(ex.physicalPlanDescription())
+    return plans
+
+
+def test_feed_batch_job_counts(spark, tmp_path):
+    """One micro-batch is one job when clean, two when it has malformed
+    lines (the quarantine write), and one for an XML file; no job reads
+    the sink back."""
+    listener = _RunIds()
+    spark.streams.addListener(listener)
+    sc = spark.sparkContext
+    out = str(tmp_path / "out")
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids = list(sc.statusTracker().getJobIdsForGroup(listener.ids[-1]))
+        for plan in _plans_of_jobs(spark, ids):
+            assert out not in plan or "InsertIntoHadoopFsRelationCommand" in plan, plan
+        return len(ids)
+
+    try:
+        assert _csv_drain(spark, tmp_path, "a.csv", [GOOD_LINE]).rows == 1
+        assert jobs() == 1
+        assert _csv_drain(spark, tmp_path, "b.csv", [GOOD_LINE, BAD_LINE]).rows == 2
+        assert jobs() == 2
+        xin = tmp_path / "xin"
+        xin.mkdir()
+        (xin / "a.xml").write_text(XML_DOC)
+        res = pipelines.run_xml_feed(spark, str(xin), variant="xmlonly", out_dir=out,
+                                     checkpoint=str(tmp_path / "xck"))
+        assert res.rows == 1
+        assert jobs() == 1
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def test_feed_quarantine_write_compiles_nothing_new(spark, tmp_path):
+    """The quarantine write goes straight to its epoch's directory, with no
+    per-epoch literal column, so later dirty drains reuse every generated
+    class of the first. Three later drains, so that epochs no other test
+    reaches are among them."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    _csv_drain(spark, tmp_path, "a.csv", [GOOD_LINE, BAD_LINE])
+    before = cm.METRIC_COMPILATION_TIME().getCount()
+    for i in range(3):
+        assert _csv_drain(spark, tmp_path, f"b{i}.csv", [GOOD_LINE, BAD_LINE]).rows == i + 2
+    assert cm.METRIC_COMPILATION_TIME().getCount() == before
+    q = spark.read.parquet(str(tmp_path / "quarantine")).collect()
+    assert sorted(r["__batch_id"] for r in q) == [0, 1, 2, 3]

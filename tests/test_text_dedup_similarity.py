@@ -2055,6 +2055,39 @@ def _assert_edge_rows_match(spark, single, multi, score):
     assert [_nan_key((r.vec_id, r[score])) for r in got] == want, score
 
 
+def test_null_element_vector_ranks_last_in_every_l2_tier(spark):
+    """A vector with a NULL element (id 5) scores NaN and ranks last in
+    every L2 tier, beside the NaN-element vector (id 2): ``l2_topk``,
+    ``ivf_topk(metric="l2")``, the ``pq_adc_topk`` re-rank on its
+    carried and its join leg, and the batched ``l2_topk_multi`` and
+    ``pq_adc_topk_multi`` re-rank. It is no cosine candidate."""
+    df = (
+        _vector_frame(spark, _EDGE_ROWS)
+        .unionByName(spark.range(1).selectExpr(
+            "5L AS vec_id", "array(CAST(NULL AS DOUBLE), 1D) AS embedding"))
+        .withColumn("pq_code", F.array(F.lit(0)))
+        .localCheckpoint(eager=True)
+    )
+    q, books = [1.0, 0.0], [[[0.0, 0.0], [1.0, 0.0]]]
+    want = _EDGE_WANT["l2"] + [(5, "nan")]
+
+    def ranked(rows):
+        return [_nan_key((r.vec_id, r.l2)) for r in rows]
+
+    assert ranked(similarity.l2_topk(df, q, 10).collect()) == want
+    assert ranked(similarity.ivf_topk(
+        df, q, [[1.0, 0.0]], k=10, nprobe=1, metric="l2").collect()) == want
+    for vectors in (df, df.select("*")):
+        assert ranked(similarity.pq_adc_topk(
+            df, q, books, k=10, refine_n=10, vectors=vectors).collect()) == want
+    assert ranked(similarity.l2_topk_multi(df, {9: q}).orderBy("l2", "vec_id")
+                  .collect()) == want
+    assert ranked(similarity.pq_adc_topk_multi(
+        df, {9: q}, books, k=10, refine_n=10, vectors=df.select("*"))
+        .orderBy("l2", "vec_id").collect()) == want
+    assert 5 not in [r.vec_id for r in similarity.cosine_topk(df, q, 10).collect()]
+
+
 def _with_edge_vectors(spark, emb, dim):
     """``emb`` plus a NaN-element and an all-zero vector (ids 10**9+1,
     10**9+2), which the batched and single-query tiers must rank alike."""

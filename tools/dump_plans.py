@@ -38,6 +38,11 @@ SHAPE_QUERIES = [
     "q_range_join_ship_windows",
     "q_pack_sequences",
     "q_encode_tokens",
+    "q_clean_cell_metrics",
+    "q_l2_topk",
+    "q_pq_refine_recall",
+    "q_ivfpq_refine_topk",
+    "q_pq_multi_refine",
 ]
 # the single-query top-k requests of benchmark/vector_topk.py
 TOPK_KINDS = ("exact", "pq_adc", "ivfpq", "lsh")
