@@ -12,11 +12,13 @@ one function here (same feed semantics, Spark-native execution):
 
 Differences by design (SURVEY.md §7): XML parsing runs on executors (not
 the Airflow worker), gunzip is implicit (Spark reads ``*.gz``), file
-archival is source-managed (transactional, vs the reference's manual moves
-— at-least-once), and the sink is pluggable: ``sink="kafka"`` publishes the
-reference's JSON envelope to the feed's topic; ``sink="parquet"`` (default,
-used by tests — no broker in this environment) writes feed-partitioned
-parquet that a Kafka/Elasticsearch stage can relay.
+archival is one sweep of the checkpoint's committed source log after each
+drain (``runner.archive_committed_sources``: only committed files move, vs
+the reference's manual moves — at-least-once), and the sink is pluggable:
+``sink="kafka"`` publishes the reference's JSON envelope to the feed's
+topic; ``sink="parquet"`` (default, used by tests — no broker in this
+environment) writes feed-partitioned parquet that a Kafka/Elasticsearch
+stage can relay.
 """
 
 from __future__ import annotations
@@ -156,10 +158,7 @@ def run_csv_feed(
             "mode": "PERMISSIVE",
             "columnNameOfCorruptRecord": tabular.CORRUPT_COL,
         }
-    stream = runner.read_file_stream(
-        spark, in_dir, "csv", schema,
-        archive_dir=archive_dir, header="true", **extra,
-    )
+    stream = runner.read_file_stream(spark, in_dir, "csv", schema, header="true", **extra)
     corrupt = F.col(tabular.CORRUPT_COL)
 
     def batch(df: DataFrame, epoch: int) -> None:
@@ -177,11 +176,11 @@ def run_csv_feed(
         counts = obs.get
         bad = counts.get("bad", 0)
         if bad:
-            # a second job only for a dirty batch; overwriting the epoch's
-            # own partition directory keeps a replay idempotent
-            df.filter(corrupt.isNotNull()).select(corrupt, "input_file").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(quarantine_dir, f"__batch_id={epoch}"))
+            # a second job only for a dirty batch
+            runner._write_epoch(
+                df.filter(corrupt.isNotNull()).select(corrupt, "input_file"),
+                quarantine_dir, epoch,
+            )
         _record_rows(checkpoint, epoch, counts["n"] - bad)
 
     rows = _drain(stream, batch, checkpoint)
@@ -205,15 +204,14 @@ def run_xml_feed(
     executor-side flatten → C7 clean (int for gzip, double otherwise) →
     envelope/route. Replaces Dag2/Dag3/Dag4 + their Spark jobs.
 
-    ``archive_dir`` threads source-managed archival through the XML scan
-    (mirrors run_csv_feed). Spark's ``cleanSource`` cleaner is async and
-    lags one batch behind, so after the drain we sweep the checkpoint's
-    committed source log (``runner.archive_committed_sources``) — every
-    consumed file leaves ``in_dir`` before this returns and the leftover
-    audit is clean. Without ``archive_dir``, consumed files stay in
-    ``in_dir`` and the audit reports them — pass it in production."""
+    ``archive_dir`` (as in run_csv_feed): after the drain, one sweep of
+    the checkpoint's committed source log
+    (``runner.archive_committed_sources``) moves every consumed file out
+    of ``in_dir`` before this returns, so the leftover audit is clean.
+    Without ``archive_dir``, consumed files stay in ``in_dir`` and the
+    audit reports them — pass it in production."""
     checkpoint = checkpoint or f"{in_dir.rstrip('/')}__ckpt_{variant}"
-    raw = meascollec.read_meascollec(spark, in_dir, streaming=True, archive_dir=archive_dir)
+    raw = meascollec.read_meascollec(spark, in_dir, streaming=True)
 
     def batch(df: DataFrame, epoch: int) -> None:
         flat = meascollec.flatten_meascollec(df, variant)

@@ -103,15 +103,12 @@ def overwrite_partitions(
     This is the replay-safe write for feed re-processing: running the same
     day twice yields the same table state (exactly-once at partition
     granularity) — vs append (duplicates) or static overwrite (drops the
-    whole table).
+    whole table). The mode is a writer option, never a session conf, so
+    concurrent writers in one session cannot interleave it.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        *partition_cols
+    ).parquet(path)
 
 
 def merge_upsert(

@@ -108,24 +108,14 @@ def read_meascollec(
     spark: SparkSession,
     path: str,
     streaming: bool = False,
-    archive_dir: str | None = None,
 ) -> DataFrame:
     """Scan measCollec XML documents (plain or .gz) into nested rows.
 
     One row per document (rowTag = root). Document-level parallelism: at
     scale each executor parses its own slice of the file listing.
-
-    ``archive_dir`` (streaming only) enables source-managed archival
-    (``cleanSource=archive``) exactly like runner.read_file_stream — so
-    consumed XML inputs leave the input dir and the ST7 leftover audit
-    stays meaningful.
     """
     reader = spark.readStream if streaming else spark.read
     reader = reader.format("xml").option("rowTag", "measCollecFile").schema(MEASCOLLEC_SCHEMA)
-    if archive_dir:
-        if not streaming:
-            raise ValueError("archive_dir requires streaming=True (cleanSource is a stream option)")
-        reader = reader.option("cleanSource", "archive").option("sourceArchiveDir", archive_dir)
     return reader.load(path)
 
 

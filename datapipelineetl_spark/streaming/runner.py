@@ -5,10 +5,15 @@ lives in ``foreachBatch`` callbacks with manual file move/backup side
 effects (/root/reference/mypy/streaming.py:109-142 et al.) — at-least-once
 by construction (ST6). This runner standardizes on:
 
-- **source-managed archival** (``cleanSource=archive`` +
-  ``sourceArchiveDir``) — the reference already does this once for the CSV
-  feed (mypy/preprocessproduce.py:185-186); we use it everywhere, removing
-  the non-transactional side effects;
+- **one archiver per query**: ``read_file_stream(archive_dir=...)`` turns
+  on Spark's own ``cleanSource=archive`` (the reference does this once for
+  the CSV feed, mypy/preprocessproduce.py:185-186), and the feed pipelines
+  instead sweep the checkpoint's committed source log after each drain
+  (``archive_committed_sources``); never both on one query, which would
+  leave Spark's archiver retrying files the sweep already moved;
+- **replay-safe writes keyed by batch id**: each ``foreachBatch`` sink
+  overwrites only its epoch's ``__batch_id=<epoch>`` directory
+  (``_write_epoch``), so a replayed batch rewrites instead of duplicating;
 - **drain-mode triggers** via ``availableNow`` (the modern form of the
   reference's ``trigger(once=True)``, mypy/streaming.py:153) — processes
   everything present, respecting rate limits, then exits;
@@ -195,9 +200,10 @@ def archive_committed_sources(checkpoint: str, archive_dir: str) -> list[str]:
     into ``archive_dir``, mirroring Spark's archival layout (original
     path appended under the archive root).
 
-    Idempotent and race-safe vs the async cleaner: files already archived
-    are skipped; each move is a single-filesystem rename. Returns the
-    list of source paths moved.
+    It replaces the cleaner: read the stream WITHOUT ``archive_dir``,
+    or Spark's archiver retries every file the sweep already moved.
+    Idempotent: files already archived are skipped; each move is a
+    single-filesystem rename. Returns the list of source paths moved.
     """
     sources_dir = os.path.join(checkpoint, "sources", "0")
     commits_dir = os.path.join(checkpoint, "commits")
@@ -444,30 +450,40 @@ def stateful_running_totals(
     )
 
 
+def _write_epoch(df: DataFrame, path: str, epoch: int) -> None:
+    """The replay-safe write of one micro-batch: overwrite the epoch's own
+    ``path/__batch_id=<epoch>`` directory and nothing else.
+
+    A replayed epoch rewrites its directory instead of appending
+    duplicates, and every other epoch's directory is left as it was.
+    Readers of ``path`` see ``__batch_id`` as an inferred int partition
+    column. The write sets no session conf and adds no per-epoch literal
+    column, so later epochs reuse the generated classes of the first. An
+    empty ``df`` still leaves its epoch's directory, holding one
+    schema-only file that reads back as zero rows.
+    """
+    df.write.mode("overwrite").parquet(os.path.join(path, f"__batch_id={epoch}"))
+
+
 def idempotent_parquet_sink(
     stream: DataFrame,
     path: str,
     checkpoint: str,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Exactly-once file sink via foreachBatch + dynamic partition
-    overwrite on the batch id: replaying a micro-batch (recovery, restart
-    after checkpoint loss within retention) REWRITES its partition instead
-    of appending duplicates.
+    """Exactly-once file sink via foreachBatch + an overwrite of the
+    batch id's own partition directory (``_write_epoch``): replaying a
+    micro-batch (recovery, restart after checkpoint loss within
+    retention) REWRITES its partition instead of appending duplicates.
 
     This is the general at-least-once → exactly-once upgrade for
     non-transactional sinks: make the write idempotent on (batch_id), let
     the checkpoint guarantee each batch id carries the same data. The
     reference's manual move/backup (mypy/streaming.py:119-141) has neither
     property (ST6)."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
 
     def write(df: DataFrame, epoch_id: int) -> None:
-        maintenance.overwrite_partitions(
-            df.withColumn("__batch_id", F.lit(epoch_id)), path, ["__batch_id"]
-        )
+        _write_epoch(df, path, epoch_id)
 
     return run_foreach_batch(
         stream, write, checkpoint, available_now=available_now, skip_empty=True
@@ -496,7 +512,7 @@ def continuous_rollup(
     Exactly-once WITHOUT a transactional sink: merges are dangerous to
     replay (re-merging a recovered batch double-counts), so nothing is
     merged at write time — partials land under their ``__batch_id``
-    partition via dynamic partition overwrite (same idempotence contract
+    partition through ``_write_epoch`` (same idempotence contract
     as ``idempotent_parquet_sink``: a replayed batch REWRITES its
     partition). ``read_rollup`` folds partials into finals at read time;
     count/sum partials are associative, so the fold is exact. Compact
@@ -508,8 +524,6 @@ def continuous_rollup(
     not in the state store — restarts replay nothing but the unfinished
     batch.
     """
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
-
     def agg(df: DataFrame, epoch_id: int) -> None:
         ev = df.select(
             *[F.date_trunc(g, ts_col).alias(f"__g_{g}") for g in grains],
@@ -533,9 +547,7 @@ def continuous_rollup(
             )
             .select("grain", "bucket_ts", *key_cols, "n_partial", "sum_partial")
         )
-        maintenance.overwrite_partitions(
-            partial.withColumn("__batch_id", F.lit(epoch_id)), store, ["__batch_id"]
-        )
+        _write_epoch(partial, store, epoch_id)
 
     return run_foreach_batch(
         stream, agg, checkpoint, available_now=available_now, skip_empty=True
@@ -667,7 +679,6 @@ def streaming_decontaminate(
     a store that costs seconds).
     """
     from datapipelineetl_spark.operators import corpus as _corpus  # noqa: PLC0415
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
 
     store = _eval_gram_store(eval_grams, eval_id_col, gram_col)
 
@@ -687,17 +698,10 @@ def streaming_decontaminate(
             pairs = pairs.localCheckpoint(eager=True)
         bad = pairs.select(id_col).distinct()
         clean = df.join(bad, id_col, "anti")
-        maintenance.overwrite_partitions(
-            clean.withColumn("__batch_id", F.lit(epoch_id)),
-            output_dir,
-            ["__batch_id"],
-        )
+        _write_epoch(clean, output_dir, epoch_id)
         if dropped_dir is not None:
-            maintenance.overwrite_partitions(
-                pairs.withColumnRenamed("__eval_id", "eval_id")
-                .withColumn("__batch_id", F.lit(epoch_id)),
-                dropped_dir,
-                ["__batch_id"],
+            _write_epoch(
+                pairs.withColumnRenamed("__eval_id", "eval_id"), dropped_dir, epoch_id
             )
 
     return run_foreach_batch(
@@ -856,19 +860,15 @@ def _write_near_dup_state(
 ) -> None:
     """Append the accepted docs' band/token rows as the batch's state
     partitions (replay = overwrite). Shared by both streaming filters."""
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
-
-    maintenance.overwrite_partitions(
-        my_bands.join(accepted_ids, id_col, "semi")
-        .withColumn("__batch_id", F.lit(epoch_id)),
+    _write_epoch(
+        my_bands.join(accepted_ids, id_col, "semi"),
         os.path.join(state_dir, "bands"),
-        ["__batch_id"],
+        epoch_id,
     )
-    maintenance.overwrite_partitions(
-        my_tokens.join(accepted_ids, id_col, "semi")
-        .withColumn("__batch_id", F.lit(epoch_id)),
+    _write_epoch(
+        my_tokens.join(accepted_ids, id_col, "semi"),
         os.path.join(state_dir, "tokens"),
-        ["__batch_id"],
+        epoch_id,
     )
 
 
@@ -908,8 +908,9 @@ def streaming_near_dup_filter(
     partitions never compare equal). Replay safety: batch
     N reads state strictly ``__batch_id < N`` (partition-pruned scan),
     so a crashed/replayed batch never collides with its own partial
-    writes, and every write is a batch-id partition overwrite — the same
-    replay-idempotence scheme as ``idempotent_parquet_sink`` /
+    writes, and every write overwrites only its own batch-id partition
+    (``_write_epoch``) — the same replay-idempotence scheme as
+    ``idempotent_parquet_sink`` /
     ``continuous_rollup``. CAVEAT: the checkpoint and ``state_dir``
     share fate — deleting the checkpoint resets the epoch counter to 0
     while the state keeps its old batch ids, so a full-history replay
@@ -932,8 +933,6 @@ def streaming_near_dup_filter(
     as in the batch ladder. State grows O(accepted × bands) rows —
     compact it periodically with ``sinks.maintenance.compact``.
     """
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
-
     def handle(df: DataFrame, epoch_id: int) -> None:
         dropped, my_bands, my_tokens = _near_dup_batch_state(
             df, epoch_id, state_dir, id_col, text_col, threshold,
@@ -941,21 +940,13 @@ def streaming_near_dup_filter(
             state_tokens, state_token_salt,
         )
         accepted = df.join(dropped, id_col, "anti")
-        maintenance.overwrite_partitions(
-            accepted.withColumn("__batch_id", F.lit(epoch_id)),
-            output_dir,
-            ["__batch_id"],
-        )
+        _write_epoch(accepted, output_dir, epoch_id)
         _write_near_dup_state(
             my_bands, my_tokens, accepted.select(id_col),
             state_dir, epoch_id, id_col,
         )
         if dropped_dir is not None:
-            maintenance.overwrite_partitions(
-                dropped.withColumn("__batch_id", F.lit(epoch_id)),
-                dropped_dir,
-                ["__batch_id"],
-            )
+            _write_epoch(dropped, dropped_dir, epoch_id)
 
     return run_foreach_batch(
         stream, handle, checkpoint, available_now=available_now, skip_empty=True
@@ -982,8 +973,8 @@ def compact_state(spark: SparkSession, state_dir: str, keep_last: int = 1) -> in
     epoch whose checkpoint commit never landed (drain crashed between
     the state write and the commit). That epoch REPLAYS on restart —
     its state read filters ``__batch_id < N`` (a fold into N would be
-    invisible, silently skipping cross-batch dedup) and its dynamic
-    partition overwrite of ``__batch_id=N`` would then destroy the
+    invisible, silently skipping cross-batch dedup) and its overwrite
+    of the ``__batch_id=N`` directory would then destroy the
     folded history. Only batch ids strictly below the newest on-disk
     partition are guaranteed committed, so the fold may never target
     the newest partition.
@@ -1099,7 +1090,6 @@ def streaming_corpus_filter(
     write+read per document.
     """
     from datapipelineetl_spark.operators import corpus as _corpus  # noqa: PLC0415
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
 
     store = _eval_gram_store(eval_grams, eval_id_col, gram_col)
 
@@ -1128,11 +1118,7 @@ def streaming_corpus_filter(
         accepted = survivors.join(contaminated, id_col, "anti")
         if redact:
             accepted = _corpus.redact_pii(accepted, text_col)
-        maintenance.overwrite_partitions(
-            accepted.withColumn("__batch_id", F.lit(epoch_id)),
-            output_dir,
-            ["__batch_id"],
-        )
+        _write_epoch(accepted, output_dir, epoch_id)
         _write_near_dup_state(
             my_bands, my_tokens, accepted.select(id_col),
             state_dir, epoch_id, id_col,
@@ -1141,11 +1127,7 @@ def streaming_corpus_filter(
             audit = dup_all.withColumn("reason", F.lit("near_dup")).unionByName(
                 contaminated.withColumn("reason", F.lit("contaminated"))
             )
-            maintenance.overwrite_partitions(
-                audit.withColumn("__batch_id", F.lit(epoch_id)),
-                dropped_dir,
-                ["__batch_id"],
-            )
+            _write_epoch(audit, dropped_dir, epoch_id)
 
     return run_foreach_batch(
         stream, handle, checkpoint, available_now=available_now, skip_empty=True
@@ -1160,8 +1142,8 @@ def streaming_lm_counts(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming incremental unigram-LM fit: each micro-batch writes its
-    PARTIAL token counts under its ``__batch_id`` partition (dynamic
-    partition overwrite — a replayed batch REWRITES its partition, the
+    PARTIAL token counts under its ``__batch_id`` partition
+    (``_write_epoch`` — a replayed batch REWRITES its partition, the
     ``continuous_rollup`` exactly-once contract), and ``read_lm_counts``
     folds the partials exactly (counts are associative). Feed the folded
     frame to ``text.unigram_logprob(lm_counts=...)`` and LM-based
@@ -1174,7 +1156,6 @@ def streaming_lm_counts(
     (``sinks.maintenance.compact``) when batch count grows.
     """
     from datapipelineetl_spark.operators import text as text_ops  # noqa: PLC0415
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
 
     def agg(df: DataFrame, epoch_id: int) -> None:
         partial = (
@@ -1182,9 +1163,7 @@ def streaming_lm_counts(
             .groupBy("token")
             .agg(F.count(F.lit(1)).alias("count_partial"))
         )
-        maintenance.overwrite_partitions(
-            partial.withColumn("__batch_id", F.lit(epoch_id)), store, ["__batch_id"]
-        )
+        _write_epoch(partial, store, epoch_id)
 
     return run_foreach_batch(
         stream, agg, checkpoint, available_now=available_now, skip_empty=True
@@ -1222,7 +1201,7 @@ def streaming_perplexity_buckets(
     with ``text.unigram_logprob`` against the LM in a
     ``streaming_lm_counts`` store, bucketed against the FIXED
     calibrated thresholds, and written annotated under its
-    ``__batch_id`` partition (dynamic partition overwrite — a replayed
+    ``__batch_id`` partition (``_write_epoch`` — a replayed
     batch REWRITES its partition, the exactly-once contract shared by
     every store in this module). Rank-based bucketing is a GLOBAL
     window and cannot stream; fixed thresholds are how CCNet itself
@@ -1270,7 +1249,6 @@ def streaming_perplexity_buckets(
     accept one-batch-stale scores by folding less often upstream.
     """
     from datapipelineetl_spark.operators import text as text_ops  # noqa: PLC0415
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
 
     reserved = {"n_tokens", "avg_logprob"} & set(stream.columns)
     if reserved:
@@ -1333,11 +1311,7 @@ def streaming_perplexity_buckets(
         bucketed = text_ops.bucket_by_thresholds(
             annotated, thr, group_col=group_col
         )
-        maintenance.overwrite_partitions(
-            bucketed.withColumn("__batch_id", F.lit(epoch_id)),
-            output_dir,
-            ["__batch_id"],
-        )
+        _write_epoch(bucketed, output_dir, epoch_id)
 
     return run_foreach_batch(
         stream, handle, checkpoint, available_now=available_now, skip_empty=True
@@ -1357,8 +1331,8 @@ def streaming_sketch_state(
 ) -> StreamingQuery:
     """Streaming sketch maintenance: each micro-batch writes its
     PARTIAL count-min cells (``<store>/cm``) and HLL max-rank registers
-    (``<store>/hll``) under its ``__batch_id`` partition (dynamic
-    partition overwrite — a replayed batch REWRITES its partition, the
+    (``<store>/hll``) under its ``__batch_id`` partition
+    (``_write_epoch`` — a replayed batch REWRITES its partition, the
     ``continuous_rollup`` exactly-once contract). Sketches are the
     canonical mergeable state: CM cells fold by SUM, HLL registers by
     MAX — both associative AND (for HLL) idempotent — so
@@ -1375,21 +1349,12 @@ def streaming_sketch_state(
     maintenance folds old partitions when batch count grows.
     """
     from datapipelineetl_spark.operators import sketch  # noqa: PLC0415
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
 
     def agg(df: DataFrame, epoch_id: int) -> None:
         cm = sketch.countmin_sketch(df, text_col, depth, width)
-        maintenance.overwrite_partitions(
-            cm.withColumn("__batch_id", F.lit(epoch_id)),
-            f"{store}/cm",
-            ["__batch_id"],
-        )
+        _write_epoch(cm, f"{store}/cm", epoch_id)
         hll = sketch.hll_registers(df, group_col, text_col, m)
-        maintenance.overwrite_partitions(
-            hll.withColumn("__batch_id", F.lit(epoch_id)),
-            f"{store}/hll",
-            ["__batch_id"],
-        )
+        _write_epoch(hll, f"{store}/hll", epoch_id)
 
     return run_foreach_batch(
         stream, agg, checkpoint, available_now=available_now, skip_empty=True
@@ -1463,7 +1428,6 @@ def streaming_bloom_decontaminate(
     the attrition audit.
     """
     from datapipelineetl_spark.operators import sketch  # noqa: PLC0415
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
 
     def handle(df: DataFrame, epoch_id: int) -> None:
         flags = sketch.bloom_flag_contaminated(
@@ -1476,17 +1440,10 @@ def streaming_bloom_decontaminate(
             eager=True
         )
         clean = df.join(bad.select(id_col), id_col, "anti")
-        maintenance.overwrite_partitions(
-            clean.withColumn("__batch_id", F.lit(epoch_id)),
-            output_dir,
-            ["__batch_id"],
-        )
+        _write_epoch(clean, output_dir, epoch_id)
         if dropped_dir is not None:
-            maintenance.overwrite_partitions(
-                bad.select(id_col, "n_grams", "n_bloom_hits")
-                .withColumn("__batch_id", F.lit(epoch_id)),
-                dropped_dir,
-                ["__batch_id"],
+            _write_epoch(
+                bad.select(id_col, "n_grams", "n_bloom_hits"), dropped_dir, epoch_id
             )
 
     return run_foreach_batch(
@@ -1581,7 +1538,6 @@ def streaming_semantic_dedup(
     only via the candidate-id semi-join, never scanned whole.
     """
     from datapipelineetl_spark.operators import similarity as _sim  # noqa: PLC0415
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
 
     if num_tables < 1:
         raise ValueError(f"num_tables must be >= 1, got {num_tables}")
@@ -1742,31 +1698,12 @@ def streaming_semantic_dedup(
         dropped = dropped.localCheckpoint(eager=True)
 
         accepted = df.join(dropped, id_col, "anti")
-        maintenance.overwrite_partitions(
-            accepted.withColumn("__batch_id", F.lit(epoch_id)),
-            output_dir,
-            ["__batch_id"],
-        )
+        _write_epoch(accepted, output_dir, epoch_id)
         accepted_ids = accepted.select(id_col)
-        maintenance.overwrite_partitions(
-            tabled.join(accepted_ids, id_col, "semi")
-            .withColumn("__batch_id", F.lit(epoch_id)),
-            sigs_dir,
-            ["__batch_id"],
-        )
-        maintenance.overwrite_partitions(
-            clean.join(accepted_ids, id_col, "semi")
-            .withColumn("__batch_id", F.lit(epoch_id)),
-            vecs_dir,
-            ["__batch_id"],
-        )
+        _write_epoch(tabled.join(accepted_ids, id_col, "semi"), sigs_dir, epoch_id)
+        _write_epoch(clean.join(accepted_ids, id_col, "semi"), vecs_dir, epoch_id)
         if dropped_dir is not None:
-            maintenance.overwrite_partitions(
-                df.join(dropped, id_col, "semi")
-                .withColumn("__batch_id", F.lit(epoch_id)),
-                dropped_dir,
-                ["__batch_id"],
-            )
+            _write_epoch(df.join(dropped, id_col, "semi"), dropped_dir, epoch_id)
 
     return run_foreach_batch(
         stream, handle, checkpoint, available_now=available_now, skip_empty=True
@@ -1792,8 +1729,8 @@ def streaming_dsir_weights(
     ``n_buckets`` rows of three integers — broadcast metadata by
     construction, the hashing trick's size story), and every
     micro-batch is scored against that FIXED model and written
-    annotated under its ``__batch_id`` partition (dynamic partition
-    overwrite — replay rewrites, value-deterministic because the model
+    annotated under its ``__batch_id`` partition (``_write_epoch`` —
+    replay rewrites, value-deterministic because the model
     never moves). Every input column survives; gramless docs carry
     n_grams 0 and a NULL weight. The join back onto the batch rows is
     a NULL-SAFE LEFT join: a NULL doc id annotates (matching the
@@ -1815,7 +1752,6 @@ def streaming_dsir_weights(
     snapshot machinery.
     """
     from datapipelineetl_spark.operators import corpus as corpus_ops  # noqa: PLC0415
-    from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
 
     reserved = {"n_grams", out} & set(stream.columns)
     if reserved:
@@ -1842,11 +1778,7 @@ def streaming_dsir_weights(
         annotated = df.join(
             sc, F.col(id_col).eqNullSafe(F.col("__score_id")), "left"
         ).drop("__score_id")
-        maintenance.overwrite_partitions(
-            annotated.withColumn("__batch_id", F.lit(epoch_id)),
-            output_dir,
-            ["__batch_id"],
-        )
+        _write_epoch(annotated, output_dir, epoch_id)
 
     return run_foreach_batch(
         stream, handle, checkpoint, available_now=available_now, skip_empty=True
@@ -1918,7 +1850,7 @@ def streaming_ann_index(
     from datapipelineetl_spark.operators import similarity  # noqa: PLC0415
     from datapipelineetl_spark.sinks import maintenance  # noqa: PLC0415
 
-    def handle(df: DataFrame, epoch_id: int) -> None:
+    def handle(df: DataFrame, epoch: int) -> None:
         if residual:
             assigned = similarity.residualize(
                 similarity.ivf_assign(df, centroids, vec_col, metric="l2"),
@@ -1939,7 +1871,7 @@ def streaming_ann_index(
                 mode="arrow",
             )
         maintenance.overwrite_partitions(
-            enc.withColumn("__batch_id", F.lit(epoch_id)),
+            enc.withColumn("__batch_id", F.lit(epoch)),
             store,
             ["ivf_cell", "__batch_id"],
         )

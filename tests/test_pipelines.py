@@ -90,8 +90,8 @@ def test_run_xml_feed_hardware_double_cast(spark, tmp_path):
 
 
 def test_run_xml_feed_archives_sources(spark, tmp_path):
-    """archive_dir must thread cleanSource through the XML scan so
-    consumed files leave in_dir and the ST7 leftover audit is clean."""
+    """archive_dir must move every consumed file out of in_dir by the
+    time the drain returns, so the ST7 leftover audit is clean."""
     src = tmp_path / "ain"
     src.mkdir()
     (src / "a.xml").write_text(XML_DOC)
@@ -217,9 +217,16 @@ def _parquet_files(path):
 def test_feed_rows_accumulate_across_drains(spark, tmp_path):
     """``rows`` is the checkpointed query's cumulative committed count,
     taken from the write: two drains of one row each report 1, then 2,
-    and a malformed line counts in neither."""
-    assert _csv_drain(spark, tmp_path, "a.csv", [GOOD_LINE]).rows == 1
-    assert _csv_drain(spark, tmp_path, "b.csv", [GOOD_LINE, BAD_LINE]).rows == 2
+    and a malformed line counts in neither. After each drain every
+    consumed CSV is in the archive exactly once and none is left over."""
+
+    def archived():
+        return sorted(p.name for p in (tmp_path / "done").rglob("*.csv"))
+
+    res = _csv_drain(spark, tmp_path, "a.csv", [GOOD_LINE])
+    assert res.rows == 1 and res.leftovers == [] and archived() == ["a.csv"]
+    res = _csv_drain(spark, tmp_path, "b.csv", [GOOD_LINE, BAD_LINE])
+    assert res.rows == 2 and res.leftovers == [] and archived() == ["a.csv", "b.csv"]
     assert spark.read.parquet(str(tmp_path / "out")).count() == 2
 
 

@@ -338,6 +338,91 @@ def test_idempotent_sink_replay_no_duplicates(spark, tmp_path):
     assert spark.read.parquet(out).count() == 10  # rewritten, not appended
 
 
+def test_sink_writes_never_set_session_conf(spark, tmp_path, monkeypatch):
+    """Neither ``overwrite_partitions`` nor a runner sink's epoch write
+    sets a session conf: the dynamic mode is a writer option, so
+    concurrent queries in one session cannot interleave it."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from datapipelineetl_spark.sinks import maintenance
+
+    keys = []
+    orig = RuntimeConfig.set
+
+    def record(self, key, value):
+        keys.append(key)
+        return orig(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", record)
+    maintenance.overwrite_partitions(
+        spark.range(4).withColumn("day", F.col("id") % 2), str(tmp_path / "t"), ["day"]
+    )
+    src = str(tmp_path / "src")
+    spark.range(3).coalesce(1).write.parquet(src)
+    runner.idempotent_parquet_sink(
+        spark.readStream.schema("id long").parquet(src), str(tmp_path / "sink"),
+        str(tmp_path / "ck"),
+    )
+    assert spark.read.parquet(str(tmp_path / "sink")).count() == 3
+    assert "spark.sql.sources.partitionOverwriteMode" not in keys
+
+
+def test_runner_sink_compiles_nothing_new_per_epoch(spark, tmp_path):
+    """Later epochs of a runner sink reuse every generated class of the
+    first: no per-epoch literal reaches the plan. The source files are
+    written before the counted window, because ``spark.range`` with new
+    bounds compiles on its own."""
+    import shutil
+
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    src, out, ck = (str(tmp_path / n) for n in ("src", "out", "ck"))
+    staged = []
+    for i in range(4):
+        stage = tmp_path / f"stage{i}"
+        spark.range(i * 10, i * 10 + 10).coalesce(1).write.parquet(str(stage))
+        staged.append(next(stage.glob("part-*.parquet")))
+    os.makedirs(src)
+
+    def drain(i):
+        shutil.move(str(staged[i]), os.path.join(src, f"f{i}.parquet"))
+        runner.idempotent_parquet_sink(spark.readStream.schema("id long").parquet(src), out, ck)
+
+    drain(0)
+    before = cm.METRIC_COMPILATION_TIME().getCount()
+    for i in (1, 2, 3):
+        drain(i)
+    assert cm.METRIC_COMPILATION_TIME().getCount() == before
+    got = spark.read.parquet(out)
+    assert got.count() == 40
+    assert sorted(r[0] for r in got.select("__batch_id").distinct().collect()) == [0, 1, 2, 3]
+
+
+def test_write_epoch_replaces_only_its_epoch(spark, tmp_path):
+    """``_write_epoch`` on a store of several epochs: rewriting epoch 0
+    replaces epoch 0 alone, and an empty frame leaves an epoch that reads
+    back as zero rows with the store's schema."""
+    store = str(tmp_path / "store")
+
+    def frame(ids):
+        return spark.createDataFrame([(i, f"v{i}") for i in ids], "id long, v string")
+
+    def rows():
+        return sorted((r["__batch_id"], r["id"], r["v"]) for r in spark.read.parquet(store).collect())
+
+    runner._write_epoch(frame([1, 2]), store, 0)
+    runner._write_epoch(frame([3]), store, 1)
+    runner._write_epoch(frame([4, 5]), store, 0)
+    assert rows() == [(0, 4, "v4"), (0, 5, "v5"), (1, 3, "v3")]
+    runner._write_epoch(frame([]), store, 2)
+    assert rows() == [(0, 4, "v4"), (0, 5, "v5"), (1, 3, "v3")]
+    got = spark.read.parquet(store)
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+        ("id", "bigint"), ("v", "string"), ("__batch_id", "int")
+    ]
+    assert got.filter("__batch_id = 2").count() == 0
+    assert os.path.isdir(os.path.join(store, "__batch_id=2"))
+
+
 def test_observe_quality_metrics_in_stream(spark, tmp_path):
     """observe(): per-micro-batch row/null counters ride the write —
     no second pass (the row-level ST7 audit)."""
