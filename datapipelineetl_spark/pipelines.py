@@ -114,11 +114,17 @@ def _sink(
     serde.write_routed_parquet(tagged.withColumn("feed", F.lit(feed)), out_dir)
 
 
-def _drain(stream: DataFrame, batch, checkpoint: str) -> int:
+def _drain(stream: DataFrame, batch, checkpoint: str, archive_dir: str | None) -> int:
     """Run ``batch`` over every micro-batch without the runner's
     empty-batch probe (``runner.run_foreach_batch`` says why), then return
-    the cumulative row count the batches recorded in the checkpoint."""
-    runner.run_foreach_batch(stream, batch, checkpoint, skip_empty=False)
+    the cumulative row count the batches recorded in the checkpoint.
+    With ``archive_dir``, every committed input file is archived after the
+    drain, also when it raises."""
+    try:
+        runner.run_foreach_batch(stream, batch, checkpoint, skip_empty=False)
+    finally:
+        if archive_dir:
+            runner.archive_committed_sources(checkpoint, archive_dir)
     return _committed_rows(checkpoint)
 
 
@@ -183,9 +189,7 @@ def run_csv_feed(
             )
         _record_rows(checkpoint, epoch, counts["n"] - bad)
 
-    rows = _drain(stream, batch, checkpoint)
-    if archive_dir:
-        runner.archive_committed_sources(checkpoint, archive_dir)
+    rows = _drain(stream, batch, checkpoint, archive_dir)
     return FeedResult(rows=rows, leftovers=runner.audit_leftovers(in_dir, "*.csv"))
 
 
@@ -223,7 +227,5 @@ def run_xml_feed(
               variant, sink, out_dir, bootstrap)
         _record_rows(checkpoint, epoch, obs.get["n"])
 
-    rows = _drain(raw, batch, checkpoint)
-    if archive_dir:
-        runner.archive_committed_sources(checkpoint, archive_dir)
+    rows = _drain(raw, batch, checkpoint, archive_dir)
     return FeedResult(rows=rows, leftovers=runner.audit_leftovers(in_dir, "*.xml*"))

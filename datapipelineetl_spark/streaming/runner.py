@@ -196,9 +196,15 @@ def archive_committed_sources(checkpoint: str, archive_dir: str) -> list[str]:
     (mypy/streaming.py:119-141, dags/Dag3.py:111-113) has no such lag —
     this sweep restores that semantics transactionally: it replays the
     checkpoint's own source log and moves exactly the files Spark has
-    COMMITTED (``sources/0`` entries whose batch appears in ``commits/``)
-    into ``archive_dir``, mirroring Spark's archival layout (original
-    path appended under the archive root).
+    COMMITTED into ``archive_dir``, mirroring Spark's archival layout
+    (original path appended under the archive root).
+
+    Batches commit in order, so an entry is committed when its batch id
+    is at or below the highest one in ``commits/``. That holds after
+    ``minBatchesToRetain`` purges the older commit files, so a drain of
+    any length leaves nothing behind, and a sweep after a failed drain
+    catches up. ``.compact`` logs fold earlier batches' entries in and
+    are read like any other.
 
     It replaces the cleaner: read the stream WITHOUT ``archive_dir``,
     or Spark's archiver retries every file the sweep already moved.
@@ -207,19 +213,15 @@ def archive_committed_sources(checkpoint: str, archive_dir: str) -> list[str]:
     """
     sources_dir = os.path.join(checkpoint, "sources", "0")
     commits_dir = os.path.join(checkpoint, "commits")
-    if not os.path.isdir(sources_dir):
+    if not (os.path.isdir(sources_dir) and os.path.isdir(commits_dir)):
         return []
-    committed: set[str] = set()
-    if os.path.isdir(commits_dir):
-        committed = {n for n in os.listdir(commits_dir) if not n.startswith(".")}
+    committed = [int(n) for n in os.listdir(commits_dir) if n.isdigit()]
+    if not committed:
+        return []
+    last = max(committed)
     moved: list[str] = []
     for log_name in sorted(os.listdir(sources_dir)):
         if log_name.startswith("."):
-            continue
-        batch_id = log_name.removesuffix(".compact")
-        # .compact logs fold earlier batches' entries in — parse them too,
-        # but only archive entries whose own batch has committed.
-        if batch_id not in committed and not log_name.endswith(".compact"):
             continue
         with open(os.path.join(sources_dir, log_name)) as fh:
             for line in fh:
@@ -227,11 +229,11 @@ def archive_committed_sources(checkpoint: str, archive_dir: str) -> list[str]:
                 if not line or line.startswith("v"):
                     continue
                 entry = json.loads(line)
-                if str(entry.get("batchId", batch_id)) not in committed:
+                if int(entry["batchId"]) > last:
                     continue
                 src = unquote(urlparse(entry["path"]).path)
                 if not os.path.isfile(src):
-                    continue  # async cleaner (or a prior sweep) got it
+                    continue  # a prior sweep got it
                 dest = os.path.join(archive_dir, src.lstrip("/"))
                 os.makedirs(os.path.dirname(dest), exist_ok=True)
                 os.replace(src, dest)

@@ -230,6 +230,30 @@ def test_feed_rows_accumulate_across_drains(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "out")).count() == 2
 
 
+def test_feed_archives_every_file_past_commit_retention(spark, tmp_path):
+    """One drain of more batches than ``minBatchesToRetain`` keeps commit
+    files for: Spark purges the early commits, and the archive sweep
+    still moves every consumed CSV, so none is left over."""
+    src = tmp_path / "in"
+    src.mkdir()
+    names = [f"f{i}.csv" for i in range(4)]
+    for name in names:
+        (src / name).write_text(CSV_HEADER + "\n" + GOOD_LINE)
+    key = "spark.sql.streaming.minBatchesToRetain"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        res = pipelines.run_csv_feed(
+            spark, str(src), out_dir=str(tmp_path / "out"),
+            checkpoint=str(tmp_path / "ck"), archive_dir=str(tmp_path / "done"),
+        )
+    finally:
+        spark.conf.set(key, prev)
+    assert not (tmp_path / "ck" / "commits" / "0").exists()  # purged
+    assert res.rows == 4 and res.leftovers == []
+    assert sorted(p.name for p in (tmp_path / "done").rglob("*.csv")) == names
+
+
 def test_feed_header_only_csv_writes_nothing(spark, tmp_path):
     """A header-only CSV is an empty micro-batch: it runs with no
     emptiness probe, reports 0 rows and leaves no sink or quarantine
