@@ -32,51 +32,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from datapipelineetl_spark import queries as _q
-from datapipelineetl_spark import queries_batch2  # noqa: F401 — registers
-from datapipelineetl_spark import queries_batch3  # noqa: F401 — registers
-from datapipelineetl_spark import queries_batch8  # noqa: F401 — registers
-from datapipelineetl_spark import queries_batch9  # noqa: F401 — registers
-from datapipelineetl_spark import queries_batch10  # noqa: F401 — registers
-from datapipelineetl_spark import queries_batch11  # noqa: F401
-from datapipelineetl_spark import queries_ext  # noqa: F401 — registers
-from datapipelineetl_spark.session import get_session
+import __spark_entry__  # noqa: E402, F401 — registers every promoted battery
+from datapipelineetl_spark import queries as _q  # noqa: E402
+from datapipelineetl_spark.session import get_session  # noqa: E402
 
-queries_batch11.register()  # corpus family promoted round 6
-
-from datapipelineetl_spark import queries_batch12  # noqa: E402
-
-queries_batch12.register()  # tensor/corpus family promoted round 7
-
-from datapipelineetl_spark import queries_batch13  # noqa: E402
-
-queries_batch13.register()  # normalize/shuffle/budget/span family, round 8
-
-from datapipelineetl_spark import queries_batch14  # noqa: E402
-from datapipelineetl_spark import queries_batch15  # noqa: E402
-from datapipelineetl_spark import queries_batch16  # noqa: E402
-
-queries_batch14.register()  # LM/BPE/DSIR/k-means family, round 9
-queries_batch15.register()  # sketch + corpus-statistics family, round 9
-queries_batch16.register()  # Zipf fit, round 9
-
-from datapipelineetl_spark import queries_batch17  # noqa: E402
-from datapipelineetl_spark import queries_batch18  # noqa: E402
-
-queries_batch17.register()  # corpus-curation battery, round 10
-queries_batch18.register()  # fertility + estimator accuracy, round 10
-
-from datapipelineetl_spark import queries_batch19  # noqa: E402
-
-queries_batch19.register()  # PQ / temperature-mix / L2 tier, round 13
-
-from datapipelineetl_spark import queries_batch20  # noqa: E402
-
-queries_batch20.register()  # IVF-PQ composed / batched ADC / resize, round 14
-
-from datapipelineetl_spark import queries_batch21  # noqa: E402
-
-queries_batch21.register()  # refine/residual/batched-exact oracles, round 15
 # None of the batch-21 rows join HEADLINE (VERDICT r14 "What's wrong" #2:
 # the PQ fold-oracle rows already spend 45+ s/round timing constant-in-n
 # literal-LUT analysis): q_ivfpq_refine_topk / q_pq_multi_refine /
@@ -371,8 +330,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     outliers: list[str] = []
     for name in HEADLINE:
-        if name not in _q.QUERIES:
-            continue
         expected = EXPECTED_SEC.get(name) if sf == 0.1 else None
         best = min(run(name), run(name))
         if expected is not None and expected > 2.0:

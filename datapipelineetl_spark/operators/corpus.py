@@ -23,7 +23,6 @@ Design rules shared with the rest of §2.11:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame, Window
@@ -772,7 +771,6 @@ def ngram_hashes(
     n: int = 8,
     gram_col: str = "__g",
     drop_empty: bool = False,
-    impl: str = "kernel",
 ) -> DataFrame:
     """(id, gram_hash) rows: each document's DISTINCT word ``n``-gram
     60-bit hashes — the precomputable half of the contamination join.
@@ -791,85 +789,58 @@ def ngram_hashes(
     Those callers pass True to drop it (the hash of ``""`` is a
     constant, so this is one literal comparison, not a text check).
 
-    Scale: O(tokens) per row, no shuffle. ``impl`` picks the physical
-    plan (round 16):
-
-    - ``"kernel"`` (default): ONE Arrow-batched ``mapInPandas`` pass —
-      tokenize (``str.lower()`` + the ``re.ASCII``-pinned ``\\s+``
-      split, the exact Java-``\\s`` parity the BPE kernel established),
-      shingle, first-occurrence distinct, ``hashlib.md5`` 60-bit
-      prefix. Bit-identical rows to the JVM form (md5 is md5; the gram
-      STRINGS are byte-equal — parity pinned by
-      ``test_ngram_hashes_kernel_matches_jvm``), measured ~9× faster:
-      the JVM spelling's shingle ``transform``/``slice``/``array_join``
-      and per-gram md5 are higher-order functions that never enter
-      whole-stage codegen, so every gram paid interpreted evaluation
-      (5.6 s vs 0.6 s for the sf0.1 gram table).
-    - ``"jvm"``: the original narrow shingle/hash array-math + explode
-      — no Python worker in the plan; the right form when the scan
-      side must stay UDF-free.
+    Scale: O(tokens) per row, no shuffle — ONE Arrow-batched
+    ``mapInPandas`` pass: tokenize (``str.lower()`` + the
+    ``re.ASCII``-pinned ``\\s+`` split, the exact Java-``\\s`` parity the
+    BPE kernel established), shingle, first-occurrence distinct,
+    ``hashlib.md5`` 60-bit prefix. Measured ~9× faster than the
+    expression spelling (5.6 s vs 0.6 s for the sf0.1 gram table: its
+    shingle/md5 higher-order functions never enter whole-stage codegen);
+    ``test_ngram_hashes_kernel_matches_jvm`` pins row parity against
+    that spelling in ``tests/jvm_reference.py``.
     """
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
-    if impl == "kernel":
-        import pandas as pd  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
 
-        idt = df.schema[id_col].dataType.simpleString()
-        nn = int(n)
-        de = bool(drop_empty)
-        tname, iname = text_col, id_col
+    idt = df.schema[id_col].dataType.simpleString()
+    nn = int(n)
+    de = bool(drop_empty)
+    tname, iname = text_col, id_col
 
-        def gen(batches):
-            import hashlib as _hl  # noqa: PLC0415
-            import re as _re  # noqa: PLC0415
+    def gen(batches):
+        import hashlib as _hl  # noqa: PLC0415
+        import re as _re  # noqa: PLC0415
 
-            # re.ASCII pins \s+ to Java's default [ \t\n\x0b\f\r]
-            sre = _re.compile(r"\s+", _re.ASCII)
-            for pdf in batches:
-                idxs: list[int] = []
-                hs: list[int] = []
-                for ridx, txt in enumerate(pdf[tname].tolist()):
-                    if not isinstance(txt, str):
-                        continue  # NULL text → no rows (the JVM filter)
-                    toks = [t for t in sre.split(txt.lower()) if t]
-                    seen = set()
-                    for i in range(max(len(toks) - nn, 0) + 1):
-                        g = " ".join(toks[i:i + nn])
-                        if g in seen or (de and g == ""):
-                            continue
-                        seen.add(g)
-                        idxs.append(ridx)
-                        hs.append(
-                            int(_hl.md5(g.encode("utf-8")).hexdigest()[:15], 16)
-                        )
-                # carry the id through its ORIGINAL pandas dtype (no
-                # int round-trip) so null ids survive as nulls
-                yield pd.DataFrame(
-                    {
-                        iname: pdf[iname].iloc[idxs].reset_index(drop=True),
-                        gram_col: pd.Series(hs, dtype="int64"),
-                    }
-                )
+        # re.ASCII pins \s+ to Java's default [ \t\n\x0b\f\r]
+        sre = _re.compile(r"\s+", _re.ASCII)
+        for pdf in batches:
+            idxs: list[int] = []
+            hs: list[int] = []
+            for ridx, txt in enumerate(pdf[tname].tolist()):
+                if not isinstance(txt, str):
+                    continue  # NULL text → no rows (the JVM filter)
+                toks = [t for t in sre.split(txt.lower()) if t]
+                seen = set()
+                for i in range(max(len(toks) - nn, 0) + 1):
+                    g = " ".join(toks[i:i + nn])
+                    if g in seen or (de and g == ""):
+                        continue
+                    seen.add(g)
+                    idxs.append(ridx)
+                    hs.append(
+                        int(_hl.md5(g.encode("utf-8")).hexdigest()[:15], 16)
+                    )
+            # carry the id through its ORIGINAL pandas dtype (no
+            # int round-trip) so null ids survive as nulls
+            yield pd.DataFrame(
+                {
+                    iname: pdf[iname].iloc[idxs].reset_index(drop=True),
+                    gram_col: pd.Series(hs, dtype="int64"),
+                }
+            )
 
-        return df.select(id_col, text_col).mapInPandas(
-            gen, schema=f"`{id_col}` {idt}, `{gram_col}` long"
-        )
-    g = F.array_distinct(text.shingles(text_col, n))
-    out = (
-        df.withColumn("__gs", g)
-        .select(
-            F.col(id_col),
-            F.explode_outer(F.transform(F.col("__gs"), text.token_hash60)).alias(
-                gram_col
-            ),
-        )
-        .filter(F.col(gram_col).isNotNull())
+    return df.select(id_col, text_col).mapInPandas(
+        gen, schema=f"`{id_col}` {idt}, `{gram_col}` long"
     )
-    if drop_empty:
-        # md5("")[:15] as the 60-bit int — the phantom gram's constant
-        empty_hash = int(hashlib.md5(b"").hexdigest()[:15], 16)
-        out = out.filter(F.col(gram_col) != empty_hash)
-    return out
 
 
 def contamination_pairs(
@@ -1033,7 +1004,6 @@ def repetition_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     gram_ns: tuple[int, ...] = (2, 3),
-    impl: str = "kernel",
 ) -> DataFrame:
     """Intra-document repetition metrics (the Gopher/MassiveText
     repetition-removal rules, Rae et al. 2021 §A1.1): per document,
@@ -1056,90 +1026,24 @@ def repetition_stats(
     All ratios round to 4 places and are 0.0 (never null) for empty /
     NULL text.
 
-    ``impl`` picks the physical form (round 16):
-
-    - ``"kernel"`` (default): ONE Arrow-batched pass computing every
-      ratio as a struct — split/trim/tokenize once, line multiset and
-      both gram multisets counted in Python. Bit-identical (parity
-      pinned by ``test_repetition_stats_kernel_matches_jvm`` and the
-      pure-python reference property test over both impls). The JVM
-      spelling carried **11.75 s executor CPU in one stage** at sf0.1
-      (REST profile): an interpreted regexp-trim PER LINE, interpreted
-      length folds over lines AND distinct lines, and one interpreted
-      ``array_join(slice)`` PER GRAM per n — HOFs never codegen.
-      Marked non-deterministic (the seq-kernel discipline).
-    - ``"jvm"``: the original higher-order-function form — no Python
-      in the plan; no shuffle, no explode either way.
+    Scale: ONE Arrow-batched pass computing every ratio as a struct —
+    split/trim/tokenize once, line multiset and both gram multisets
+    counted in Python; no shuffle, no explode. The expression spelling
+    carried **11.75 s executor CPU in one stage** at sf0.1 (an
+    interpreted regexp-trim per line and one ``array_join(slice)`` per
+    gram: higher-order functions never codegen);
+    ``test_repetition_stats_kernel_matches_jvm`` pins row parity against
+    it (``tests/jvm_reference.py``). Marked non-deterministic (the
+    seq-kernel discipline).
     """
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
-    if impl == "kernel":
-        fields = ["dup_line_frac", "dup_line_char_frac"] + [
-            f"dup_{n}gram_frac" for n in gram_ns
-        ]
-        tmp = "__rep_struct"
-        st = _repetition_kernel_udf(tuple(gram_ns))(F.col(text_col))
-        return df.withColumn(tmp, st).select(
-            *df.columns, *[F.col(tmp)[f].alias(f) for f in fields]
-        )
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    raw_lines = F.split(txt, "\n")
-    # full whitespace strip, NOT F.trim: trim strips only ASCII spaces,
-    # so a line ending in \t or \r would keep its phantom edge (the
-    # reference semantics are Python's l.strip()); also a lambda, not a
-    # bare function reference — transform calls f(element, index) and
-    # trim-family second params are TRIM-CHARACTER SETS (both caught by
-    # the hypothesis reference-parity test)
-    lines_expr = F.filter(
-        F.transform(
-            raw_lines, lambda l: F.regexp_replace(l, r"^\s+|\s+$", "")
-        ),
-        lambda l: l != "",
+    fields = ["dup_line_frac", "dup_line_char_frac"] + [
+        f"dup_{n}gram_frac" for n in gram_ns
+    ]
+    tmp = "__rep_struct"
+    st = _repetition_kernel_udf(tuple(gram_ns))(F.col(text_col))
+    return df.withColumn(tmp, st).select(
+        *df.columns, *[F.col(tmp)[f].alias(f) for f in fields]
     )
-    # multi-referenced expensive expressions route through columns
-    # (expression trees are TREES — inlining lines/distinct-lines would
-    # re-evaluate the split+trim+filter per metric)
-    out = df.withColumn("__lines", lines_expr).withColumn(
-        "__dlines", F.array_distinct(F.col("__lines"))
-    )
-    lines, dlines = F.col("__lines"), F.col("__dlines")
-    n_lines = F.size(lines)
-    chars = lambda arr: F.aggregate(  # noqa: E731
-        arr, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    line_chars = chars(lines)
-    out = out.withColumn(
-        "dup_line_frac",
-        F.round(
-            (n_lines - F.size(dlines)) / F.greatest(n_lines, F.lit(1)), 4
-        ).cast("double"),
-    )
-    out = out.withColumn(
-        "dup_line_char_frac",
-        F.round(
-            (line_chars - chars(dlines))
-            / F.greatest(line_chars, F.lit(1)).cast("double"),
-            4,
-        ),
-    )
-    for n in gram_ns:
-        # shingles() pads short docs to one window; an n-token-or-shorter
-        # doc has no real n-gram repeats, so clamp via the token count
-        out = out.withColumn("__grams", text.shingles(text_col, n)).withColumn(
-            "__ntok", F.size(text.tokens(txt))
-        )
-        grams, ntok = F.col("__grams"), F.col("__ntok")
-        n_grams = F.when(ntok >= n, F.size(grams)).otherwise(F.lit(0))
-        n_dist = F.when(ntok >= n, F.size(F.array_distinct(grams))).otherwise(
-            F.lit(0)
-        )
-        out = out.withColumn(
-            f"dup_{n}gram_frac",
-            F.round(
-                (n_grams - n_dist) / F.greatest(n_grams, F.lit(1)), 4
-            ).cast("double"),
-        ).drop("__grams", "__ntok")
-    return out.drop("__lines", "__dlines")
 
 
 def _repetition_kernel_udf(gram_ns: tuple[int, ...]):
@@ -1590,7 +1494,6 @@ def dsir_weights(
     n_buckets: int = 4096,
     alpha: float = 1.0,
     out: str = "dsir_weight",
-    impl: str = "kernel",
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every raw
@@ -1614,24 +1517,11 @@ def dsir_weights(
     """
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
-    model = dsir_model(
-        df, target, text_col=text_col, n_buckets=n_buckets, impl=impl
-    )
+    model = dsir_model(df, target, text_col=text_col, n_buckets=n_buckets)
     return dsir_score(
         df, model, id_col=id_col, text_col=text_col,
-        n_buckets=n_buckets, alpha=alpha, out=out, impl=impl,
+        n_buckets=n_buckets, alpha=alpha, out=out,
     )
-
-
-def _dsir_grams(col: Column) -> Column:
-    # unigrams + word bigrams; the degenerate shingles of sub-2-token
-    # docs (the lone token / the empty string) are filtered so a
-    # 1-token doc doesn't double-count itself
-    uni = text.tokens(col)
-    bi = F.filter(
-        text.shingles(col, 2), lambda g: (g != "") & ~g.rlike(r"^\S+$")
-    )
-    return F.concat(uni, bi)
 
 
 def _dsir_bucket_kernel(n_buckets: int, id_field: str | None, text_field: str):
@@ -1698,7 +1588,6 @@ def dsir_model(
     target: DataFrame,
     text_col: str = "text",
     n_buckets: int = 4096,
-    impl: str = "kernel",
 ) -> DataFrame:
     """The DSIR model as a standalone, PERSISTABLE artifact: the
     (bucket, __raw, __tgt) hashed-n-gram count table both distributions
@@ -1716,33 +1605,20 @@ def dsir_model(
     Scale: one partial-agg shuffle per corpus, each collapsing to at
     most ``n_buckets`` rows (metadata by construction — the hashing
     trick's size story); localCheckpointed because the totals
-    aggregate and the scoring join both read it.
-
-    ``impl="kernel"`` (default, round 16): the gram/bucket pass is one
-    Arrow ``mapInPandas`` per corpus — the JVM spelling's
-    tokens/shingles/filter HOF chain plus per-gram md5 is interpreted
-    per gram (the two fit stages carried 6.9 + 7.7 s of executor CPU at
-    sf0.1); bit-identical buckets (``test_dsir_kernel_matches_jvm``).
-    ``impl="jvm"`` keeps the expression form.
+    aggregate and the scoring join both read it. The gram/bucket pass
+    is one Arrow ``mapInPandas`` per corpus: the expression spelling's
+    tokens/shingles/filter chain plus per-gram md5 ran interpreted per
+    gram (its two fit stages carried 6.9 + 7.7 s of executor CPU at
+    sf0.1). ``test_dsir_kernel_matches_jvm`` pins bucket parity against
+    that spelling in ``tests/jvm_reference.py``.
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
 
     def dist(frame: DataFrame, name: str) -> DataFrame:
-        if impl == "kernel":
-            buckets = frame.select(F.col(text_col)).mapInPandas(
-                _dsir_bucket_kernel(n_buckets, None, text_col), "`__b` long"
-            )
-        else:
-            buckets = frame.select(
-                F.explode(_dsir_grams(F.col(text_col))).alias("__g")
-            ).select(
-                F.pmod(text.token_hash60(F.col("__g")), F.lit(n_buckets)).alias(
-                    "__b"
-                )
-            )
+        buckets = frame.select(F.col(text_col)).mapInPandas(
+            _dsir_bucket_kernel(n_buckets, None, text_col), "`__b` long"
+        )
         return buckets.groupBy("__b").agg(F.count(F.lit(1)).alias(name))
 
     return (
@@ -1760,7 +1636,6 @@ def dsir_score(
     n_buckets: int = 4096,
     alpha: float = 1.0,
     out: str = "dsir_weight",
-    impl: str = "kernel",
 ) -> DataFrame:
     """Score a frame against a prebuilt ``dsir_model`` table: mean
     add-``alpha``-smoothed log-likelihood ratio over the document's
@@ -1773,48 +1648,30 @@ def dsir_score(
     one groupBy(doc); the totals row is a 1-row scalar crossJoin
     (plan-lint-allowlisted decorrelated-scalar shape). No corpus-sized
     state — the model is the only cross-frame input, and it is
-    ``n_buckets`` rows. ``impl`` as in ``dsir_model`` (the kernel
-    emits (id, bucket) occurrence rows directly; gramless docs emit
-    one NULL-bucket row, the ``explode_outer`` contract).
+    ``n_buckets`` rows. The ``dsir_model`` gram kernel emits (id,
+    bucket) occurrence rows directly; gramless docs emit one
+    NULL-bucket row, the ``explode_outer`` contract.
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
     totals = model.agg(
         F.coalesce(F.sum("__raw"), F.lit(0)).alias("__raw_total"),
         F.coalesce(F.sum("__tgt"), F.lit(0)).alias("__tgt_total"),
     )
-    if impl == "kernel":
-        idt = df.schema[id_col].dataType.simpleString()
-        doc_grams = df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-            _dsir_bucket_kernel(n_buckets, id_col, text_col),
-            f"`{id_col}` {idt}, `__b` long",
-        )
-        gram_present = F.col("__b").isNotNull()
-    else:
-        doc_grams = df.select(
-            F.col(id_col),
-            F.explode_outer(
-                _dsir_grams(F.coalesce(F.col(text_col), F.lit("")))
-            ).alias("__g"),
-        ).withColumn(
-            "__b",
-            F.when(
-                F.col("__g").isNotNull(),
-                F.pmod(text.token_hash60(F.col("__g")), F.lit(n_buckets)),
-            ),
-        )
-        gram_present = F.col("__g").isNotNull()
+    idt = df.schema[id_col].dataType.simpleString()
+    doc_grams = df.select(F.col(id_col), F.col(text_col)).mapInPandas(
+        _dsir_bucket_kernel(n_buckets, id_col, text_col),
+        f"`{id_col}` {idt}, `__b` long",
+    )
     scored = (
         doc_grams.join(F.broadcast(model), "__b", "left")
         .crossJoin(F.broadcast(totals))
         .withColumn(
             "__lr",
             F.when(
-                gram_present,
+                F.col("__b").isNotNull(),
                 F.log(
                     (F.coalesce(F.col("__tgt"), F.lit(0)) + F.lit(alpha))
                     / (F.col("__tgt_total") + F.lit(alpha) * n_buckets)

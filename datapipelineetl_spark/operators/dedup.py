@@ -41,45 +41,26 @@ def minhash_signature(
     text_col: str = "text",
     out: str = "minhash",
     num_hashes: int = 16,
-    impl: str = "kernel",
 ) -> DataFrame:
     """Per-row MinHash signature (array<long>, length ``num_hashes``).
 
     sig_i = min over distinct tokens of (a_i*(h60(tok) mod P)+b_i) mod P.
-    Narrow, no shuffle; O(tokens × num_hashes) per row. ``impl`` picks
-    the physical form (round 16):
-
-    - ``"kernel"`` (default): ONE Arrow-batched pass — tokenize
-      (``str.lower()`` + the ``re.ASCII``-pinned ``\\s+`` split, the
-      Java-``\\s`` parity the ngram/BPE kernels established), md5-60
-      per distinct token, then all ``num_hashes`` affine rows as one
-      vectorized int64 min (a·h+b < 2³⁹ — exact). Bit-identical to the
-      JVM form (parity pinned by
-      ``test_minhash_signature_kernel_matches_jvm``); the JVM
-      spelling's 1 + num_hashes ``transform``/``array_min`` chains are
-      higher-order functions that never enter whole-stage codegen, so
-      every token × hash step paid interpreted evaluation (measured
-      2.8 s vs 0.16 s for the bare token split on the sf0.1 corpus).
-      Marked non-deterministic so an inferred filter cannot duplicate
-      the ArrowEvalPython node (the seq-kernel discipline).
-    - ``"jvm"``: the original fold — no Python worker in the plan.
+    Narrow, no shuffle; O(tokens × num_hashes) per row, in ONE
+    Arrow-batched pass — tokenize (``str.lower()`` + the
+    ``re.ASCII``-pinned ``\\s+`` split, the Java-``\\s`` parity the
+    ngram/BPE kernels established), md5-60 per distinct token, then all
+    ``num_hashes`` affine rows as one vectorized int64 min (a·h+b < 2³⁹
+    — exact). The expression spelling's ``transform``/``array_min``
+    chains never enter whole-stage codegen (measured 2.8 s vs 0.16 s
+    for the bare token split on the sf0.1 corpus);
+    ``test_minhash_signature_kernel_matches_jvm`` pins parity against it
+    (``tests/jvm_reference.py``). Marked non-deterministic so an
+    inferred filter cannot duplicate the ArrowEvalPython node (the
+    seq-kernel discipline).
     """
     if num_hashes > len(MINHASH_COEFFS):
         raise ValueError(f"num_hashes ≤ {len(MINHASH_COEFFS)}")
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
-    if impl == "kernel":
-        return df.withColumn(
-            out, _minhash_kernel_udf(num_hashes)(F.col(text_col))
-        )
-    hs = F.transform(tokens(text_col, distinct=True), lambda t: token_hash60(t) % MINHASH_P)
-    sig = F.array(
-        *[
-            F.array_min(F.transform(hs, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P))
-            for a, b in MINHASH_COEFFS[:num_hashes]
-        ]
-    )
-    return df.withColumn(out, sig)
+    return df.withColumn(out, _minhash_kernel_udf(num_hashes)(F.col(text_col)))
 
 
 def _minhash_kernel_udf(num_hashes: int):

@@ -371,7 +371,6 @@ def bloom_flag_contaminated(
     n: int = 8,
     k: int = 2,
     hex_width: int = BLOOM_HEX_WIDTH,
-    impl: str = "kernel",
 ) -> DataFrame:
     """Flag corpus documents whose word ``n``-grams hit the benchmark
     Bloom filter: returns (id_col, n_grams, n_bloom_hits,
@@ -383,22 +382,17 @@ def bloom_flag_contaminated(
     replays them.
 
     Scale (the reason this exists next to ``contaminated_ids``): the
-    corpus side is NARROW — gram + position arrays are per-row column
-    math, the bit test is one Arrow-batched mapInPandas against the
-    BROADCAST <=128 KiB bitset, and the output is one row per input
-    row. No shuffle of corpus grams, no join; the exact-join form
-    shuffles O(corpus x grams/doc) rows. At 100 TB the bitset rides
-    the broadcast once per executor and contamination becomes a
-    map-only pass.
-
-    ``impl="kernel"`` (default, round 16): the gram construction + md5
-    hashing happen INSIDE the same Arrow pass as the bit test — text
-    crosses the boundary once and the JVM's interpreted shingle/md5
-    ``transform`` chains disappear (they carried most of the
-    corpus-side CPU; same bit-exact gram/hash parity as
-    ``corpus.ngram_hashes``, pinned by
-    ``test_bloom_flag_kernel_matches_jvm``). ``impl="jvm"`` keeps the
-    expression-side gram/hash feeding the Arrow bit test.
+    corpus side is NARROW — gram construction, md5 positions and the
+    bit test against the BROADCAST <=128 KiB bitset all run inside ONE
+    Arrow-batched pass (``_bloom_flag_fused``), and the output is one
+    row per input row. No shuffle of corpus grams, no join; the
+    exact-join form shuffles O(corpus x grams/doc) rows. At 100 TB the
+    bitset rides the broadcast once per executor and contamination
+    becomes a map-only pass. Text crosses the Arrow boundary once: the
+    expression spelling's interpreted shingle/md5 ``transform`` chains
+    carried most of the corpus-side CPU.
+    ``test_bloom_flag_kernel_matches_jvm`` pins parity against that
+    spelling (``tests/jvm_reference.py``).
     """
     expected = 16**hex_width // 8
     if bitset.dtype != np.uint8 or bitset.size != expected:
@@ -406,97 +400,8 @@ def bloom_flag_contaminated(
             f"bitset must be uint8[{expected}] for hex_width {hex_width}, "
             f"got {bitset.dtype}[{bitset.size}]"
         )
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(bitset.tobytes())
-    if impl == "kernel":
-        return _bloom_flag_fused(corpus, bc, id_col, text_col, n, k, hex_width)
-
-    grams = _distinct_grams(corpus, text_col, n)
-    # when every slice fits in the 60-bit md5 prefix (k*hex_width <=
-    # 15 hex chars — true for all the defaults), ship ONE long per
-    # gram and derive the k positions numpy-side: k x less Arrow
-    # volume and one conv per gram instead of k inside the
-    # interpreted transform lambda
-    compact = k * hex_width <= 15
-    if compact:
-        per_gram = F.transform(grams, token_hash60)
-    else:
-        md5s = F.transform(grams, F.md5)
-        per_gram = F.flatten(
-            F.transform(
-                md5s, lambda m: _positions_from_md5(m, k, hex_width)
-            )
-        )
-    # n_grams is NOT computed here: interpreted array lambdas don't
-    # share subexpressions, so a size(grams) column would re-run the
-    # whole shingle construction a second time — the kernel derives it
-    # from the list lengths instead
-    prepared = corpus.select(F.col(id_col), per_gram.alias("__pos"))
-
-    id_field = prepared.schema[id_col]
-    out_schema = (
-        f"`{id_col}` {id_field.dataType.simpleString()}, n_grams int, "
-        "n_bloom_hits int, bloom_contaminated int"
-    )
-
-    def _flag(batches):
-        # mapInArrow, not mapInPandas: the positions column is a
-        # list<long> whose pandas conversion materializes one numpy
-        # object per ROW — Arrow's ListArray instead hands over the
-        # flat values buffer zero-copy, and the whole bit test
-        # vectorizes with no per-row Python (measured ~2x off the
-        # corpus-side pass at the 10x corpus)
-        import pyarrow as pa  # executor-side
-        import pyarrow.compute as pc  # explicit: pa.compute is NOT
-        # resolvable from a bare `import pyarrow` — it only worked via
-        # to_numpy()'s internal import side effect (review finding)
-
-        bits = np.frombuffer(bc.value, dtype=np.uint8)
-        if compact:
-            mask = 16**hex_width - 1
-            shifts = np.array(
-                [4 * (15 - hex_width * (j + 1)) for j in range(k)],
-                dtype=np.int64,
-            )
-        for rb in batches:
-            pos = rb.column(rb.schema.get_field_index("__pos"))
-            flat = pos.flatten().to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            lengths = pc.list_value_length(pos).to_numpy(
-                zero_copy_only=False
-            )
-            lengths = np.nan_to_num(lengths.astype(np.float64)).astype(
-                np.int64
-            )  # null lists (never produced upstream) count as empty
-            if compact:
-                # (G, k) positions from the 60-bit prefixes
-                matrix = (flat[:, None] >> shifts[None, :]) & mask
-            else:
-                matrix = flat.reshape(-1, k)
-            set_ = (
-                bits[matrix >> 3] & (1 << (matrix & 7)).astype(np.uint8)
-            ) != 0
-            gram_hits = set_.all(axis=1)
-            grams_per_row = lengths if compact else lengths // k
-            bounds = np.zeros(len(lengths) + 1, dtype=np.int64)
-            np.cumsum(grams_per_row, out=bounds[1:])
-            csum = np.zeros(gram_hits.size + 1, dtype=np.int64)
-            np.cumsum(gram_hits, out=csum[1:])
-            hits = (csum[bounds[1:]] - csum[bounds[:-1]]).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index(id_col)),
-                    pa.array(grams_per_row.astype(np.int32), type=pa.int32()),
-                    pa.array(hits, type=pa.int32()),
-                    pa.array((hits > 0).astype(np.int32), type=pa.int32()),
-                ],
-                names=[id_col, "n_grams", "n_bloom_hits", "bloom_contaminated"],
-            )
-
-    return prepared.mapInArrow(_flag, schema=out_schema)
+    bc = corpus.sparkSession.sparkContext.broadcast(bitset.tobytes())
+    return _bloom_flag_fused(corpus, bc, id_col, text_col, n, k, hex_width)
 
 
 def _bloom_flag_fused(

@@ -298,7 +298,6 @@ def with_winnowing_fingerprints(
     out: str = "winnow_fps",
     k: int = 5,
     window: int = 4,
-    impl: str = "kernel",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer–Wilkerson–Aiken,
     SIGMOD'03): hash every character ``k``-gram, then keep the minimum
@@ -312,26 +311,17 @@ def with_winnowing_fingerprints(
     fewer k-grams than ``window`` → the single global min (the standard
     short-document convention).
 
-    ``impl`` picks the physical form (round 16):
-
-    - ``"kernel"`` (default): ONE Arrow-batched pass — ``str.lower()``
-      (the established lowercase parity), per-character-k-gram md5-60
-      with a per-task gram memo, vectorized sliding-window min,
-      ``np.unique`` for the distinct-sort. Bit-identical arrays to the
-      JVM form (parity pinned by
-      ``test_winnowing_kernel_matches_jvm``); the JVM spelling's
-      ``transform``/``array_min(slice)`` chains are higher-order
-      functions that never enter whole-stage codegen, so every k-gram
-      paid interpreted md5 AND every window position an interpreted
-      slice+min (stage CPU 10.5 s at sf0.1; the kernel's A/B numbers
-      live in OPTIMIZATION_r16.md). Marked non-deterministic so an
-      inferred filter cannot duplicate the ArrowEvalPython node (the
-      seq-kernel discipline).
-    - ``"jvm"``: the original per-row array math — transform over a
-      sequence, no explode, no Python worker in the plan; the right
-      form when the scan side must stay UDF-free. Cost is O(len × k)
-      interpreted md5 work (same cross-engine-parity tradeoff as the
-      module docstring; xxhash64 is the deployment swap).
+    ONE Arrow-batched pass — ``str.lower()`` (the established
+    lowercase parity), per-character-k-gram md5-60 with a per-task gram
+    memo, vectorized sliding-window min, ``np.unique`` for the
+    distinct-sort. The expression spelling's ``transform``/
+    ``array_min(slice)`` chains never enter whole-stage codegen, so
+    every k-gram paid interpreted md5 and every window position an
+    interpreted slice+min (stage CPU 10.5 s at sf0.1; the A/B lives in
+    OPTIMIZATION_r16.md). ``test_winnowing_kernel_matches_jvm`` pins
+    parity against that spelling (``tests/jvm_reference.py``). Marked
+    non-deterministic so an inferred filter cannot duplicate the
+    ArrowEvalPython node (the seq-kernel discipline).
 
     Downstream, docs sharing any fingerprint are collision candidates:
     ``explode(winnow_fps)`` + groupBy is the same bucketed O(n×fps)
@@ -339,47 +329,7 @@ def with_winnowing_fingerprints(
     """
     if k < 1 or window < 1:
         raise ValueError(f"k and window must be >= 1, got k={k} window={window}")
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
-    if impl == "kernel":
-        return df.withColumn(out, _winnow_kernel_udf(k, window)(F.col(text_col)))
-    norm = F.lower(F.col(text_col))
-    n_grams = F.length(norm) - k + 1
-    # sequence(1, n) with n < 1 generates a DESCENDING sequence — guard
-    # every branch explicitly instead of relying on greatest() clamps.
-    hs_expr = F.when(
-        n_grams >= 1,
-        F.transform(
-            F.sequence(F.lit(1), n_grams),
-            lambda i: token_hash60(norm.substr(i, F.lit(k))),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    # Materialize the k-gram hash array ONCE per row. Column expressions
-    # are trees, not DAGs: referencing the raw `hs_expr` from inside the
-    # window-min transform lambda would re-inline (and re-evaluate) the
-    # whole O(len·k) md5 array at EVERY window position — O(len²·k) per
-    # row, measured 22× slower on 300-char docs. A withColumn alias that
-    # is multi-referenced and non-cheap is kept un-inlined by
-    # CollapseProject, so the hash array is computed once (same pattern
-    # as with_simhash's counts column).
-    tmp = f"__{out}_hs"
-    df2 = df.withColumn(tmp, hs_expr)
-    hs = F.col(tmp)
-    n_hs = F.size(hs)
-    mins = (
-        F.when(
-            n_hs >= window,
-            F.transform(
-                F.sequence(F.lit(1), n_hs - window + 1),
-                lambda w: F.array_min(F.slice(hs, w, window)),
-            ),
-        )
-        .when(n_hs >= 1, F.array(F.array_min(hs)))
-        .otherwise(F.lit(None).cast("array<long>"))
-    )
-    return df2.withColumn(
-        out, F.coalesce(F.array_sort(F.array_distinct(mins)), F.array().cast("array<long>"))
-    ).drop(tmp)
+    return df.withColumn(out, _winnow_kernel_udf(k, window)(F.col(text_col)))
 
 
 def _winnow_kernel_udf(k: int, window: int):
@@ -438,61 +388,22 @@ def _winnow_kernel_udf(k: int, window: int):
 
 def with_simhash(
     df: DataFrame, text_col: str = "text", out: str = "simhash", bits: int = 32,
-    impl: str = "kernel",
 ) -> DataFrame:
     """SimHash document fingerprint over the distinct token set.
 
     Per bit b: sum over tokens of ±1 by token-hash bit b; bit set iff the
     sum is positive. Near-duplicate docs differ in few bits (compare with
-    ``bit_count(simhash ⊕ simhash')``). Entirely per-row either way — no
-    explode, no shuffle.
-
-    ``impl`` picks the physical form (round 16):
-
-    - ``"kernel"`` (default): ONE Arrow-batched pass — established
-      tokenizer parity, md5-60 per distinct token (per-task memo), then
-      the whole bits×tokens bit-count matrix as one numpy reduction.
-      Bit-identical signatures (parity pinned by
-      ``test_simhash_kernel_matches_jvm``). The JVM spelling pays
-      ~``bits`` interpreted ops PER TOKEN (the aggregate/zip_with chain
-      below never enters codegen) — the minhash-class per-token weight
-      where the Arrow boundary amortizes (A/B in OPTIMIZATION_r16.md).
-      Marked non-deterministic (the seq-kernel discipline).
-    - ``"jvm"``: the original fold — no Python worker in the plan; the
-      signature computation is O(tokens × bits) interpreted.
+    ``bit_count(simhash ⊕ simhash')``). Entirely per-row — no explode,
+    no shuffle: ONE Arrow-batched pass (established tokenizer parity,
+    md5-60 per distinct token with a per-task memo, then the whole
+    bits×tokens bit-count matrix as one numpy reduction). The
+    expression spelling paid ~``bits`` interpreted ops PER TOKEN (an
+    aggregate/zip_with chain that never enters codegen; A/B in
+    OPTIMIZATION_r16.md); ``test_simhash_kernel_matches_jvm`` pins
+    parity against it (``tests/jvm_reference.py``). Marked
+    non-deterministic (the seq-kernel discipline).
     """
-    if impl not in ("kernel", "jvm"):
-        raise ValueError(f"impl must be 'kernel' or 'jvm', got {impl!r}")
-    if impl == "kernel":
-        return df.withColumn(out, _simhash_kernel_udf(bits)(F.col(text_col)))
-    toks = tokens(text_col, distinct=True)
-    hs = F.transform(toks, token_hash60)
-    # Single-pass accumulation of all per-bit ones-counts. Column
-    # expressions are trees, not DAGs: referencing `hs` from `bits`
-    # separate filter() calls would re-evaluate the md5 hash of every
-    # token `bits` times (and higher-order functions don't codegen, so no
-    # CSE rescues it) — measured 32× slower than this one aggregate.
-    counts = F.aggregate(
-        hs,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[F.shiftright(h, b).bitwiseAND(F.lit(1)).cast("long") for b in range(bits)]
-            ),
-            lambda a, x: a + x,
-        ),
-    )
-    # Materialize counts/total as columns: CollapseProject keeps expensive
-    # multi-referenced aliases un-inlined, so the aggregate runs once.
-    tmp_c, tmp_t = f"__{out}_counts", f"__{out}_total"
-    df2 = df.withColumn(tmp_c, counts).withColumn(tmp_t, F.size(toks))
-    sig: Column = F.lit(0).cast("long")
-    for b in range(bits):
-        sig = sig + F.when(
-            F.col(tmp_c)[b] * 2 > F.col(tmp_t), F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return df2.withColumn(out, sig).drop(tmp_c, tmp_t)
+    return df.withColumn(out, _simhash_kernel_udf(bits)(F.col(text_col)))
 
 
 def _simhash_kernel_udf(bits: int):

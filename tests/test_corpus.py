@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datapipelineetl_spark.operators import corpus
+from tests import jvm_reference
 
 
 @pytest.fixture(scope="module")
@@ -447,7 +448,7 @@ def test_normalize_url_ports_are_scheme_specific(spark):
 def test_repetition_stats_gopher_rules(spark):
     """Gopher-style intra-doc repetition: line and n-gram duplicate
     fractions, by count and by characters; NULL/empty text → all zeros,
-    never null; the plan stays narrow (pure array math)."""
+    never null; the plan stays narrow (one Arrow eval, no Exchange)."""
     df = spark.createDataFrame(
         [(1, "a b\na b\nc d"),   # 1 of 3 lines repeated; 1 of 5 bigrams
          (2, "x y z w v u"),
@@ -455,32 +456,26 @@ def test_repetition_stats_gopher_rules(spark):
          (4, "t t t t t")],      # degenerate repetition
         "doc_id int, text string",
     )
-    for impl in ("kernel", "jvm"):
-        out = {r.doc_id: r for r in corpus.repetition_stats(df, impl=impl).collect()}
-        assert out[1].dup_line_frac == 0.3333, impl
-        assert out[1].dup_line_char_frac == 0.3333  # 3 of 9 chars
-        assert out[1].dup_2gram_frac == 0.2
-        assert out[1].dup_3gram_frac == 0.0
-        assert out[2].dup_line_frac == 0.0 and out[2].dup_2gram_frac == 0.0
-        assert out[3].dup_line_frac == 0.0 and out[3].dup_3gram_frac == 0.0
-        assert out[4].dup_2gram_frac == 0.75 and out[4].dup_3gram_frac == 0.6667
-    # jvm impl: pure array math, no Exchange and no Python anywhere
-    plan = (
-        corpus.repetition_stats(df, impl="jvm")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan and "EvalPython" not in plan
-    # kernel default: exactly one Arrow eval, still no Exchange
+    out = {r.doc_id: r for r in corpus.repetition_stats(df).collect()}
+    assert out[1].dup_line_frac == 0.3333
+    assert out[1].dup_line_char_frac == 0.3333  # 3 of 9 chars
+    assert out[1].dup_2gram_frac == 0.2
+    assert out[1].dup_3gram_frac == 0.0
+    assert out[2].dup_line_frac == 0.0 and out[2].dup_2gram_frac == 0.0
+    assert out[3].dup_line_frac == 0.0 and out[3].dup_3gram_frac == 0.0
+    assert out[4].dup_2gram_frac == 0.75 and out[4].dup_3gram_frac == 0.6667
+    # exactly one Arrow eval, no Exchange
     plan_k = corpus.repetition_stats(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan_k and "BatchEvalPython" not in plan_k
     assert "ArrowEvalPython" in plan_k
-    with pytest.raises(ValueError, match="impl"):
-        corpus.repetition_stats(df, impl="nope")
+    with pytest.raises(TypeError):
+        corpus.repetition_stats(df, impl="kernel")
 
 
 def test_repetition_stats_kernel_matches_jvm(spark):
     r"""Round-16 optimization guard: the Arrow repetition kernel must
-    emit row-identical ratios to the JVM HOF form on the hard edges —
+    emit row-identical ratios to the JVM HOF reference
+    (tests/jvm_reference.py) on the hard edges —
     Java-vs-Python whitespace trim (NBSP is NOT \s, so it neither
     trims nor splits), CRLF line ends (\r trims off), unicode case
     mapping in gram text, tab/space runs, NULL/empty text, and
@@ -499,11 +494,11 @@ def test_repetition_stats_kernel_matches_jvm(spark):
     for gram_ns in ((2, 3), ()):
         jvm = {
             r.doc_id: r.asDict()
-            for r in corpus.repetition_stats(df, gram_ns=gram_ns, impl="jvm").collect()
+            for r in jvm_reference.repetition_stats(df, gram_ns=gram_ns).collect()
         }
         ker = {
             r.doc_id: r.asDict()
-            for r in corpus.repetition_stats(df, gram_ns=gram_ns, impl="kernel").collect()
+            for r in corpus.repetition_stats(df, gram_ns=gram_ns).collect()
         }
         assert jvm == ker, gram_ns
 
@@ -1145,11 +1140,12 @@ def test_pack_best_fit_tighter_than_greedy(spark):
 def test_dsir_kernel_matches_jvm(spark):
     """Round-16 optimization guard: the Arrow DSIR gram/bucket kernel
     must emit row-identical model tables AND per-doc weights to the JVM
-    explode/hash form — per-OCCURRENCE unigram+bigram multisets
-    (repeated grams count twice), the degenerate-shingle filter
-    (1-token and empty docs contribute no bigram), zero-gram and NULL
-    docs keeping their (n_grams 0, NULL weight) row, NBSP/unicode-case
-    tokenizer parity, and pmod-vs-%% bucket equality."""
+    explode/hash reference (tests/jvm_reference.py) — per-OCCURRENCE
+    unigram+bigram multisets (repeated grams count twice), the
+    degenerate-shingle filter (1-token and empty docs contribute no
+    bigram), zero-gram and NULL docs keeping their (n_grams 0, NULL
+    weight) row, NBSP/unicode-case tokenizer parity, and pmod-vs-%%
+    bucket equality."""
     rows = [
         (1, "the quick brown fox the quick"),      # repeated grams
         (2, "solo"),                                # 1 token: no bigram
@@ -1163,20 +1159,22 @@ def test_dsir_kernel_matches_jvm(spark):
     target = df.filter(F.col("doc_id") % 2 == 1)
     for nb in (7, 4096):
         mj = {r["__b"]: (r["__raw"], r["__tgt"])
-              for r in corpus.dsir_model(df, target, n_buckets=nb, impl="jvm").collect()}
+              for r in jvm_reference.dsir_model(df, target, n_buckets=nb).collect()}
         mk = {r["__b"]: (r["__raw"], r["__tgt"])
-              for r in corpus.dsir_model(df, target, n_buckets=nb, impl="kernel").collect()}
+              for r in corpus.dsir_model(df, target, n_buckets=nb).collect()}
         assert mj == mk, nb
         wj = {r.doc_id: (r.n_grams, r.dsir_weight)
-              for r in corpus.dsir_weights(df, target, n_buckets=nb, impl="jvm").collect()}
+              for r in jvm_reference.dsir_weights(df, target, n_buckets=nb).collect()}
         wk = {r.doc_id: (r.n_grams, r.dsir_weight)
-              for r in corpus.dsir_weights(df, target, n_buckets=nb, impl="kernel").collect()}
+              for r in corpus.dsir_weights(df, target, n_buckets=nb).collect()}
         assert wj == wk, nb
         assert wk[3] == (0, None) and wk[4] == (0, None)
-    with pytest.raises(ValueError, match="impl"):
-        corpus.dsir_model(df, target, impl="nope")
-    with pytest.raises(ValueError, match="impl"):
-        corpus.dsir_score(df, corpus.dsir_model(df, target), impl="nope")
+    with pytest.raises(TypeError):
+        corpus.dsir_model(df, target, impl="kernel")
+    with pytest.raises(TypeError):
+        corpus.dsir_score(df, corpus.dsir_model(df, target), impl="kernel")
+    with pytest.raises(TypeError):
+        corpus.dsir_weights(df, target, impl="kernel")
 
 
 def test_dsir_resample_gumbel_topk(spark):
@@ -1326,10 +1324,11 @@ def test_temperature_mix_join_dispatch_parity(spark):
 def test_ngram_hashes_kernel_matches_jvm(spark):
     """Round-16 optimization guard: the Arrow ``ngram_hashes`` kernel
     (str.lower + re.ASCII ``\\s+`` split + hashlib md5-60) must emit
-    row-identical (id, hash) multisets to the original JVM
-    shingle/explode form — including Java-vs-Python whitespace
-    semantics (NBSP is NOT split), unicode case mapping, empty and
-    NULL text, sub-n-token docs, and the drop_empty phantom gram."""
+    row-identical (id, hash) multisets to the JVM shingle/explode
+    reference (tests/jvm_reference.py) — including Java-vs-Python
+    whitespace semantics (NBSP is NOT split), unicode case mapping,
+    empty and NULL text, sub-n-token docs, and the drop_empty phantom
+    gram."""
     rows = [
         (1, "The quick\tbrown FOX\njumps over the lazy dog and more words"),
         (2, "a b c d e f g h i j"),  # NBSP glues tokens
@@ -1345,17 +1344,13 @@ def test_ngram_hashes_kernel_matches_jvm(spark):
         for de in (True, False):
             jvm = sorted(
                 (r["doc_id"], r["__g"])
-                for r in corpus.ngram_hashes(
-                    df, n=n, drop_empty=de, impl="jvm"
-                ).collect()
+                for r in jvm_reference.ngram_hashes(df, n=n, drop_empty=de).collect()
             )
             ker = sorted(
                 (r["doc_id"], r["__g"])
-                for r in corpus.ngram_hashes(
-                    df, n=n, drop_empty=de, impl="kernel"
-                ).collect()
+                for r in corpus.ngram_hashes(df, n=n, drop_empty=de).collect()
             )
             assert jvm == ker, (n, de)
             assert len(jvm) > 0 or n > 2
-    with pytest.raises(ValueError, match="impl"):
-        corpus.ngram_hashes(df, impl="nope")
+    with pytest.raises(TypeError):
+        corpus.ngram_hashes(df, impl="kernel")

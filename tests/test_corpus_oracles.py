@@ -121,3 +121,15 @@ def test_staged_registry_promoted():
         assert set(b.STAGED_ORACLES) <= set(q.ORACLES)
         b.register()
     assert len(entrymod.queries()) == n
+
+
+def test_bench_headline_rows_are_registered():
+    """bench.py registers through __spark_entry__ and times every
+    HEADLINE row it names: each of the 49 must be a live query, or the
+    run loop would fail on it."""
+    import __spark_entry__ as entrymod
+    import bench
+
+    assert len(bench.HEADLINE) == 49
+    assert len(set(bench.HEADLINE)) == 49
+    assert set(bench.HEADLINE) <= set(entrymod.queries())

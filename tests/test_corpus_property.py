@@ -171,12 +171,11 @@ def test_repetition_stats_matches_python_reference(spark, texts):
     separately)."""
     rows = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    for impl in ("kernel", "jvm"):
-        got = {
-            r.doc_id: (r.dup_line_frac, r.dup_line_char_frac, r.dup_2gram_frac)
-            for r in corpus.repetition_stats(df, gram_ns=(2,), impl=impl).collect()
-        }
-        _assert_repetition_reference(rows, got)
+    got = {
+        r.doc_id: (r.dup_line_frac, r.dup_line_char_frac, r.dup_2gram_frac)
+        for r in corpus.repetition_stats(df, gram_ns=(2,)).collect()
+    }
+    _assert_repetition_reference(rows, got)
 
 
 def _assert_repetition_reference(rows, got):

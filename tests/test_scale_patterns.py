@@ -164,22 +164,15 @@ def _docs(spark):
 
 
 def test_winnowing_operator_plan_is_narrow(spark):
-    """with_winnowing_fingerprints: per-row only — no Exchange either
-    way; the round-16 kernel default is exactly one Arrow eval (never
-    row-at-a-time Python), and the jvm impl stays pure array math with
-    the materialized hash array surviving optimization as its own
-    projection (the O(len²) re-inline guard; see NOTES.md
-    InferFiltersFromGenerate trap)."""
+    """with_winnowing_fingerprints: per-row only — no Exchange; the
+    round-16 kernel is exactly one Arrow eval (never row-at-a-time
+    Python)."""
     from datapipelineetl_spark.operators import text
 
     plan = _physical_plan(text.with_winnowing_fingerprints(_docs(spark)))
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan
-
-    plan_jvm = _physical_plan(text.with_winnowing_fingerprints(_docs(spark), impl="jvm"))
-    assert "Exchange" not in plan_jvm
-    assert "EvalPython" not in plan_jvm
 
 
 def test_simhash_operator_plan_is_narrow(spark):
@@ -190,21 +183,19 @@ def test_simhash_operator_plan_is_narrow(spark):
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan  # round-16 kernel default
 
-    plan_jvm = _physical_plan(text.with_simhash(_docs(spark), impl="jvm"))
-    assert "Exchange" not in plan_jvm
-    assert "EvalPython" not in plan_jvm
-
 
 def test_fingerprint_collision_join_no_inferred_generate_filter(spark):
     """The collision join must not let the optimizer push a filter
     containing the fingerprint EXPRESSION below the Generate — the
     optimized plan's Filter must reference only the generated column
     (the 36× regression class fixed in round 4)."""
-    from datapipelineetl_spark.operators import dedup, text
+    from datapipelineetl_spark.operators import dedup
+    from tests import jvm_reference
 
-    # impl="jvm": this guard is about the JVM expression form — the
-    # kernel impl has no md5 expression for the optimizer to re-inline
-    fps = text.with_winnowing_fingerprints(_docs(spark), impl="jvm")
+    # the guard needs a fingerprint column built from md5 EXPRESSIONS
+    # (the kernel has none for the optimizer to re-inline): take it from
+    # the expression-side winnowing reference
+    fps = jvm_reference.with_winnowing_fingerprints(_docs(spark))
     # materialize=False: inspect the LOGICAL shape the optimizer produces
     # (a checkpoint would hide the Generate behind an RDD scan)
     out = dedup.fingerprint_collision_pairs(

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datapipelineetl_spark.operators import sketch, text
+from tests import jvm_reference
 
 SF = "/root/testdata/sf0.001"
 
@@ -170,9 +171,9 @@ def test_bloom_no_false_negatives(spark, docs):
 
 def test_bloom_flag_kernel_matches_jvm(spark, docs):
     """Round-16 optimization guard: the fused gram+hash+bit-test kernel
-    (impl='kernel') must emit row-identical (n_grams, n_bloom_hits,
-    bloom_contaminated) to the expression-side gram/hash form
-    (impl='jvm') — in BOTH position layouts (compact 60-bit prefix at
+    must emit row-identical (n_grams, n_bloom_hits, bloom_contaminated)
+    to the expression-side gram/hash reference (tests/jvm_reference.py)
+    — in BOTH position layouts (compact 60-bit prefix at
     hex_width 4, and full-md5 slices at k*hex_width > 15), including
     NULL/empty text (the single empty gram), sub-n-token remainder
     grams, and repeated-gram dedup."""
@@ -187,16 +188,15 @@ def test_bloom_flag_kernel_matches_jvm(spark, docs):
     ).unionByName(extra.select("doc_id", F.col("text").cast("string"), "source"))
     for kk, hw in [(2, 4), (2, 8)]:   # compact and non-compact layouts
         bits = sketch.build_bloom_bitset(bench, n=8, k=kk, hex_width=hw)
-        jvm = {r.doc_id: (r.n_grams, r.n_bloom_hits, r.bloom_contaminated)
-               for r in sketch.bloom_flag_contaminated(
-                   corp, bits, n=8, k=kk, hex_width=hw, impl="jvm").collect()}
+        jvm = jvm_reference.bloom_flag_contaminated(
+            corp, bits, n=8, k=kk, hex_width=hw)
         ker = {r.doc_id: (r.n_grams, r.n_bloom_hits, r.bloom_contaminated)
                for r in sketch.bloom_flag_contaminated(
-                   corp, bits, n=8, k=kk, hex_width=hw, impl="kernel").collect()}
+                   corp, bits, n=8, k=kk, hex_width=hw).collect()}
         assert jvm == ker, (kk, hw)
         assert ker[9001][0] == 1 and ker[9002][0] == 1  # the empty gram
-    with pytest.raises(ValueError, match="impl"):
-        sketch.bloom_flag_contaminated(corp, bits, impl="nope", hex_width=8)
+    with pytest.raises(TypeError):
+        sketch.bloom_flag_contaminated(corp, bits, impl="kernel", hex_width=8)
 
 
 def test_bloom_bitset_and_param_validation(spark, docs):

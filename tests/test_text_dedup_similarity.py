@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datapipelineetl_spark.operators import dedup, multimodal, similarity, text
+from tests import jvm_reference
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -199,11 +200,11 @@ def test_token_set_fingerprint_kernel_matches_jvm(spark):
 def test_minhash_signature_kernel_matches_jvm(spark):
     """Round-16 optimization guard: the Arrow ``minhash_signature``
     kernel (str.lower + re.ASCII ``\\s+`` split + md5-60 + vectorized
-    affine min) must emit row-identical signatures to the original JVM
-    transform/array_min form — including Java-vs-Python whitespace
-    semantics (NBSP is NOT split), unicode case mapping (final sigma,
-    İ, ẞ), NULL and empty text (both yield [NULL]×k, never a NULL
-    array), and whitespace-only text."""
+    affine min) must emit row-identical signatures to the JVM
+    transform/array_min reference (tests/jvm_reference.py) — including
+    Java-vs-Python whitespace semantics (NBSP is NOT split), unicode
+    case mapping (final sigma, İ, ẞ), NULL and empty text (both yield
+    [NULL]×k, never a NULL array), and whitespace-only text."""
     rows = [
         (1, "The quick\tbrown FOX\njumps over the lazy dog"),
         (2, "a b c d e f g h"),  # NBSP glues tokens
@@ -217,22 +218,23 @@ def test_minhash_signature_kernel_matches_jvm(spark):
     for nh in (4, 16):
         jvm = {
             r.doc_id: r.minhash
-            for r in dedup.minhash_signature(df, num_hashes=nh, impl="jvm").collect()
+            for r in jvm_reference.minhash_signature(df, num_hashes=nh).collect()
         }
         ker = {
             r.doc_id: r.minhash
-            for r in dedup.minhash_signature(df, num_hashes=nh, impl="kernel").collect()
+            for r in dedup.minhash_signature(df, num_hashes=nh).collect()
         }
         assert jvm == ker, nh
         assert ker[4] == [None] * nh and ker[5] == [None] * nh
-    with pytest.raises(ValueError, match="impl"):
-        dedup.minhash_signature(df, impl="nope")
+    with pytest.raises(TypeError):
+        dedup.minhash_signature(df, impl="kernel")
 
 
 def test_simhash_kernel_matches_jvm(spark):
     """Round-16 optimization guard: the Arrow SimHash kernel (distinct
     tokens, md5-60, one numpy bit-count reduction, majority vote) must
-    emit row-identical signatures to the JVM aggregate/zip_with fold —
+    emit row-identical signatures to the JVM aggregate/zip_with fold
+    (tests/jvm_reference.py) —
     including NBSP (not a split), unicode case mapping, NULL and empty
     and whitespace-only text (all → signature 0), and single-token docs
     (every set bit of the hash wins its majority)."""
@@ -250,16 +252,16 @@ def test_simhash_kernel_matches_jvm(spark):
     for bits in (8, 32):
         jvm = {
             r.doc_id: r.simhash
-            for r in text.with_simhash(df, bits=bits, impl="jvm").collect()
+            for r in jvm_reference.with_simhash(df, bits=bits).collect()
         }
         ker = {
             r.doc_id: r.simhash
-            for r in text.with_simhash(df, bits=bits, impl="kernel").collect()
+            for r in text.with_simhash(df, bits=bits).collect()
         }
         assert jvm == ker, bits
         assert ker[4] == 0 and ker[5] == 0 and ker[7] == 0
-    with pytest.raises(ValueError, match="impl"):
-        text.with_simhash(df, impl="nope")
+    with pytest.raises(TypeError):
+        text.with_simhash(df, impl="kernel")
 
 
 def test_simhash_hamming_close_for_near_dups(spark, docs_df):
@@ -827,16 +829,16 @@ def test_winnowing_rejects_bad_params(spark):
     df = spark.createDataFrame([(1, "abc")], ["doc_id", "text"])
     with pytest.raises(ValueError, match="k and window"):
         text.with_winnowing_fingerprints(df, k=0)
-    with pytest.raises(ValueError, match="impl"):
-        text.with_winnowing_fingerprints(df, impl="nope")
+    with pytest.raises(TypeError):
+        text.with_winnowing_fingerprints(df, impl="kernel")
 
 
 def test_winnowing_kernel_matches_jvm(spark):
     """Round-16 optimization guard: the Arrow winnowing kernel
     (str.lower + code-point slicing + md5-60 + sliding-window min +
     np.unique) must emit row-identical fingerprint arrays to the JVM
-    transform/array_min(slice) form — including unicode case mapping
-    that CHANGES the string length ('İ'.lower() is two code points, so
+    transform/array_min(slice) reference (tests/jvm_reference.py) —
+    including unicode case mapping that CHANGES the string length ('İ'.lower() is two code points, so
     gram positions and count shift identically on both sides), NBSP
     inside grams, final sigma, NULL/empty/shorter-than-k text (all →
     empty array), exactly-k text (one gram), and fewer-grams-than-window
@@ -858,11 +860,11 @@ def test_winnowing_kernel_matches_jvm(spark):
     for k, w in ((5, 4), (3, 2), (7, 10)):
         jvm = {
             r.doc_id: list(r.winnow_fps)
-            for r in text.with_winnowing_fingerprints(df, k=k, window=w, impl="jvm").collect()
+            for r in jvm_reference.with_winnowing_fingerprints(df, k=k, window=w).collect()
         }
         ker = {
             r.doc_id: list(r.winnow_fps)
-            for r in text.with_winnowing_fingerprints(df, k=k, window=w, impl="kernel").collect()
+            for r in text.with_winnowing_fingerprints(df, k=k, window=w).collect()
         }
         assert jvm == ker, (k, w)
     assert ker[5] == [] and ker[6] == [] and ker[7] == []

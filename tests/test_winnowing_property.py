@@ -38,15 +38,12 @@ def _ref_fingerprints(t: str, k: int = _K, w: int = _W) -> list[int]:
 @given(st.lists(_text, min_size=1, max_size=6))
 def test_winnowing_matches_reference(spark, texts):
     df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
-    for impl in ("kernel", "jvm"):
-        got = {
-            r.doc_id: list(r.winnow_fps)
-            for r in text.with_winnowing_fingerprints(
-                df, k=_K, window=_W, impl=impl
-            ).collect()
-        }
-        for i, t in enumerate(texts):
-            assert got[i] == _ref_fingerprints(t), f"doc {i} ({impl}): {t!r}"
+    got = {
+        r.doc_id: list(r.winnow_fps)
+        for r in text.with_winnowing_fingerprints(df, k=_K, window=_W).collect()
+    }
+    for i, t in enumerate(texts):
+        assert got[i] == _ref_fingerprints(t), f"doc {i}: {t!r}"
 
 
 @settings(max_examples=15, deadline=None)
