@@ -1047,8 +1047,9 @@ def repetition_stats(
 
 
 def _repetition_kernel_udf(gram_ns: tuple[int, ...]):
-    """Arrow-batched BIT-EXACT repetition metrics —
-    ``repetition_stats``'s JVM values in one Python pass (round 16).
+    """Arrow-batched BIT-EXACT repetition metrics — the values of the
+    JVM-expression ``repetition_stats`` in ``tests/jvm_reference.py``
+    in one Python pass (round 16).
     Parity notes: the line split is the literal ``\\n`` (Java keeps
     trailing empties with limit -1, Python's ``str.split`` too — the
     trim+drop-empty filter erases the difference); the trim is the same
@@ -1057,7 +1058,7 @@ def _repetition_kernel_udf(gram_ns: tuple[int, ...]):
     tokenization is the established ``str.lower()`` + ``re.ASCII``
     split; lengths count code points on both sides; every ratio rounds
     via ``text._round4_half_up`` (Spark's round-double semantics); NULL
-    text produces all-0.0, exactly the JVM's coalesce('') path. Distinct
+    text produces all-0.0, exactly that reference's coalesce('') path. Distinct
     counts/char-sums use the set of values — identical to
     ``array_distinct``'s first-occurrence list for both."""
     import pandas as pd  # noqa: PLC0415
@@ -1527,7 +1528,8 @@ def dsir_weights(
 def _dsir_bucket_kernel(n_buckets: int, id_field: str | None, text_field: str):
     """mapInPandas generator emitting one ``__b`` bucket row per DSIR
     gram OCCURRENCE (unigrams + adjacent word bigrams — the exact
-    ``_dsir_grams`` per-occurrence multiset: tokenize with the
+    per-occurrence multiset of ``_dsir_grams`` in
+    ``tests/jvm_reference.py``, the parity reference: tokenize with the
     established ``re.ASCII`` split parity, bigrams joined with one
     space, buckets ``md5-60 % n_buckets`` — pmod == ``%`` on the
     nonnegative 60-bit hash). With ``id_field`` the id rides along and

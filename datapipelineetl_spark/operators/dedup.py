@@ -64,15 +64,16 @@ def minhash_signature(
 
 
 def _minhash_kernel_udf(num_hashes: int):
-    """Arrow-batched BIT-EXACT MinHash signatures — the JVM fold's
-    values at kernel speed (round 16). Tokenization is
+    """Arrow-batched BIT-EXACT MinHash signatures — the values of the
+    JVM-expression spelling in ``tests/jvm_reference.py``
+    (``minhash_signature``) at kernel speed (round 16). Tokenization is
     ``str.lower()`` + ``re.ASCII``-pinned ``\\s+`` split + drop-empty
     (byte-equal tokens to ``F.split(F.lower(c), TOKEN_SPLIT_RE)`` with
     the ``!= ''`` filter — the parity the ngram kernel pinned); the
     token hash is the same md5-prefix 60-bit integer, and the affine
     rows (aᵢ·(h mod P)+bᵢ) mod P are exact in int64 (h mod P < 2³¹,
     aᵢ ≤ 131 → product < 2³⁹). NULL text and zero-token docs both
-    produce the JVM form's ``[NULL] × num_hashes`` (F.array of NULL
+    produce that reference's ``[NULL] × num_hashes`` (F.array of NULL
     array_mins, never a NULL array). Per-task md5 memo: token hashes
     repeat across documents, so each distinct token is hashed once per
     task, not once per occurrence."""

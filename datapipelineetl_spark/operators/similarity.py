@@ -818,6 +818,31 @@ def lsh_signature(vec_col: str, planes: list[list[float]]) -> Column:
     return F.expr(" + ".join(terms))
 
 
+# _exact_fit's limits, and the centroid-matrix size above which
+# _arrow_assign_udf broadcasts (PySpark's UDFCompressionThreshold)
+_EXACT_FIT_CELLS = 4096  # k × dim
+_EXACT_FIT_DIM = 256
+_BROADCAST_BYTES = 1 << 20
+
+
+def _exact_fit(k: int, dim: int) -> bool:
+    """The kernel rule of every k-means / PQ fit here (``kmeans``,
+    ``semdedup``, ``ivf_fit_centroids``' update, ``pq_fit``,
+    ``pq_encode``): True — the EXACT side, the bit-exact kernels the
+    DuckDB oracles replay — when ``k * dim <= 4096`` and
+    ``dim <= 256``; else the SCALE side, BLAS kernels whose cost stays
+    flat in k but whose summation order is not value-replayable.
+
+    Per 10k rows at dim 64 (numpy, one thread, process CPU) the
+    sequential kernel costs 59 vs BLAS 4 ms at k=16, 173 vs 11 at k=64,
+    1,088 vs 58 at k=256 and 7,984 vs 158 at k=1024. The dim guard
+    keeps the dim × ``F.avg`` update off its measured OOM at dim=1024
+    (SCALING.md "Round 12"). Every registered oracle and benchmark fit
+    is exact (k × dim 256–2,048); the k_sub=256 PQ fit of
+    ``examples/ann_*`` (16,384) is scale."""
+    return k * dim <= _EXACT_FIT_CELLS and dim <= _EXACT_FIT_DIM
+
+
 def ivf_fit_centroids(
     df: DataFrame,
     k_cells: int = 16,
@@ -825,7 +850,6 @@ def ivf_fit_centroids(
     iters: int = 5,
     id_col: str = "vec_id",
     dim: int | None = None,
-    update: str = "agg",
     metric: str = "cosine",
 ) -> list[list[float]]:
     """Deterministic k-means coarse quantizer for an IVF index (the
@@ -843,27 +867,17 @@ def ivf_fit_centroids(
     index, which is what makes IVF queries testable.
 
     Scale: each iteration is ONE narrow Arrow-batched assignment pass
-    (batch matmul, argmax) + ONE partial-aggregated shuffle of k_cells ×
-    dim running sums (the per-dimension avg aggregate); only the k×dim
-    centroid matrix ever reaches the driver. Production practice at
-    100 TB is to FIT on a sample (df.sample) and assign the full corpus
-    once — the fit cost is bounded by the sample, the assignment pass by
-    one scan.
-
-    ``update`` picks the mean-update plan: ``"agg"`` (default) is the
-    per-dimension ``F.avg`` aggregate above — dim aggregate
-    EXPRESSIONS, which stops scaling as dim grows (measured: OOMs the
-    1 GiB local JVM at dim=1024/n=20k — SCALING.md "Round 12");
-    ``"arrow"`` folds per-cell running sums in two Arrow passes
-    (``_mean_update_arrow``, same scheme as
-    ``kmeans(assignment="arrow")``) — the wide-dim production path,
-    trading last-ulp summation order exactly as the assignment kernel
-    already does.
+    (batch matmul, argmax) + ONE mean update; only the k×dim centroid
+    matrix ever reaches the driver. Production practice at 100 TB is
+    to FIT on a sample (df.sample) and assign the full corpus once —
+    the fit cost is bounded by the sample, the assignment pass by one
+    scan. The update follows ``_exact_fit(k_cells, dim)`` (k × dim ≤
+    4096, dim ≤ 256): per-dimension ``F.avg`` on the exact side, two
+    Arrow passes of running sums (``_mean_update_arrow``) on the scale
+    side.
     """
     if k_cells < 1 or iters < 1:
         raise ValueError(f"k_cells and iters must be >= 1, got {k_cells}, {iters}")
-    if update not in ("agg", "arrow"):
-        raise ValueError(f"update must be 'agg' or 'arrow', got {update!r}")
     if metric not in ("cosine", "l2"):
         raise ValueError(f"metric must be 'cosine' or 'l2', got {metric!r}")
     import numpy as np  # noqa: PLC0415
@@ -884,6 +898,7 @@ def ivf_fit_centroids(
         # infer from the seeds collect instead of a separate .first()
         # probe — one fewer fixed-latency Spark job per fit (round 13)
         dim = len(seeds[0].v)
+    exact = _exact_fit(k_cells, dim)
 
     def _norm_rows(m):
         n = np.linalg.norm(m, axis=1, keepdims=True)
@@ -901,15 +916,15 @@ def ivf_fit_centroids(
             cell.alias("__c"), vec.alias("__v")
         )
         new_c = centroids.copy()  # empty cells keep their old centroid
-        if update == "arrow":
-            for c, (n, s) in _mean_update_arrow(members, dim).items():
-                new_c[c] = s / n
-        else:
+        if exact:
             sums = members.groupBy("__c").agg(
                 *[F.avg(F.col("__v")[i]).alias(f"c{i}") for i in range(dim)]
             ).collect()
             for r in sums:
                 new_c[r["__c"]] = [r[f"c{i}"] for i in range(dim)]
+        else:
+            for c, (n, s) in _mean_update_arrow(members, dim).items():
+                new_c[c] = s / n
         centroids = np.asarray(new_c, dtype=np.float64)
         if metric == "cosine":
             centroids = _norm_rows(centroids)
@@ -922,7 +937,7 @@ def _cell_assigner(spark: SparkSession, centroids: list[list[float]], metric: st
     tier (the `_arrow_assign_udf` kernel — |v|² drops out of the
     argmin). Both NULL-safe, ties to the lower cell id."""
     if metric == "l2":
-        return _arrow_assign_udf(spark, centroids, "closure")
+        return _arrow_assign_udf(spark, centroids)
     return _ivf_assign_pandas(centroids)
 
 
@@ -1364,8 +1379,6 @@ def kmeans(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_dp: int = 6,
-    assignment: str = "seq",
-    transport: str = "closure",
 ) -> DataFrame:
     """Deterministic Euclidean k-means corpus clustering (plain Lloyd —
     the domain-discovery / cluster-balanced-mixing companion to the
@@ -1383,39 +1396,24 @@ def kmeans(
 
     Scale: centroids are driver metadata (k × dim floats — the only
     thing collected); each iteration is one narrow assignment pass +
-    one groupBy(cluster) partial-agg of per-dimension means (k × dim
-    scalars shuffled).
+    one mean update that collects k × dim rounded means.
 
-    ``assignment`` picks the physical plan of every assignment pass
-    (each Lloyd iteration AND the final labeling):
-
-    - ``"seq"`` (default, the oracle path): the BIT-EXACT vectorized
-      kernel ``_seq_l2_assign_udf`` — each squared distance summed
-      sequentially left to right (the order DuckDB's ``list_sum``
-      replays), ties to the lower cluster id. A JVM fold over literal
-      centroid arrays computes the same values but was dropped: its
-      k×dim literal tree made analysis time the bottleneck as k grew
-      and OOMed the driver JVM at k=1024/dim=64 (SCALING.md).
-    - ``"arrow"``: the ``assign_clusters_arrow`` matmul kernel, one
-      fresh pandas_udf per iteration closing over that iteration's
-      centroid matrix; ``transport`` ("closure"/"broadcast") chooses
-      the data movement exactly as documented there. Production k in
-      the hundreds and beyond — trading oracle-grade tie determinism
-      (BLAS summation order) for throughput, exactly as IVF does;
-      parity-tested against ``"seq"`` on the fixture. Under this mode
-      the MEAN UPDATE also leaves the JVM: the default
-      ``groupBy(cell).agg(dim × F.avg(__v[i]))`` builds one aggregate
-      expression per DIMENSION and hits its own wall as dim grows
-      (measured: OOMs the 1 GiB local JVM at dim=1024/n=20k while the
-      Arrow path completes — SCALING.md "Round 12"), so each Lloyd
-      pass folds per-cell running sums via ``_mean_update_arrow``
-      (two Arrow passes) and rounds the means with
-      ``_round_half_up_np``.
+    Every assignment pass and mean update follows ``_exact_fit(k,
+    dim)`` (k × dim ≤ 4096, dim ≤ 256). Exact side, the oracle path:
+    ``_seq_l2_assign_udf`` and per-dimension ``F.round(F.avg)``. Scale
+    side: ``_arrow_assign_udf`` and ``_mean_update_arrow`` (means
+    rounded by ``_round_half_up_np``), where BLAS summation order can
+    flip a vector equidistant to two centroids at the last ulp.
     """
+    return _kmeans(df, k, iters, id_col, vec_col, round_dp)[0]
+
+
+def _kmeans(df: DataFrame, k: int, iters: int, id_col: str, vec_col: str,
+            round_dp: int) -> tuple[DataFrame, bool]:
+    """``kmeans``' body: (assignment frame, ``_exact_fit(k, dim)``), so
+    ``semdedup`` picks its pair stage from the fit it already runs."""
     if k < 1 or iters < 0:
         raise ValueError(f"need k >= 1 and iters >= 0, got {k}, {iters}")
-    if assignment not in ("seq", "arrow"):
-        raise ValueError(f"assignment must be 'seq' or 'arrow', got {assignment!r}")
     vec = F.col(vec_col).cast("array<double>")
     seeds = (
         df.filter(vec.isNotNull())
@@ -1428,31 +1426,21 @@ def kmeans(
         raise ValueError(f"need >= {k} non-null vectors, got {len(seeds)}")
     cents = [[round(float(x), round_dp) for x in r.v] for r in seeds]
     dim = len(cents[0])
+    exact = _exact_fit(k, dim)
 
     def assign(cents: list[list[float]]):
         """(assignment Column, broadcast handle or None) for one pass."""
-        if assignment == "arrow":
-            udf, bc = _arrow_assign_udf(
-                df.sparkSession, cents, transport, return_handle=True
-            )
-            return udf(vec), bc
-        return _seq_l2_assign_udf(cents)(vec), None
+        if exact:
+            return _seq_l2_assign_udf(cents)(vec), None
+        udf, bc = _arrow_assign_udf(df.sparkSession, cents, return_handle=True)
+        return udf(vec), bc
 
     for _ in range(iters):
         assign_col, iter_bc = assign(cents)
         members = df.filter(vec.isNotNull()).select(
             assign_col.alias("__c"), vec.alias("__v")
         )
-        if assignment == "arrow":
-            # wide-dim escape hatch: the dim × F.avg agg's expression
-            # count stops scaling with dim (OOMs the 1 GiB local JVM at
-            # dim=1024 — SCALING.md); two Arrow passes replace it
-            upd = _mean_update_arrow(members, dim)
-            updated = {
-                c: _round_half_up_np(sums / n, round_dp).tolist()
-                for c, (n, sums) in upd.items()
-            }
-        else:
+        if exact:
             means = members.groupBy("__c").agg(
                 *[
                     F.round(F.avg(F.col("__v")[i]), round_dp).alias(f"c{i}")
@@ -1461,6 +1449,12 @@ def kmeans(
             ).collect()
             updated = {
                 r["__c"]: [float(r[f"c{i}"]) for i in range(dim)] for r in means
+            }
+        else:
+            upd = _mean_update_arrow(members, dim)
+            updated = {
+                c: _round_half_up_np(sums / n, round_dp).tolist()
+                for c, (n, sums) in upd.items()
             }
         if iter_bc is not None:
             # this pass's centroid broadcast was consumed by the
@@ -1471,10 +1465,11 @@ def kmeans(
     # the FINAL labeling's broadcast must stay alive: it ships with the
     # returned (lazy) plan
     final_col, _final_bc = assign(cents)
-    return df.select(
+    labels = df.select(
         F.col(id_col),
         F.when(vec.isNotNull(), final_col).alias("cluster"),
     )
+    return labels, exact
 
 
 def _mean_update_arrow(members: DataFrame, dim: int) -> dict:
@@ -1665,9 +1660,6 @@ def semdedup(
     round_dp: int = 6,
     cos_dp: int = 4,
     materialize: bool = False,
-    pair_stage: str = "join",
-    assignment: str = "seq",
-    transport: str = "closure",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     public method): k-means-cluster the embedding corpus, compare
@@ -1702,46 +1694,19 @@ def semdedup(
     batch-17 oracle pins the cosine at 4 dp — changing ``round_dp``
     must not silently move the similarity rounding.
 
-    ``pair_stage`` picks the physical plan for the within-cluster
-    pairing (VERDICT r9 item 4 — the last giant-cluster knob):
-
-    - ``"join"`` (default, the oracle path): self equi-join on cluster
-      id + one interpreted dot fold per pair. Per-pair cost is
-      O(dim) interpreted lambda steps, so a cluster of m members costs
-      m²·dim lambda steps — fine while production k keeps m ≈ 10³.
-    - ``"kernel"`` (the giant-cluster scale path): one
-      ``applyInPandas`` group per cluster computing the m×m cosine
-      matrix as BLOCKED BLAS matmuls (row blocks of 2048 bound peak
-      memory to block×m×8 bytes; U itself is m×dim). Crossover
-      measured in SCALING.md ("Round 10: semdedup pair-stage
-      crossover"). Same float caveat as ``assign_clusters_arrow``:
-      BLAS sums in a different order than the JVM fold, so a pair
-      sitting exactly on the ``cos_dp`` rounding boundary could flip —
-      the fixture parity test passes exactly, but the value-checked
-      oracle query keeps the fold form. Memory contract: one CLUSTER
-      (m×dim float64) must fit an executor task — with SemDeDup-scale
-      k that is by construction; a cluster that doesn't fit means k is
-      too small for the corpus, which the join form wouldn't survive
-      either (m² pairs).
-
-    ``assignment`` / ``transport`` forward to ``kmeans`` — the full
-    production configuration for SemDeDup-scale k (50k clusters) is
-    ``assignment="arrow", transport="broadcast", pair_stage="kernel"``:
-    matmul assignment passes, one broadcast of the centroid matrix per
-    executor, BLAS pair stage — while the default keeps every stage on
-    the oracle-deterministic sequential-sum path.
+    The pair stage follows the k-means fit's ``_exact_fit(k, dim)``
+    (k × dim ≤ 4096, dim ≤ 256). Exact side, the oracle path: a self
+    equi-join on cluster id, one interpreted dot fold per pair. Scale
+    side: ``_semdedup_pairs_kernel``'s blocked BLAS matmul per
+    cluster, where a pair exactly on the ``cos_dp`` rounding boundary
+    could flip; one cluster (m×dim float64) must fit an executor task.
     """
-    if pair_stage not in ("join", "kernel"):
-        raise ValueError(f"pair_stage must be 'join' or 'kernel', got {pair_stage!r}")
     if not 0.0 < threshold <= 1.0:
         # strictly positive: at 0.0 every zero-norm vector would pair
         # with its whole cluster through cos 0.0 >= 0.0 — similarity
         # zero is the definition of NOT a duplicate
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    assign = kmeans(
-        df, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
-        round_dp=round_dp, assignment=assignment, transport=transport,
-    )
+    assign, exact = _kmeans(df, k, iters, id_col, vec_col, round_dp)
     if materialize:
         # the assignment (a k×dim argmin per row) feeds the pair join
         # TWICE (both sides) and the output join once — materialize the
@@ -1781,7 +1746,7 @@ def semdedup(
     )
     if materialize:
         v = v.localCheckpoint(eager=True)
-    if pair_stage == "kernel":
+    if not exact:
         dup_counts = _semdedup_pairs_kernel(v, id_col, threshold, cos_dp)
     else:
         # Pair-stage parallelism (round 16): the (id, cluster, unit)
@@ -1825,75 +1790,31 @@ def semdedup(
     )
 
 
-def assign_clusters_arrow(
-    df: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    transport: str = "closure",
-) -> DataFrame:
-    """The Arrow-matmul cluster assignment — the production swap the
-    ``kmeans`` docstring promises for k in the hundreds, where the
-    sequential-sum ``"seq"`` kernel pays k × dim elementwise passes
-    per batch.
-    Returns (id_col, cluster) with the same contract as ``kmeans``'s
-    assignment: NULL vector → NULL cluster, distance ties → the lower
-    cluster id (``np.argmin`` returns the first minimum).
+def _arrow_assign_udf(spark: SparkSession, centroids: list[list[float]],
+                      return_handle: bool = False):
+    """The Arrow L2 argmin-assignment kernel as a reusable scalar
+    pandas_udf — shared by ``ivf_assign(metric="l2")`` (one-shot
+    assignment against fixed centroids) and the scale side of
+    ``kmeans`` (one fresh UDF per Lloyd iteration, each closing over
+    that iteration's centroid matrix). NULL vector → NULL, distance
+    ties → the lower id (``np.argmin`` returns the first minimum).
 
     One batched matmul per Arrow batch: argmin_c |v−c|² = argmin_c
     (|c|² − 2·v·c) — |v|² is constant per row and drops out, so the
     kernel computes V @ Cᵀ once ((batch × dim) @ (dim × k)) plus a
-    k-vector of centroid norms.
+    k-vector of centroid norms. BLAS sums in a different order than
+    the sequential fold, so this is not the oracle path.
 
-    ``transport`` picks how the centroid matrix reaches executors:
-    ``"closure"`` (default) rides the UDF closure — right for model
-    metadata through k in the THOUSANDS (k=10³ × dim=10³ float64 =
-    8 MB, re-serialized per task but trivially); ``"broadcast"`` ships
-    it ONCE per executor as a Spark broadcast variable the kernel
-    dereferences — the SemDeDup-scale transport (50k × 10³ = 400 MB:
-    closure serialization per task would dominate the job). The two
-    are bit-identical in output (same matrix, same argmin — parity
-    test); the knob is purely a data-movement choice. The broadcast
-    variable's executor-side copy lives until the returned plan (and
-    its UDF closure) is garbage-collected — the standard Spark
-    broadcast lifetime, fine for a model that outlives the query.
-
-    Float caveat, why this is NOT the oracle path: BLAS dot products
-    sum in a different order than the sequential fold, so a vector
-    equidistant to two centroids at the last ulp can flip — the
-    fixture-scale parity test passes exactly, but oracle-grade
-    determinism keeps the ``"seq"`` kernel (``kmeans`` default) for
-    value-checked queries.
-    """
-    assign = _arrow_assign_udf(df.sparkSession, centroids, transport)
-    return df.select(
-        F.col(id_col),
-        assign(F.col(vec_col).cast("array<double>")).alias("cluster"),
-    )
-
-
-def _arrow_assign_udf(spark: SparkSession, centroids: list[list[float]],
-                      transport: str, return_handle: bool = False):
-    """The Arrow argmin-assignment kernel as a reusable scalar
-    pandas_udf — shared by ``assign_clusters_arrow`` (one-shot
-    assignment against fixed centroids) and ``kmeans(assignment=
-    "arrow")`` (one fresh UDF per Lloyd iteration, each closing over
-    that iteration's centroid matrix).
-
-    ``return_handle=True`` returns ``(udf, broadcast-or-None)`` so the
-    caller can ``unpersist()`` a transport="broadcast" matrix once its
-    plan has executed — kmeans' Lloyd loop would otherwise accumulate
-    one live executor copy per iteration (at the SemDeDup scale the
-    docstrings target, ~400 MB each) until Python GC happens to reach
-    the ContextCleaner."""
+    A centroid matrix over ``_BROADCAST_BYTES`` (1 MiB, where PySpark
+    would broadcast the pickled closure anyway) ships once per
+    executor as a broadcast variable; a smaller one rides the closure.
+    ``return_handle=True`` returns ``(udf, broadcast-or-None)`` so
+    kmeans' Lloyd loop can ``unpersist()`` each iteration's copy (400
+    MB at SemDeDup's 50k × 10³) instead of waiting on Python GC."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
-    if transport not in ("closure", "broadcast"):
-        raise ValueError(
-            f"transport must be 'closure' or 'broadcast', got {transport!r}"
-        )
     cmat = np.asarray(centroids, dtype=np.float64)
     if cmat.ndim != 2 or cmat.shape[0] < 1:
         raise ValueError(f"need a non-empty k x dim centroid matrix, got {cmat.shape}")
@@ -1913,7 +1834,7 @@ def _arrow_assign_udf(spark: SparkSession, centroids: list[list[float]],
         return pd.Series(best)
 
     bc = None
-    if transport == "broadcast":
+    if cmat.nbytes > _BROADCAST_BYTES:
         bc = spark.sparkContext.broadcast((cmat, cnorm2))
 
         def _assign(vecs):
@@ -1964,7 +1885,7 @@ def _pq_half_up(x: float, dp: int) -> float:
 def _round_half_up_np(arr, dp: int):
     """ONE vectorized HALF_UP kernel shared by every Arrow path
     (``_batched_topk``, the one engine of the ``*_topk_multi`` family,
-    and the ``kmeans(assignment="arrow")`` mean update — ADVICE r13:
+    and the scale-side ``kmeans`` mean update — ADVICE r13:
     private copies had already drifted on sign handling).
 
     Rounds the scaled DOUBLE: ``floor(|x|·10^dp + 0.5)·sign(x)/10^dp``,
@@ -1976,7 +1897,7 @@ def _round_half_up_np(arr, dp: int):
     80.59): the batched top-k trades that last-ulp boundary for the
     single-scan vectorized plan. The divergence is pinned by
     ``test_round_half_up_np_boundary_divergence``. The single-query
-    operators and ``kmeans`` ``"seq"`` round with ``F.round`` exactly;
+    operators and the exact-side ``kmeans`` round with ``F.round`` exactly;
     the batched oracles (batches 20–22) are value-checked against this
     kernel's answers on the fixtures."""
     import numpy as np  # noqa: PLC0415
@@ -1996,7 +1917,6 @@ def pq_fit(
     vec_col: str = "embedding",
     round_dp: int = 6,
     dim: int | None = None,
-    assignment: str = "seq",
 ) -> list[list[list[float]]]:
     """Fit product-quantization codebooks (Jégou et al. 2011, public):
     split each dim-d vector into ``m`` contiguous subvectors and run an
@@ -2024,25 +1944,13 @@ def pq_fit(
     groupBy(j, code) partial-agg; only m × k_sub × dim/m rounded
     doubles (the codebooks) ever reach the driver.
 
-    ``assignment`` picks the physical plan of each iteration's argmin,
-    exactly the ``kmeans`` split: ``"seq"`` (default, the oracle path)
-    is the BIT-EXACT vectorized kernel ``_pq_seq_codes_udf`` (each
-    subspace distance summed sequentially, first-min ties). A JVM fold
-    over literal codewords computes the same values but was dropped:
-    its m × k_sub × dim/m literal tree was paid at plan construction,
-    analysis and interpreted evaluation (8.7× slower fit+encode at the
-    oracle geometry) and OOMed executors at m=8/k_sub=256/n=10k
-    (SCALING.md round 12). ``"arrow"`` routes every assignment through
-    the shared ``_pq_arrow_codes_udf`` matmul kernel — the k_sub=256
-    production path, trading oracle-grade tie determinism exactly as
-    kmeans does (parity-tested against ``"seq"`` on the fixture; the
-    mean agg is unchanged — sub stays small in PQ, so the agg width
-    never walls like wide-dim kmeans).
+    Each iteration's argmin follows ``_exact_fit(k_sub, dim)`` (k_sub ×
+    dim ≤ 4096, dim ≤ 256), as ``pq_encode`` does: the bit-exact
+    ``_pq_seq_codes_udf`` or the ``_pq_arrow_codes_udf`` matmul. The
+    mean agg is shared: sub stays small, so its width never walls.
     """
     if m < 1 or k_sub < 1 or iters < 0:
         raise ValueError(f"need m, k_sub >= 1 and iters >= 0, got {m}, {k_sub}, {iters}")
-    if assignment not in ("seq", "arrow"):
-        raise ValueError(f"assignment must be 'seq' or 'arrow', got {assignment!r}")
     vec = F.col(vec_col).cast("array<double>")
     seeds = (
         df.filter(vec.isNotNull())
@@ -2074,13 +1982,8 @@ def pq_fit(
     for _ in range(iters):
         # materialize the kernel's codes as ONE column first so the m
         # struct references below cannot re-evaluate the UDF
-        kernel = (
-            _pq_seq_codes_udf(books)
-            if assignment == "seq"
-            else _pq_arrow_codes_udf(books)
-        )
         base = df.filter(vec.isNotNull()).select(
-            vec.alias("__v"), kernel(vec).alias("__codes")
+            vec.alias("__v"), _pq_codes_udf(books)(vec).alias("__codes")
         )
         structs = [
             F.struct(
@@ -2118,43 +2021,37 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     out: str = "pq_code",
-    mode: str = "seq",
 ) -> DataFrame:
     """Attach each vector's PQ code — ``array<int>`` of length m, the
     persistable narrow column a 100 TB store keeps NEXT TO (or instead
     of) the raw vectors: ADC queries (``pq_adc_topk``) then scan only
     these few bytes per row.
 
-    ``mode`` picks the physical plan, exactly the ``pq_fit`` split:
-
-    - ``"seq"`` (default, the oracle path): one Arrow-batched BIT-EXACT
-      kernel for all subspaces (``_pq_seq_codes_udf``). The JVM fold
-      over literal codewords it replaced computes the same values at
-      5–14× the cost on the encode pass (oracle geometry), so it was
-      dropped.
-    - ``"arrow"``: one Arrow-batched kernel for ALL subspaces — per
-      batch, m small matmuls via the ‖x‖² − 2x·c + ‖c‖² expansion,
-      argmin per subspace. The production path for k_sub=256
-      codebooks; trades oracle-grade tie determinism for throughput
-      (BLAS summation order), parity-tested on the fixture.
-
-    NULL vectors get NULL codes (no crash) in every mode.
+    One Arrow-batched kernel encodes all subspaces, picked by
+    ``_exact_fit(k_sub, dim)`` (k_sub × dim ≤ 4096, dim ≤ 256) read
+    from the codebooks, so a fit and its encode take the same side.
+    NULL vectors get NULL codes.
     """
-    if mode not in ("seq", "arrow"):
-        raise ValueError(f"mode must be 'seq' or 'arrow', got {mode!r}")
     vec = F.col(vec_col).cast("array<double>")
-    if mode == "seq":
-        return df.withColumn(out, _pq_seq_codes_udf(codebooks)(vec))
-    return df.withColumn(out, _pq_arrow_codes_udf(codebooks)(vec))
+    return df.withColumn(out, _pq_codes_udf(codebooks)(vec))
+
+
+def _pq_codes_udf(codebooks: list[list[list[float]]]):
+    """``pq_fit``'s and ``pq_encode``'s kernel for m × k_sub × sub
+    ``codebooks``."""
+    k_sub, dim = len(codebooks[0]), len(codebooks) * len(codebooks[0][0])
+    if _exact_fit(k_sub, dim):
+        return _pq_seq_codes_udf(codebooks)
+    return _pq_arrow_codes_udf(codebooks)
 
 
 def _pq_arrow_codes_udf(codebooks: list[list[list[float]]]):
     """Arrow-batched all-subspace PQ codes: per batch, one small matmul
     per subspace via the ‖x‖² − 2x·c + ‖c‖² expansion, argmin per
-    subspace → array<int>. Shared by ``pq_encode(mode="arrow")`` and
-    ``pq_fit(assignment="arrow")`` — the production kernel for large
-    k_sub, where the sequential sums of ``_pq_seq_codes_udf`` cost
-    k_sub × sub elementwise passes per batch."""
+    subspace → array<int>. The scale side of ``pq_fit`` and
+    ``pq_encode`` (``_pq_codes_udf``) — the kernel for large k_sub,
+    where the sequential sums of ``_pq_seq_codes_udf`` cost k_sub × sub
+    elementwise passes per batch."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
@@ -2241,7 +2138,7 @@ def _seq_l2_assign_udf(centroids: list[list[float]]):
     accumulation gives the sequential IEEE sum DuckDB's ``list_sum``
     replays term for term, first-min ``argmin`` sends ties to the lower
     id, NaN distances rank last, NULL vectors → NULL. The one
-    implementation behind ``kmeans(assignment="seq")`` and
+    implementation behind the exact side of ``kmeans`` and
     ``ivf_assign_fold``; the JVM fold over a k × dim literal centroid
     tree it replaced gave the same values at a plan-size cost that grew
     with k (and OOMed the driver at k=1024/dim=64)."""
@@ -2534,7 +2431,7 @@ def _ivfpq_store(
         if residual:
             df = residualize(df, centroids, vec_col, cell_col, "__ivfpq_res")
             src = "__ivfpq_res"
-        df = pq_encode(df, codebooks, src, "__ivfpq_code", mode="arrow")
+        df = pq_encode(df, codebooks, src, "__ivfpq_code")
         codes_col = "__ivfpq_code"
     return df, cell_col, codes_col
 

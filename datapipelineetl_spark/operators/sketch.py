@@ -416,10 +416,11 @@ def _bloom_flag_fused(
     """``bloom_flag_contaminated``'s fused form: tokenize → shingle →
     first-occurrence distinct → md5 positions → vectorized bit test,
     all inside ONE ``mapInArrow`` pass over (id, text). Gram strings
-    and hashes are byte-identical to the JVM spelling (the
-    ``ngram_hashes`` parity: ``re.ASCII`` ``\\s+`` split == Java
-    ``\\s``, NULL text coalesces to the single empty gram); the bit
-    test is the same numpy block the jvm impl uses."""
+    and hashes are byte-identical to the JVM-expression spelling in
+    ``tests/jvm_reference.py`` (``bloom_flag_contaminated``, the
+    parity reference; ``re.ASCII`` ``\\s+`` split == Java ``\\s``,
+    NULL text coalesces to the single empty gram), whose bit test runs
+    in plain Python over the collected gram positions."""
     compact = k * hex_width <= 15
     prepared = corpus.select(F.col(id_col), F.col(text_col))
     id_field = prepared.schema[id_col]

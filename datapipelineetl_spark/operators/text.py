@@ -1,9 +1,12 @@
 """Text-analysis operators for training-data pipelines (SURVEY.md §2.11).
 
 Language-ID, quality scoring, token counting, and document fingerprinting
-over a ``text`` column — all built from JVM-side column functions (split /
-regexp / higher-order array functions), so they run inside whole-stage
-codegen on a 100 TB corpus with zero Python in the hot path.
+over a ``text`` column. Most operators are JVM-side column functions
+(split / regexp / higher-order array functions) that run inside
+whole-stage codegen; the fused annotation pass, NFC normalization, the
+BPE kernels and the winnowing / SimHash fingerprints run as
+Arrow-batched pandas code, the last two checked bit for bit against the
+JVM-expression spellings in ``tests/jvm_reference.py``.
 
 Hash parity note: fingerprints use md5 (same digest in every engine — and
 the reference itself deduplicates by MD5, mypy/streaming.py:31-46), with
@@ -333,15 +336,16 @@ def with_winnowing_fingerprints(
 
 
 def _winnow_kernel_udf(k: int, window: int):
-    """Arrow-batched BIT-EXACT winnowing fingerprints —
-    ``with_winnowing_fingerprints``'s JVM values at kernel speed
-    (round 16). ``str.lower()`` matches ``F.lower`` and Python slicing
-    matches ``substr`` (both count code points); the k-gram hash is the
+    """Arrow-batched BIT-EXACT winnowing fingerprints — the values of
+    the JVM-expression ``with_winnowing_fingerprints`` in
+    ``tests/jvm_reference.py`` at kernel speed (round 16).
+    ``str.lower()`` matches ``F.lower`` and Python slicing matches
+    ``substr`` (both count code points); the k-gram hash is the
     same md5-prefix 60-bit integer (per-task memo: 5-char grams repeat
     heavily across documents); ``sliding_window_view(...).min`` is the
     window-min and ``np.unique`` equals array_sort∘array_distinct on
     int64 (sorts ascending, no NULLs possible). NULL text and
-    shorter-than-k text both produce the JVM form's empty array; fewer
+    shorter-than-k text both produce that reference's empty array; fewer
     k-grams than ``window`` → the single global min."""
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
@@ -407,13 +411,14 @@ def with_simhash(
 
 
 def _simhash_kernel_udf(bits: int):
-    """Arrow-batched BIT-EXACT SimHash — ``with_simhash``'s JVM values
-    at kernel speed (round 16). Established tokenizer parity
+    """Arrow-batched BIT-EXACT SimHash — the values of the
+    JVM-expression ``with_simhash`` in ``tests/jvm_reference.py`` at
+    kernel speed (round 16). Established tokenizer parity
     (``str.lower()`` + ``re.ASCII`` ``\\s+`` split + drop-empty,
     distinct), md5-prefix 60-bit token hash (per-task memo), then the
     per-bit ones-counts as ONE ``(tokens × bits)`` numpy reduction and
     the majority vote ``2·count_b > n`` packed into the signature.
-    NULL text and zero-token docs both produce the JVM form's 0
+    NULL text and zero-token docs both produce that reference's 0
     signature (NULL counts fall through every CASE; empty counts beat
     no majority)."""
     import pandas as pd  # noqa: PLC0415
@@ -2004,7 +2009,7 @@ def gopher_rules(
     # every line after the \n split, and plain trim() strips only
     # spaces — the ellipsis/bullet rules would silently never fire on
     # Windows-lineage text (the oracle replays the same 3-char trim)
-    _trim = lambda x: F.trim(x, F.lit(" \t\r"))  # noqa: E731
+    _trim = lambda x: F.btrim(x, F.lit(" \t\r"))  # noqa: E731
     lines = F.filter(F.split(txt, "\n"), lambda x: _trim(x) != "")
     n_lines = F.size(lines)
     n_bullet = F.size(

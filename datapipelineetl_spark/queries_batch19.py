@@ -160,8 +160,8 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: codebooks are driver metadata (m × k_sub × dim/m rounded
     doubles); each fit iteration is ONE narrow pass + ONE
     (subspace, code)-key partial agg; the encode is one narrow
-    fold-over-literals pass. The encode's `mode="arrow"` knob is the
-    k_sub=256 production path (similarity.pq_encode docstring)."""
+    Arrow pass. k_sub=256 codebooks take the BLAS kernel instead
+    (similarity.pq_encode docstring)."""
     emb = _t(spark, sf_dir, "embeddings")
     books = similarity.pq_fit(
         emb, m=_PQ_M, k_sub=_PQ_K, iters=_PQ_ITERS, round_dp=_PQ_DP

@@ -1801,7 +1801,7 @@ def streaming_ann_index(
     (examples/ann_index_build.py's layout, kept fresh as embeddings
     arrive): per micro-batch, ONE Arrow pass attaches the coarse cell
     (`similarity.ivf_assign`) and the m-int PQ code
-    (`similarity.pq_encode(mode="arrow")`), then a dynamic
+    (`similarity.pq_encode`), then a dynamic
     partition-overwrite lands the batch under
     ``store/ivf_cell=*/__batch_id=*`` — exactly-once at partition
     granularity (a replayed batch REWRITES its (cell, batch)
@@ -1862,15 +1862,10 @@ def streaming_ann_index(
                 out="__res",
                 metric="l2",
             )
-            enc = similarity.pq_encode(
-                assigned, codebooks, "__res", mode="arrow"
-            ).drop("__res")
+            enc = similarity.pq_encode(assigned, codebooks, "__res").drop("__res")
         else:
             enc = similarity.pq_encode(
-                similarity.ivf_assign(df, centroids, vec_col),
-                codebooks,
-                vec_col,
-                mode="arrow",
+                similarity.ivf_assign(df, centroids, vec_col), codebooks, vec_col
             )
         maintenance.overwrite_partitions(
             enc.withColumn("__batch_id", F.lit(epoch)),

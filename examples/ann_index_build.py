@@ -67,18 +67,14 @@ def main() -> int:
         # --- fit both tiers on a sample (the production practice) -----
         sample = raw.filter(F.col("vec_id") < FIT_N)
         cents = similarity.ivf_fit_centroids(
-            sample, k_cells=k_cells, iters=2, dim=DIM, update="arrow"
+            sample, k_cells=k_cells, iters=2, dim=DIM
         )
-        books = similarity.pq_fit(
-            sample, m=M, k_sub=KSUB, iters=2, dim=DIM, assignment="arrow"
-        )
+        books = similarity.pq_fit(sample, m=M, k_sub=KSUB, iters=2, dim=DIM)
 
         # --- ONE indexing pass, store partitioned by coarse cell ------
         t0 = time.time()
         (
-            similarity.pq_encode(
-                similarity.ivf_assign(raw, cents), books, mode="arrow"
-            )
+            similarity.pq_encode(similarity.ivf_assign(raw, cents), books)
             .write.partitionBy("ivf_cell")
             .parquet(f"{td}/store")
         )

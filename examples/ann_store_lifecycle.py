@@ -3,7 +3,7 @@ every stage is an operator this engine ships, composed the way a
 100 TB embedding service would run them:
 
 1. **Fit** frozen index models on a sample (`ivf_fit_centroids` +
-   `pq_fit`, both Arrow-kernel paths).
+   `pq_fit`; k_sub=256 puts the PQ fit on its BLAS kernel).
 2. **Build** the initial store: `ivf_assign` + `pq_encode` written
    ``partitionBy(ivf_cell)`` with ``__batch_id`` subpartitions.
 3. **Stream** new arrivals into it exactly-once
@@ -64,18 +64,15 @@ def main() -> int:
 
     t0 = time.perf_counter()
     cents = similarity.ivf_fit_centroids(
-        base.limit(FIT_N), k_cells=KCELLS, iters=2, dim=DIM, update="arrow"
+        base.limit(FIT_N), k_cells=KCELLS, iters=2, dim=DIM
     )
-    books = similarity.pq_fit(
-        base.limit(FIT_N), m=M, k_sub=KSUB, iters=1, dim=DIM, assignment="arrow"
-    )
+    books = similarity.pq_fit(base.limit(FIT_N), m=M, k_sub=KSUB, iters=1, dim=DIM)
     print(f"1. fit (sample {FIT_N}): {time.perf_counter() - t0:.1f}s")
 
     t0 = time.perf_counter()
     maintenance.overwrite_partitions(
-        similarity.pq_encode(
-            similarity.ivf_assign(base, cents), books, mode="arrow"
-        ).withColumn("__batch_id", F.lit(-1)),
+        similarity.pq_encode(similarity.ivf_assign(base, cents), books)
+        .withColumn("__batch_id", F.lit(-1)),
         store,
         ["ivf_cell", "__batch_id"],
     )

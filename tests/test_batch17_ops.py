@@ -57,12 +57,13 @@ def test_semdedup_zero_vectors_defined(spark):
     assert got[4].n_dups_earlier == 0
 
 
-def test_semdedup_kernel_parity(spark):
-    """VERDICT r9 item 4: the per-cluster applyInPandas pair stage
-    (pair_stage='kernel') must return EXACTLY the join form's output —
-    same clusters, same n_dups_earlier, same keeps — on the edge
-    battery (exact dups, near-dups straddling the threshold, zero
-    vectors, NULL vector) and on the sf0.001 embeddings fixture."""
+def test_semdedup_kernel_parity(spark, monkeypatch):
+    """VERDICT r9 item 4: the scale side (the per-cluster applyInPandas
+    pair stage, reached by setting the _exact_fit limit to 0) must
+    return EXACTLY the exact side's output — same clusters, same
+    n_dups_earlier, same keeps — on the edge battery (exact dups,
+    near-dups straddling the threshold, zero vectors, NULL vector) and
+    on the sf0.001 embeddings fixture."""
     rows = [
         (1, [1.0, 0.0, 0.0, 0.0]),
         (2, [1.0, 0.0, 0.0, 0.0]),
@@ -74,27 +75,27 @@ def test_semdedup_kernel_parity(spark):
         (8, [-1.0, 0.0, 0.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for kwargs in ({"k": 2, "iters": 2, "threshold": 0.95},
-                   {"k": 3, "iters": 1, "threshold": 0.5}):
-        want = sorted(map(tuple, similarity.semdedup(df, **kwargs).collect()))
-        got = sorted(map(tuple, similarity.semdedup(
-            df, pair_stage="kernel", **kwargs).collect()))
-        assert got == want
     from datapipelineetl_spark import catalog
 
     emb = catalog.load(spark, "/root/testdata/sf0.001", "embeddings")
-    want = sorted(map(tuple, similarity.semdedup(
-        emb, k=16, iters=1, threshold=0.45, materialize=True).collect()))
-    got = sorted(map(tuple, similarity.semdedup(
-        emb, k=16, iters=1, threshold=0.45, materialize=True,
-        pair_stage="kernel").collect()))
-    assert got == want
-    assert len(want) == emb.count()
-    with pytest.raises(ValueError, match="pair_stage"):
-        similarity.semdedup(df, pair_stage="arrow")
+    cases = [(df, {"k": 2, "iters": 2, "threshold": 0.95}),
+             (df, {"k": 3, "iters": 1, "threshold": 0.5}),
+             (emb, {"k": 16, "iters": 1, "threshold": 0.45,
+                    "materialize": True})]
+
+    def run():
+        return [sorted(map(tuple, similarity.semdedup(frame, **kw).collect()))
+                for frame, kw in cases]
+
+    want = run()
+    monkeypatch.setattr(similarity, "_EXACT_FIT_CELLS", 0)
+    assert run() == want
+    assert len(want[2]) == emb.count()
+    with pytest.raises(TypeError):
+        similarity.semdedup(df, pair_stage="kernel")
 
 
-def test_semdedup_kernel_blocking_and_nan(spark):
+def test_semdedup_kernel_blocking_and_nan(spark, monkeypatch):
     """The kernel's row-block loop must agree with itself at block=1
     (every boundary exercised), and a corrupt vector (NULL element →
     NaN) is never flagged and never counts as anyone's earlier dup."""
@@ -106,9 +107,9 @@ def test_semdedup_kernel_blocking_and_nan(spark):
     rows.append((40, [1.0, None, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]))
     rows.append((41, rows[0][1]))  # exact dup of id 0
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    monkeypatch.setattr(similarity, "_EXACT_FIT_CELLS", 0)  # the kernel side
     base = {r.vec_id: (r.cluster, r.n_dups_earlier, r.kept) for r in
-            similarity.semdedup(df, k=1, iters=1, threshold=0.99,
-                                pair_stage="kernel").collect()}
+            similarity.semdedup(df, k=1, iters=1, threshold=0.99).collect()}
     assert base[41] == (base[0][0], 1, 0)  # the exact dup, one earlier
     assert base[40][1] == 0 and base[40][2] == 1  # corrupt: kept, no dups
     # block=1 forces a block boundary between every row pair
@@ -389,11 +390,12 @@ def test_streaming_quality_annotate_parity(spark, tmp_path):
     assert got[3]["quality_prob"] is None  # NULL text: scoreless, kept row
 
 
-def test_assign_clusters_arrow_matches_fold(spark):
-    """The Arrow-matmul assignment (the kmeans docstring's documented
-    production swap for large k) matches the JVM-fold assignment on
+def test_assign_clusters_arrow_matches_fold(spark, monkeypatch):
+    """The Arrow-matmul L2 assignment behind ivf_assign(metric='l2') and
+    the scale side of kmeans matches the bit-exact kmeans assignment on
     the full embedding fixture — same argmin, same lower-id tiebreak
-    discipline — and returns NULL cluster for NULL vectors."""
+    discipline — with the centroid matrix in the UDF closure or in a
+    broadcast variable, and returns a NULL cell for NULL vectors."""
     from datapipelineetl_spark import catalog
 
     emb = catalog.load(spark, "/root/testdata/sf0.001", "embeddings")
@@ -405,86 +407,141 @@ def test_assign_clusters_arrow_matches_fold(spark):
         .selectExpr("CAST(embedding AS array<double>) AS v").collect()
     ]
     # iters=0: kmeans assigns against the rounded seed centroids with
-    # the JVM fold — the reference semantics for the Arrow swap
+    # the exact kernel — the reference semantics for the Arrow swap
     want = {r.vec_id: r.cluster
             for r in similarity.kmeans(emb, k=k, iters=0).collect()}
-    got = {r.vec_id: r.cluster
-           for r in similarity.assign_clusters_arrow(emb, seeds).collect()}
+
+    def arrow_cells(frame, cents):
+        return {r.vec_id: r.ivf_cell for r in similarity.ivf_assign(
+            frame, cents, metric="l2").select("vec_id", "ivf_cell").collect()}
+
+    got = arrow_cells(emb, seeds)
     assert got == want and len(got) == 500
 
     nulls = spark.createDataFrame(
         [(900, None), (901, [1.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
-    got_n = {r.vec_id: r.cluster for r in
-             similarity.assign_clusters_arrow(
-                 nulls, [[1.0, 0.0], [0.0, 1.0]]).collect()}
+    got_n = arrow_cells(nulls, [[1.0, 0.0], [0.0, 1.0]])
     assert got_n[900] is None and got_n[901] == 0
     with pytest.raises(ValueError, match="centroid matrix"):
-        similarity.assign_clusters_arrow(nulls, [])
+        similarity.ivf_assign(nulls, [], metric="l2")
 
-    # the broadcast-variable transport (the SemDeDup-scale k data path)
-    # is bit-identical to the closure transport — same matrix, same
-    # argmin; only the movement changes
-    via_bc = {r.vec_id: r.cluster
-              for r in similarity.assign_clusters_arrow(
-                  emb, seeds, transport="broadcast").collect()}
-    assert via_bc == want
-    with pytest.raises(ValueError, match="transport"):
-        similarity.assign_clusters_arrow(emb, seeds, transport="rdd")
+    # the broadcast transport is bit-identical to the closure one —
+    # same matrix, same argmin; only the movement changes
+    monkeypatch.setattr(similarity, "_BROADCAST_BYTES", 0)
+    assert arrow_cells(emb, seeds) == want
+    assert not hasattr(similarity, "assign_clusters_arrow")
 
 
-def test_kmeans_arrow_assignment_matches_fold(spark):
-    """kmeans(assignment='arrow') runs every assignment pass (each
-    Lloyd iteration AND the final labeling) through the matmul kernel
-    and must reproduce the default seq form on the fixture — same trajectory,
-    same final labels — under both transports; invalid knob rejected."""
+def test_kmeans_arrow_assignment_matches_fold(spark, monkeypatch):
+    """The scale side of kmeans (reached by setting the _exact_fit
+    limit to 0) runs every assignment pass (each Lloyd iteration AND
+    the final labeling) through the matmul kernel and the mean update
+    through _mean_update_arrow, and must reproduce the exact side on
+    the fixture — same trajectory, same final labels — with the
+    centroids in the closure or broadcast; the removed knobs raise."""
     from datapipelineetl_spark import catalog
 
     emb = catalog.load(spark, "/root/testdata/sf0.001", "embeddings")
     want = {r.vec_id: r.cluster
             for r in similarity.kmeans(emb, k=8, iters=3).collect()}
-    for transport in ("closure", "broadcast"):
+    monkeypatch.setattr(similarity, "_EXACT_FIT_CELLS", 0)
+    for broadcast_bytes in (1 << 20, 0):
+        monkeypatch.setattr(similarity, "_BROADCAST_BYTES", broadcast_bytes)
         got = {r.vec_id: r.cluster
-               for r in similarity.kmeans(
-                   emb, k=8, iters=3, assignment="arrow",
-                   transport=transport).collect()}
+               for r in similarity.kmeans(emb, k=8, iters=3).collect()}
         assert got == want
-    with pytest.raises(ValueError, match="assignment"):
-        similarity.kmeans(emb, k=2, assignment="blas")
+    for knob in ({"assignment": "arrow"}, {"transport": "broadcast"}):
+        with pytest.raises(TypeError):
+            similarity.kmeans(emb, k=2, **knob)
 
 
-def test_semdedup_full_production_path_matches_oracle_path(spark):
-    """The full production configuration — assignment='arrow',
-    transport='broadcast', pair_stage='kernel' — must match the
-    all-fold oracle path exactly on the fixture: every stage swap is a
-    physical-plan choice, not a semantics choice."""
+def test_semdedup_full_production_path_matches_oracle_path(spark, monkeypatch):
+    """The scale side with a broadcast centroid matrix — matmul
+    assignment, Arrow mean update, kernel pair stage — must match the
+    all-exact oracle path on the fixture: the _exact_fit rule picks a
+    physical plan, not a semantics."""
     from datapipelineetl_spark import catalog
 
     emb = catalog.load(spark, "/root/testdata/sf0.001", "embeddings")
     want = sorted(map(tuple, similarity.semdedup(
         emb, k=16, iters=2, threshold=0.45, materialize=True).collect()))
+    monkeypatch.setattr(similarity, "_EXACT_FIT_CELLS", 0)
+    monkeypatch.setattr(similarity, "_BROADCAST_BYTES", 0)
     got = sorted(map(tuple, similarity.semdedup(
-        emb, k=16, iters=2, threshold=0.45, materialize=True,
-        assignment="arrow", transport="broadcast",
-        pair_stage="kernel").collect()))
+        emb, k=16, iters=2, threshold=0.45, materialize=True).collect()))
     assert got == want
+    for knob in ({"assignment": "arrow"}, {"transport": "broadcast"}):
+        with pytest.raises(TypeError):
+            similarity.semdedup(emb, k=2, **knob)
 
 
-def test_ivf_fit_update_arrow_matches_agg(spark):
-    """ivf_fit_centroids(update='arrow') — the wide-dim running-sum
+def test_ivf_fit_update_arrow_matches_agg(spark, monkeypatch):
+    """ivf_fit_centroids' scale-side update (_mean_update_arrow, reached
+    by setting the _exact_fit limit to 0) — the wide-dim running-sum
     mean update that replaces the dim x F.avg aggregate (which OOMs
     the 1 GiB local JVM at dim=1024, SCALING.md r12) — reproduces the
     agg form's centroids on the fixture to float tolerance (partial
     sums add in batch order, so bit-equality is not the contract) and
-    null vectors still take no part; invalid knob rejected."""
+    null vectors still take no part; the removed knob raises."""
     import numpy as np
 
     from datapipelineetl_spark import catalog
 
     emb = catalog.load(spark, "/root/testdata/sf0.001", "embeddings")
     want = similarity.ivf_fit_centroids(emb, k_cells=8, iters=3)
-    got = similarity.ivf_fit_centroids(emb, k_cells=8, iters=3, update="arrow")
+    monkeypatch.setattr(similarity, "_EXACT_FIT_CELLS", 0)
+    got = similarity.ivf_fit_centroids(emb, k_cells=8, iters=3)
     assert np.allclose(np.asarray(got), np.asarray(want), atol=1e-9)
-    with pytest.raises(ValueError, match="update"):
-        similarity.ivf_fit_centroids(emb, k_cells=8, iters=1, update="avg")
+    with pytest.raises(TypeError):
+        similarity.ivf_fit_centroids(emb, k_cells=8, iters=1, update="arrow")
+
+
+def test_exact_fit_rule_pins_the_fit_traffic():
+    """Every registered oracle and benchmark fit takes the exact side,
+    the k_sub=256 PQ fit of examples/ann_* the scale side, and so does
+    a narrow-k but wide-dim fit; the five fits expose no kernel knob."""
+    import inspect
+
+    exact = [
+        (4, 64),    # q_kmeans_clusters, q_cluster_balanced_sample
+        (16, 64),   # q_semdedup, batch 19-21 PQ (k_sub=16), q_ivf_recall
+        (16, 32),   # vector_topk PQ fit
+        (8, 32),    # vector_topk IVF fit
+        (16, 64), (32, 64),  # examples/ann_* IVF fits
+    ]
+    assert all(similarity._exact_fit(k, dim) for k, dim in exact)
+    assert not similarity._exact_fit(256, 64)  # examples/ann_* PQ fit
+    assert not similarity._exact_fit(4, 1024)  # the dim guard
+    assert similarity._exact_fit(64, 64) and not similarity._exact_fit(65, 64)
+    for fn in (similarity.kmeans, similarity.semdedup,
+               similarity.ivf_fit_centroids, similarity.pq_fit,
+               similarity.pq_encode):
+        params = set(inspect.signature(fn).parameters)
+        assert not params & {"assignment", "transport", "update",
+                             "pair_stage", "mode"}, fn.__name__
+
+
+def test_arrow_assign_broadcasts_over_one_mib(spark):
+    """A centroid matrix over 1 MiB reaches executors as a broadcast
+    variable (the handle comes back for unpersist) and assigns the same
+    labels as the bit-exact kernel; a small one rides the closure."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(11)
+    cents = rng.normal(size=(2100, 64)).tolist()  # 2100 × 64 × 8 B > 1 MiB
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(rng.normal(size=(60, 64)))]
+    rows.append((60, None))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    vec = F.col("embedding").cast("array<double>")
+    udf, bc = similarity._arrow_assign_udf(spark, cents, return_handle=True)
+    assert bc is not None
+    got = df.select("vec_id", udf(vec).alias("c")).collect()
+    exact = similarity._seq_l2_assign_udf(cents)
+    want = df.select("vec_id", exact(vec).alias("c")).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert dict(map(tuple, got))[60] is None
+    bc.unpersist()
+    assert similarity._arrow_assign_udf(spark, cents[:8], return_handle=True)[1] is None

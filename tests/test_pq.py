@@ -158,9 +158,10 @@ def test_pq_adc_matches_python_replay(pq_frame):
     assert all(r.vec_id != 9 for r in got)
 
 
-def test_pq_encode_arrow_matches_seq(spark, sf_dir):
-    """The matmul encode kernel agrees with the bit-exact seq kernel
-    (the default, pinned by test_pq_fit_encode_matches_python_replay)
+def test_pq_encode_arrow_matches_seq(spark, sf_dir, monkeypatch):
+    """The matmul encode kernel (the scale side, reached by setting the
+    _exact_fit limit to 0) agrees with the bit-exact seq kernel (the
+    exact side, pinned by test_pq_fit_encode_matches_python_replay)
     on the fixture, NULL vector → NULL code in both."""
     emb = catalog.load(spark, sf_dir, "embeddings")
     with_null = emb.unionByName(
@@ -171,28 +172,33 @@ def test_pq_encode_arrow_matches_seq(spark, sf_dir):
     books = similarity.pq_fit(emb, m=16, k_sub=16, iters=1)
     seq = {
         r.vec_id: r.pq_code
-        for r in similarity.pq_encode(with_null, books, mode="seq").collect()
+        for r in similarity.pq_encode(with_null, books).collect()
     }
+    monkeypatch.setattr(similarity, "_EXACT_FIT_CELLS", 0)
     arrow = {
         r.vec_id: r.pq_code
-        for r in similarity.pq_encode(with_null, books, mode="arrow").collect()
+        for r in similarity.pq_encode(with_null, books).collect()
     }
     assert seq == arrow
     assert seq[10**9] is None
+    with pytest.raises(TypeError):
+        similarity.pq_encode(with_null, books, mode="arrow")
 
 
-def test_pq_fit_arrow_matches_seq(spark, sf_dir):
-    """pq_fit(assignment="arrow") routes each iteration's argmin through
-    the matmul kernel instead of the bit-exact seq kernel (the default,
-    pinned by test_pq_fit_encode_matches_python_replay). On the fixture
-    the two must produce IDENTICAL codebooks (no distance ties at
-    fixture geometry, and the mean agg is shared)."""
+def test_pq_fit_arrow_matches_seq(spark, sf_dir, monkeypatch):
+    """On the scale side (reached by setting the _exact_fit limit to 0)
+    pq_fit routes each iteration's argmin through the matmul kernel
+    instead of the bit-exact seq kernel (the exact side, pinned by
+    test_pq_fit_encode_matches_python_replay). On the fixture the two
+    must produce IDENTICAL codebooks (no distance ties at fixture
+    geometry, and the mean agg is shared)."""
     emb = catalog.load(spark, sf_dir, "embeddings")
-    seq = similarity.pq_fit(emb, m=16, k_sub=16, iters=2, assignment="seq")
-    arrow = similarity.pq_fit(emb, m=16, k_sub=16, iters=2, assignment="arrow")
+    seq = similarity.pq_fit(emb, m=16, k_sub=16, iters=2)
+    monkeypatch.setattr(similarity, "_EXACT_FIT_CELLS", 0)
+    arrow = similarity.pq_fit(emb, m=16, k_sub=16, iters=2)
     assert seq == arrow
-    with pytest.raises(ValueError, match="assignment"):
-        similarity.pq_fit(emb, m=16, assignment="nope")
+    with pytest.raises(TypeError):
+        similarity.pq_fit(emb, m=16, assignment="arrow")
 
 
 def test_pq_adc_recall_and_refine(spark, sf_dir):
@@ -240,8 +246,8 @@ def test_pq_validation_errors(pq_frame):
     with pytest.raises(ValueError, match="non-null vectors"):
         similarity.pq_fit(df, m=2, k_sub=100)
     books = similarity.pq_fit(df, m=_M, k_sub=_KSUB, iters=_ITERS)
-    with pytest.raises(ValueError, match="mode"):
-        similarity.pq_encode(df, books, mode="nope")
+    with pytest.raises(TypeError):
+        similarity.pq_encode(df, books, mode="seq")
     with pytest.raises(ValueError, match="query dim"):
         similarity.pq_adc_topk(df, [0.0] * 5, books)
     with pytest.raises(ValueError, match="vectors"):
@@ -268,7 +274,7 @@ def test_ivfpq_topk_composition(spark, sf_dir):
         emb, q, cents, books, k=10, nprobe=3, exclude_ids=(0,)
     ).collect()
     stored = similarity.pq_encode(
-        similarity.ivf_assign(emb, cents), books, out="pq_code", mode="arrow"
+        similarity.ivf_assign(emb, cents), books, out="pq_code"
     )
     persisted = similarity.ivfpq_topk(
         stored, q, cents, books, k=10, nprobe=3,
@@ -328,8 +334,7 @@ def test_ivfpq_partition_pruning_plan(spark, sf_dir, tmp_path):
     emb = catalog.load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = similarity.ivf_fit_centroids(emb, k_cells=8, iters=2)
     books = similarity.pq_fit(emb, m=16, k_sub=16, iters=1)
-    enc = similarity.pq_encode(similarity.ivf_assign(emb, cents), books,
-                               mode="arrow")
+    enc = similarity.pq_encode(similarity.ivf_assign(emb, cents), books)
     path = str(tmp_path / "store")
     enc.write.partitionBy("ivf_cell").parquet(path)
     store = spark.read.parquet(path)
@@ -421,10 +426,10 @@ def test_ivfpq_residual_beats_global_at_low_code_budget(spark):
         vec_col="residual",
     )
     stored = similarity.ivf_assign(emb, cents, metric="l2")
-    sg = similarity.pq_encode(stored, books_g, mode="arrow")
+    sg = similarity.pq_encode(stored, books_g)
     sr = similarity.pq_encode(
         similarity.residualize(stored, cents, cell_col="ivf_cell"),
-        books_r, "residual", "pq_code", mode="arrow",
+        books_r, "residual", "pq_code",
     )
     rg = rr = 0.0
     qids = [0, 3, 250, 500, 701]
@@ -500,7 +505,7 @@ def test_ivfpq_residual_onthefly_and_partition_pruning(spark, tmp_path):
             similarity.ivf_assign(emb, cents, metric="l2"), cents,
             cell_col="ivf_cell",
         ),
-        books, "residual", "pq_code", mode="arrow",
+        books, "residual", "pq_code",
     ).drop("residual")
     path = str(tmp_path / "res_store")
     stored.write.partitionBy("ivf_cell").parquet(path)
@@ -705,7 +710,7 @@ def test_ivfpq_topk_multi_modes_match_single(spark, sf_dir, tmp_path):
     books = similarity.pq_fit(emb, m=16, k_sub=16, iters=1)
     path = str(tmp_path / "store")
     similarity.pq_encode(
-        similarity.ivf_assign(emb, cents), books, mode="arrow"
+        similarity.ivf_assign(emb, cents), books
     ).write.partitionBy("ivf_cell").parquet(path)
     store = spark.read.parquet(path)
     vecs = {r.vec_id: [float(x) for x in r.embedding]
@@ -747,7 +752,7 @@ def test_ivfpq_topk_multi_refine_matches_single(spark, sf_dir):
     cents = similarity.ivf_fit_centroids(emb, k_cells=8, iters=2, dim=dim)
     books = similarity.pq_fit(emb, m=16, k_sub=16, iters=1)
     work = similarity.pq_encode(
-        similarity.ivf_assign(emb, cents), books, mode="arrow"
+        similarity.ivf_assign(emb, cents), books
     )
     vecs = {r.vec_id: [float(x) for x in r.embedding]
             for r in emb.filter(F.col("vec_id") < 2).collect()}
@@ -1104,7 +1109,7 @@ def test_ivfpq_residual_topk_multi_modes_match_single(spark, sf_dir, tmp_path):
     res = similarity.residualize(assigned, cents, cell_col="ivf_cell")
     books = similarity.pq_fit(res, m=16, k_sub=16, iters=1, vec_col="residual")
     path = str(tmp_path / "res_store")
-    similarity.pq_encode(res, books, "residual", mode="arrow").drop(
+    similarity.pq_encode(res, books, "residual").drop(
         "residual"
     ).write.partitionBy("ivf_cell").parquet(path)
     store = spark.read.parquet(path)

@@ -1,5 +1,6 @@
 """Property-based check for semdedup: the full operator (deterministic
-Lloyd trajectory + within-cluster pair stage, pair_stage='join') must
+Lloyd trajectory + within-cluster pair stage, the exact side of
+``similarity._exact_fit``) must
 match a pure-Python reference that mirrors the JVM folds OPERATION FOR
 OPERATION — left-to-right zip folds for distances/dots, shuffle-safe
 exact integer sums for the centroid means, shortest-repr HALF_UP

@@ -2032,7 +2032,7 @@ def test_streaming_ann_index_matches_batch_and_replays(spark, tmp_path):
     assert {"ivf_cell", "__batch_id"} <= set(got.columns)
     assert got.select("__batch_id").distinct().count() >= 2
     expected = similarity.pq_encode(
-        similarity.ivf_assign(base, cents), books, mode="arrow"
+        similarity.ivf_assign(base, cents), books
     )
     canon = lambda df: sorted(
         (r.vec_id, r.ivf_cell, tuple(r.pq_code)) for r in df.collect()
@@ -2099,7 +2099,7 @@ def test_streaming_ann_index_residual_matches_batch(spark, tmp_path):
             similarity.ivf_assign(base, cents, metric="l2"),
             cents, cell_col="ivf_cell", out="__res", metric="l2",
         ),
-        books, "__res", mode="arrow",
+        books, "__res",
     ).drop("__res")
     canon = lambda df: sorted(
         (r.vec_id, r.ivf_cell, tuple(r.pq_code)) for r in df.collect()

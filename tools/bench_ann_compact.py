@@ -61,11 +61,8 @@ def main() -> int:
     fit = spark.createDataFrame(
         [(i, vec(i)) for i in range(4_000)], "vec_id long, embedding array<double>"
     )
-    cents = similarity.ivf_fit_centroids(
-        fit, k_cells=KCELLS, iters=2, dim=DIM, update="arrow"
-    )
-    books = similarity.pq_fit(fit, m=M, k_sub=KSUB, iters=1, dim=DIM,
-                              assignment="arrow")
+    cents = similarity.ivf_fit_centroids(fit, k_cells=KCELLS, iters=2, dim=DIM)
+    books = similarity.pq_fit(fit, m=M, k_sub=KSUB, iters=1, dim=DIM)
 
     print(f"writing {n_batches} batches x {per_batch} rows, k_cells={KCELLS}")
     t0 = time.perf_counter()
@@ -75,7 +72,7 @@ def main() -> int:
             "vec_id long, embedding array<double>",
         )
         enc = similarity.pq_encode(
-            similarity.ivf_assign(batch, cents), books, mode="arrow"
+            similarity.ivf_assign(batch, cents), books
         ).withColumn("__batch_id", F.lit(b))
         maintenance.overwrite_partitions(enc, store, ["ivf_cell", "__batch_id"])
     print(f"  ingest wall {time.perf_counter() - t0:.1f}s")

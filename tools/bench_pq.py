@@ -16,8 +16,8 @@ Two claims to pin with numbers, not arguments:
 
 Fit is on a SAMPLE (the ivf_fit_centroids practice) — fit cost is
 excluded from the scan comparison on purpose; encode cost (one Arrow
-pass, mode="arrow") is reported once. The fit runs
-``assignment="arrow"``, the production path for k_sub=256.
+pass) is reported once. At k_sub=256 the fit and the encode both take
+the BLAS kernel (``similarity._exact_fit``).
 
     python tools/bench_pq.py [n ...]    # default 200000 1000000
 """
@@ -90,10 +90,10 @@ def main() -> int:
             vec_store = spark.read.parquet(f"{td}/vec")
             books = similarity.pq_fit(
                 vec_store.filter(F.col("vec_id") < FIT_N),
-                m=M, k_sub=KSUB, iters=ITERS, dim=DIM, assignment="arrow",
+                m=M, k_sub=KSUB, iters=ITERS, dim=DIM,
             )
             t0 = time.perf_counter()
-            similarity.pq_encode(vec_store, books, mode="arrow").select(
+            similarity.pq_encode(vec_store, books).select(
                 "vec_id", "pq_code"
             ).write.parquet(f"{td}/code")
             t_enc = time.perf_counter() - t0

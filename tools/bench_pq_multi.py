@@ -62,12 +62,11 @@ def main() -> int:
             "id as vec_id", f"{vec_expr(7)} as embedding"
         )
         books = similarity.pq_fit(
-            base.limit(FIT_N), m=M, k_sub=KSUB, iters=1, dim=DIM,
-            assignment="arrow",
+            base.limit(FIT_N), m=M, k_sub=KSUB, iters=1, dim=DIM
         )
         tmp = tempfile.mkdtemp(prefix="pqmulti_")
         enc_path = str(Path(tmp) / "codes")
-        similarity.pq_encode(base, books, mode="arrow").select(
+        similarity.pq_encode(base, books).select(
             "vec_id", "pq_code"
         ).write.parquet(enc_path)
         enc = spark.read.parquet(enc_path)
@@ -98,11 +97,11 @@ def main() -> int:
         # the PRUNED variant over a cell-partitioned store: Q sequential
         # ivfpq_topk directory-pruned scans vs one union-pruned batch
         cents = similarity.ivf_fit_centroids(
-            base.limit(FIT_N), k_cells=16, iters=2, dim=DIM, update="arrow"
+            base.limit(FIT_N), k_cells=16, iters=2, dim=DIM
         )
         store_path = str(Path(tmp) / "store")
         similarity.pq_encode(
-            similarity.ivf_assign(base, cents), books, mode="arrow"
+            similarity.ivf_assign(base, cents), books
         ).select("vec_id", "ivf_cell", "pq_code").write.partitionBy(
             "ivf_cell"
         ).parquet(store_path)
@@ -211,7 +210,7 @@ def main() -> int:
             # ivf_topk scans vs one union-pruned batched pass
             cents2 = similarity.ivf_fit_centroids(
                 base.limit(FIT_N), k_cells=16, iters=2, dim=DIM,
-                metric="l2", update="arrow",
+                metric="l2",
             )
             ivf_path = str(Path(tmp) / "ivf_store")
             similarity.ivf_assign(base, cents2, metric="l2").write.partitionBy(
@@ -252,10 +251,10 @@ def main() -> int:
         )
         res_books = similarity.pq_fit(
             res.limit(FIT_N), m=M, k_sub=KSUB, iters=1, dim=DIM,
-            vec_col="residual", assignment="arrow",
+            vec_col="residual",
         )
         res_path = str(Path(tmp) / "res_store")
-        similarity.pq_encode(res, res_books, "residual", mode="arrow").select(
+        similarity.pq_encode(res, res_books, "residual").select(
             "vec_id", "ivf_cell", "pq_code"
         ).write.partitionBy("ivf_cell").parquet(res_path)
         res_store = spark.read.parquet(res_path)
