@@ -340,7 +340,8 @@ def pack_greedy(
         list(df.schema.fields) + [T.StructField(pack_col, T.LongType())]
     )
 
-    def _pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints on _pack (module convention — see text._annot_kernel_udf)
+    def _pack(key, pdf):
         pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
         base = int(key[0]) << 32
         packs, fill, pack = [], 0, 0
@@ -1780,7 +1781,8 @@ def pack_best_fit(
         list(df.schema.fields) + [T.StructField(pack_col, T.LongType())]
     )
 
-    def _pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints on _pack (module convention — see text._annot_kernel_udf)
+    def _pack(key, pdf):
         pdf = pdf.sort_values(
             [token_col, id_col], ascending=[False, True], kind="mergesort"
         ).reset_index(drop=True)

@@ -456,45 +456,6 @@ def _validated_id_type(df: DataFrame, id_col: str) -> str:
     return t
 
 
-def cosine_scores_pandas(
-    df: DataFrame,
-    query_vec: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out: str = "cos_sim",
-) -> DataFrame:
-    """Vectorized (Arrow-batched pandas UDF) cosine against a fixed query —
-    the numpy path for kernels the JVM can't express (here it CAN:
-    ``cosine()`` above is the production JVM version; this exists as the
-    documented escape hatch and is asserted equal to it in tests).
-
-    Scale: the batch matrix-multiplies in numpy (one BLAS call per Arrow
-    batch) — this is what 'Pandas UDFs beat row-at-a-time Python by
-    10-100×' means concretely; a row-at-a-time ``udf()`` here would do
-    |dim| Python float ops per ROW with interpreter overhead per element.
-    """
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q)) or 1.0
-
-    def _score(vecs):
-        m, mask = _stack_nullable(vecs, len(q))
-        dots = m @ q
-        norms = np.linalg.norm(m, axis=1)
-        norms[norms == 0] = 1.0
-        out = pd.array(dots / (norms * qn), dtype="Float64")
-        out[mask] = pd.NA  # null embedding → null score, not a crash
-        return pd.Series(out)
-
-    # no type hints: this module uses `from __future__ import annotations`,
-    # which stringifies hints before pandas_udf can inspect them
-    score = pandas_udf(_score, "double")
-    return df.select(id_col, score(F.col(vec_col)).alias(out))
-
-
 def lsh_cosine_near_pairs(
     df: DataFrame,
     threshold: float,
@@ -843,6 +804,149 @@ def _exact_fit(k: int, dim: int) -> bool:
     return k * dim <= _EXACT_FIT_CELLS and dim <= _EXACT_FIT_DIM
 
 
+# The driver fit's budget: an exact-side fit whose input holds at most
+# this many non-null vectors runs its whole Lloyd loop on the driver
+# (≤ 64 MiB of float64 at the exact side's dim ≤ 256).
+_DRIVER_FIT_ROWS = 32768
+
+
+def _driver_fit_rows(
+    df: DataFrame, vec: Column, id_col: str, k: int, dim: int | None
+) -> _FitRows | None:
+    """The size probe of ``kmeans``, ``ivf_fit_centroids`` and
+    ``pq_fit``, which also fetches the fit's input: ONE Spark job
+    collects (partition id, id, vector) of at most
+    ``_DRIVER_FIT_ROWS + 1`` non-null vectors over Arrow. The rows come
+    back as ``_FitRows`` when they fit the budget and the fit is on the
+    exact side of ``_exact_fit(k, dim)``; the fit then runs its seeds
+    and every Lloyd iteration on the driver, with the kernels its
+    Spark loop runs. None — run the Spark loop — when the input is
+    over budget, on the scale side, holds a NULL element (``F.avg``
+    skips it per dimension), has vectors of unequal width or of a width
+    other than ``dim``, or has an id column the driver cannot order as
+    Spark does (not integral or string).
+
+    Vectors wider than the exact side allows come back NULL, so the
+    probe never ships more than the budget's 64 MiB; a ``dim`` already
+    on the scale side skips the probe."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    id_type = df.select(id_col).schema.fields[0].dataType.simpleString()
+    if id_type not in (*_INTEGRAL_TYPES, "string"):
+        return None
+    width = min(_EXACT_FIT_DIM, _EXACT_FIT_CELLS // k) if dim is None else dim
+    if width < 1 or not _exact_fit(k, width):
+        return None
+    t = (
+        df.filter(vec.isNotNull())
+        .select(
+            F.spark_partition_id().alias("p"),
+            F.col(id_col).alias("i"),
+            F.when(F.size(vec) <= width, vec).alias("v"),
+        )
+        .limit(_DRIVER_FIT_ROWS + 1)
+        .toArrow()
+    )
+    n = t.num_rows
+    v = t.column("v").combine_chunks()
+    flat = v.flatten()
+    if n > _DRIVER_FIT_ROWS or v.null_count or flat.null_count:
+        return None
+    lengths = pc.list_value_length(v).to_numpy(zero_copy_only=False)
+    width = int(lengths[0]) if n else 0
+    if (lengths != width).any() or (dim is not None and n and width != dim):
+        return None
+    x = flat.to_numpy(zero_copy_only=False).reshape(n, width)
+    part = t.column("p").to_numpy()
+    ids = t.column("i").to_pylist()
+    if (part[1:] < part[:-1]).any():  # partition order, row order within
+        perm = np.argsort(part, kind="stable")
+        x, part, ids = x[perm], part[perm], [ids[i] for i in perm]
+    bounds = [0, *(np.flatnonzero(np.diff(part)) + 1).tolist(), n]
+    batch = int(df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    return _FitRows(x, list(zip(bounds[:-1], bounds[1:])) if n else [], ids,
+                    batch if batch > 0 else max(n, 1))
+
+
+class _FitRows:
+    """A fit's non-null input vectors on the driver (``_driver_fit_rows``):
+    ``x`` (n × dim float64) in Spark partition order and row order
+    within each partition, ``parts`` the (start, stop) rows of each
+    partition, and what the Spark loop's Arrow UDF would batch them by."""
+
+    def __init__(self, x, parts, ids, batch_rows: int):
+        self.x, self.parts, self.ids, self.batch_rows = x, parts, ids, batch_rows
+
+    def seeds(self, k: int) -> list[list[float]]:
+        """The k lowest-id vectors — the Spark loop's
+        ``orderBy(id).limit(k)``, NULL ids first. Rows sharing an id
+        (where Spark's order is undefined) keep their scan order:
+        partition, then position in the partition."""
+        import heapq  # noqa: PLC0415
+
+        ids = self.ids
+        order = heapq.nsmallest(
+            k, range(len(ids)),
+            key=lambda r: (ids[r] is not None, 0 if ids[r] is None else ids[r], r),
+        )
+        return [self.x[r].tolist() for r in order]
+
+    def assign(self, kernel, *args):
+        """``kernel(x, *args)`` over the batches the Spark loop's Arrow
+        UDF would see — each partition's rows, ``batch_rows`` at a time —
+        so a BLAS kernel sums each row as a worker would."""
+        import numpy as np  # noqa: PLC0415
+
+        return np.concatenate([
+            kernel(self.x[a:min(a + self.batch_rows, hi)], *args)
+            for lo, hi in self.parts
+            for a in range(lo, hi, self.batch_rows)
+        ])
+
+    def means(self, cells, cols: slice = slice(None)) -> dict:
+        """{cell: mean of ``x[:, cols]`` over its rows} — ``groupBy(cell)
+        .agg(F.avg)`` replayed bit for bit: in each partition a cell's
+        rows add sequentially in row order from 0.0 (the partial
+        aggregate's buffer — so a lone −0.0 averages to 0.0 there too),
+        the partials add in partition order from 0.0 (the final
+        aggregate), and the sum divides by the count. A cell without
+        rows is absent, so it keeps its previous centroid."""
+        import numpy as np  # noqa: PLC0415
+
+        sums: dict = {}
+        counts: dict = {}
+        for lo, hi in self.parts:
+            c = cells[lo:hi]
+            order = np.argsort(c, kind="stable")
+            c, x = c[order], self.x[lo:hi, cols][order]
+            starts = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
+            for a, b in zip(starts, [*starts[1:], len(c)]):
+                run = np.concatenate([np.zeros((1, x.shape[1])), x[a:b]])
+                cell = int(c[a])
+                sums[cell] = sums.get(cell, 0.0) + np.add.accumulate(run, axis=0)[-1]
+                counts[cell] = counts.get(cell, 0) + (b - a)
+        return {cell: sums[cell] / counts[cell] for cell in sums}
+
+
+def _fit_seeds(
+    df: DataFrame, vec: Column, id_col: str, k: int, sample: _FitRows | None
+) -> list[list[float]]:
+    """The k lowest-id non-null vectors of a fit: from the driver's
+    ``sample`` when the probe fetched one, else one
+    ``orderBy(id).limit(k)`` collect."""
+    if sample is not None:
+        return sample.seeds(k)
+    return [
+        r.v
+        for r in df.filter(vec.isNotNull())
+        .orderBy(id_col)
+        .limit(k)
+        .select(vec.alias("v"))
+        .collect()
+    ]
+
+
 def ivf_fit_centroids(
     df: DataFrame,
     k_cells: int = 16,
@@ -875,6 +979,15 @@ def ivf_fit_centroids(
     4096, dim ≤ 256): per-dimension ``F.avg`` on the exact side, two
     Arrow passes of running sums (``_mean_update_arrow``) on the scale
     side.
+
+    Driver rule (``_driver_fit_rows``): on the exact side, an input of
+    at most ``_DRIVER_FIT_ROWS`` (32,768) non-null vectors is collected
+    in one job and the seeds and every iteration run on the driver —
+    the same assignment kernel per Arrow batch, ``F.avg``'s summation
+    order replayed — for the same centroids. At 2,000 × 32 in 4
+    partitions that is 1 Spark job and 0 Python worker tasks instead of
+    3 jobs and 4 stages (1.9–3.3 s of CPU, mostly the fixed cost of
+    each Python task, SCALING.md "Per-Python-task fixed cost").
     """
     if k_cells < 1 or iters < 1:
         raise ValueError(f"k_cells and iters must be >= 1, got {k_cells}, {iters}")
@@ -883,13 +996,8 @@ def ivf_fit_centroids(
     import numpy as np  # noqa: PLC0415
 
     vec = F.col(vec_col).cast("array<double>")
-    seeds = (
-        df.filter(vec.isNotNull())
-        .orderBy(id_col)
-        .limit(k_cells)
-        .select(vec.alias("v"))
-        .collect()
-    )
+    sample = _driver_fit_rows(df, vec, id_col, k_cells, dim)
+    seeds = _fit_seeds(df, vec, id_col, k_cells, sample)
     if not seeds:
         raise ValueError("cannot infer embedding dim from an empty/null column")
     if len(seeds) < k_cells:
@@ -897,7 +1005,7 @@ def ivf_fit_centroids(
     if dim is None:
         # infer from the seeds collect instead of a separate .first()
         # probe — one fewer fixed-latency Spark job per fit (round 13)
-        dim = len(seeds[0].v)
+        dim = len(seeds[0])
     exact = _exact_fit(k_cells, dim)
 
     def _norm_rows(m):
@@ -905,26 +1013,31 @@ def ivf_fit_centroids(
         n[n == 0] = 1.0
         return m / n
 
-    centroids = np.array([r.v for r in seeds], dtype=np.float64)
+    centroids = np.array(seeds, dtype=np.float64)
     if metric == "cosine":
         centroids = _norm_rows(centroids)
     for _ in range(iters):
-        cell = _cell_assigner(df.sparkSession, centroids.tolist(), metric)(vec)
-        # null vectors take no part in the fit (their cell is null);
-        # dropping them here keeps the centroid update well-defined
-        members = df.filter(vec.isNotNull()).select(
-            cell.alias("__c"), vec.alias("__v")
-        )
         new_c = centroids.copy()  # empty cells keep their old centroid
-        if exact:
-            sums = members.groupBy("__c").agg(
-                *[F.avg(F.col("__v")[i]).alias(f"c{i}") for i in range(dim)]
-            ).collect()
-            for r in sums:
-                new_c[r["__c"]] = [r[f"c{i}"] for i in range(dim)]
+        if sample is not None:
+            kernel, args = _cell_kernel(centroids, metric)
+            for c, mean in sample.means(sample.assign(kernel, *args)).items():
+                new_c[c] = mean
         else:
-            for c, (n, s) in _mean_update_arrow(members, dim).items():
-                new_c[c] = s / n
+            cell = _cell_assigner(df.sparkSession, centroids.tolist(), metric)(vec)
+            # null vectors take no part in the fit (their cell is null);
+            # dropping them here keeps the centroid update well-defined
+            members = df.filter(vec.isNotNull()).select(
+                cell.alias("__c"), vec.alias("__v")
+            )
+            if exact:
+                sums = members.groupBy("__c").agg(
+                    *[F.avg(F.col("__v")[i]).alias(f"c{i}") for i in range(dim)]
+                ).collect()
+                for r in sums:
+                    new_c[r["__c"]] = [r[f"c{i}"] for i in range(dim)]
+            else:
+                for c, (n, s) in _mean_update_arrow(members, dim).items():
+                    new_c[c] = s / n
         centroids = np.asarray(new_c, dtype=np.float64)
         if metric == "cosine":
             centroids = _norm_rows(centroids)
@@ -941,22 +1054,49 @@ def _cell_assigner(spark: SparkSession, centroids: list[list[float]], metric: st
     return _ivf_assign_pandas(centroids)
 
 
+def _cell_kernel(centroids, metric: str):
+    """``(kernel, args)`` of ``_cell_assigner``: the numpy function its
+    UDF runs per Arrow batch, and the centroid arguments it closes
+    over, so ``ivf_fit_centroids``' driver fit runs the same code."""
+    import numpy as np  # noqa: PLC0415
+
+    c = np.asarray(centroids, dtype=np.float64)
+    if metric == "l2":
+        return _l2_argmin_blas, (c, (c * c).sum(axis=1))
+    return _max_dot_argmax, (c.T,)
+
+
+def _cell_series(vecs, dim: int, kernel, *args):
+    """One Arrow batch of vectors → nullable Int32 cells: ``kernel(x,
+    *args)`` over the stacked (batch × dim) matrix, NULL for a NULL
+    vector. The body of every scalar cell-assignment UDF here."""
+    import pandas as pd  # noqa: PLC0415
+
+    x, mask = _stack_nullable(vecs, dim)
+    cells = pd.array(kernel(x, *args), dtype="Int32")
+    cells[mask] = pd.NA  # null embedding → null cell (no crash)
+    return pd.Series(cells)
+
+
+def _max_dot_argmax(x, ct):
+    """Cell of each row of ``x``: argmax of its dot product with the
+    (normalized) centroids, ``ct`` = dim × k — one BLAS matmul."""
+    import numpy as np  # noqa: PLC0415
+
+    return (x @ ct).argmax(axis=1).astype(np.int32)
+
+
 def _ivf_assign_pandas(centroids: list[list[float]]):
     """Arrow-batched cell assignment: argmax dot product against the
     (normalized) centroid matrix — one numpy matmul per batch, same
     rationale as ``_lsh_signatures_pandas`` (k dot products per row as
     JVM folds would be interpreted, not codegen)."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
-    c = np.asarray(centroids, dtype=np.float64).T  # dim × k
+    kernel, (c,) = _cell_kernel(centroids, "cosine")
 
     def _assign(vecs):
-        m, mask = _stack_nullable(vecs, c.shape[0])
-        cells = pd.array((m @ c).argmax(axis=1).astype(np.int32), dtype="Int32")
-        cells[mask] = pd.NA  # null embedding → null cell (no crash)
-        return pd.Series(cells)
+        return _cell_series(vecs, c.shape[0], kernel, c)
 
     return pandas_udf(_assign, "int")
 
@@ -1404,6 +1544,15 @@ def kmeans(
     side: ``_arrow_assign_udf`` and ``_mean_update_arrow`` (means
     rounded by ``_round_half_up_np``), where BLAS summation order can
     flip a vector equidistant to two centroids at the last ulp.
+
+    Driver rule (``_driver_fit_rows``): on the exact side, an input of
+    at most ``_DRIVER_FIT_ROWS`` (32,768) non-null vectors is collected
+    in one job and the seeds and every iteration run on the driver —
+    ``_l2_argmin_seq``, ``F.avg``'s summation order replayed, means
+    rounded by ``_pq_half_up`` (``F.round``'s HALF_UP) — for the same
+    centroids: one Spark job instead of two per iteration plus the
+    seeds job, and no Python worker task (SCALING.md "Per-Python-task
+    fixed cost"). The final labeling stays a lazy Spark plan.
     """
     return _kmeans(df, k, iters, id_col, vec_col, round_dp)[0]
 
@@ -1414,17 +1563,14 @@ def _kmeans(df: DataFrame, k: int, iters: int, id_col: str, vec_col: str,
     ``semdedup`` picks its pair stage from the fit it already runs."""
     if k < 1 or iters < 0:
         raise ValueError(f"need k >= 1 and iters >= 0, got {k}, {iters}")
+    import numpy as np  # noqa: PLC0415
+
     vec = F.col(vec_col).cast("array<double>")
-    seeds = (
-        df.filter(vec.isNotNull())
-        .orderBy(id_col)
-        .limit(k)
-        .select(vec.alias("v"))
-        .collect()
-    )
+    sample = _driver_fit_rows(df, vec, id_col, k, None)
+    seeds = _fit_seeds(df, vec, id_col, k, sample)
     if len(seeds) < k:
         raise ValueError(f"need >= {k} non-null vectors, got {len(seeds)}")
-    cents = [[round(float(x), round_dp) for x in r.v] for r in seeds]
+    cents = [[round(float(x), round_dp) for x in v] for v in seeds]
     dim = len(cents[0])
     exact = _exact_fit(k, dim)
 
@@ -1436,31 +1582,38 @@ def _kmeans(df: DataFrame, k: int, iters: int, id_col: str, vec_col: str,
         return udf(vec), bc
 
     for _ in range(iters):
-        assign_col, iter_bc = assign(cents)
-        members = df.filter(vec.isNotNull()).select(
-            assign_col.alias("__c"), vec.alias("__v")
-        )
-        if exact:
-            means = members.groupBy("__c").agg(
-                *[
-                    F.round(F.avg(F.col("__v")[i]), round_dp).alias(f"c{i}")
-                    for i in range(dim)
-                ]
-            ).collect()
+        if sample is not None:
+            cells = sample.assign(_l2_argmin_seq, np.asarray(cents, dtype=np.float64))
             updated = {
-                r["__c"]: [float(r[f"c{i}"]) for i in range(dim)] for r in means
+                c: [_pq_half_up(float(x), round_dp) for x in mean]
+                for c, mean in sample.means(cells).items()
             }
         else:
-            upd = _mean_update_arrow(members, dim)
-            updated = {
-                c: _round_half_up_np(sums / n, round_dp).tolist()
-                for c, (n, sums) in upd.items()
-            }
-        if iter_bc is not None:
-            # this pass's centroid broadcast was consumed by the
-            # mean-update collect above — release the executor copies
-            # now instead of waiting on GC to reach the ContextCleaner
-            iter_bc.unpersist()
+            assign_col, iter_bc = assign(cents)
+            members = df.filter(vec.isNotNull()).select(
+                assign_col.alias("__c"), vec.alias("__v")
+            )
+            if exact:
+                means = members.groupBy("__c").agg(
+                    *[
+                        F.round(F.avg(F.col("__v")[i]), round_dp).alias(f"c{i}")
+                        for i in range(dim)
+                    ]
+                ).collect()
+                updated = {
+                    r["__c"]: [float(r[f"c{i}"]) for i in range(dim)] for r in means
+                }
+            else:
+                upd = _mean_update_arrow(members, dim)
+                updated = {
+                    c: _round_half_up_np(sums / n, round_dp).tolist()
+                    for c, (n, sums) in upd.items()
+                }
+            if iter_bc is not None:
+                # this pass's centroid broadcast was consumed by the
+                # mean-update collect above — release the executor copies
+                # now instead of waiting on GC to reach the ContextCleaner
+                iter_bc.unpersist()
         cents = [updated.get(cid, cvec) for cid, cvec in enumerate(cents)]
     # the FINAL labeling's broadcast must stay alive: it ships with the
     # returned (lazy) plan
@@ -1812,42 +1965,41 @@ def _arrow_assign_udf(spark: SparkSession, centroids: list[list[float]],
     kmeans' Lloyd loop can ``unpersist()`` each iteration's copy (400
     MB at SemDeDup's 50k × 10³) instead of waiting on Python GC."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
-    cmat = np.asarray(centroids, dtype=np.float64)
-    if cmat.ndim != 2 or cmat.shape[0] < 1:
-        raise ValueError(f"need a non-empty k x dim centroid matrix, got {cmat.shape}")
-    cnorm2 = (cmat * cmat).sum(axis=1)
+    shape = np.shape(centroids)
+    if len(shape) != 2 or shape[0] < 1:
+        raise ValueError(f"need a non-empty k x dim centroid matrix, got {shape}")
+    kernel, (cmat, cnorm2) = _cell_kernel(centroids, "l2")
     dim = cmat.shape[1]
 
-    # the _ivf_assign_pandas idiom: scalar pandas_udf returning nullable
-    # Int32 (pd.NA for null vectors) — no hand-built output schema, no
-    # NaN sentinel round-trip. The two transports are SEPARATE closures:
-    # a shared body with a broadcast-or-matrix fallback would capture
-    # the matrix in the closure either way and defeat the broadcast.
-    def _kernel(vecs, c, n2):
-        m, nullmask = _stack_nullable(vecs, dim)
-        scores = n2[None, :] - 2.0 * (m @ c.T)
-        best = pd.array(scores.argmin(axis=1).astype(np.int32), dtype="Int32")
-        best[nullmask] = pd.NA
-        return pd.Series(best)
-
+    # the two transports are SEPARATE closures: a shared body with a
+    # broadcast-or-matrix fallback would capture the matrix in the
+    # closure either way and defeat the broadcast
     bc = None
     if cmat.nbytes > _BROADCAST_BYTES:
         bc = spark.sparkContext.broadcast((cmat, cnorm2))
 
         def _assign(vecs):
-            c, n2 = bc.value
-            return _kernel(vecs, c, n2)
+            return _cell_series(vecs, dim, kernel, *bc.value)
 
     else:
 
         def _assign(vecs):
-            return _kernel(vecs, cmat, cnorm2)
+            return _cell_series(vecs, dim, kernel, cmat, cnorm2)
 
     udf = pandas_udf(_assign, "int")
     return (udf, bc) if return_handle else udf
+
+
+def _l2_argmin_blas(x, c, cnorm2):
+    """Nearest of the k × dim centroids ``c`` to each row of ``x`` by
+    the BLAS expansion ``|c|² − 2·x·c`` (``cnorm2`` = the k squared
+    centroid norms), first minimum on ties. The kernel of
+    ``_arrow_assign_udf`` and of the scale side of ``_pq_codes``."""
+    import numpy as np  # noqa: PLC0415
+
+    return (cnorm2[None, :] - 2.0 * (x @ c.T)).argmin(axis=1).astype(np.int32)
 
 
 # =============================================================================
@@ -1878,8 +2030,11 @@ def _pq_half_up(x: float, dp: int) -> float:
     with EACH OTHER."""
     from decimal import ROUND_HALF_UP, Decimal  # noqa: PLC0415
 
+    if not math.isfinite(x):
+        return x  # F.round passes NaN and ±inf through
     q = Decimal(1).scaleb(-dp)
-    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
+    # + 0.0: BigDecimal has no −0, so F.round(-1e-9, 6) is +0.0
+    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP)) + 0.0
 
 
 def _round_half_up_np(arr, dp: int):
@@ -1945,20 +2100,25 @@ def pq_fit(
     doubles (the codebooks) ever reach the driver.
 
     Each iteration's argmin follows ``_exact_fit(k_sub, dim)`` (k_sub ×
-    dim ≤ 4096, dim ≤ 256), as ``pq_encode`` does: the bit-exact
-    ``_pq_seq_codes_udf`` or the ``_pq_arrow_codes_udf`` matmul. The
-    mean agg is shared: sub stays small, so its width never walls.
+    dim ≤ 4096, dim ≤ 256), as ``pq_encode`` does: ``_pq_codes``'
+    bit-exact sequential sums or its BLAS expansion. The mean agg is
+    shared: sub stays small, so its width never walls.
+
+    Driver rule (``_driver_fit_rows``): on the exact side, an input of
+    at most ``_DRIVER_FIT_ROWS`` (32,768) non-null vectors is collected
+    in one job and the seeds and every iteration run on the driver —
+    ``_pq_codes`` per Arrow batch, ``F.avg``'s summation order
+    replayed, means rounded by ``_pq_half_up`` — for the same
+    codebooks. At 2,000 × 32 in 4 partitions that is 1 Spark job and 0
+    Python worker tasks instead of 3 jobs and 4 stages (1.9–3.2 s of
+    CPU, mostly the fixed cost of each Python task, SCALING.md
+    "Per-Python-task fixed cost").
     """
     if m < 1 or k_sub < 1 or iters < 0:
         raise ValueError(f"need m, k_sub >= 1 and iters >= 0, got {m}, {k_sub}, {iters}")
     vec = F.col(vec_col).cast("array<double>")
-    seeds = (
-        df.filter(vec.isNotNull())
-        .orderBy(id_col)
-        .limit(k_sub)
-        .select(vec.alias("v"))
-        .collect()
-    )
+    sample = _driver_fit_rows(df, vec, id_col, k_sub, dim)
+    seeds = _fit_seeds(df, vec, id_col, k_sub, sample)
     if not seeds:
         raise ValueError("cannot infer embedding dim from an empty/null column")
     if dim is None:
@@ -1966,7 +2126,7 @@ def pq_fit(
         # .first() probe job was one whole Spark round-trip of pure
         # fixed latency per fit (round 13). Geometry validation stays
         # AHEAD of the seed-count check (its historical order).
-        dim = len(seeds[0].v)
+        dim = len(seeds[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     if len(seeds) < k_sub:
@@ -1974,41 +2134,51 @@ def pq_fit(
     sub = dim // m
     books = [
         [
-            [_pq_half_up(float(x), round_dp) for x in r.v[j * sub:(j + 1) * sub]]
-            for r in seeds
+            [_pq_half_up(float(x), round_dp) for x in v[j * sub:(j + 1) * sub]]
+            for v in seeds
         ]
         for j in range(m)
     ]
     for _ in range(iters):
-        # materialize the kernel's codes as ONE column first so the m
-        # struct references below cannot re-evaluate the UDF
-        base = df.filter(vec.isNotNull()).select(
-            vec.alias("__v"), _pq_codes_udf(books)(vec).alias("__codes")
-        )
-        structs = [
-            F.struct(
-                F.lit(j).alias("j"),
-                F.get("__codes", j).alias("c"),
-                F.slice("__v", j * sub + 1, sub).alias("s"),
+        if sample is not None:
+            codes = sample.assign(_pq_codes, *_pq_kernel_args(books))
+            upd = {
+                (j, c): [_pq_half_up(float(x), round_dp) for x in mean]
+                for j in range(m)
+                for c, mean in sample.means(
+                    codes[:, j], slice(j * sub, (j + 1) * sub)
+                ).items()
+            }
+        else:
+            # materialize the kernel's codes as ONE column first so the m
+            # struct references below cannot re-evaluate the UDF
+            base = df.filter(vec.isNotNull()).select(
+                vec.alias("__v"), _pq_codes_udf(books)(vec).alias("__codes")
             )
-            for j in range(m)
-        ]
-        rows = base.select(F.explode(F.array(*structs)).alias("e")).select(
-            "e.j", "e.c", "e.s"
-        )
-        means = (
-            rows.groupBy("j", "c")
-            .agg(
-                *[
-                    F.round(F.avg(F.col("s")[i]), round_dp).alias(f"m{i}")
-                    for i in range(sub)
-                ]
+            structs = [
+                F.struct(
+                    F.lit(j).alias("j"),
+                    F.get("__codes", j).alias("c"),
+                    F.slice("__v", j * sub + 1, sub).alias("s"),
+                )
+                for j in range(m)
+            ]
+            rows = base.select(F.explode(F.array(*structs)).alias("e")).select(
+                "e.j", "e.c", "e.s"
             )
-            .collect()
-        )
-        upd = {
-            (r["j"], r["c"]): [float(r[f"m{i}"]) for i in range(sub)] for r in means
-        }
+            means = (
+                rows.groupBy("j", "c")
+                .agg(
+                    *[
+                        F.round(F.avg(F.col("s")[i]), round_dp).alias(f"m{i}")
+                        for i in range(sub)
+                    ]
+                )
+                .collect()
+            )
+            upd = {
+                (r["j"], r["c"]): [float(r[f"m{i}"]) for i in range(sub)] for r in means
+            }
         books = [
             [upd.get((j, c), cw) for c, cw in enumerate(book)]
             for j, book in enumerate(books)
@@ -2037,89 +2207,34 @@ def pq_encode(
 
 
 def _pq_codes_udf(codebooks: list[list[list[float]]]):
-    """``pq_fit``'s and ``pq_encode``'s kernel for m × k_sub × sub
-    ``codebooks``."""
-    k_sub, dim = len(codebooks[0]), len(codebooks) * len(codebooks[0][0])
-    if _exact_fit(k_sub, dim):
-        return _pq_seq_codes_udf(codebooks)
-    return _pq_arrow_codes_udf(codebooks)
-
-
-def _pq_arrow_codes_udf(codebooks: list[list[list[float]]]):
-    """Arrow-batched all-subspace PQ codes: per batch, one small matmul
-    per subspace via the ‖x‖² − 2x·c + ‖c‖² expansion, argmin per
-    subspace → array<int>. The scale side of ``pq_fit`` and
-    ``pq_encode`` (``_pq_codes_udf``) — the kernel for large k_sub,
-    where the sequential sums of ``_pq_seq_codes_udf`` cost k_sub × sub
-    elementwise passes per batch."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]  # m × (k_sub × sub)
-    norms = [(c * c).sum(axis=1) for c in mats]
-    dim = m * sub
-
-    def _encode(vecs):
-        x, mask = _stack_nullable(vecs, dim)
-        cols = []
-        for j in range(m):
-            xs = x[:, j * sub:(j + 1) * sub]
-            scores = norms[j][None, :] - 2.0 * (xs @ mats[j].T)
-            cols.append(scores.argmin(axis=1).astype(np.int32))
-        stacked = np.stack(cols, axis=1) if len(x) else np.zeros((0, m), np.int32)
-        return pd.Series(
-            [None if mask[i] else stacked[i].tolist() for i in range(len(x))]
-        )
-
-    return pandas_udf(_encode, "array<int>")
-
-
-def _pq_seq_codes_udf(codebooks: list[list[list[float]]]):
-    """Arrow-batched BIT-EXACT PQ codes — the oracle path of
-    ``pq_fit`` / ``pq_encode``. Each subspace distance is accumulated
-    over the sub dimensions with EXPLICIT elementwise numpy adds in
-    left-to-right order — ``(0 + t₀²) + t₁² + …``, the IEEE-double
-    operation chain DuckDB's ``list_sum`` replays term for term — and
-    ``argmin`` takes the FIRST minimum (ties to the lower code), unlike
-    the BLAS ``‖x‖² − 2x·c + ‖c‖²`` expansion in ``_pq_arrow_codes_udf``
-    (pairwise summation, different rounding). NaN distances rank last
-    (as the JVM ``array_min`` ranks NaN greatest); NULL vectors get
-    NULL codes.
+    """``pq_fit``'s and ``pq_encode``'s Arrow-batched kernel for m ×
+    k_sub × sub ``codebooks``: ``_pq_codes`` per batch → array<int>,
+    NULL for a NULL vector. Its side follows ``_exact_fit(k_sub,
+    dim)``: the bit-exact sequential sums (the oracle path) or the
+    BLAS expansion (the kernel for large k_sub, where the sequential
+    sums cost k_sub × sub elementwise passes per batch).
 
     The codebooks ride the closure, so the plan carries no literals:
     the JVM-fold spelling of the same arithmetic (a literal codeword
     tree of m × k_sub × dim/m elements) was paid at plan construction,
     analysis and interpreted per-row evaluation, and was dropped for
     this kernel. Pinned by the python-replay tests in test_pq.py."""
-    import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]  # m × (k_sub × sub)
-    dim = m * sub
+    mats, norms = _pq_kernel_args(codebooks)
+    dim = len(mats) * mats[0].shape[1]
 
     def _encode(vecs):
         x, mask = _stack_nullable(vecs, dim)
-        n = len(x)
-        cols = []
-        for j in range(m):
-            d = None
-            for z in range(sub):
-                t = x[:, j * sub + z][:, None] - mats[j][:, z][None, :]
-                sq = t * t  # (n × k_sub)
-                d = sq if d is None else d + sq
-            d[np.isnan(d)] = np.inf  # NaN ranks last, as in array_min
-            cols.append(d.argmin(axis=1).astype(np.int32))
-        stacked = np.stack(cols, axis=1) if n else np.zeros((0, m), np.int32)
+        codes = _pq_codes(x, mats, norms)
         return pd.Series(
-            [None if mask[i] else stacked[i].tolist() for i in range(n)]
+            [None if mask[i] else codes[i].tolist() for i in range(len(x))]
         )
 
+    udf = pandas_udf(_encode, "array<int>")
+    if norms is not None:
+        return udf
     # asNondeterministic: the function is pure, but consumers filter on
     # the codes column (isNotNull, cell prune) and the optimizer's
     # filter pushdown would otherwise DUPLICATE the kernel — one
@@ -2129,41 +2244,78 @@ def _pq_seq_codes_udf(codebooks: list[list[list[float]]]):
     # row filters no longer push below the projection, which at the
     # fixture is k excluded ids and at scale is irrelevant — persisted
     # stores carry codes as real columns with no UDF in the plan.
-    return pandas_udf(_encode, "array<int>").asNondeterministic()
+    return udf.asNondeterministic()
+
+
+def _pq_kernel_args(codebooks):
+    """``(mats, norms)`` for ``_pq_codes``: the m (k_sub × sub)
+    codebook matrices, and their squared codeword norms on the scale
+    side of ``_exact_fit(k_sub, dim)`` (None on the exact side)."""
+    import numpy as np  # noqa: PLC0415
+
+    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    k_sub, sub = mats[0].shape
+    if _exact_fit(k_sub, len(mats) * sub):
+        return mats, None
+    return mats, [(c * c).sum(axis=1) for c in mats]
+
+
+def _pq_codes(x, mats, norms):
+    """PQ codes (n × m int32) of the rows of ``x``: per subspace j the
+    nearest codeword of ``mats[j]``, by ``_l2_argmin_seq`` (``norms``
+    None, bit-exact) or ``_l2_argmin_blas``."""
+    import numpy as np  # noqa: PLC0415
+
+    if not len(x):
+        return np.zeros((0, len(mats)), np.int32)
+    sub = mats[0].shape[1]
+    cols = []
+    for j, c in enumerate(mats):
+        xs = x[:, j * sub:(j + 1) * sub]
+        cols.append(
+            _l2_argmin_seq(xs, c) if norms is None
+            else _l2_argmin_blas(xs, c, norms[j])
+        )
+    return np.stack(cols, axis=1)
+
+
+def _l2_argmin_seq(x, c):
+    """BIT-EXACT nearest of the k × dim centroids ``c`` to each row of
+    ``x``: explicit elementwise left-to-right accumulation gives the
+    sequential IEEE sum ``(0 + t₀²) + t₁² + …`` DuckDB's ``list_sum``
+    replays term for term, first-min ``argmin`` sends ties to the lower
+    id, and NaN distances rank last (as the JVM ``array_min`` ranks NaN
+    greatest) — unlike the BLAS expansion of ``_l2_argmin_blas``
+    (pairwise summation, different rounding)."""
+    import numpy as np  # noqa: PLC0415
+
+    d = None
+    for z in range(c.shape[1]):
+        t = x[:, z][:, None] - c[:, z][None, :]
+        sq = t * t  # (n × k)
+        d = sq if d is None else d + sq
+    if d is None:
+        d = np.zeros((len(x), len(c)), dtype=np.float64)
+    d[np.isnan(d)] = np.inf
+    return d.argmin(axis=1).astype(np.int32)
 
 
 def _seq_l2_assign_udf(centroids: list[list[float]]):
-    """Arrow-batched BIT-EXACT L2 argmin assignment: the full-dim twin
-    of ``_pq_seq_codes_udf`` — explicit elementwise left-to-right
-    accumulation gives the sequential IEEE sum DuckDB's ``list_sum``
-    replays term for term, first-min ``argmin`` sends ties to the lower
-    id, NaN distances rank last, NULL vectors → NULL. The one
-    implementation behind the exact side of ``kmeans`` and
-    ``ivf_assign_fold``; the JVM fold over a k × dim literal centroid
-    tree it replaced gave the same values at a plan-size cost that grew
-    with k (and OOMed the driver at k=1024/dim=64)."""
+    """Arrow-batched BIT-EXACT L2 argmin assignment (``_l2_argmin_seq``;
+    NULL vectors → NULL): the one implementation behind the exact side
+    of ``kmeans`` and ``ivf_assign_fold``. The JVM fold over a k × dim
+    literal centroid tree it replaced gave the same values at a
+    plan-size cost that grew with k (and OOMed the driver at
+    k=1024/dim=64)."""
     import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
     c = np.asarray(centroids, dtype=np.float64)  # k × dim
-    k, dim = c.shape
 
     def _assign(vecs):
-        x, mask = _stack_nullable(vecs, dim)
-        d = None
-        for z in range(dim):
-            t = x[:, z][:, None] - c[:, z][None, :]
-            sq = t * t  # (n × k)
-            d = sq if d is None else d + sq
-        if d is None:
-            d = np.zeros((len(x), k), dtype=np.float64)
-        d[np.isnan(d)] = np.inf
-        cells = pd.array(d.argmin(axis=1).astype(np.int32), dtype="Int32")
-        cells[mask] = pd.NA
-        return pd.Series(cells)
+        return _cell_series(vecs, c.shape[1], _l2_argmin_seq, c)
 
-    # same single-eval rationale as _pq_seq_codes_udf: probe filters on
+    # same single-eval rationale as _pq_codes_udf: probe filters on
     # the assigned cell column would otherwise re-evaluate the kernel
     # below the filter (guide §4.4)
     return pandas_udf(_assign, "int").asNondeterministic()

@@ -16,7 +16,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _default_cpus() -> int:
+    """Cores of the default session: ``SPARK_GRAFT_CPUS`` when set, else
+    the machine's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def session_builder(
@@ -38,7 +42,7 @@ def session_builder(
       preprocessproduce.py:99; 128 MB matches modern parquet row-group
       sizing and halves task-scheduling overhead at 100 TB).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -47,7 +51,7 @@ def session_builder(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.streaming.stopGracefullyOnShutdown", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -545,3 +545,27 @@ def test_arrow_assign_broadcasts_over_one_mib(spark):
     assert dict(map(tuple, got))[60] is None
     bc.unpersist()
     assert similarity._arrow_assign_udf(spark, cents[:8], return_handle=True)[1] is None
+
+
+def test_kmeans_driver_fit_errors_and_semdedup(spark, sf_dir, monkeypatch):
+    """kmeans on the driver fit raises the Spark loop's error for too
+    few vectors, and semdedup — whose k-means fit runs on the driver at
+    fixture size — returns the Spark loop's rows."""
+    from datapipelineetl_spark import catalog
+
+    few = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    emb = catalog.load(spark, sf_dir, "embeddings")
+
+    def dedup():
+        return sorted(map(tuple, similarity.semdedup(
+            emb, k=16, iters=2, threshold=0.45).collect()))
+
+    got = dedup()
+    for budget in (similarity._DRIVER_FIT_ROWS, 0):
+        monkeypatch.setattr(similarity, "_DRIVER_FIT_ROWS", budget)
+        with pytest.raises(ValueError, match="need >= 3 non-null vectors, got 2"):
+            similarity.kmeans(few, k=3)
+    assert got == dedup()

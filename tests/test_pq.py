@@ -1164,3 +1164,201 @@ def test_ivfpq_residual_topk_multi_modes_match_single(spark, sf_dir, tmp_path):
     assert got == exp_ref
     with pytest.raises(ValueError, match="query"):
         similarity.ivfpq_residual_topk_multi(store, {}, cents, books)
+
+
+# --- the driver fit (similarity._driver_fit_rows) ---------------------------
+
+
+def _reprs(fit) -> list[str]:
+    """Every float of a fit result by repr: −0.0 differs from 0.0 and
+    NaN equals NaN, so equal lists mean bit-equal values."""
+    import numpy as np
+
+    return [repr(float(x)) for x in np.asarray(fit, dtype=np.float64).ravel()]
+
+
+def _spark_loop(monkeypatch, fit):
+    """``fit()`` on the Spark loop: a zero budget sends every input there."""
+    with monkeypatch.context() as mp:
+        mp.setattr(similarity, "_DRIVER_FIT_ROWS", 0)
+        return fit()
+
+
+def _jobs(spark, fit, group: str):
+    """(result, Spark jobs run by ``fit()``), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fit()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _random_frame(spark, n: int, dim: int, parts: int, seed: int = 5):
+    """n vectors (3-decimal normals) with shuffled ids, round-robin over
+    ``parts`` partitions and checkpointed, so every read sees the same
+    partitions and row order."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    ids = rng.permutation(n)
+    rows = [(int(i), [float(x) for x in v])
+            for i, v in zip(ids, np.round(rng.normal(size=(n, dim)), 3))]
+    return (spark.createDataFrame(rows, _SCHEMA).repartition(parts)
+            .localCheckpoint(eager=True))
+
+
+@pytest.fixture
+def small_arrow_batches(spark):
+    """16-row Arrow batches, so a partition spans several batches and
+    the driver must batch a BLAS kernel's input as a worker does."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    yield
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("parts", [1, 3, 4, 7])
+def test_driver_fit_matches_spark_loop(spark, monkeypatch, small_arrow_batches,
+                                       parts):
+    """Under budget, pq_fit, ivf_fit_centroids (cosine and l2) and kmeans
+    run their Lloyd loop on the driver and return bit-equal results to
+    the Spark loop, at iters 0–3 and any partition count: the kernels
+    are shared and the mean update replays F.avg's summation order."""
+    df = _random_frame(spark, 120, 8, parts)
+    fits = {
+        **{f"pq/{i}": lambda i=i: similarity.pq_fit(df, m=2, k_sub=4, iters=i)
+           for i in range(4)},
+        **{f"ivf-{metric}/{i}": lambda i=i, metric=metric:
+           similarity.ivf_fit_centroids(df, k_cells=4, iters=i, metric=metric)
+           for i in range(1, 4) for metric in ("cosine", "l2")},
+        **{f"kmeans/{i}": lambda i=i: sorted(
+            map(tuple, similarity.kmeans(df, k=4, iters=i).collect()))
+           for i in range(4)},
+    }
+    for name, fit in fits.items():
+        got, want = fit(), _spark_loop(monkeypatch, fit)
+        assert got == want, name
+        if not name.startswith("kmeans"):
+            assert _reprs(got) == _reprs(want), name
+
+
+def test_driver_fit_edge_rows(spark, monkeypatch):
+    """Edge rows reach the driver fit and give the Spark loop's bits: a
+    NULL vector (no part in the fit), a NULL id (the lowest seed, as
+    ASC NULLS FIRST), a NaN element, −0.0 elements (F.avg's 0.0 start
+    makes a lone −0.0 average to 0.0), a seed duplicating another (its
+    cell stays empty and keeps its centroid) and a duplicated id."""
+    rows = [
+        (None, [0.25, -1.0, 0.5, 2.0]),
+        (0, [1.0, 2.0, -0.0, 0.5]),
+        (1, [1.0, 2.0, -0.0, 0.5]),
+        (2, [-0.0, -0.0, -0.0, -0.0]),
+        (3, [9.0, 1.0, 2.0, 3.0]),  # its 9.0 becomes NaN below
+        (4, None),
+        (7, [0.5, 0.5, -0.5, 1.5]),
+        (7, [1.5, 2.5, 0.25, -0.75]),
+    ] + [(i, [((i * 37 + j * 11) % 17) / 8.0 - 1.0 for j in range(4)])
+         for i in range(8, 30)]
+    # the NaN is made in Spark: a NaN crossing from pandas is a NULL
+    nan_elem = "transform(embedding, x -> IF(x = 9.0, double('NaN'), x))"
+    df = (spark.createDataFrame(rows, _SCHEMA).withColumn("embedding", F.expr(nan_elem))
+          .repartition(3).localCheckpoint(eager=True))
+    assert similarity._driver_fit_rows(
+        df, F.col("embedding"), "vec_id", 4, None).x.shape == (29, 4)
+    fits = [
+        lambda: similarity.pq_fit(df, m=2, k_sub=4, iters=3),
+        lambda: similarity.ivf_fit_centroids(df, k_cells=4, iters=3),
+        lambda: similarity.ivf_fit_centroids(df, k_cells=4, iters=3, metric="l2"),
+    ]
+    for fit in fits:
+        assert _reprs(fit()) == _reprs(_spark_loop(monkeypatch, fit))
+    labels = sorted(map(tuple, similarity.kmeans(df, k=4, iters=3).fillna(-1).collect()))
+    assert labels == sorted(map(tuple, _spark_loop(
+        monkeypatch, lambda: similarity.kmeans(df, k=4, iters=3)).fillna(-1).collect()))
+    # _pq_half_up, the driver's rounding of means, is F.round on the
+    # zero sign and on non-finite values too
+    cases = [-0.0, -1e-9, -4e-7, float("inf"), float("-inf"), float("nan")]
+    got = spark.range(1).select(
+        *[F.round(F.lit(x), 6).alias(f"c{i}") for i, x in enumerate(cases)]
+    ).collect()[0]
+    assert [repr(similarity._pq_half_up(x, 6)) for x in cases] == [repr(v) for v in got]
+
+
+def test_driver_fit_seed_ties_and_fallbacks(spark, monkeypatch):
+    """Rows sharing an id seed in scan order (partition, then row), where
+    Spark's orderBy leaves the order open. A NULL element sends the fit
+    to the Spark loop (F.avg skips it per dimension), and too few
+    vectors raise the Spark loop's errors."""
+    a, b, c = [1.0, 0.0], [0.0, 1.0], [1.0, 1.0]
+
+    def seeds(rows):
+        df = spark.createDataFrame(rows, _SCHEMA).coalesce(1)
+        return similarity.pq_fit(df, m=1, k_sub=2, iters=0)[0]
+
+    assert seeds([(5, a), (5, b), (9, c)]) == [a, b]
+    assert seeds([(5, b), (5, a), (9, c)]) == [b, a]
+
+    null_elem = spark.createDataFrame(
+        [(0, a), (1, b), (2, [1.0, None]), (3, c)], _SCHEMA)
+    vec = F.col("embedding")
+    assert similarity._driver_fit_rows(null_elem, vec, "vec_id", 2, None) is None
+    assert similarity.pq_fit(null_elem, m=1, k_sub=2, iters=1) == _spark_loop(
+        monkeypatch, lambda: similarity.pq_fit(null_elem, m=1, k_sub=2, iters=1))
+
+    few = spark.createDataFrame([(0, a), (1, b), (2, None)], _SCHEMA)
+    for budget in (similarity._DRIVER_FIT_ROWS, 0):
+        monkeypatch.setattr(similarity, "_DRIVER_FIT_ROWS", budget)
+        with pytest.raises(ValueError, match="need >= 3 non-null vectors, got 2"):
+            similarity.pq_fit(few, m=1, k_sub=3)
+        with pytest.raises(ValueError, match="need >= 3 vectors to fit 3 cells"):
+            similarity.ivf_fit_centroids(few, k_cells=3)
+
+
+def test_driver_fit_job_counts(spark, monkeypatch):
+    """A fit under budget is one Spark job, whatever its iters. Over
+    budget it returns the Spark loop's result for at most one job more
+    than the Spark loop alone (the probe)."""
+    df = _random_frame(spark, 200, 8, 4)
+    fits = {
+        "pq": lambda: similarity.pq_fit(df, m=2, k_sub=4, iters=3),
+        "ivf": lambda: similarity.ivf_fit_centroids(df, k_cells=4, iters=3),
+        "kmeans": lambda: similarity.kmeans(df, k=4, iters=3),
+    }
+    for name, fit in fits.items():
+        _, n = _jobs(spark, fit, f"driver-fit-{name}")
+        assert n == 1, name
+    with monkeypatch.context() as mp:
+        mp.setattr(similarity, "_driver_fit_rows", lambda *a: None)
+        alone = {name: _jobs(spark, fit, f"spark-loop-{name}")
+                 for name, fit in fits.items()}
+    monkeypatch.setattr(similarity, "_DRIVER_FIT_ROWS", 199)
+    for name, fit in fits.items():
+        got, n = _jobs(spark, fit, f"over-budget-{name}")
+        want, n_alone = alone[name]
+        if name != "kmeans":  # kmeans returns a lazy labeling
+            assert got == want, name
+        assert n_alone <= n <= n_alone + 1, name
+
+
+def test_scale_side_fit_keeps_the_spark_loop(spark, monkeypatch):
+    """The k_sub=256 PQ fit of examples/ann_* is on the scale side: its
+    probe fetches no rows (dim known) or only rows too wide to fit
+    (dim inferred), and the Spark loop runs."""
+    decided = []
+    probe = similarity._driver_fit_rows
+
+    def spy(*args):
+        decided.append(probe(*args))
+        return decided[-1]
+
+    monkeypatch.setattr(similarity, "_driver_fit_rows", spy)
+    df = _random_frame(spark, 300, 32, 2)
+    for dim in (32, None):
+        books, n = _jobs(spark, lambda: similarity.pq_fit(
+            df, m=4, k_sub=256, iters=1, dim=dim), f"scale-side-{dim}")
+        assert decided[-1] is None and n >= 3
+        assert len(books) == 4 and len(books[0]) == 256

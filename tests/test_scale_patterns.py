@@ -535,3 +535,22 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, tmp_path):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
+
+
+def test_default_session_follows_the_machine(monkeypatch):
+    """Without SPARK_GRAFT_CPUS (or SPARK_MASTER) the default session
+    runs local[os.cpu_count()] with as many shuffle partitions; the
+    variable still overrides both."""
+    import os
+
+    from datapipelineetl_spark.session import session_builder
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_MASTER", raising=False)
+    opts = session_builder()._options
+    cpus = os.cpu_count()
+    assert opts["spark.master"] == f"local[{cpus}]"
+    assert opts["spark.sql.shuffle.partitions"] == str(cpus)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    opts = session_builder()._options
+    assert (opts["spark.master"], opts["spark.sql.shuffle.partitions"]) == ("local[3]", "3")

@@ -363,8 +363,9 @@ def test_cluster_pairs_contract_matches_iterate(spark):
 def test_null_embeddings_survive_pandas_kernels(spark):
     """Null embedding rows must flow through every Arrow kernel as null
     outputs — not ValueError from np.stack (r4 ADVICE): signatures,
-    IVF assignment, cosine scores, and the pair/fit entry points that
-    feed the unfiltered column."""
+    IVF assignment, and the pair/fit entry points that feed the
+    unfiltered column; the JVM cosine scores them NULL and cosine_topk
+    never ranks them."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -376,8 +377,14 @@ def test_null_embeddings_survive_pandas_kernels(spark):
     base = [(i, [float((i * 7 + j * 3) % 5) - 2.0 for j in range(8)]) for i in range(20)]
     df = spark.createDataFrame(base + [(98, None), (99, None)], schema)
 
-    scores = {r.vec_id: r.cos_sim for r in similarity.cosine_scores_pandas(df, [1.0] * 8).collect()}
+    q = [1.0] * 8
+    scores = {r.vec_id: r.cos_sim for r in df.select(
+        "vec_id",
+        similarity.cosine(F.col("embedding"), F.array(*[F.lit(x) for x in q])).alias("cos_sim"),
+    ).collect()}
     assert scores[99] is None and scores[0] is not None
+    ranked = {r.vec_id for r in similarity.cosine_topk(df, q, k=len(base) + 2).collect()}
+    assert 0 in ranked and not ranked & {98, 99}
 
     cells = {r.vec_id: r.ivf_cell for r in similarity.ivf_assign(
         df, [[1.0] * 8, [-1.0] * 8]
@@ -395,8 +402,8 @@ def test_null_embeddings_survive_pandas_kernels(spark):
 
 
 def test_pandas_cosine_matches_jvm(spark, vec_df):
-    """The Arrow/numpy cosine path must agree with the JVM expression
-    version to float tolerance — same operator, two execution strategies."""
+    """The cosine Column helper and cosine_topk's SQL fold agree: every
+    vector's top-k score is its cosine rounded to 4 decimals."""
     from datapipelineetl_spark.operators import similarity as sim
 
     q = [1.0, 0.0, 1.0]
@@ -410,13 +417,13 @@ def test_pandas_cosine_matches_jvm(spark, vec_df):
             ).alias("cos_sim"),
         ).collect()
     }
-    arrow = {
+    topk = {
         r.vec_id: r.cos_sim
-        for r in sim.cosine_scores_pandas(vec_df, q).collect()
+        for r in sim.cosine_topk(vec_df, q, k=len(VECS)).collect()
     }
-    assert set(jvm) == set(arrow)
+    assert set(jvm) == set(topk)
     for k in jvm:
-        assert abs(jvm[k] - arrow[k]) < 1e-9
+        assert abs(jvm[k] - topk[k]) <= 0.5e-4 + 1e-12
 
 
 def test_ann_lsh_recall_against_brute_force(spark, sf_dir):
