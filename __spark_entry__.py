@@ -121,9 +121,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver verifies the FIRST 50 entries of queries() in dict order.
-# Five queries lead whose plans or cleaning chain changed: the cell-metrics
-# chain became one projection (q_clean_cell_metrics), and the four whose
-# L2 re-rank or top-k now scores a NULL-element vector NaN. Then the nine
+# Nine queries lead whose optimized plans changed most recently: pq_encode /
+# ivf_assign coalesce a small input to one task (q_ivf_recall,
+# q_ivfpq_topk, q_ivfpq_refine_topk, q_pq_refine_recall,
+# q_pq_multi_refine, q_pq_topk_multi, q_pq_codes, q_pq_topk), the IVF
+# probe became array_contains (q_ivf_recall), and the batched refine's
+# query frame and residualize's centroid frame became inline tables
+# (q_pq_multi_refine, q_residual_codes); the fillers q_retention_cohorts
+# and q_pack_greedy gave up their slots. Then five queries whose plans
+# or cleaning chain changed: the cell-metrics chain became one
+# projection (q_clean_cell_metrics), and the four whose L2 re-rank or top-k now scores a NULL-element vector NaN. Then the nine
 # queries whose plans the single batched top-k engine changed
 # lead: the five batched oracles (their per-query branches became one
 # Arrow pass) and the four whose cosine candidate filter became
@@ -135,19 +142,23 @@ def entry(spark: SparkSession) -> DataFrame:
 # horizon follow, then the oldest-green rows fill the free slots (the
 # last nine fillers gave their slots to the queries above).
 PRIORITY: list[str] = [
-    "q_clean_cell_metrics",
-    "q_l2_topk",
-    "q_pq_refine_recall",
+    "q_ivf_recall",
+    "q_ivfpq_topk",
     "q_ivfpq_refine_topk",
+    "q_pq_refine_recall",
     "q_pq_multi_refine",
     "q_pq_topk_multi",
+    "q_pq_codes",
+    "q_pq_topk",
+    "q_residual_codes",
+    "q_clean_cell_metrics",
+    "q_l2_topk",
     "q_l2_topk_multi",
     "q_ann_lsh_topk_multi",
     "q_ivf_topk_multi",
     "q_cosine_topk",
     "q_ann_lsh_topk",
     "q_ann_recall",
-    "q_ivf_recall",
     "q_lsh_cosine_near_pairs",
     "q_range_join_ship_windows",
     "q_pack_sequences",
@@ -180,11 +191,7 @@ PRIORITY: list[str] = [
     "q_oov_rate",
     "q_blocklist_filter",
     "q_zipf_fit",
-    "q_pq_codes",
-    "q_pq_topk",
     "q_temperature_mix",
-    "q_retention_cohorts",
-    "q_pack_greedy",
 ]
 
 

@@ -44,11 +44,72 @@ NULLS FIRST would rank a NULL score above every real neighbor. The
 batched operators (``*_topk_multi``) share one Arrow kernel,
 ``_batched_topk``, which puts that NaN back after the pass, because
 pandas NaN crosses Arrow as NULL and ASC NULLS FIRST would rank it first.
+
+Which path answers a single-query request. A request against a small
+materialized store is answered on the driver; every other request runs
+the Spark plan above.
+
+- **Eligible stores.** The store's optimized plan is a
+  ``LocalRelation``, or a ``LogicalRDD`` whose RDD is checkpointed
+  (``localCheckpoint`` / ``checkpoint``): rows that cannot change
+  between calls. A file scan, a cached relation or a checkpointed
+  store under a ``filter`` is not eligible.
+- **Eligible requests.** ``cosine_topk``, ``l2_topk``, ``ivf_topk``
+  with a persisted ``cell_col``, ``ann_lsh_topk`` with persisted
+  ``sig_cols``, ``pq_adc_topk`` without a refine or with the carried
+  leg (``vectors is encoded``), and ``ivfpq_topk`` with persisted
+  ``cell_col`` and ``codes_col``. Residual IVF-PQ, the join-leg refine,
+  cells, codes or signatures attached on the fly, and every
+  ``*_multi`` keep the Spark plan.
+- **The copy.** The first request fetches the columns it reads in one
+  ``limit(budget + 1)`` Arrow collect: at most ``_DRIVER_TOPK_ROWS``
+  (32,768) rows, ``_DRIVER_TOPK_BYTES`` (64 MiB) and ``_EXACT_FIT_DIM``
+  (256) elements per array cell. The copy, or "over budget", is kept
+  per DataFrame object (a ``WeakKeyDictionary``), so it lives as long
+  as the caller's handle, and later requests run no Spark job.
+- **The answer** (``_driver_topk``) replays the SQL: each fold is the
+  same sequential left fold from 0.0, term for term (no BLAS), the
+  masks are the cell ``IN`` probe, the signature Hamming balls and
+  ``NOT id IN (exclude_ids)``, rounding is ``_pq_half_up`` (``F.round``)
+  and ranking is Spark's: DESC NULLS LAST or ASC NULLS FIRST, NaN above
+  every number, ties to id ASC NULLS FIRST. The result is a
+  ``LocalRelation`` built from Arrow (pandas would turn NaN into NULL)
+  with the Spark plan's schema; rows tied on score and id may come in
+  another order, as Spark's may.
+
+Edge values on the driver path, as in the Spark plan:
+
+=============================  =========================================
+Value                          Outcome
+=============================  =========================================
+NULL vector                    never a candidate
+NULL element                   cosine: not a candidate; L2: NaN, last
+NaN / ±inf element             cosine: not a candidate; L2: NaN, last
+zero vector                    cosine: not a candidate; L2: scored
+dim mismatch                   cosine: NULL score, last; L2: NaN, last
+NULL id                        ranked first among equal scores; dropped
+                               when any id is excluded
+duplicate ids                  each row ranked on its own
+NULL code                      never a candidate
+NULL / missing code element,   ADC NULL, ranked first (ASC NULLS FIRST)
+index outside the LUT
+NULL cell or signature         never probed
+NaN query element              every score NaN, ties to id
+zero query (cosine)            the Spark plan answers (ANSI raises
+                               DIVIDE_BY_ZERO)
+=============================  =========================================
+
+A Python kernel that ``pq_encode`` or ``ivf_assign`` attaches runs in
+one task when the input's plan statistics say it holds at most
+``_ONE_TASK_BYTES`` (8 MiB): ``_one_task`` coalesces it to one
+partition.
 """
 
 from __future__ import annotations
 
 import math
+import weakref
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -101,6 +162,17 @@ def _sql_in(col: str, values) -> str:
     return f"{_sql_col(col)} IN ({', '.join(str(int(v)) for v in values)})"
 
 
+def _sql_probe(col: str, values) -> str:
+    """``_sql_in``'s semantics (NULL never matches) with the values held
+    by reference: ``array(…)`` folds to one array Literal, so a new
+    probe set reuses the generated code of the last one, where an
+    ``IN`` of at most ``spark.sql.optimizer.inSetConversionThreshold``
+    values compiles its literals into a new class. The predicate reads
+    only ``col``, so a store partitioned by it still prunes partitions
+    (but no longer pushes the values into a Parquet row-group filter)."""
+    return f"array_contains(array({', '.join(str(int(v)) for v in values)}), {_sql_col(col)})"
+
+
 # The SQL folds name their lambda variables x, y as PySpark names a
 # Python lambda's, so optimized plans print as the Column spelling's do.
 def _sql_dot(a: str, b: str) -> str:
@@ -150,7 +222,18 @@ def cosine_topk(
     NaN and ∞ at ∞, and Spark orders NaN above every number, so it holds
     exactly when 0 < ‖v‖² < ∞ and folds the norm once per row. A plain
     ``‖v‖² > 0`` would keep a NaN-element vector, which DESC ranks first.
+
+    A small materialized ``df`` is answered from its driver copy
+    (``_driver_topk``, module docstring): the same rows, no Spark job.
     """
+    out = _driver_topk(df, query_vec, k, id_col, exclude_ids, "cosine", vec_col)
+    if out is not None:
+        return out
+    return _cosine_topk(df, query_vec, k, id_col, vec_col, exclude_ids)
+
+
+def _cosine_topk(df, query_vec, k, id_col, vec_col, exclude_ids) -> DataFrame:
+    """``cosine_topk``'s Spark plan."""
     v, q = _sql_vec(vec_col), _sql_doubles(query_vec)
     cos = f"{_sql_dot(v, q)} / (sqrt({_sql_sum_sq(v)}) * sqrt({_sql_sum_sq(q)}))"
     scored = df.filter(f"ln({_sql_sum_sq(v)}) < double('Infinity')").selectExpr(
@@ -183,7 +266,17 @@ def l2_topk(
     cross-engine mismatch and a polluted top-k the moment a fixture
     carries null embeddings. A vector with a NULL element scores NaN
     and ranks last (module docstring). ``round_dp`` is threaded like the
-    PQ family's so the two tiers can never silently diverge in rounding."""
+    PQ family's so the two tiers can never silently diverge in rounding.
+    A small materialized ``df`` is answered from its driver copy."""
+    out = _driver_topk(df, query_vec, k, id_col, exclude_ids, "l2", vec_col,
+                       round_dp=round_dp)
+    if out is not None:
+        return out
+    return _l2_topk(df, query_vec, k, id_col, vec_col, exclude_ids, round_dp)
+
+
+def _l2_topk(df, query_vec, k, id_col, vec_col, exclude_ids, round_dp=6) -> DataFrame:
+    """``l2_topk``'s Spark plan."""
     l2 = _sql_l2_score(_sql_vec(vec_col), _sql_doubles(query_vec), round_dp)
     scored = df.filter(f"{_sql_col(vec_col)} IS NOT NULL").selectExpr(
         _sql_col(id_col), f"{l2} AS l2"
@@ -932,14 +1025,15 @@ class _FitRows:
 def _fit_seeds(
     df: DataFrame, vec: Column, id_col: str, k: int, sample: _FitRows | None
 ) -> list[list[float]]:
-    """The k lowest-id non-null vectors of a fit: from the driver's
-    ``sample`` when the probe fetched one, else one
-    ``orderBy(id).limit(k)`` collect."""
+    """The k lowest-id vectors of a fit that are not NULL and hold no
+    NULL element: from the driver's ``sample`` when the probe fetched
+    one (it holds no NULL element), else one ``orderBy(id).limit(k)``
+    collect."""
     if sample is not None:
         return sample.seeds(k)
     return [
         r.v
-        for r in df.filter(vec.isNotNull())
+        for r in df.filter(vec.isNotNull() & ~F.exists(vec, lambda x: x.isNull()))
         .orderBy(id_col)
         .limit(k)
         .select(vec.alias("v"))
@@ -1033,8 +1127,11 @@ def ivf_fit_centroids(
                 sums = members.groupBy("__c").agg(
                     *[F.avg(F.col("__v")[i]).alias(f"c{i}") for i in range(dim)]
                 ).collect()
-                for r in sums:
-                    new_c[r["__c"]] = [r[f"c{i}"] for i in range(dim)]
+                for r in sums:  # a NULL mean (no value in that dimension) keeps its coordinate
+                    new_c[r["__c"]] = [
+                        new_c[r["__c"]][i] if r[f"c{i}"] is None else r[f"c{i}"]
+                        for i in range(dim)
+                    ]
             else:
                 for c, (n, s) in _mean_update_arrow(members, dim).items():
                     new_c[c] = s / n
@@ -1111,13 +1208,33 @@ def ivf_assign(
     """Attach each vector's IVF cell id — the persistable narrow column a
     100 TB embedding store would ``partitionBy`` (or bucket by), so a
     probe becomes partition PRUNING instead of a scan. ``metric`` must
-    match the fit (`ivf_fit_centroids`)."""
-    return df.withColumn(
+    match the fit (`ivf_fit_centroids`). A small input runs its kernel
+    in one task (``_one_task``)."""
+    return _one_task(df).withColumn(
         out,
         _cell_assigner(df.sparkSession, centroids, metric)(
             F.col(vec_col).cast("array<double>")
         ),
     )
+
+
+# An input whose plan statistics say it holds at most this many bytes
+# runs a Python kernel in one task: each Python task costs ~0.28 s of
+# fixed CPU against ~3 µs per row (SCALING.md "Per-Python-task fixed
+# cost"), so at 8 MiB one task still finishes in about a second.
+_ONE_TASK_BYTES = 8 << 20
+
+
+def _one_task(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to one partition when its optimized plan's
+    ``sizeInBytes`` is at most ``_ONE_TASK_BYTES``, so the Python
+    kernel a caller attaches runs in one task; else ``df``. Spark's
+    estimate only errs high where it guesses (an RDD without statistics
+    reads as huge), so a large input never lands in one task."""
+    if df.isStreaming:
+        return df
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return df.coalesce(1) if size <= _ONE_TASK_BYTES else df
 
 
 def ivf_assign_fold(
@@ -1203,16 +1320,23 @@ def ivf_topk(
     cosine (descending similarity) for the spherical tier, squared L2
     (ascending, ``l2_topk``) for the Euclidean one — a mixed pair
     would rank candidates by a different geometry than the one that
-    probed them.
+    probed them. With a persisted ``cell_col``, a small materialized
+    ``df`` is answered from its driver copy.
     """
     probe_cells = _probe_cells(centroids, query_vec, nprobe, metric)
-    if cell_col is None:
+    score = "l2" if metric == "l2" else "cosine"
+    if cell_col is not None:
+        out = _driver_topk(df, query_vec, k, id_col, exclude_ids, score, vec_col,
+                           probe=([cell_col], [probe_cells]))
+        if out is not None:
+            return out
+    else:
         df = ivf_assign(df, centroids, vec_col, "__ivf_cell", metric)
         cell_col = "__ivf_cell"
-    probed = df.filter(_sql_in(cell_col, probe_cells)).drop("__ivf_cell")
+    probed = df.filter(_sql_probe(cell_col, probe_cells)).drop("__ivf_cell")
     if metric == "l2":
-        return l2_topk(probed, query_vec, k, id_col, vec_col, exclude_ids)
-    return cosine_topk(probed, query_vec, k, id_col, vec_col, exclude_ids)
+        return _l2_topk(probed, query_vec, k, id_col, vec_col, exclude_ids)
+    return _cosine_topk(probed, query_vec, k, id_col, vec_col, exclude_ids)
 
 
 def ivf_topk_multi(
@@ -1310,14 +1434,20 @@ def ann_lsh_topk(
     planes_t = [
         _hyperplanes(num_planes, dim, seed + 1000003 * t) for t in range(num_tables)
     ]
+    balls = [
+        _hamming_ball(_lsh_query_sig(query_vec, planes), num_planes, radius)
+        for planes in planes_t
+    ]
+    if persisted:
+        out = _driver_topk(df, query_vec, k, id_col, exclude_ids, "cosine", vec_col,
+                           probe=(sig_cols, balls))
+        if out is not None:
+            return out
     # the probe is a membership test against the driver-enumerated
     # Hamming ball, not a scan-side bit_count(sig ^ qsig): the query
     # signature would be inlined into generated code (one new class per
     # request), while the IN list becomes an InSet held by reference
-    probe_any = " OR ".join(
-        _sql_in(col, _hamming_ball(_lsh_query_sig(query_vec, planes), num_planes, radius))
-        for col, planes in zip(sig_cols, planes_t)
-    )
+    probe_any = " OR ".join(_sql_in(col, ball) for col, ball in zip(sig_cols, balls))
     sigs = df
     if not persisted:
         sigs = df.withColumns(
@@ -1326,7 +1456,7 @@ def ann_lsh_topk(
     probe = sigs.filter(probe_any)
     if not persisted:
         probe = probe.drop(*sig_cols)
-    return cosine_topk(probe, query_vec, k, id_col, vec_col, exclude_ids)
+    return _cosine_topk(probe, query_vec, k, id_col, vec_col, exclude_ids)
 
 
 def lsh_persist_signatures(
@@ -1600,8 +1730,12 @@ def _kmeans(df: DataFrame, k: int, iters: int, id_col: str, vec_col: str,
                         for i in range(dim)
                     ]
                 ).collect()
-                updated = {
-                    r["__c"]: [float(r[f"c{i}"]) for i in range(dim)] for r in means
+                updated = {  # a NULL mean keeps the centroid's coordinate
+                    r["__c"]: [
+                        cents[r["__c"]][i] if r[f"c{i}"] is None else float(r[f"c{i}"])
+                        for i in range(dim)
+                    ]
+                    for r in means
                 }
             else:
                 upd = _mean_update_arrow(members, dim)
@@ -2006,6 +2140,11 @@ def _l2_argmin_blas(x, c, cnorm2):
 # Product quantization (PQ) — the memory-compression ANN tier
 # =============================================================================
 
+# _pq_half_up's context: 400 digits hold any double quantized to any dp
+# up to ~90, as BigDecimal's unbounded precision does
+_HALF_UP_CTX = Context(prec=400)
+
+
 def _pq_half_up(x: float, dp: int) -> float:
     """Python-side HALF_UP rounding PROVABLY matching Spark ``F.round``:
     Spark rounds via ``BigDecimal.valueOf(d)`` (= the shortest decimal
@@ -2028,13 +2167,11 @@ def _pq_half_up(x: float, dp: int) -> float:
     cross-engine risk); what this function guarantees is that the
     Python seed path and the Spark iteration path can never disagree
     with EACH OTHER."""
-    from decimal import ROUND_HALF_UP, Decimal  # noqa: PLC0415
-
     if not math.isfinite(x):
         return x  # F.round passes NaN and ±inf through
     q = Decimal(1).scaleb(-dp)
     # + 0.0: BigDecimal has no −0, so F.round(-1e-9, 6) is +0.0
-    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP)) + 0.0
+    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP, context=_HALF_UP_CTX)) + 0.0
 
 
 def _round_half_up_np(arr, dp: int):
@@ -2176,8 +2313,12 @@ def pq_fit(
                 )
                 .collect()
             )
-            upd = {
-                (r["j"], r["c"]): [float(r[f"m{i}"]) for i in range(sub)] for r in means
+            upd = {  # a NULL mean keeps the codeword's coordinate
+                (r["j"], r["c"]): [
+                    books[r["j"]][r["c"]][i] if r[f"m{i}"] is None else float(r[f"m{i}"])
+                    for i in range(sub)
+                ]
+                for r in means
             }
         books = [
             [upd.get((j, c), cw) for c, cw in enumerate(book)]
@@ -2200,10 +2341,11 @@ def pq_encode(
     One Arrow-batched kernel encodes all subspaces, picked by
     ``_exact_fit(k_sub, dim)`` (k_sub × dim ≤ 4096, dim ≤ 256) read
     from the codebooks, so a fit and its encode take the same side.
-    NULL vectors get NULL codes.
+    NULL vectors get NULL codes. A small input runs its kernel in one
+    task (``_one_task``).
     """
     vec = F.col(vec_col).cast("array<double>")
-    return df.withColumn(out, _pq_codes_udf(codebooks)(vec))
+    return _one_task(df).withColumn(out, _pq_codes_udf(codebooks)(vec))
 
 
 def _pq_codes_udf(codebooks: list[list[list[float]]]):
@@ -2373,9 +2515,26 @@ def pq_adc_topk(
     a shortlisted row whose raw vector is NULL takes its shortlist slot
     and is then dropped (never ranked with a NULL ``l2``), and a
     NaN-element vector scores NaN, which sorts after every number.
+
+    Without a refine, or with the carried leg, a small materialized
+    ``encoded`` is answered from its driver copy (module docstring).
     """
     if refine_n > 0 and vectors is None:
         raise ValueError("refine_n > 0 needs the raw `vectors` frame")
+    carried = refine_n > 0 and vectors is encoded
+    if refine_n <= 0 or carried:
+        out = _driver_topk(encoded, query_vec, k, id_col, exclude_ids, "adc",
+                           vec_col if carried else None, round_dp,
+                           codebooks=codebooks, codes_col=codes_col, refine_n=refine_n)
+        if out is not None:
+            return out
+    return _pq_adc_topk(encoded, query_vec, codebooks, k, id_col, codes_col, round_dp,
+                        exclude_ids, refine_n, vectors, vec_col)
+
+
+def _pq_adc_topk(encoded, query_vec, codebooks, k, id_col, codes_col, round_dp,
+                 exclude_ids, refine_n, vectors, vec_col) -> DataFrame:
+    """``pq_adc_topk``'s Spark plan."""
     carried = refine_n > 0 and vectors is encoded
     ranked = _adc_scored(
         encoded, query_vec, codebooks, id_col, codes_col, round_dp, exclude_ids,
@@ -2632,26 +2791,24 @@ def ivfpq_topk(
     an unprobed cell and needs no second scan or broadcast join. Edge
     values follow ``pq_adc_topk``: NULL codes are not scored, a NULL
     vector gives up its shortlist slot, and each code is scored
-    against its own row's vector even when ids repeat.
+    against its own row's vector even when ids repeat. With persisted
+    ``cell_col`` and ``codes_col``, a small materialized ``df`` is
+    answered from its driver copy (module docstring).
     """
     probe_cells = _probe_cells(centroids, query_vec, nprobe, coarse_metric)
+    if cell_col is not None and codes_col is not None:
+        out = _driver_topk(df, query_vec, k, id_col, exclude_ids, "adc",
+                           vec_col if refine_n > 0 else None, round_dp,
+                           probe=([cell_col], [probe_cells]), codebooks=codebooks,
+                           codes_col=codes_col, refine_n=refine_n)
+        if out is not None:
+            return out
     work, cell_col, codes_col = _ivfpq_store(
         df, centroids, codebooks, vec_col, cell_col, codes_col, coarse_metric
     )
-    probed = work.filter(_sql_in(cell_col, probe_cells))
-    return pq_adc_topk(
-        probed,
-        query_vec,
-        codebooks,
-        k=k,
-        id_col=id_col,
-        codes_col=codes_col,
-        round_dp=round_dp,
-        exclude_ids=exclude_ids,
-        refine_n=refine_n,
-        vectors=probed if refine_n > 0 else None,
-        vec_col=vec_col,
-    )
+    probed = work.filter(_sql_probe(cell_col, probe_cells))
+    return _pq_adc_topk(probed, query_vec, codebooks, k, id_col, codes_col, round_dp,
+                        exclude_ids, refine_n, probed if refine_n > 0 else None, vec_col)
 
 
 def _exact_rerank_multi(
@@ -2673,10 +2830,8 @@ def _exact_rerank_multi(
     pq_adc_topk isNotNull discipline — ADVICE r13): a NULL ``vec_col``
     in a separate ``vectors`` table would produce NULL l2, which
     Spark's ASC NULLS FIRST would rank ABOVE every real candidate."""
-    spark = vectors.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(qid), [float(x) for x in v]) for qid, v in queries.items()],
-        "query_id int, __qv array<double>",
+    qdf = _local_vectors(
+        vectors.sparkSession, {int(qid): v for qid, v in queries.items()}, "query_id", "__qv"
     )
     l2 = _sql_l2_score(_sql_vec(vec_col), "__qv", round_dp)
     cand = (
@@ -2753,6 +2908,16 @@ def ivfpq_topk_multi(
     return ranked
 
 
+def _local_vectors(spark: SparkSession, rows: dict[int, list[float]], key: str,
+                   vec: str) -> DataFrame:
+    """(key int, vec array<double>) rows as a JVM-only local relation: an
+    inline table of ``_sql_doubles`` literals, so every double — NaN
+    included — arrives bit for bit, and an action runs no Python worker
+    (a list ``createDataFrame`` is a pickled-row RDD)."""
+    values = ", ".join(f"({int(i)}, {_sql_doubles(v)})" for i, v in rows.items())
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({_sql_col(key)}, {_sql_col(vec)})")
+
+
 def residualize(
     df: DataFrame,
     centroids: list[list[float]],
@@ -2779,9 +2944,8 @@ def residualize(
     if cell_col is None:
         work = ivf_assign(work, centroids, vec_col, "__res_cell", metric)
         cell_col = "__res_cell"
-    cents = df.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "__res_cell_key int, __res_cent array<double>",
+    cents = _local_vectors(
+        df.sparkSession, dict(enumerate(centroids)), "__res_cell_key", "__res_cent"
     )
     vec = F.col(vec_col).cast("array<double>")
     joined = work.join(
@@ -2960,3 +3124,360 @@ def ivfpq_residual_topk_multi(
         vectors = df if vectors is None else vectors
         ranked = _exact_rerank_multi(ranked, vectors, queries, k, id_col, vec_col, round_dp)
     return ranked
+
+
+# =============================================================================
+# Driver copies — single-query requests against a small materialized store
+# =============================================================================
+
+# The driver copy's budget: the columns one request reads, at most this
+# many rows and bytes, each array cell at most _EXACT_FIT_DIM elements
+# (256 doubles × 32,769 rows is the byte budget). A row budget below 1
+# turns the copy off.
+_DRIVER_TOPK_ROWS = _DRIVER_FIT_ROWS
+_DRIVER_TOPK_BYTES = 64 << 20
+
+# {store: False (not materialized) or {columns read: _DriverCopy, or
+# None when over budget}}, keyed by the caller's DataFrame object, so a
+# copy lives exactly as long as the caller's handle on the store
+_driver_copies: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _materialized(df: DataFrame) -> bool:
+    """True when ``df``'s rows cannot change between two reads: its
+    optimized plan is a ``LocalRelation``, or a ``LogicalRDD`` whose
+    RDD is checkpointed (``localCheckpoint`` / ``checkpoint``). A file
+    scan, a cached relation or a store under a filter is not."""
+    if df.isStreaming:
+        return False
+    plan = df._jdf.queryExecution().optimizedPlan()
+    kind = plan.getClass().getSimpleName()
+    return kind == "LocalRelation" or (
+        kind == "LogicalRDD" and plan.rdd().isCheckpointed()
+    )
+
+
+def _driver_copy(df: DataFrame, id_col: str, vec_col: str | None,
+                 codes_col: str | None, ints: tuple[str, ...]) -> _DriverCopy | None:
+    """The driver copy of the columns a request reads from ``df``, or
+    None: the Spark plan answers. The first request against a
+    materialized store fetches them in ONE ``limit(budget + 1)`` Arrow
+    collect; the copy, or the verdict "over budget", is kept for every
+    later request with the same columns, which then runs no Spark job."""
+    if _DRIVER_TOPK_ROWS < 1:
+        return None
+    copies = _driver_copies.get(df)
+    if copies is None:
+        copies = {} if _materialized(df) else False
+        _driver_copies[df] = copies
+    if copies is False:
+        return None
+    key = (id_col, vec_col, codes_col, ints)
+    if key not in copies:
+        copies[key] = _DriverCopy.fetch(df, id_col, vec_col, codes_col, ints)
+    return copies[key]
+
+
+def _list_matrix(arr, dtype):
+    """An Arrow list array as (values, missing, null, length): the n × L
+    matrix of its elements (L the longest list, zero-padded), True where
+    an element is NULL or past its list's end, True for a NULL list, and
+    each list's length (0 for a NULL list)."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    n = len(arr)
+    null = arr.is_null().to_numpy(zero_copy_only=False)
+    length = pc.list_value_length(arr).fill_null(0).to_numpy(zero_copy_only=False)
+    flat = arr.flatten()
+    width = int(length.max()) if n else 0
+    values = np.zeros((n, width), dtype=dtype)
+    missing = np.ones((n, width), dtype=bool)
+    rows = np.repeat(np.arange(n), length)
+    cols = np.arange(len(flat)) - np.repeat(np.cumsum(length) - length, length)
+    values[rows, cols] = flat.fill_null(0).to_numpy(zero_copy_only=False)
+    missing[rows, cols] = flat.is_null().to_numpy(zero_copy_only=False)
+    return values, missing, null, length
+
+
+_INT_MAX = (1 << 31) - 1
+
+
+class _DriverCopy:
+    """One request's columns of a materialized store, on the driver, and
+    the score blocks and masks that replay the Spark plan's SQL on them.
+
+    Every fold is the SQL fold term for term — a sequential left fold
+    over the elements from 0.0, vectorized across rows only — so the
+    scores are the JVM's bits. ``None`` from a score block means the
+    Spark plan must answer (an edge this copy does not replay, such as a
+    division by zero, which ANSI Spark raises)."""
+
+    @staticmethod
+    def fetch(df, id_col, vec_col, codes_col, ints) -> _DriverCopy | None:
+        """ONE Spark job: at most ``_DRIVER_TOPK_ROWS + 1`` rows of the
+        columns read. None when a column has a type the copy does not
+        replay, or the rows are over budget."""
+        import pyarrow.compute as pc  # noqa: PLC0415
+
+        read = [c for c in (id_col, vec_col, codes_col, *ints) if c]
+        if any(c not in df.columns for c in read):
+            return None  # a name Spark resolves case-insensitively
+        names = {c: df.schema[c].dataType.simpleString() for c in read}
+        if names[id_col] not in _INTEGRAL_TYPES or any(
+            names[c] not in _INTEGRAL_TYPES for c in ints
+        ):
+            return None
+        if vec_col and names[vec_col] not in ("array<float>", "array<double>"):
+            return None
+        if codes_col and names[codes_col] != "array<int>":
+            return None
+        arrays = [c for c in (vec_col, codes_col) if c]
+        cols = [F.col(_sql_col(id_col))]
+        cols += [F.when(F.size(F.col(_sql_col(c))) <= _EXACT_FIT_DIM, F.col(_sql_col(c)))
+                 for c in arrays]
+        cols += [F.col(_sql_col(c)) for c in ints]
+        wide = " OR ".join(
+            f"coalesce(size({_sql_col(c)}) > {_EXACT_FIT_DIM}, false)" for c in arrays
+        )
+        t = (
+            df.select(*[c.alias(f"c{i}") for i, c in enumerate(cols)],
+                      F.expr(wide or "false").alias("wide"))
+            .limit(_DRIVER_TOPK_ROWS + 1)
+            .toArrow()
+        )
+        if (t.num_rows > _DRIVER_TOPK_ROWS or t.nbytes > _DRIVER_TOPK_BYTES
+                or pc.any(t.column("wide")).as_py()):
+            return None
+        return _DriverCopy(t, df.schema[id_col], vec_col, codes_col, ints)
+
+    def __init__(self, t, id_field, vec_col, codes_col, ints):
+        import numpy as np  # noqa: PLC0415
+
+        col = iter(t.column(i).combine_chunks() for i in range(t.num_columns - 1))
+        self.n = t.num_rows
+        self.id_field = id_field
+        self.ids = next(col)
+        self.id_null = self.ids.is_null().to_numpy(zero_copy_only=False)
+        self.id64 = self.ids.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
+        if vec_col:
+            self.x, missing, self.vec_null, self.length = _list_matrix(next(col), np.float64)
+            # a NULL element inside the list makes every fold over it NULL
+            self.holes = (
+                missing & (np.arange(self.x.shape[1])[None, :] < self.length[:, None])
+            ).any(axis=1)
+            self.folds = ~self.vec_null & ~self.holes
+            # ‖v‖², the query-independent half of the cosine: padding
+            # zeros add +0.0 to a sum that started at +0.0
+            with np.errstate(all="ignore"):
+                sq = np.zeros(self.n)
+                for i in range(self.x.shape[1]):
+                    sq = sq + self.x[:, i] * self.x[:, i]
+                self.norm = np.sqrt(sq)
+            self.cosine_ok = self.folds & (sq > 0) & (sq < np.inf)
+        if codes_col:
+            self.codes, self.code_missing, self.codes_null, _ = _list_matrix(
+                next(col), np.int64)
+        self.ints = {
+            c: (v.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64),
+                v.is_null().to_numpy(zero_copy_only=False))
+            for c, v in ((c, next(col)) for c in ints)
+        }
+
+    def kept(self, exclude_ids, probe):
+        """Rows surviving ``NOT id IN (exclude_ids)`` (a NULL id never
+        does, when any id is excluded) and the probe: some table's
+        column, not NULL, holds a value of that table's set."""
+        import numpy as np  # noqa: PLC0415
+
+        keep = np.ones(self.n, dtype=bool)
+        if exclude_ids:
+            keep &= ~self.id_null & ~np.isin(self.id64, list(exclude_ids))
+        if probe is not None:
+            hit = np.zeros(self.n, dtype=bool)
+            for c, values in zip(*probe):
+                v, null = self.ints[c]
+                hit |= ~null & np.isin(v, list(values))
+            keep &= hit
+        return keep
+
+    def _fold(self, rows, q, term):
+        """The SQL ``aggregate(zip_with(v, q, term), 0D, +)`` of each
+        row in ``rows``: NaN where it is NULL (a NULL element, or ``v``
+        and ``q`` of unequal length — zip_with pads with NULL), with the
+        NULL mask."""
+        import numpy as np  # noqa: PLC0415
+
+        null = ~self.folds[rows] | (self.length[rows] != len(q))
+        acc = np.zeros(len(rows))
+        if len(q) <= self.x.shape[1]:
+            x = self.x[rows]
+            with np.errstate(all="ignore"):
+                for i, qi in enumerate(q):
+                    acc = acc + term(x[:, i], qi)
+        acc[null] = np.nan
+        return acc, null
+
+    def cosine(self, keep, q):
+        """``cosine_topk``'s candidates and scores: rows with
+        0 < ‖v‖² < ∞, dot / (‖v‖·‖q‖) before rounding."""
+        import numpy as np  # noqa: PLC0415
+
+        rows = np.flatnonzero(keep & self.cosine_ok)
+        dot, null = self._fold(rows, q, lambda x, y: x * y)
+        q_sq = 0.0
+        for y in q:
+            q_sq = q_sq + y * y
+        with np.errstate(all="ignore"):
+            den = self.norm[rows] * math.sqrt(q_sq)
+            if (den == 0).any():
+                return None
+            return rows, dot / den, null
+
+    def l2(self, rows, q):
+        """Squared L2 of ``rows`` against ``q``, NaN where the SQL fold is
+        NULL (``_sql_l2_score``'s coalesce)."""
+        def sq_diff(x, y):
+            t = x - y
+            return t * t
+
+        return self._fold(rows, q, sq_diff)[0]
+
+    def adc(self, keep, lut):
+        """``_adc_scored``'s candidates (a code not NULL) and sums:
+        ``get(table, j·k_sub + get(code, j))`` added over j, NULL when a
+        code element is NULL or indexes outside the flat table."""
+        import numpy as np  # noqa: PLC0415
+
+        rows = np.flatnonzero(keep & ~self.codes_null)
+        table = np.asarray([d for row in lut for d in row], dtype=np.float64)
+        codes, missing = self.codes[rows], self.code_missing[rows]
+        s, null = None, np.zeros(len(rows), dtype=bool)
+        for j, row in enumerate(lut):
+            if j < codes.shape[1]:
+                miss = missing[:, j]
+                idx = j * len(row) + codes[:, j]
+            else:
+                miss = np.ones(len(rows), dtype=bool)
+                idx = np.zeros(len(rows), dtype=np.int64)
+            if j * len(row) > _INT_MAX or (
+                (~miss) & ((idx > _INT_MAX) | (idx < -_INT_MAX - 1))
+            ).any():
+                return None  # the int sum overflows: ANSI Spark raises
+            ok = ~miss & (idx >= 0) & (idx < len(table))
+            null |= ~ok
+            term = table[np.where(ok, idx, 0)]
+            s = term if s is None else s + term
+        s[null] = np.nan
+        return rows, s, null
+
+
+def _ranked(copy: _DriverCopy, rows, score, null, n: int, dp: int, desc: bool):
+    """The first ``n`` of ``rows`` as Spark's ``orderBy(round(score,
+    dp), id).limit(n)`` ranks them — DESC NULLS LAST or ASC NULLS
+    FIRST, NaN above every number, ties to id ASC NULLS FIRST — and
+    their rounded scores (None for NULL). Rounding is ``_pq_half_up``
+    (``F.round``), applied only as far down the raw order as the cut
+    needs: it is monotone, so no later row can round past the cut."""
+    import numpy as np  # noqa: PLC0415
+
+    def by(sel, *keys):
+        order = np.lexsort((sel, copy.id64[rows[sel]], ~copy.id_null[rows[sel]], *keys))
+        return sel[order]
+
+    nan = np.isnan(score) & ~null
+    num = np.flatnonzero(~nan & ~null)
+    classes = [np.flatnonzero(nan), None, np.flatnonzero(null)]
+    if not desc:
+        classes.reverse()
+    out: list = []
+    for cls in classes:
+        if len(out) >= n:
+            break
+        if cls is not None:
+            out += [(p, None if null[p] else float(score[p])) for p in by(cls)[: n - len(out)]]
+            continue
+        order = by(num, -score[num] if desc else score[num])
+        need = n - len(out)
+        rounded = [_pq_half_up(float(score[p]), dp) for p in order[:need]]
+        for p in order[need:] if rounded else ():  # the cut's tie block
+            v = _pq_half_up(float(score[p]), dp)
+            if v != rounded[-1]:
+                break
+            rounded.append(v)
+        head = order[: len(rounded)]
+        r = np.asarray(rounded, dtype=np.float64)
+        pick = np.lexsort((head, copy.id64[rows[head]], ~copy.id_null[rows[head]],
+                           -r if desc else r))[:need]
+        out += [(head[i], rounded[i]) for i in pick]
+    pos = np.asarray([p for p, _ in out], dtype=np.int64)
+    return pos, [v for _, v in out]
+
+
+def _driver_topk(df, query_vec, k, id_col, exclude_ids, score, vec_col,
+                 round_dp=6, probe=None, codebooks=None, codes_col=None, refine_n=0):
+    """The answer to one single-query request from ``df``'s driver
+    copy, or None: the Spark plan answers.
+
+    ``score`` is the request's ranking: "cosine" (``cosine_topk``),
+    "l2" (``l2_topk``) or "adc" (``_adc_scored``, then — with
+    ``refine_n`` > 0 — the carried leg of ``_refine_l2`` over the
+    ``max(k, refine_n)`` shortlist). ``probe`` is (columns, value sets):
+    a row is a candidate when any column holds a value of its set, as
+    the IVF cell probe and the LSH Hamming balls filter. The result is
+    a ``LocalRelation`` built from Arrow, with the Spark plan's schema
+    and rows: ids and rounded scores bit for bit; rows tied on score and
+    id come in an order of their own, as Spark's do."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql import types as T  # noqa: PLC0415
+
+    lut = _pq_lut(query_vec, codebooks) if score == "adc" else None
+    if not (type(k) is int and k >= 0 and type(round_dp) is int and type(refine_n) is int
+            and (lut is None or len(lut))
+            and all(type(e) is int and -(1 << 63) <= e < 1 << 63 for e in exclude_ids)
+            and (probe is None or all(0 <= v < 1 << 63 for vs in probe[1] for v in vs))):
+        return None
+    copy = _driver_copy(df, id_col, vec_col, codes_col,
+                        tuple(probe[0]) if probe is not None else ())
+    if copy is None:
+        return None
+    keep = copy.kept(exclude_ids, probe)
+    q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
+    cols = {}
+    if score == "cosine":
+        scored = copy.cosine(keep, q)
+        if scored is None:
+            return None
+        rows, s, null = scored
+        pos, r = _ranked(copy, rows, s, null, k, 4, desc=True)
+        rows, cols["cos_sim"] = rows[pos], r
+    elif score == "l2":
+        rows = np.flatnonzero(keep & ~copy.vec_null)
+        s = copy.l2(rows, q)
+        pos, r = _ranked(copy, rows, s, np.zeros(len(rows), bool), k, round_dp, False)
+        rows, cols["l2"] = rows[pos], r
+    else:
+        scored = copy.adc(keep, lut)
+        if scored is None:
+            return None
+        rows, s, null = scored
+        width = max(k, refine_n) if refine_n > 0 else k
+        pos, r = _ranked(copy, rows, s, null, width, round_dp, False)
+        rows, adc = rows[pos], r
+        if refine_n > 0:
+            present = np.flatnonzero(~copy.vec_null[rows])
+            rows, adc = rows[present], [adc[i] for i in present]
+            s = copy.l2(rows, q)
+            pos, r = _ranked(copy, rows, s, np.zeros(len(rows), bool), k, round_dp, False)
+            rows, adc = rows[pos], [adc[i] for i in pos]
+            cols["adc"], cols["l2"] = adc, r
+        else:
+            cols["adc"] = adc
+    table = pa.table(
+        [copy.ids.take(pa.array(rows, type=pa.int64())),
+         *[pa.array(v, type=pa.float64()) for v in cols.values()]],
+        names=[id_col, *cols],
+    )
+    schema = T.StructType([copy.id_field, *[T.StructField(c, T.DoubleType()) for c in cols]])
+    return df.sparkSession.createDataFrame(table, schema)

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -50,7 +51,12 @@ def _fast_createDataFrame(spark, orig):
     difference is intentional: LocalRelation carries real size stats
     (tiny test tables may auto-broadcast where an RDD side never did);
     tests that assert a specific non-broadcast join shape pin it with
-    hints/thresholds, not input opacity.
+    hints/thresholds, not input opacity. A second one is a hazard:
+    pandas turns a NaN element of an array cell into NULL, so a test
+    that needs a NaN element makes it in Spark.
+
+    ``SPARK_GRAFT_TEST_PLAIN_CREATE=1`` turns the shortcut off, so the
+    suite runs with PySpark's own list-backed createDataFrame.
     """
     import pandas as pd  # noqa: PLC0415
 
@@ -103,17 +109,20 @@ def spark():
     # never core counts; the bench/driver sessions are built elsewhere
     # and keep honoring SPARK_GRAFT_CPUS.
     s = get_session("tests", master="local[8]", shuffle_partitions=8)
-    s.createDataFrame = _fast_createDataFrame(s, s.createDataFrame)
+    if os.environ.get("SPARK_GRAFT_TEST_PLAIN_CREATE") != "1":
+        s.createDataFrame = _fast_createDataFrame(s, s.createDataFrame)
     _unpatched_create_canary(s)
     yield s
 
 
 def _unpatched_create_canary(spark) -> None:
-    """Library code never sees the pandas/Arrow shortcut above, so the
-    suite runs the real list-backed createDataFrame once, end to end:
-    the class method bypasses the instance patch, the plan must be the
-    pickled-row RDD (not the LocalRelation the shortcut builds) and the
-    rows, NULL included, must come back as given."""
+    """The shortcut above patches the session instance, so library code
+    that calls ``df.sparkSession.createDataFrame`` on a list gets it too
+    (``df.sparkSession is spark``) and builds a LocalRelation. The suite
+    therefore runs the real list-backed createDataFrame once, end to
+    end: the class method bypasses the instance patch, the plan must be
+    the pickled-row RDD (not the LocalRelation the shortcut builds) and
+    the rows, NULL included, must come back as given."""
     df = type(spark).createDataFrame(
         spark, [(1, "a"), (None, "b")], "x int, y string"
     )

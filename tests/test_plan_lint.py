@@ -193,13 +193,14 @@ def _jobs_of_one_collect(spark, df, group: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_single_query_pq_refine_is_one_job_without_broadcast(spark, topk_store):
+def test_single_query_pq_refine_is_one_job_without_broadcast(spark, monkeypatch, topk_store):
     """The two-stage PQ searches over a store holding codes and vectors
     together carry the vector through the ADC shortlist: no broadcast
     exchange or join in the executed plan, and one Spark job per
     request. A codes-only store (raw vectors in a separate frame, the
     refine oracles' shape) keeps the broadcast-join leg and its second
-    job."""
+    job. The driver copy is turned off: these are the Spark plans."""
+    monkeypatch.setattr(sim, "_DRIVER_TOPK_ROWS", 0)
     store, books, cents, q = topk_store
     carried = {
         "pq_adc_topk": sim.pq_adc_topk(store, q, books, k=10, refine_n=50, vectors=store),

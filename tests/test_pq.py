@@ -1362,3 +1362,26 @@ def test_scale_side_fit_keeps_the_spark_loop(spark, monkeypatch):
             df, m=4, k_sub=256, iters=1, dim=dim), f"scale-side-{dim}")
         assert decided[-1] is None and n >= 3
         assert len(books) == 4 and len(books[0]) == 256
+
+
+def test_spark_loop_fits_skip_null_element_seeds(spark, monkeypatch):
+    """Over the driver budget, pq_fit, kmeans and ivf_fit_centroids(l2)
+    seed from the lowest-id vectors that hold no NULL element, and a
+    mean dimension that F.avg returns as NULL (every member of the cell
+    is NULL there) keeps the previous coordinate.
+
+    Id 0's NULL element makes every distance NaN, so the kernels put it
+    in cell 0. Seeds ids 1, 2 → c0 = [0, 0], c1 = [1, 1]. Iteration 1:
+    cell 0 = {0, 1, 3}, so c0 = [avg(5, 0, 100), avg(0)] = [35, 0].
+    Iteration 2: id 1 moves to cell 1, cell 0 = {0, 3} has no value in
+    dimension 1, so c0 = [52.5, 0] and c1 = [0.5, 0.5]."""
+    monkeypatch.setattr(similarity, "_DRIVER_FIT_ROWS", 0)
+    df = spark.createDataFrame(
+        [(0, [5.0, None]), (1, [0.0, 0.0]), (2, [1.0, 1.0]), (3, [100.0, None])],
+        _SCHEMA,
+    )
+    want = [[52.5, 0.0], [0.5, 0.5]]
+    assert similarity.pq_fit(df, m=1, k_sub=2, iters=2) == [want]
+    assert similarity.ivf_fit_centroids(df, k_cells=2, iters=2, metric="l2") == want
+    labels = sorted(map(tuple, similarity.kmeans(df, k=2, iters=2).collect()))
+    assert labels == [(0, 0), (1, 1), (2, 1), (3, 0)]

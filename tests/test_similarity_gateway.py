@@ -170,9 +170,11 @@ def test_lsh_persist_signatures_match_column_spelling(spark):
     # 1,319 (ivfpq) and 749 (lsh) calls per request in this geometry
     [("exact", 100), ("pq_adc", 150), ("ivfpq", 150), ("lsh", 100)],
 )
-def test_single_query_gateway_budget(spark, index, kind, budget):
-    """Building and collecting one request costs O(1) gateway calls in
-    the vector length, the LUT size and the number of hyperplanes."""
+def test_single_query_gateway_budget(spark, monkeypatch, index, kind, budget):
+    """Building and collecting one request on the Spark plan (the driver
+    copy turned off) costs O(1) gateway calls in the vector length, the
+    LUT size and the number of hyperplanes."""
+    monkeypatch.setattr(sim, "_DRIVER_TOPK_ROWS", 0)
     _request(kind, index, index["queries"][0]).collect()  # warm
     with _gateway_calls(spark) as n:
         rows = _request(kind, index, index["queries"][1]).collect()
@@ -187,10 +189,12 @@ def test_lsh_persist_signatures_gateway_budget(index):
     assert index["persist_calls"] <= 60, index["persist_calls"]
 
 
-@pytest.mark.parametrize("kind", ["exact", "pq_adc", "lsh"])
-def test_new_query_vector_reuses_generated_code(spark, index, kind):
-    """Per-query constants stay out of generated code: a request with a
-    different query vector compiles no new class."""
+@pytest.mark.parametrize("kind", ["exact", "pq_adc", "ivfpq", "lsh"])
+def test_new_query_vector_reuses_generated_code(spark, monkeypatch, index, kind):
+    """Per-query constants stay out of generated code on the Spark plan
+    (the driver copy turned off): a request with a different query
+    vector, and for ivfpq a different probe set, compiles no new class."""
+    monkeypatch.setattr(sim, "_DRIVER_TOPK_ROWS", 0)
     qs = index["queries"]
     _request(kind, index, qs[0]).collect()
     before = _compilations(spark)

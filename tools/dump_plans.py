@@ -117,13 +117,16 @@ def _optimized(df) -> str:
 def _topk_requests(spark) -> dict:
     """The four request kinds of the vector_topk benchmark against one
     fitted index in its geometry (dim 32; PQ m=8 x 16; 8 IVF cells,
-    nprobe 2; 8 planes x 4 LSH tables, radius 2; refine 100)."""
+    nprobe 2; 8 planes x 4 LSH tables, radius 2; refine 100), as Spark
+    plans: the driver copy that answers them in the benchmark is turned
+    off, since its answer is a LocalRelation of the result rows."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql import types as T  # noqa: PLC0415
 
     from datapipelineetl_spark.operators import similarity as sim  # noqa: PLC0415
 
+    sim._DRIVER_TOPK_ROWS = 0
     n, dim = 500, 32
     rng = np.random.default_rng(0)
     schema = T.StructType([T.StructField("vec_id", T.LongType()),
