@@ -228,6 +228,7 @@ def temperature_mix(
     """
     if dispatch not in ("auto", "case", "join"):
         raise ValueError(f"dispatch must be auto|case|join, got {dispatch!r}")
+    # one row per source: a mixture's sources are a handful of datasets
     counts = {
         r[source_col]: r["n"]
         for r in df.groupBy(source_col).agg(F.count("*").alias("n")).collect()
@@ -1985,7 +1986,7 @@ def flag_blocklisted_join(
                 # split and this check — it is a legitimate token)
                 | F.col("__term").rlike(r"\s")
             )
-            .limit(5)
+            .limit(5)  # at most 5 rows: only the error message reads them
             .collect()
         )
         if bad:

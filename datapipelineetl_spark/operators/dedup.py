@@ -187,7 +187,7 @@ def lsh_candidate_pairs(
         # Probe rows with an actual signature: F.size is -1 on null, and a
         # null first row would otherwise raise a misleading "exceeds
         # signature length -1" below. Negative/absent probe → skip check.
-        probe = (
+        probe = (  # one row
             df.filter(F.col(sig_col).isNotNull())
             .select(F.size(F.col(sig_col)).alias("n"))
             .first()
@@ -342,121 +342,57 @@ def near_dup_pairs(
     return out
 
 
-def cluster_pairs(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    steps_per_round: int = 4,
-    impl: str = "contract",
-    fan_in: int = 64,
-) -> DataFrame:
+# cluster_pairs' contraction ladder: each level repartitions the
+# (node, root) mapping this many times narrower
+_FAN_IN = 64
+
+
+def cluster_pairs(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_id)
     with cluster_id = the component's minimum doc id. The final step of
     every dedup pipeline: pairs say "these two match"; clusters say "keep
     one of each group".
 
-    ``impl`` picks the physical algorithm (round 16); the output rows
-    are identical (min-id labeling is a property of the graph, not the
-    algorithm — parity pinned by
-    ``test_cluster_pairs_contract_matches_iterate``):
+    Two-phase local contraction — the standard distributed-CC shape:
+    per-partition union-find inside an Arrow-batched ``mapInPandas``,
+    emitting each node's partition-local min root as a contracted edge
+    list, then a ``_FAN_IN``-ary (64) repartition ladder of the same
+    kernel down to one partition. ONE lazy plan, ⌈log_64(partitions)⌉
+    small shuffles of (node, root) rows, ZERO driver-side jobs at call
+    time — where iterative min-label propagation pays an eager edge
+    checkpoint plus one probe job per round (measured 4.7 s warm → 0.5 s
+    on the sf0.1 capped-LSH pair graph, 5.4k pairs). Min-id labeling is
+    a property of the graph, not the algorithm (parity with that
+    propagation: ``test_cluster_pairs_contract_matches_iterate``).
 
-    - ``"contract"`` (default): two-phase local contraction — the
-      standard distributed-CC shape (per-partition union-find inside an
-      Arrow-batched ``mapInPandas``, emitting each node's partition-local
-      min root as a contracted edge list, then a ``fan_in``-ary
-      repartition ladder of the same kernel down to one partition).
-      ONE lazy plan, ⌈log_fan(partitions)⌉ small shuffles of
-      (node, root) rows, ZERO driver-side jobs at call time — where the
-      iterative form pays an eager edge checkpoint plus one probe job
-      per round (measured 4.7 s warm → 0.5 s on the sf0.1 capped-LSH
-      pair graph, 5.4k pairs). Memory bound, stated honestly: the last
-      task holds the contracted mapping — one entry per node that
-      appears in any pair (the CANDIDATE set, orders of magnitude
-      smaller than the corpus at 100 TB; the upstream caps bound it).
-      For pair graphs whose node set exceeds one executor's memory,
-      use ``impl="iterate"``.
-    - ``"iterate"``: the original unrolled min-label propagation —
-      unbounded node sets, O(diameter) rounds of driver-probed jobs.
+    Memory bound: the last task holds the contracted mapping — one entry
+    per node that appears in any pair (the CANDIDATE set, orders of
+    magnitude smaller than the corpus; the upstream bucket caps bound
+    it). There is no fallback: a size probe cannot pick one without
+    cost — at sf0.01 plan statistics estimate 389 MB for q_dedup_clusters'
+    47-node pair graph and 2.1×10¹⁶ B for q_dedup_clusters_lsh's
+    297-node one, and a count would run the upstream pair pipeline a
+    second time.
 
-    Iterative min-label propagation (the dataframe form of
-    union-find / the map-reduce connected-components algorithm): each
-    step every node adopts the smallest label among itself and its
-    neighbors; a label travels one hop per step, so convergence takes
-    O(max component diameter) steps. Near-dup graphs are NOT always
-    short-diameter — capped-LSH pair graphs form 10+-hop chains of
-    borderline-similar docs (measured 12 steps on the sf0.1 fixture) —
-    so steps are UNROLLED: ``steps_per_round`` propagation steps compose
-    into ONE lazy plan per materialized round, amortizing the fixed
-    per-job cost (scheduling + checkpoint + probe) over k hops.
-    Measured at sf0.1: k=1 → 12 jobs / 4.8 s, k=4 → 4 jobs / 3.1 s;
-    k≫4 regresses (too-deep plans cost more per job than they save).
-    Rounds still needed: ceil(diameter / k) + 1; at most k-1 steps are
-    wasted re-aggregating already-converged labels (tiny frames — the
-    label set, not the corpus).
-
-    Convergence is an exact changed-row COUNT: each node's previous
-    label joins back onto the round's output and the probe counts
-    ``label != old`` — works for ANY comparable label type (numeric,
-    string, …), unlike a numeric label-sum (which cast-throws under
-    ANSI for string ids, or null-sums into false convergence with ANSI
-    off). The round's checkpoint is LAZY and the probe action
-    materializes it, so compute + checkpoint + convergence check share
-    a single Spark job.
-
-    The edge list itself is checkpointed ONCE up front: it is re-read in
-    every round's join plus the convergence probe, and without the
-    barrier each of those re-executes the entire upstream pair pipeline
-    (for an LSH-derived graph that is the signature/banding/verify DAG —
-    measured 6× on q_dedup_clusters_lsh at sf0.1: 36.4s → 6s). At
-    cluster scale this is the standard persist-the-edges step of every
-    iterative graph algorithm (reliable storage instead of
-    localCheckpoint if executor loss matters).
+    Edge values: a self-pair only adds its node; duplicate and
+    reversed pairs change nothing; a NULL (or NaN) endpoint is never a
+    node, so a half-NULL pair contributes only its other endpoint; ids
+    need only be comparable (strings cluster too).
     """
-    if steps_per_round < 1:
-        raise ValueError(f"steps_per_round must be >= 1, got {steps_per_round}")
-    if impl not in ("contract", "iterate"):
-        raise ValueError(f"impl must be 'contract' or 'iterate', got {impl!r}")
-    if impl == "contract":
-        return _cluster_pairs_contract(pairs, id_a, id_b, fan_in)
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    idt = pairs.schema[id_a].dataType.simpleString()
+    schema = f"`__cp_a` {idt}, `__cp_b` {idt}"
+    kernel = _union_find_kernel("__cp_a", "__cp_b")
+    m = pairs.select(
+        F.col(id_a).alias("__cp_a"), F.col(id_b).alias("__cp_b")
+    ).mapInPandas(kernel, schema)
+    # physical planning only (no job): how many partitions phase 1 left
+    p = m.rdd.getNumPartitions()
+    while p > 1:
+        p = max(1, p // _FAN_IN)
+        m = m.repartition(p).mapInPandas(kernel, schema)
+    return m.select(
+        F.col("__cp_a").alias("doc_id"), F.col("__cp_b").alias("cluster_id")
     )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-
-    def step(lbl: DataFrame) -> DataFrame:
-        return (
-            edges.join(lbl, edges.dst == lbl.node)
-            .select(F.col("src").alias("node"), "label")
-            .unionByName(lbl.select("node", "label"))
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-
-    for _ in range(max_iter):
-        old = labels.select(F.col("node").alias("__on"), F.col("label").alias("__ol"))
-        new_labels = labels
-        for _ in range(steps_per_round):
-            new_labels = step(new_labels)
-        new_labels = (
-            new_labels.join(old, new_labels.node == F.col("__on"))
-            .select("node", "label", F.col("__ol").alias("__old"))
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.agg(
-            F.count(F.when(F.col("label") != F.col("__old"), F.lit(1))).alias("n")
-        ).first()[0]
-        labels = new_labels.drop("__old")
-        if not changed:
-            break
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 def _union_find_kernel(a_col: str, b_col: str):
@@ -502,33 +438,6 @@ def _union_find_kernel(a_col: str, b_col: str):
         yield pd.DataFrame({a_col: nodes, b_col: [find(n) for n in nodes]})
 
     return run
-
-
-def _cluster_pairs_contract(
-    pairs: DataFrame, id_a: str, id_b: str, fan_in: int
-) -> DataFrame:
-    """``cluster_pairs``'s two-phase contraction plan — see its
-    docstring. Lazy end to end: phase 1 contracts each input partition
-    in place (no shuffle); each ladder level repartitions the
-    (node, root) mapping ``fan_in``-fold smaller and contracts again,
-    ending at one partition whose union-find output IS the exact
-    min-id labeling."""
-    if fan_in < 2:
-        raise ValueError(f"fan_in must be >= 2, got {fan_in}")
-    idt = pairs.schema[id_a].dataType.simpleString()
-    schema = f"`__cp_a` {idt}, `__cp_b` {idt}"
-    kernel = _union_find_kernel("__cp_a", "__cp_b")
-    m = pairs.select(
-        F.col(id_a).alias("__cp_a"), F.col(id_b).alias("__cp_b")
-    ).mapInPandas(kernel, schema)
-    # physical planning only (no job): how many partitions phase 1 left
-    p = m.rdd.getNumPartitions()
-    while p > 1:
-        p = max(1, p // fan_in)
-        m = m.repartition(p).mapInPandas(kernel, schema)
-    return m.select(
-        F.col("__cp_a").alias("doc_id"), F.col("__cp_b").alias("cluster_id")
-    )
 
 
 def dedup_by_fingerprint(
@@ -584,9 +493,9 @@ def semantic_dupes(
     against the corpus.
 
     Scale: pairs via one Arrow signature pass + (table, sig) equi-join
-    (see lsh_cosine_near_pairs); components via the k-step-unrolled
-    min-label propagation (see cluster_pairs) — edges checkpointed once,
-    O(component diameter / k) jobs.
+    (see lsh_cosine_near_pairs); components via the union-find
+    contraction ladder (see cluster_pairs) — one lazy plan, no driver
+    job.
     """
     from datapipelineetl_spark.operators import similarity  # noqa: PLC0415
 

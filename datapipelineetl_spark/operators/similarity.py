@@ -44,6 +44,10 @@ NULLS FIRST would rank a NULL score above every real neighbor. The
 batched operators (``*_topk_multi``) share one Arrow kernel,
 ``_batched_topk``, which puts that NaN back after the pass, because
 pandas NaN crosses Arrow as NULL and ASC NULLS FIRST would rank it first.
+The batched pass therefore carries no NULL score: where a single-query
+ADC scores NULL and ranks it first (a NULL or missing code element, an
+index outside the table), a batched ADC scores NaN and ranks it last,
+and a batched cosine does not score a vector of another length.
 
 Which path answers a single-query request. A request against a small
 materialized store is answered on the driver; every other request runs
@@ -113,6 +117,8 @@ from decimal import ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from datapipelineetl_spark.operators import _arrow_rows
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -441,26 +447,66 @@ def _matmul_scores(
     """The raw-vector score block: squared L2 by the ‖x‖² − 2·X@Qᵀ + ‖q‖²
     expansion, or cosine as X@Qᵀ over the norms. NULL vectors are not
     scored, and for cosine neither is a vector whose squared norm is
-    not positive and finite (the ``cosine_topk`` rule)."""
+    not positive and finite (the ``cosine_topk`` rule) nor one of
+    another length. L2 scores a vector with a NULL element or of
+    another length NaN, and one with a ±inf element (and no NaN) inf,
+    as ``l2_topk`` does."""
     import numpy as np  # noqa: PLC0415
 
     qm = np.asarray([queries[qid] for qid in qids], dtype=np.float64)  # Q×dim
+    dim = qm.shape[1]
     q_sq = (qm * qm).sum(axis=1)
     q_norm = np.sqrt(q_sq)
 
     def score(pdf):
-        x, null_mask = _stack_nullable(pdf[vec_col].to_numpy(), qm.shape[1])
+        x, null, length = _pad_rows(pdf[vec_col].to_numpy(), dim)
         x_sq = (x * x).sum(axis=1)
-        keep = ~null_mask
+        keep = ~null
         if metric == "cosine":
-            keep &= (x_sq > 0) & (x_sq < np.inf)
+            keep &= (x_sq > 0) & (x_sq < np.inf) & (length == dim)
         rows = np.flatnonzero(keep)
         x, x_sq = x[rows], x_sq[rows]
         if metric == "l2":
-            return rows, x_sq[:, None] - 2.0 * (x @ qm.T) + q_sq[None, :], None
+            with np.errstate(invalid="ignore"):
+                scores = x_sq[:, None] - 2.0 * (x @ qm.T) + q_sq[None, :]
+            # the expansion gives inf − inf; the fold's sum is inf
+            inf = np.isinf(x_sq)
+            d = x[inf][:, None, :] - qm[None, :, :]
+            scores[inf] = (d * d).sum(axis=2)
+            scores[length[rows] != dim] = np.nan
+            return rows, scores, None
         return rows, (x @ qm.T) / (np.sqrt(x_sq)[:, None] * q_norm[None, :]), None
 
     return score
+
+
+def _pad_rows(arrays, width: int):
+    """An Arrow batch of array values as (x, null, length): the n ×
+    ``width`` float64 matrix of their first ``width`` elements, NaN
+    where an element is NULL or past the array's end (every element of
+    a NULL row), a mask of the NULL rows and each array's length."""
+    import numpy as np  # noqa: PLC0415
+
+    x = np.full((len(arrays), width), np.nan)
+    null = np.zeros(len(arrays), dtype=bool)
+    length = np.zeros(len(arrays), dtype=np.int64)
+    whole, rows = [], []  # rows of exactly ``width``: one np.stack
+    for i, v in enumerate(arrays):
+        if v is None or (isinstance(v, float) and v != v):
+            null[i] = True
+            continue
+        length[i] = len(v)
+        if len(v) == width:
+            whole.append(i)
+            rows.append(v)
+        else:
+            a = np.asarray(v, dtype=np.float64)
+            x[i, :min(len(a), width)] = a[:width]
+    if rows and len(rows) == len(x):
+        x = np.stack(rows).astype(np.float64, copy=False)
+    elif rows:
+        x[whole] = np.stack(rows)
+    return x, null, length
 
 
 def _in_probed_cells(score, probes: dict[int, list[int]], qids: list[int],
@@ -505,27 +551,6 @@ def cosine_pairs(
     )
 
 
-def _stack_nullable(vecs, dim: int):
-    """Stack an Arrow batch of array<double> values into a dense
-    (batch × dim) float64 matrix, tolerating NULL rows: nulls become
-    zero rows and the returned boolean mask marks them so callers emit
-    null outputs instead of crashing ``np.stack`` (embedding columns
-    legitimately carry nulls — decode failures, filtered docs)."""
-    import numpy as np  # noqa: PLC0415
-
-    rows = []
-    mask = np.zeros(len(vecs), dtype=bool)
-    zero = np.zeros(dim, dtype=np.float64)
-    for i, v in enumerate(vecs):
-        if v is None or (isinstance(v, float) and v != v):
-            mask[i] = True
-            rows.append(zero)
-        else:
-            rows.append(np.asarray(v, dtype=np.float64))
-    m = np.stack(rows) if rows else np.zeros((0, dim), dtype=np.float64)
-    return m, mask
-
-
 _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
@@ -560,7 +585,6 @@ def lsh_cosine_near_pairs(
     dim: int | None = None,
     max_bucket_size: int | None = None,
     materialize: bool = False,
-    verify_impl: str = "kernel",
 ) -> DataFrame:
     """Embedding near-duplicate PAIRS via LSH bucketing — the scale path
     next to the exact O(n²) ``cosine_pairs`` baseline (same output
@@ -584,12 +608,21 @@ def lsh_cosine_near_pairs(
     buckets above the cap, same mitigation and same caveat as
     ``lsh_candidate_pairs``. The verify join touches candidate ids only —
     embeddings shuffle once per side, not per pair.
+
+    Which path verifies. ONE job fetches the (id → vector) matrix when
+    it holds at most ``_LSH_VERIFY_BYTES`` (512 MiB) of float64 and no
+    id repeats; an Arrow kernel then scores each candidate pair against
+    the broadcast matrix (``_lsh_verify_broadcast``). Otherwise a JVM
+    join scores it with the same doubles. Edge values: a NULL vector is
+    never a candidate; a vector with a NULL element, of another length
+    or of zero norm never passes the threshold; a NaN or ±inf element
+    scores NaN, which passes any threshold; a NULL id is never a
+    candidate; a repeated id pairs every one of its rows.
     """
-    if verify_impl not in ("kernel", "jvm"):
-        raise ValueError(f"verify_impl must be 'kernel' or 'jvm', got {verify_impl!r}")
     if num_tables < 1:
         raise ValueError(f"num_tables must be >= 1, got {num_tables}")
     if dim is None:
+        # one row
         probe = df.filter(F.col(vec_col).isNotNull()).select(F.size(vec_col).alias("n")).first()
         if probe is None or probe.n < 0:
             raise ValueError("cannot infer embedding dim from an empty/null column")
@@ -650,33 +683,20 @@ def lsh_cosine_near_pairs(
     cand = cand.repartition(
         df.sparkSession.sparkContext.defaultParallelism, F.col("id_a")
     ).distinct()
-    # Verify (round 17): two impls, value-identical.
-    #
-    # - "kernel" (default): the r16 naive Arrow swap measured 1.5× SLOWER
-    #   because each candidate pair carried 2×dim doubles through the
-    #   boundary. The fix (guide §8: "shuffle keys and metadata instead
-    #   of payloads") is to move the vectors ONCE — the (id → vector)
-    #   matrix rides a Spark broadcast into the Python workers — and
-    #   ship only the two ids per pair through Arrow. The dot/norm folds
-    #   replay the JVM fold's IEEE add order exactly (sequential over
-    #   dim, vectorized across pairs — the q_pq_codes kernel recipe), so
-    #   the pre-round double is bit-identical to cosine() (parity pinned
-    #   by test_lsh_verify_kernel_matches_jvm). Memory bound: the
-    #   broadcast holds n×dim float64 (~0.5 GB per 1M vectors at
-    #   dim=64) — fine for any corpus whose embeddings fit one machine;
-    #   beyond that pass verify_impl="jvm" (SCALING.md row).
-    # - "jvm": pure-JVM joins, no broadcast bound. Round 17 moved the
-    #   norm folds out of the per-pair cosine: norms are per-VECTOR
-    #   functions, so they are computed once per id on the (n)-row side
-    #   of the verify join instead of twice per candidate pair — the
-    #   per-pair work drops from 3 interpreted dim-folds to 1 (the dot).
-    #   Same arithmetic on the same doubles → identical results.
-    if verify_impl == "kernel":
-        scored = _lsh_verify_broadcast(cand, df, id_col, vec)
-    else:
-        v = df.select(
-            F.col(id_col), vec.alias("__v"), norm(vec).alias("__n")
-        )
+    # Verify (round 17). The r16 naive Arrow swap measured 1.5× SLOWER
+    # because each candidate pair carried 2×dim doubles through the
+    # boundary. The fix (guide §8: "shuffle keys and metadata instead of
+    # payloads") is to move the vectors ONCE — the (id → vector) matrix
+    # rides a Spark broadcast into the Python workers — and ship only
+    # the two ids per pair through Arrow (``_lsh_verify_broadcast``).
+    # Over its budget, or when ids repeat, the verify is a pure-JVM join
+    # instead: norms are per-VECTOR functions, so they are computed once
+    # per id on the (n)-row side of the join, and the per-pair work is
+    # one interpreted dim-fold (the dot). Same arithmetic on the same
+    # doubles → identical results.
+    scored = _lsh_verify_broadcast(cand, df, id_col, vec, dim)
+    if scored is None:
+        v = df.select(F.col(id_col), vec.alias("__v"), norm(vec).alias("__n"))
         scored = (
             cand.join(
                 v.withColumnsRenamed({id_col: "id_a", "__v": "__va", "__n": "__na"}),
@@ -698,13 +718,24 @@ def lsh_cosine_near_pairs(
     )
 
 
+# The LSH verify matrix's budget: at most this many bytes of float64
+# vectors (1,048,576 rows at dim 64) are fetched and broadcast
+_LSH_VERIFY_BYTES = 1 << 29
+
+
 def _lsh_verify_broadcast(
-    cand: DataFrame, df: DataFrame, id_col: str, vec: Column
-) -> DataFrame:
+    cand: DataFrame, df: DataFrame, id_col: str, vec: Column, dim: int
+) -> DataFrame | None:
     """Exact-cosine verify over candidate id pairs with the embedding
     matrix broadcast to the Python workers: only (id_a, id_b) crosses the
     Arrow boundary per pair (the §8 'move heavy bytes once' shape — the
     per-pair join form ships 2×dim doubles per candidate).
+
+    The matrix is ONE ``_arrow_rows`` fetch of (id, vector), at most
+    ``_LSH_VERIFY_BYTES // (8 * dim)`` rows (vectors longer than ``dim``
+    come back NULL). None — the caller runs the JVM verify join — when
+    ``df`` holds more rows, or when a non-NULL id repeats: the matrix
+    keeps one row per id, while the join pairs every row of an id.
 
     Bit-exactness: dot and norm replay ``dot()``/``norm()``'s sequential
     left-fold add order — a Python loop over dim positions, each step an
@@ -724,35 +755,39 @@ def _lsh_verify_broadcast(
       JVM fold raises DIVIDE_BY_ZERO, and undefined similarity never
       passes the threshold.
     - A candidate id absent from ``df`` scores NULL, as the verify
-      join would drop the pair."""
+      join would drop the pair. A NULL id is never a candidate."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
-    rows = df.select(F.col(id_col).alias("i"), vec.alias("v")).collect()
-    n = len(rows)
-    dim = next((len(r.v) for r in rows if r.v is not None), 0)
-    mat = np.zeros((max(n, 1), max(dim, 1)), dtype=np.float64)
+    t = _arrow_rows(
+        df.select(F.col(id_col).alias("i"), F.when(F.size(vec) <= dim, vec).alias("v")),
+        max(1, _LSH_VERIFY_BYTES // (8 * max(dim, 1))),
+    )
+    if t is None:
+        return None
+    i = t.column("i").combine_chunks()
+    if pc.count_distinct(i).as_py() < len(i) - i.null_count:
+        return None
+    n = t.num_rows
+    x, missing, null, length = _list_matrix(t.column("v").combine_chunks(), np.float64)
     bad = np.zeros(max(n, 1), dtype=bool)
-    ids = []
-    for i, r in enumerate(rows):
-        ids.append(r.i)
-        v = r.v
-        if v is None or len(v) != dim or any(x is None for x in v):
-            bad[i] = True
-        else:
-            mat[i, :] = v
+    bad[:n] = null | (length != dim) | missing.any(axis=1)
+    mat = np.zeros((max(n, 1), max(dim, 1)), dtype=np.float64)
+    mat[:n, :x.shape[1]] = x
     # id → row lookup: sorted-ids + searchsorted for integer ids (fully
     # vectorized — a per-element dict .map() measured as the stage's
-    # blocking cost at 1.3M candidate pairs), dict fallback otherwise
-    int_ids = all(isinstance(x, int) for x in ids)
-    if int_ids and n:
-        ids_arr = np.asarray(ids, dtype=np.int64)
+    # blocking cost at 1.3M candidate pairs), a dict otherwise
+    id2row, sorted_ids, perm = {}, None, None
+    if pa.types.is_integer(i.type) and i.null_count < n:
+        rows = np.flatnonzero(~i.is_null().to_numpy(zero_copy_only=False))
+        ids_arr = i.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)[rows]
         order = np.argsort(ids_arr, kind="stable")
-        sorted_ids, perm = ids_arr[order], order
+        sorted_ids, perm = ids_arr[order], rows[order]
     else:
-        sorted_ids, perm = None, None
-    id2row = {x: i for i, x in enumerate(ids)}
+        id2row = {v: r for r, v in enumerate(i.to_pylist()) if v is not None}
     # norms once per vector, sequential fold in dim order (= norm())
     acc = np.zeros(mat.shape[0], dtype=np.float64)
     for j in range(dim):
@@ -826,14 +861,15 @@ def _lsh_signatures_pandas(planes_t: list[list[list[float]]]):
     pack = 1 << np.arange(n_planes, dtype=np.int64)
 
     def _sig(vecs):
-        m, mask = _stack_nullable(vecs, w.shape[0])
+        m, null, length = _pad_rows(vecs, w.shape[0])
+        mask = null | (length != w.shape[0])
         bits = (m @ w) >= 0  # batch × (tables·planes)
         sigs = np.stack(
             [bits[:, t * n_planes : (t + 1) * n_planes] @ pack for t in range(n_tables)],
             axis=1,
         )  # batch × tables
-        # null embedding → null signature array; downstream equi-joins on
-        # (table, sig) drop those rows, matching the old JVM-fold behavior
+        # null embedding (or one of another length) → null signature
+        # array; downstream equi-joins on (table, sig) drop those rows
         return pd.Series([None if mask[i] else sigs[i] for i in range(len(sigs))])
 
     # no type hints: `from __future__ import annotations` stringifies them
@@ -931,20 +967,20 @@ def _driver_fit_rows(
     width = min(_EXACT_FIT_DIM, _EXACT_FIT_CELLS // k) if dim is None else dim
     if width < 1 or not _exact_fit(k, width):
         return None
-    t = (
-        df.filter(vec.isNotNull())
-        .select(
+    t = _arrow_rows(
+        df.filter(vec.isNotNull()).select(
             F.spark_partition_id().alias("p"),
             F.col(id_col).alias("i"),
             F.when(F.size(vec) <= width, vec).alias("v"),
-        )
-        .limit(_DRIVER_FIT_ROWS + 1)
-        .toArrow()
+        ),
+        _DRIVER_FIT_ROWS,
     )
+    if t is None:
+        return None
     n = t.num_rows
     v = t.column("v").combine_chunks()
     flat = v.flatten()
-    if n > _DRIVER_FIT_ROWS or v.null_count or flat.null_count:
+    if v.null_count or flat.null_count:
         return None
     lengths = pc.list_value_length(v).to_numpy(zero_copy_only=False)
     width = int(lengths[0]) if n else 0
@@ -1031,7 +1067,7 @@ def _fit_seeds(
     collect."""
     if sample is not None:
         return sample.seeds(k)
-    return [
+    return [  # k rows
         r.v
         for r in df.filter(vec.isNotNull() & ~F.exists(vec, lambda x: x.isNull()))
         .orderBy(id_col)
@@ -1123,7 +1159,7 @@ def ivf_fit_centroids(
             members = df.filter(vec.isNotNull()).select(
                 cell.alias("__c"), vec.alias("__v")
             )
-            if exact:
+            if exact:  # k rows of dim means
                 sums = members.groupBy("__c").agg(
                     *[F.avg(F.col("__v")[i]).alias(f"c{i}") for i in range(dim)]
                 ).collect()
@@ -1165,13 +1201,14 @@ def _cell_kernel(centroids, metric: str):
 
 def _cell_series(vecs, dim: int, kernel, *args):
     """One Arrow batch of vectors → nullable Int32 cells: ``kernel(x,
-    *args)`` over the stacked (batch × dim) matrix, NULL for a NULL
-    vector. The body of every scalar cell-assignment UDF here."""
+    *args)`` over the (batch × dim) matrix, NULL for a NULL vector or
+    one of another length. The body of every scalar cell-assignment UDF
+    here."""
     import pandas as pd  # noqa: PLC0415
 
-    x, mask = _stack_nullable(vecs, dim)
+    x, null, length = _pad_rows(vecs, dim)
     cells = pd.array(kernel(x, *args), dtype="Int32")
-    cells[mask] = pd.NA  # null embedding → null cell (no crash)
+    cells[null | (length != dim)] = pd.NA
     return pd.Series(cells)
 
 
@@ -1208,8 +1245,9 @@ def ivf_assign(
     """Attach each vector's IVF cell id — the persistable narrow column a
     100 TB embedding store would ``partitionBy`` (or bucket by), so a
     probe becomes partition PRUNING instead of a scan. ``metric`` must
-    match the fit (`ivf_fit_centroids`). A small input runs its kernel
-    in one task (``_one_task``)."""
+    match the fit (`ivf_fit_centroids`). A NULL vector, or one of
+    another length than the centroids, gets a NULL cell. A small input
+    runs its kernel in one task (``_one_task``)."""
     return _one_task(df).withColumn(
         out,
         _cell_assigner(df.sparkSession, centroids, metric)(
@@ -1491,7 +1529,7 @@ def lsh_persist_signatures(
     if num_tables < 1:
         raise ValueError(f"num_tables must be >= 1, got {num_tables}")
     if dim is None:
-        row = (
+        row = (  # one row
             df.filter(F.col(vec_col).isNotNull())
             .select(F.size(F.col(vec_col)))
             .first()
@@ -1723,7 +1761,7 @@ def _kmeans(df: DataFrame, k: int, iters: int, id_col: str, vec_col: str,
             members = df.filter(vec.isNotNull()).select(
                 assign_col.alias("__c"), vec.alias("__v")
             )
-            if exact:
+            if exact:  # k rows of dim means
                 means = members.groupBy("__c").agg(
                     *[
                         F.round(F.avg(F.col("__v")[i]), round_dp).alias(f"c{i}")
@@ -1788,7 +1826,8 @@ def _mean_update_arrow(members: DataFrame, dim: int) -> dict:
     (the agg form's per-dimension null-skip is the oracle behavior).
 
     ``members`` must be (``__c`` int cell, ``__v`` array<double>) with
-    whole-NULL vectors already filtered (kmeans/IVF both do). Returns
+    whole-NULL vectors already filtered (kmeans/IVF both do); a vector
+    of another length than ``dim`` is skipped, as its NULL cell is. Returns
     {cell: (count, np.ndarray sums)} — empty cells simply absent.
     """
     import numpy as np  # noqa: PLC0415
@@ -1808,8 +1847,8 @@ def _mean_update_arrow(members: DataFrame, dim: int) -> dict:
             if not len(pdf):
                 continue
             cells = pdf["__c"].to_numpy()
-            m, mask = _stack_nullable(pdf["__v"], dim)
-            keep = ~mask
+            m, null, length = _pad_rows(pdf["__v"], dim)
+            keep = ~null & (length == dim)
             out_c, out_n, out_s = [], [], []
             for c in np.unique(cells[keep]):
                 sel = keep & (cells == c)
@@ -1856,7 +1895,7 @@ def _mean_update_arrow(members: DataFrame, dim: int) -> dict:
             .drop("__salt")
         )
     combined = partials.groupBy("__c").applyInPandas(_combine, schema=part_schema)
-    return {
+    return {  # k rows: one (count, dim sums) per cell
         r["__c"]: (r["__cnt"], np.asarray(r["__sums"], dtype=np.float64))
         for r in combined.collect()
     }
@@ -2303,7 +2342,7 @@ def pq_fit(
             rows = base.select(F.explode(F.array(*structs)).alias("e")).select(
                 "e.j", "e.c", "e.s"
             )
-            means = (
+            means = (  # m × k_sub rows of sub means
                 rows.groupBy("j", "c")
                 .agg(
                     *[
@@ -2341,8 +2380,9 @@ def pq_encode(
     One Arrow-batched kernel encodes all subspaces, picked by
     ``_exact_fit(k_sub, dim)`` (k_sub × dim ≤ 4096, dim ≤ 256) read
     from the codebooks, so a fit and its encode take the same side.
-    NULL vectors get NULL codes. A small input runs its kernel in one
-    task (``_one_task``).
+    NULL vectors, and vectors of another length than the codebooks',
+    get NULL codes. A small input runs its kernel in one task
+    (``_one_task``).
     """
     vec = F.col(vec_col).cast("array<double>")
     return _one_task(df).withColumn(out, _pq_codes_udf(codebooks)(vec))
@@ -2351,7 +2391,7 @@ def pq_encode(
 def _pq_codes_udf(codebooks: list[list[list[float]]]):
     """``pq_fit``'s and ``pq_encode``'s Arrow-batched kernel for m ×
     k_sub × sub ``codebooks``: ``_pq_codes`` per batch → array<int>,
-    NULL for a NULL vector. Its side follows ``_exact_fit(k_sub,
+    NULL for a NULL vector or one of another length. Its side follows ``_exact_fit(k_sub,
     dim)``: the bit-exact sequential sums (the oracle path) or the
     BLAS expansion (the kernel for large k_sub, where the sequential
     sums cost k_sub × sub elementwise passes per batch).
@@ -2368,7 +2408,8 @@ def _pq_codes_udf(codebooks: list[list[list[float]]]):
     dim = len(mats) * mats[0].shape[1]
 
     def _encode(vecs):
-        x, mask = _stack_nullable(vecs, dim)
+        x, null, length = _pad_rows(vecs, dim)
+        mask = null | (length != dim)
         codes = _pq_codes(x, mats, norms)
         return pd.Series(
             [None if mask[i] else codes[i].tolist() for i in range(len(x))]
@@ -2705,20 +2746,42 @@ def pq_adc_topk_multi(
 def _adc_scores(luts, codes_col: str):
     """The PQ score block: ``luts`` is the Q × m × k_sub tensor of the
     batch's lookup tables; adc[n, Q] is the j-ordered sequential sum
-    0 + t_0 + t_1 + … the single-query fold adds, term for term. Rows
-    with a NULL code are not scored."""
+    0 + t_0 + t_1 + … the single-query fold adds, term for term, each
+    term the flat table's entry j·k_sub + code[j] (``_adc_scored``'s
+    ``get``). Rows with a NULL code are not scored. A code with a NULL
+    element, fewer than m elements or an index outside the flat table
+    scores NaN — the single-query fold's NULL, which the batched pass
+    ranks last (module docstring)."""
     import numpy as np  # noqa: PLC0415
 
+    flat = luts.reshape(luts.shape[0], -1)  # Q × (m·k_sub)
+    m, k_sub = luts.shape[1], luts.shape[2]
+
     def score(pdf):
-        codes, null_mask = _stack_nullable(pdf[codes_col].to_numpy(), luts.shape[1])
-        rows = np.flatnonzero(~null_mask)
-        codes = codes[rows].astype(np.int64)  # n × m
-        adc = np.zeros((len(rows), luts.shape[0]), dtype=np.float64)
-        for j in range(luts.shape[1]):
-            adc += luts[:, j, :][:, codes[:, j]].T
+        rows, idx, whole = _code_index(pdf[codes_col].to_numpy(), m, k_sub)
+        adc = np.zeros((len(rows), flat.shape[0]), dtype=np.float64)
+        for j in range(m):
+            adc += flat[:, idx[:, j]].T
+        adc[~whole] = np.nan
         return rows, adc, None
 
     return score
+
+
+def _code_index(codes, m: int, k_sub: int):
+    """An Arrow batch of PQ codes as (rows, idx, whole): the rows whose
+    code is not NULL, each of their m elements' index j·k_sub + code[j]
+    into the flat m × k_sub table (``_adc_scored``'s ``get``; 0 where
+    unusable), and whether all m are usable — not NULL, present and
+    inside the table."""
+    import numpy as np  # noqa: PLC0415
+
+    c, null, _ = _pad_rows(codes, m)
+    rows = np.flatnonzero(~null)
+    c = c[rows]
+    idx = np.nan_to_num(c, nan=-1.0).astype(np.int64) + k_sub * np.arange(m)
+    ok = ~np.isnan(c) & (idx >= 0) & (idx < m * k_sub)
+    return rows, np.where(ok, idx, 0), ok.all(axis=1)
 
 
 def _ivfpq_store(
@@ -3084,7 +3147,8 @@ def ivfpq_residual_topk_multi(
         df, centroids, codebooks, vec_col, cell_col, codes_col, coarse_metric,
         residual=True,
     )
-    # per query: its probed cells' residual LUTs (nprobe × m × k_sub
+    m, k_sub = len(codebooks), len(codebooks[0])
+    # per query: its probed cells' flat residual LUTs (nprobe × m·k_sub
     # driver floats) and a cell → LUT slot map, −1 for unprobed cells
     res_luts, slots = [], []
     for qid in qids:
@@ -3092,16 +3156,13 @@ def ivfpq_residual_topk_multi(
         res_luts.append(np.asarray(
             [_pq_lut([float(x) for x in (qv - c[cell])], codebooks) for cell in probes[qid]],
             dtype=np.float64,
-        ))
+        ).reshape(len(probes[qid]), m * k_sub))
         slot = np.full(len(centroids), -1, dtype=np.int64)
         slot[probes[qid]] = np.arange(len(probes[qid]))
         slots.append(slot)
-    m = len(codebooks)
 
     def score(pdf):
-        codes, null_mask = _stack_nullable(pdf[codes_col].to_numpy(), m)
-        rows = np.flatnonzero(~null_mask)
-        codes = codes[rows].astype(np.int64)
+        rows, idx, whole = _code_index(pdf[codes_col].to_numpy(), m, k_sub)
         cells = pdf[cell_col].to_numpy()[rows].astype(np.int64)
         adc = np.zeros((len(rows), len(qids)), dtype=np.float64)
         ok = np.zeros(adc.shape, dtype=bool)
@@ -3111,8 +3172,9 @@ def ivfpq_residual_topk_multi(
             sel = np.flatnonzero(ok[:, qi])
             s = np.zeros(len(sel), dtype=np.float64)
             for j in range(m):
-                s += res_luts[qi][slot[sel], j, codes[sel, j]]
+                s += res_luts[qi][slot[sel], idx[sel, j]]
             adc[sel, qi] = s
+        adc[~whole] = np.nan
         return rows, adc, ok
 
     scoped = work.filter(F.col(cell_col).isin(sorted(set().union(*probes.values()))))
@@ -3240,14 +3302,12 @@ class _DriverCopy:
         wide = " OR ".join(
             f"coalesce(size({_sql_col(c)}) > {_EXACT_FIT_DIM}, false)" for c in arrays
         )
-        t = (
+        t = _arrow_rows(
             df.select(*[c.alias(f"c{i}") for i, c in enumerate(cols)],
-                      F.expr(wide or "false").alias("wide"))
-            .limit(_DRIVER_TOPK_ROWS + 1)
-            .toArrow()
+                      F.expr(wide or "false").alias("wide")),
+            _DRIVER_TOPK_ROWS,
         )
-        if (t.num_rows > _DRIVER_TOPK_ROWS or t.nbytes > _DRIVER_TOPK_BYTES
-                or pc.any(t.column("wide")).as_py()):
+        if t is None or t.nbytes > _DRIVER_TOPK_BYTES or pc.any(t.column("wide")).as_py():
             return None
         return _DriverCopy(t, df.schema[id_col], vec_col, codes_col, ints)
 

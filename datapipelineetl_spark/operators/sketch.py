@@ -342,7 +342,7 @@ def build_bloom_bitset(
     grams = benchmark.select(
         F.explode_outer(_distinct_grams(benchmark, text_col, n)).alias("__g")
     ).filter(F.col("__g").isNotNull())
-    pos_rows = (
+    pos_rows = (  # distinct bit positions: at most the bitset's 16**hex_width
         grams.select(
             # explode_outer per the computed-array rule (NOTES.md
             # InferFiltersFromGenerate trap: a non-outer explode over a

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datapipelineetl_spark.operators import _arrow_rows
+
 TOKEN_SPLIT_RE = r"\s+"
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic.
@@ -653,6 +655,12 @@ def build_vocab(
     return spec.unionByName(ranked.select("token", "token_id", "count"))
 
 
+# encode_tokens' budget: a vocabulary of at most this many rows is
+# fetched to the driver and joined as a broadcast local table (~84 MB
+# at ~40 B a row; a max_size-capped production vocab is 10^5-10^6 rows)
+_VOCAB_ROWS = 1 << 21
+
+
 def encode_tokens(
     df: DataFrame,
     vocab: DataFrame,
@@ -660,41 +668,40 @@ def encode_tokens(
     text_col: str = "text",
     unk: str = "<unk>",
     out: str = "input_ids",
-    impl: str = "local",
 ) -> DataFrame:
     """Encode each document's token stream to vocabulary ids
     (``array<long>``, original order, out-of-vocabulary tokens → the
     ``unk`` id) — the text→tensor boundary of a training pipeline.
 
     Scale: explode to (doc, pos, token) — O(corpus tokens), narrow —
-    then ONE equi-join against the vocabulary (vocab is dimension-sized:
-    AQE broadcasts it) and one groupBy(doc) with an in-aggregate sorted
-    rebuild (array_sort over (pos, id) structs — the same
-    no-second-shuffle reassembly as ``remove_boilerplate_lines``).
-    Documents with no tokens yield an empty array, never a dropped row.
+    then ONE equi-join against the vocabulary and one groupBy(doc) with
+    an in-aggregate sorted rebuild (array_sort over (pos, id) structs —
+    the same no-second-shuffle reassembly as
+    ``remove_boilerplate_lines``).
 
-    ``impl`` (round 17, guide §1.2/§5-driver): ``"local"`` (default)
-    runs the vocab plan ONCE as a metadata-sized collect (the
-    BPE-kernel pattern) — the unk id comes from the collected rows (no
-    second driver job) and the join side is rebuilt as an in-memory
-    local table the planner broadcasts, skipping the localCheckpoint's
-    block-manager round-trip (the r16 REST profile's largest
-    q_pack_sequences stage was tasks blocking on those writes). The
-    vocabulary is dimension-sized by construction (``build_vocab``'s
-    ``max_size`` caps it in production — SCALING.md row), so the
-    collect is bounded. ``"checkpoint"`` keeps the distributed vocab
-    (localCheckpoint + driver unk lookup) for vocabularies too large to
-    collect. Same rows either way (parity:
-    test_encode_tokens_local_matches_checkpoint).
+    Which path joins the vocabulary. ONE ``limit(_VOCAB_ROWS + 1)``
+    Arrow fetch (``_arrow_rows``) runs the vocab plan once and probes
+    its size. At most ``_VOCAB_ROWS`` (2,097,152) rows: the unk id comes
+    from the fetched rows and the join side is an in-memory local table
+    the planner broadcasts. Over budget: the vocab is materialized once
+    with ``localCheckpoint`` (the unk lookup is an action, which would
+    otherwise run the vocab plan a second time at the join) and joined
+    distributed. Plan statistics cannot make this choice:
+    ``build_vocab``'s estimate overflows to ~9.2×10¹⁸ B for
+    q_encode_tokens' 33-row vocab. Both paths give the same rows
+    (``test_encode_tokens_local_matches_checkpoint``).
+
+    Edge values, on either path: a NULL or empty text encodes to an
+    empty array (never a dropped row); documents with a NULL id share
+    one output row; a vocab token listed twice fans that token out to
+    both ids; a vocab without an ``unk`` row raises ``ValueError``.
     """
-    if impl not in ("local", "checkpoint"):
-        raise ValueError(f"impl must be 'local' or 'checkpoint', got {impl!r}")
-    if impl == "local":
-        import pandas as pd  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
 
-        spark = df.sparkSession
-        rows = vocab.select("token", "token_id").collect()
-        unk_ids = [r.token_id for r in rows if r.token == unk]
+    t = _arrow_rows(vocab.select("token", "token_id"), _VOCAB_ROWS)
+    if t is not None:
+        tok, tid = t.column("token").to_pylist(), t.column("token_id").to_pylist()
+        unk_ids = [i for w, i in zip(tok, tid) if w == unk]
         if not unk_ids:
             raise ValueError(f"vocab has no {unk!r} entry")
         unk_id = unk_ids[0]
@@ -704,25 +711,15 @@ def encode_tokens(
         # deserialize it (measured ~0.3 s per action, which ate the
         # win of skipping the checkpoint)
         vocab = F.broadcast(
-            spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "token": pd.Series([r.token for r in rows], dtype=object),
-                        "token_id": pd.Series(
-                            [r.token_id for r in rows], dtype=object
-                        ),
-                    }
-                ),
+            df.sparkSession.createDataFrame(
+                pd.DataFrame({"token": pd.Series(tok, dtype=object),
+                              "token_id": pd.Series(tid, dtype=object)}),
                 schema="token string, token_id long",
             )
         )
     else:
-        # the unk lookup is an ACTION: with an unmaterialized vocab plan
-        # it would execute the whole corpus-wide count + rank window once
-        # here and AGAIN at the join below — materialize the
-        # (dimension-sized) vocab once so both consumers read the same
-        # computed table
         vocab = vocab.localCheckpoint(eager=True)
+        # one row
         unk_row = vocab.filter(F.col("token") == unk).select("token_id").first()
         if unk_row is None:
             raise ValueError(f"vocab has no {unk!r} entry")
@@ -1230,7 +1227,13 @@ def _bpe_merge_fold(syms: Column, a: str, b: str) -> Column:
     return F.aggregate(syms, init, step, fin)
 
 
-def _bpe_train_kernel(n_merges: int, min_pair_count: int):
+# train_bpe's budget: the one-task kernel keeps at most this many
+# distinct words (~0.85 GB at ~50 B a word; a full crawl's table is
+# ~10^7 words); a larger word table trains in the per-merge job loop
+_BPE_WORDS = 1 << 24
+
+
+def _bpe_train_kernel(n_merges: int, min_pair_count: int, budget: int):
     """mapInPandas generator: the full Sennrich merge recursion over one
     partition holding the whole (word, count) vocabulary. Emits
     kind='w' rows (word, count, syms — the final segmented state) and
@@ -1238,16 +1241,26 @@ def _bpe_train_kernel(n_merges: int, min_pair_count: int):
     semantics of the iterative form: per-occurrence weighted pair
     counts, argmax by (count desc, pair lexicographic — Python tuple
     compare on str == Spark's code-point orderBy), left-to-right
-    no-overlap merge application, stop below ``min_pair_count``."""
+    no-overlap merge application, stop below ``min_pair_count``.
+
+    The kernel is its own size probe: once the table passes ``budget``
+    words it keeps no more of them, drains its input and emits the one
+    row kind='x' (over budget) instead."""
     import pandas as pd  # noqa: PLC0415
 
     nm, mpc = int(n_merges), int(min_pair_count)
+    cols = ("kind", "word", "count", "syms", "a", "b", "cnt", "ord")
 
     def gen(batches):
         words: dict[str, int] = {}
         for pdf in batches:
+            if len(words) > budget:
+                continue
             for w, c in zip(pdf["word"].tolist(), pdf["count"].tolist()):
                 words[w] = int(c)
+        if len(words) > budget:
+            yield pd.DataFrame({c: ["x"] if c == "kind" else [None] for c in cols})
+            return
         syms = {w: list(w) + [_BPE_EOW] for w in words}
         merges: list[tuple[str, str, int]] = []
         for _ in range(nm):
@@ -1296,19 +1309,17 @@ def train_bpe(
     n_merges: int,
     text_col: str = "text",
     min_pair_count: int = 1,
-    impl: str = "kernel",
 ) -> tuple[list[tuple[str, str, int]], DataFrame]:
     """Distributed byte-pair-encoding merge training (Sennrich et al.
     2016 — the real tokenizer-training step behind ``build_vocab``'s
     word-level artifact): ONE corpus-sized shuffle builds the
-    (word, count) table; every Lloyd-style iteration after that runs on
-    the VOCABULARY-sized table only — weighted adjacent-symbol-pair
-    counts (explode pairs × word count, one partial-agg groupBy), the
-    argmax pair collected to the driver (count desc, then (left, right)
-    lexicographic — fully deterministic), and the merge applied to every
-    word's symbol array by a single codegen fold. Words start as
-    characters + a ``</w>`` end-of-word marker. Training stops early
-    when no pair reaches ``min_pair_count``.
+    (word, count) table, and the merge loop runs on that
+    VOCABULARY-sized table only: each merge takes the adjacent symbol
+    pair of the highest count weighted by word count (ties to (left,
+    right) lexicographic — fully deterministic) and merges it in every
+    word, left to right. Words start as characters + a ``</w>``
+    end-of-word marker. Training stops early when no pair reaches
+    ``min_pair_count``.
 
     Returns ``(merges, words)``: the ordered merge table
     [(left, right, weighted_count)] — THE BPE artifact a tokenizer
@@ -1318,60 +1329,56 @@ def train_bpe(
     Scale: the corpus is touched once (word counts); per merge the work
     is O(vocabulary × word length) — independent of corpus size, the
     property that makes BPE trainable on a 100 TB crawl (the word table
-    of even a huge crawl is ~10⁷ rows). Each iteration's word table is
-    eagerly checkpointed: the merge fold would otherwise stack
-    ``n_merges`` deep in lineage and analysis time, not execution,
-    becomes the bottleneck. Only the 1-row argmax and the final merge
-    list touch the driver.
+    of even a huge crawl is ~10⁷ rows). Only the merge list touches the
+    driver.
 
-    ``impl`` picks the physical form of the iteration tier (round 16;
-    the corpus-sized word-count shuffle is identical in both):
+    Which path trains. The ENTIRE merge loop runs in one
+    single-partition Arrow ``mapInPandas`` pass over the word table
+    (``_bpe_train_kernel``) — one job, where the per-merge loop pays 2
+    driver round-trip jobs per merge (q_token_fertility's plan was 44
+    stages of almost pure per-job fixed cost at n_merges=12). BPE is
+    integer counts + code-point string comparison only — no floats — so
+    the kernel is bit-identical by construction. The kernel is also the
+    size probe: past ``_BPE_WORDS`` (16,777,216) distinct words it emits
+    an over-budget marker, read in the same collect as the merges, and
+    the driver then runs the per-merge loop, which never holds the word
+    table in one task: per merge, weighted adjacent-pair counts
+    (explode pairs × word count, one partial-agg groupBy), the argmax
+    pair collected (count desc, then (left, right) lexicographic) and
+    the merge applied to every word's symbol array by one codegen fold,
+    each iteration's word table eagerly checkpointed so the fold does
+    not stack ``n_merges`` deep in lineage. That fallback recomputes the
+    corpus word counts once. Both paths give the same rows
+    (``test_train_bpe_kernel_matches_iterate``).
 
-    - ``"kernel"`` (default): the ENTIRE merge loop runs in one
-      single-partition Arrow ``mapInPandas`` pass over the vocabulary
-      table — one job total, where the iterative form pays 2 driver
-      round-trip jobs per merge (argmax collect + eager checkpoint;
-      q_token_fertility's plan was 44 stages of almost pure per-job
-      fixed cost at n_merges=12). BPE is integer counts + code-point
-      string comparison only — no floats — so the kernel is
-      bit-identical by construction (pinned by the existing
-      random-corpus property test run against BOTH impls and
-      ``test_train_bpe_kernel_matches_iterate``). Memory bound, stated
-      honestly: one task holds the (word, count) vocabulary — ~10⁷
-      rows for a huge crawl, executor-sized, the same in-memory shape
-      every production BPE trainer uses.
-    - ``"iterate"``: the original per-merge job loop — vocabulary
-      never held in one task; the right form if the word table
-      outgrows an executor.
+    Edge values, on either path: NULL and empty texts contribute no
+    words; a repeated word is one table row with its summed count;
+    ``n_merges=0`` returns no merges and the character split.
     """
     if n_merges < 0:
         raise ValueError(f"n_merges must be >= 0, got {n_merges}")
     if min_pair_count < 1:
         raise ValueError(f"min_pair_count must be >= 1, got {min_pair_count}")
-    if impl not in ("kernel", "iterate"):
-        raise ValueError(f"impl must be 'kernel' or 'iterate', got {impl!r}")
     counts = (
         df.select(F.explode(tokens(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("count"))
     )
-    if impl == "kernel":
-        rows = (
-            counts.repartition(1)
-            .mapInPandas(
-                _bpe_train_kernel(n_merges, min_pair_count),
-                "kind string, word string, count long, syms array<string>, "
-                "a string, b string, cnt long, ord int",
-            )
-            .localCheckpoint(eager=True)
+    rows = (
+        counts.repartition(1)
+        .mapInPandas(
+            _bpe_train_kernel(n_merges, min_pair_count, _BPE_WORDS),
+            "kind string, word string, count long, syms array<string>, "
+            "a string, b string, cnt long, ord int",
         )
-        merges = [
-            (r.a, r.b, int(r.cnt))
-            for r in rows.filter(F.col("kind") == "m").orderBy("ord").collect()
-        ]
-        return merges, rows.filter(F.col("kind") == "w").select(
-            "word", "count", "syms"
-        )
+        .localCheckpoint(eager=True)
+    )
+    # n_merges rows, or the over-budget marker (ord NULL), which sorts first
+    table = rows.filter(F.col("kind") != "w").orderBy("ord").collect()
+    if not table or table[0].kind != "x":
+        return [(r.a, r.b, int(r.cnt)) for r in table], rows.filter(
+            F.col("kind") == "w"
+        ).select("word", "count", "syms")
     words = counts.withColumn(
         "syms",
         F.concat(
@@ -1397,7 +1404,7 @@ def train_bpe(
             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
             .agg(F.sum("count").cast("long").alias("cnt"))
         )
-        top = pairs.orderBy(F.desc("cnt"), "a", "b").limit(1).collect()
+        top = pairs.orderBy(F.desc("cnt"), "a", "b").limit(1).collect()  # one row
         if not top or top[0].cnt < min_pair_count:
             break
         a, b, cnt = top[0].a, top[0].b, int(top[0].cnt)
@@ -1420,67 +1427,35 @@ def bpe_segment(
     the subword piece sequence per document. The real-piece-count
     successor to ``with_token_stats``'s ``n_subwords`` proxy.
 
-    Scale: pure codegen — one fold per merge chained over a narrow
-    column; no shuffle, no Python. For merge tables in the tens of
-    thousands, chain in groups of a few hundred with intermediate
-    checkpoints (same lineage-depth caveat as training), or move to an
-    Arrow kernel with a trie — the semantics stay identical.
-    """
-    toks = tokens(text_col)
-    word_syms = F.transform(
-        toks,
-        lambda w: F.concat(F.split(w, ""), F.array(F.lit(_BPE_EOW))),
-    )
-    # a closure factory, NOT default-arg lambdas: PySpark infers the
-    # higher-order function's arity from the Python signature, and
-    # `lambda s, _a=a: ...` reads as a 2/3-arg (element, index) lambda
-    def _apply(a: str, b: str):
-        return lambda s: _bpe_merge_fold(s, a, b)
+    Semantics: one left-to-right single-pass merge per table entry,
+    applied in training order, each entry visited exactly once. That is
+    NOT the heap-style "lowest-rank pair anywhere, repeat" inference —
+    if a later merge re-creates an earlier merge's pair string (possible
+    when two different merges build the same symbol string), the pass
+    does not go back.
 
-    df = df.withColumn("__wsyms", word_syms)
-    for m in merges:
-        df = df.withColumn(
-            "__wsyms", F.transform(F.col("__wsyms"), _apply(m[0], m[1]))
-        )
-    return df.withColumn(out, F.flatten(F.col("__wsyms"))).drop("__wsyms")
-
-
-def bpe_segment_kernel(
-    df: DataFrame,
-    merges: list[tuple[str, str, int]] | list[tuple[str, str]],
-    text_col: str = "text",
-    out: str = "pieces",
-) -> DataFrame:
-    """``bpe_segment`` for LARGE merge tables — identical output
-    contract and semantics, Arrow-batched kernel instead of one chained
-    codegen fold per merge (VERDICT r8 item 7: the fold form's plan
-    grows linearly with table size; past a few thousand merges analysis
-    time dominates).
-
-    Semantics are pinned BY the fold form: one left-to-right
-    single-pass merge per table entry, applied in training order, each
-    merge visited exactly once. That is NOT the heap-style
-    "lowest-rank pair anywhere, repeat" inference — if a later merge
-    re-creates an earlier merge's pair string (possible when two
-    different merges build the same symbol string), the fold does NOT
-    go back, so neither does this kernel. The rank-dict loop below is
-    exactly the fold with its no-op passes skipped: a cursor walks the
-    table; each step jumps to the smallest rank >= cursor whose pair is
-    currently adjacent somewhere in the word (every skipped rank's pass
-    would have emitted the word unchanged) and runs that one
-    left-to-right pass. Per word the cost is O(applied merges x word
-    length) — independent of table size; the table itself is one
+    One Arrow ``mapInPandas`` pass for any table. The rank-dict loop is
+    exactly the per-merge pass with its no-op passes skipped: a cursor
+    walks the table; each step jumps to the smallest rank >= cursor
+    whose pair is currently adjacent somewhere in the word (every
+    skipped rank's pass would have emitted the word unchanged) and runs
+    that one left-to-right pass. Per word the cost is O(applied merges x
+    word length) — independent of table size; the table itself is one
     pair->ranks hash (the depth-2 trie BPE actually needs: merges match
     adjacent PAIRS, never longer prefixes). Distinct words memoize
     within each task, so the Zipf head of any real corpus segments
-    once per task, not once per occurrence.
+    once per task, not once per occurrence. The merge table ships once
+    per task in the closure (tens of thousands of entries = a few MB).
+    The Spark-expression spelling (one ``aggregate`` fold per merge)
+    runs interpreted and grows its plan with the table, so it is slower
+    from the first merge on (SCALING.md "BPE segment crossover"); it is
+    the parity reference ``tests/jvm_reference.bpe_segment``.
 
-    Scale: one ``mapInPandas`` pass, no shuffle; the merge table ships
-    once per task in the closure (tens of thousands of entries = a few
-    MB — broadcast territory only far beyond any real BPE vocabulary).
-    Parity with the fold form is pinned by
-    ``test_bpe_segment_kernel_parity`` including the
-    re-created-pair case where heap-style inference would diverge.
+    Edge values: a NULL text gives NULL pieces; an empty or
+    all-whitespace text gives an empty array; tokens split on Java's
+    ASCII ``\\s`` (an NBSP stays inside its token); repeated merge
+    entries each run their own pass; an existing ``out`` column is
+    replaced in place.
     """
     import bisect  # noqa: PLC0415
     import re as _re  # noqa: PLC0415
@@ -1490,16 +1465,14 @@ def bpe_segment_kernel(
         pair_ranks.setdefault((m[0], m[1]), []).append(rank)
     merge_pairs = [(m[0], m[1]) for m in merges]
     # re.ASCII pins Python's \s to [ \t\n\r\f\v] — exactly Java's
-    # default \s, which is what the fold form's Spark-side split uses.
+    # default \s, which is what ``tokens``' Spark-side split uses.
     # Without it Python \s also splits Unicode whitespace (NBSP, thin
-    # space, ideographic space) and the two forms tokenize real web
-    # text differently (parity test covers NBSP).
+    # space, ideographic space) and tokenizes real web text differently
+    # from the rest of the package (parity test covers NBSP).
     split_re = _re.compile(TOKEN_SPLIT_RE, _re.ASCII)
     eow = _BPE_EOW
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"`{out}` array<string>"]
-    )
+    # withColumn's schema: an existing ``out`` column is replaced in place
+    out_schema = df.withColumn(out, F.lit(None).cast("array<string>")).schema
     text_name = text_col
 
     def seg_word(word: str) -> list[str]:
@@ -1534,7 +1507,7 @@ def bpe_segment_kernel(
 
         def seg_text(t):
             if t is None:
-                return None  # tokens(NULL) -> NULL pieces, fold parity
+                return None  # tokens(NULL) -> NULL pieces
             pieces: list[str] = []
             for w in split_re.split(t.lower()):
                 if not w:

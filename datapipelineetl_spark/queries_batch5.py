@@ -66,12 +66,12 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: connected components over the n-gram-Jaccard
-    pair graph (min-label propagation, dedup.cluster_pairs) — the
+    pair graph (union-find contraction, dedup.cluster_pairs) — the
     union-find step that turns pairwise matches into keep-one groups.
 
     An ITERATIVE algorithm, still hash-checked: the oracle computes the
     same components with a recursive CTE. Scale analysis in the operator
-    docstring (O(|E|) per round, diameter-bounded rounds)."""
+    docstring (one lazy union-find contraction plan)."""
     from datapipelineetl_spark.queries_batch3 import q_ngram_jaccard_pairs
 
     pairs = q_ngram_jaccard_pairs(spark, sf_dir)

@@ -388,8 +388,8 @@ def q_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     union-find over the exact O(n²) ngram-Jaccard baseline graph.
 
     Scale: every stage is bucketed/capped (see q_minhash_capped_near_dups)
-    and the min-label propagation is O(|E|) per round for O(diameter)
-    rounds (dedup.cluster_pairs)."""
+    and the union-find contraction is one lazy plan of
+    ⌈log_64(partitions)⌉ small shuffles (dedup.cluster_pairs)."""
     pairs = q_minhash_capped_near_dups(spark, sf_dir).select("id_a", "id_b")
     return dedup.cluster_pairs(pairs)
 

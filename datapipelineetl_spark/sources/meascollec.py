@@ -32,8 +32,6 @@ from pyspark.sql import types as T
 
 from datapipelineetl_spark.operators.cleaning import extract_between, nil_null_nan_to_zero
 
-MEASCOLLEC_NS = "http://www.3gpp.org/ftp/specs/archive/32_series/32.435#measCollec"
-
 # Explicit nested schema (all leaves string — the reference treats every
 # field as string until the per-feed cast, SURVEY.md §1.1b). Declared, not
 # inferred: inference would scan twice and can drift per-file.
@@ -112,86 +110,15 @@ def read_meascollec(
     """Scan measCollec XML documents (plain or .gz) into nested rows.
 
     One row per document (rowTag = root). Document-level parallelism: at
-    scale each executor parses its own slice of the file listing.
+    scale each executor parses its own slice of the file listing. The
+    XML source is built into Spark ≥ 4.0, which the package needs
+    anyway (``toArrow`` runs on its default fit and serving paths), so
+    there is no second parser. A malformed document yields no rows
+    (PERMISSIVE).
     """
     reader = spark.readStream if streaming else spark.read
     reader = reader.format("xml").option("rowTag", "measCollecFile").schema(MEASCOLLEC_SCHEMA)
     return reader.load(path)
-
-
-def read_meascollec_portable(spark: SparkSession, path: str) -> DataFrame:
-    """Portable fallback for :func:`read_meascollec`: whole-file text read
-    + ElementTree inside Arrow-batched ``mapInPandas``, emitting the SAME
-    nested schema — so :func:`flatten_meascollec` (and everything after
-    it) is shared verbatim between the native and portable paths.
-
-    Use when the deployment's Spark lacks the XML data source (< 4.0
-    without the spark-xml package). This is the reference's parser
-    (dags/Dag2.py:70-155) relocated from the Airflow worker to executors:
-    document-level parallelism, no driver bottleneck. ``*.gz`` still
-    decompresses transparently (text source).
-
-    Scale note: ``wholetext`` materializes each document as one row —
-    fine for measurement files (KB–MB); for multi-GB documents use the
-    native source, which streams.
-    """
-
-    def parse(batches):
-        import xml.etree.ElementTree as ET  # noqa: PLC0415
-
-        import pandas as pd  # noqa: PLC0415
-
-        ns = {"ns": MEASCOLLEC_NS}
-
-        def pv(el):
-            return {"_VALUE": el.text, "_p": el.get("p")}
-
-        for pdf in batches:
-            headers, datas = [], []
-            for doc in pdf["value"]:
-                try:
-                    root = ET.fromstring(doc)
-                except ET.ParseError:
-                    continue  # PERMISSIVE parity: corrupt doc → no rows
-                mc = root.find("ns:fileHeader/ns:measCollec", ns)
-                headers.append(
-                    {"measCollec": {"_beginTime": mc.get("beginTime") if mc is not None else None}}
-                )
-                me = root.find("ns:measData/ns:managedElement", ns)
-                infos = []
-                for mi in root.findall("ns:measData/ns:measInfo", ns):
-                    job = mi.find("ns:job", ns)
-                    gran = mi.find("ns:granPeriod", ns)
-                    infos.append(
-                        {
-                            "_measInfoId": mi.get("measInfoId"),
-                            "job": {"_jobId": job.get("jobId") if job is not None else None},
-                            "granPeriod": {
-                                "_duration": gran.get("duration") if gran is not None else None,
-                                "_endTime": gran.get("endTime") if gran is not None else None,
-                            },
-                            "measType": [pv(t) for t in mi.findall("ns:measType", ns)],
-                            "measValue": [
-                                {
-                                    "_measObjLdn": v.get("measObjLdn"),
-                                    "r": [pv(r) for r in v.findall("ns:r", ns)],
-                                }
-                                for v in mi.findall("ns:measValue", ns)
-                            ],
-                        }
-                    )
-                datas.append(
-                    {
-                        "managedElement": {"_localDn": me.get("localDn") if me is not None else None},
-                        "measInfo": infos,
-                    }
-                )
-            if headers:  # an all-corrupt batch yields nothing (empty
-                # object columns degrade to float64, which Arrow rejects)
-                yield pd.DataFrame({"fileHeader": headers, "measData": datas})
-
-    txt = spark.read.text(path, wholetext=True)
-    return txt.mapInPandas(parse, MEASCOLLEC_SCHEMA)
 
 
 def flatten_meascollec(

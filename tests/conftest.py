@@ -18,6 +18,8 @@ _SIMPLE = (bool, int, float, str)
 def _simple_cell(v, depth: int = 0) -> bool:
     import datetime as _dt  # noqa: PLC0415
 
+    if isinstance(v, float) and v != v:
+        return False  # pandas + Arrow read a NaN as NULL
     if v is None or isinstance(v, _SIMPLE):
         return True
     # naive datetimes/dates convert identically through pandas+Arrow
@@ -44,16 +46,15 @@ def _fast_createDataFrame(spark, orig):
     tiny DataFrames, so this one seam is most of its wall time.
 
     Semantics guard: only flat tuples/lists of None/bool/int/float/str
-    (plus ≤2-deep lists of those) convert — Rows, dicts, datetimes,
-    Decimals, bytes, NumPy scalars, RDDs and pandas inputs fall back
-    to the original path, as does ANY conversion error. Cells are kept
+    (plus ≤2-deep lists of those) convert; a float NaN, scalar or array
+    element (pandas + Arrow would read it as NULL), Rows, dicts,
+    datetimes, Decimals, bytes, NumPy scalars, RDDs and pandas inputs
+    fall back to the original path, as does ANY conversion error. Cells are kept
     object-dtype so ints/None survive pandas exactly. One visible
     difference is intentional: LocalRelation carries real size stats
     (tiny test tables may auto-broadcast where an RDD side never did);
     tests that assert a specific non-broadcast join shape pin it with
-    hints/thresholds, not input opacity. A second one is a hazard:
-    pandas turns a NaN element of an array cell into NULL, so a test
-    that needs a NaN element makes it in Spark.
+    hints/thresholds, not input opacity.
 
     ``SPARK_GRAFT_TEST_PLAIN_CREATE=1`` turns the shortcut off, so the
     suite runs with PySpark's own list-backed createDataFrame.
@@ -122,7 +123,9 @@ def _unpatched_create_canary(spark) -> None:
     therefore runs the real list-backed createDataFrame once, end to
     end: the class method bypasses the instance patch, the plan must be
     the pickled-row RDD (not the LocalRelation the shortcut builds) and
-    the rows, NULL included, must come back as given."""
+    the rows, NULL included, must come back as given. A NaN, scalar or
+    array element, makes the patched path hand the rows to that same
+    list-backed createDataFrame, so the NaN comes back a NaN."""
     df = type(spark).createDataFrame(
         spark, [(1, "a"), (None, "b")], "x int, y string"
     )
@@ -130,6 +133,14 @@ def _unpatched_create_canary(spark) -> None:
     assert "LogicalRDD" in plan, f"canary took the patched path:\n{plan}"
     got = [tuple(r) for r in df.orderBy("y").collect()]
     assert got == [(1, "a"), (None, "b")], f"unpatched createDataFrame: {got}"
+    nan = float("nan")
+    for row in [(1, nan, [1.0]), (1, 1.0, [nan, 1.0])]:
+        df = spark.createDataFrame([row], "x int, d double, a array<double>")
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LogicalRDD" in plan, f"a NaN row took the pandas path:\n{plan}"
+        (r,) = df.collect()
+        got = [r.d, *r.a]
+        assert [v != v for v in got] == [v != v for v in [row[1], *row[2]]], got
 
 
 @pytest.fixture(scope="session")

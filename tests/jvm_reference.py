@@ -1,7 +1,11 @@
 """Expression-only (JVM) spellings of the Arrow text kernels, logic
 unchanged from the ``impl="jvm"`` paths the package no longer ships:
 the independent parity references every ``*_kernel_matches_jvm`` test
-compares the single shipped implementation against."""
+compares the single shipped implementation against. ``bpe_segment``
+is the chained-fold form of ``text.bpe_segment``'s Arrow kernel, and
+``cluster_pairs`` is the iterative min-label propagation that
+``dedup.cluster_pairs``' union-find contraction replaced, each kept as
+its parity reference."""
 
 from __future__ import annotations
 
@@ -247,3 +251,68 @@ def with_simhash(df, text_col="text", out="simhash", bits=32) -> DataFrame:
             F.col(tmp_c)[b] * 2 > F.col(tmp_t), F.lit(1 << b).cast("long")
         ).otherwise(F.lit(0).cast("long"))
     return df2.withColumn(out, sig).drop(tmp_c, tmp_t)
+
+
+def bpe_segment(df, merges, text_col="text", out="pieces") -> DataFrame:
+    """The character split, then one ``aggregate`` fold per merge
+    chained over a narrow column: no shuffle, no Python."""
+    word_syms = F.transform(
+        text.tokens(text_col),
+        lambda w: F.concat(F.split(w, ""), F.array(F.lit(text._BPE_EOW))),
+    )
+
+    # a closure factory, NOT default-arg lambdas: PySpark infers the
+    # higher-order function's arity from the Python signature, and
+    # `lambda s, _a=a: ...` reads as a 2/3-arg (element, index) lambda
+    def _apply(a: str, b: str):
+        return lambda s: text._bpe_merge_fold(s, a, b)
+
+    df = df.withColumn("__wsyms", word_syms)
+    for m in merges:
+        df = df.withColumn("__wsyms", F.transform(F.col("__wsyms"), _apply(m[0], m[1])))
+    return df.withColumn(out, F.flatten(F.col("__wsyms"))).drop("__wsyms")
+
+
+def cluster_pairs(pairs, id_a="id_a", id_b="id_b", max_iter=20,
+                  steps_per_round=4) -> DataFrame:
+    """Unrolled min-label propagation: each step every node adopts the
+    smallest label among itself and its neighbors, ``steps_per_round``
+    steps per checkpointed round, until a round changes no label."""
+    edges = (
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    labels = (
+        edges.select(F.col("src").alias("node"))
+        .distinct()
+        .withColumn("label", F.col("node"))
+    )
+
+    def step(lbl: DataFrame) -> DataFrame:
+        return (
+            edges.join(lbl, edges.dst == lbl.node)
+            .select(F.col("src").alias("node"), "label")
+            .unionByName(lbl.select("node", "label"))
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+        )
+
+    for _ in range(max_iter):
+        old = labels.select(F.col("node").alias("__on"), F.col("label").alias("__ol"))
+        new_labels = labels
+        for _ in range(steps_per_round):
+            new_labels = step(new_labels)
+        new_labels = (
+            new_labels.join(old, new_labels.node == F.col("__on"))
+            .select("node", "label", F.col("__ol").alias("__old"))
+            .localCheckpoint(eager=False)
+        )
+        changed = new_labels.agg(
+            F.count(F.when(F.col("label") != F.col("__old"), F.lit(1))).alias("n")
+        ).first()[0]
+        labels = new_labels.drop("__old")
+        if not changed:
+            break
+    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))

@@ -280,7 +280,7 @@ def test_clean_cell_metrics_matches_step_by_step_chain(spark):
     """The one-``selectExpr`` chain against the step-by-step chain on an
     edge table: NULL, NaN, ±inf, -0.0, int extremes, ``nil`` case and
     space variants, and unparseable or empty times."""
-    # the class method keeps NaN: the suite's Arrow shortcut reads it as NULL
+    # PySpark's own list-backed createDataFrame, which keeps NaN
     edge = type(spark).createDataFrame(spark, _EDGE_ROWS, CELL_METRICS_SCHEMA)
     _assert_same_frame(cleaning.clean_cell_metrics(edge), _reference_clean_cell_metrics(edge))
 

@@ -117,26 +117,6 @@ def test_lineage_column(spark, xml_dir):
     assert out.collect()[0].input_file.endswith("A20250704.xml")
 
 
-def test_portable_parser_matches_native(spark, xml_dir):
-    """The ElementTree mapInPandas fallback must produce byte-identical
-    flat records to the native XML source, for every variant."""
-    native = mc.read_meascollec(spark, xml_dir)
-    portable = mc.read_meascollec_portable(spark, xml_dir)
-    for variant in mc.VARIANTS:
-        a = sorted(map(tuple, mc.flatten_meascollec(native, variant).collect()))
-        b = sorted(map(tuple, mc.flatten_meascollec(portable, variant).collect()))
-        assert a == b, variant
-
-
-def test_portable_parser_skips_corrupt_docs(spark, tmp_path):
-    (tmp_path / "good.xml").write_text(XML_DOC)
-    (tmp_path / "bad.xml").write_text("definitely not xml <<<")
-    out = mc.flatten_meascollec(
-        mc.read_meascollec_portable(spark, str(tmp_path)), "xmlonly"
-    )
-    assert out.count() == 6
-
-
 def test_malformed_xml_is_tolerated(spark, tmp_path):
     """Robustness: a corrupt document must not fail the job (PERMISSIVE
     default) — it contributes zero flat records; well-formed siblings in

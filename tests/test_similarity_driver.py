@@ -315,6 +315,66 @@ def test_nan_query_element_survives_batched_refine(spark):
     assert all(v == _bits(NAN) for _, v in got[0])
 
 
+def test_batched_rows_match_single_on_edge_store(spark):
+    """The batched L2, ADC, IVF-PQ and residual IVF-PQ kernels score the edge store's
+    ragged rows (a vector of another length, a short code) and its other
+    code edges (a NULL element, indexes outside the table) as their
+    single-query twins do, with the one difference the module docstring
+    states: the batched pass carries no NULL score, so a single-query
+    NULL ADC, ranked first, comes back NaN, ranked last. Rows with a
+    NULL id are left out: the batched kernels read ids as int64."""
+    rows = [r for r in _edge_rows() if r[0] is not None]
+    store = _store(spark, rows)
+    books = _books()
+    queries = {0: [0.5, -0.25, 1.0, 0.75], 1: [0.25, 0.5, -0.5, 1.0]}
+    k = 50
+    ivf = dict(nprobe=2, cell_col="ivf_cell", codes_col="pq_code")
+    ops = {
+        "l2": (lambda: sim.l2_topk_multi(store, queries, k=k, exclude_query_ids=False),
+               lambda q: sim.l2_topk(store, q, k=k)),
+        "pq": (lambda: sim.pq_adc_topk_multi(store, queries, books, k=k,
+                                             exclude_query_ids=False),
+               lambda q: sim.pq_adc_topk(store, q, books, k=k)),
+        "ivfpq": (lambda: sim.ivfpq_topk_multi(store, queries, _CENTS, books, k=k,
+                                               exclude_query_ids=False, **ivf),
+                  lambda q: sim.ivfpq_topk(store, q, _CENTS, books, k=k, **ivf)),
+        "ivfpq-res": (lambda: sim.ivfpq_residual_topk_multi(
+                          store, queries, _CENTS, books, k=k, exclude_query_ids=False, **ivf),
+                      lambda q: sim.ivfpq_residual_topk(store, q, _CENTS, books, k=k, **ivf)),
+    }
+
+    def ranked(pairs):
+        return sorted(((i, NAN if v is None else v) for i, v in pairs),
+                      key=lambda p: (p[1] != p[1], 0.0 if p[1] != p[1] else p[1], p[0]))
+
+    edges = {"l2": {101, 102, 107}, "pq": {109, 110, 111, 112, 113},
+             "ivfpq": {109, 111, 113}, "ivfpq-res": {109, 111, 113}}
+    for name, (batched, single) in ops.items():
+        got: dict = {}
+        for r in batched().collect():
+            got.setdefault(r.query_id, []).append((r.vec_id, r[2]))
+        for qid, q in queries.items():
+            want = ranked((r[0], r[1]) for r in single(q).collect())
+            assert [(i, _bits(v)) for i, v in ranked(got[qid])] == [
+                (i, _bits(v)) for i, v in want], (name, qid)
+        assert edges[name] <= {i for i, _ in got[0]}, name
+
+
+def test_ragged_vectors_get_null_codes_and_cells(spark):
+    """pq_encode and ivf_assign (both metrics) give a vector of another
+    length a NULL code or cell, as they give a NULL vector, and encode
+    every other edge row."""
+    store = _store(spark, [r for r in _edge_rows() if r[0] is not None])
+    out = sim.pq_encode(store, _books(), out="c")
+    for metric in ("cosine", "l2"):
+        out = sim.ivf_assign(out, _CENTS, out=f"cell_{metric}", metric=metric)
+    for r in out.collect():
+        ragged = r.vec_id in (100, 107)
+        assert (r.c is None) == ragged, r.vec_id
+        assert (r.cell_cosine is None) == ragged, r.vec_id
+        assert (r.cell_l2 is None) == ragged, r.vec_id
+
+
 def test_small_input_runs_its_kernel_in_one_task(spark, monkeypatch):
     """pq_encode and ivf_assign (both metrics) coalesce an input whose
     plan statistics fit _ONE_TASK_BYTES to one partition; a larger one

@@ -320,17 +320,17 @@ def test_cluster_pairs_string_ids(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_cluster_pairs_contract_matches_iterate(spark):
-    """Round-16 optimization guard: the two-phase local-contraction CC
-    (``impl="contract"``) must emit row-identical (doc_id, cluster_id)
-    labelings to the original iterative min-label propagation
-    (``impl="iterate"``) — min-id labeling is a property of the graph,
-    not the algorithm. The graph mixes a long chain (diameter >> 1,
-    descending so the min id enters from one end), a star, a cycle,
-    self-loops, duplicate/reversed edges, and isolated-by-pairing
-    nodes; 16 input partitions + fan_in=2 force a multi-level ladder
-    so cross-partition components MUST merge through intermediate
-    contraction levels to come out right."""
+def test_cluster_pairs_contract_matches_iterate(spark, monkeypatch):
+    """The union-find contraction must emit row-identical (doc_id,
+    cluster_id) labelings to iterative min-label propagation (the
+    ``jvm_reference.cluster_pairs`` reference) — min-id labeling is a
+    property of the graph, not the algorithm. The graph mixes a long
+    chain (diameter >> 1, descending so the min id enters from one
+    end), a star, a cycle, self-loops, duplicate/reversed edges, and
+    isolated-by-pairing nodes; 16 input partitions + a fan-in of 2
+    force a multi-level ladder so cross-partition components MUST merge
+    through intermediate contraction levels to come out right. A NULL
+    endpoint is never a node here, while the reference labels it."""
     chain = [(i + 1, i) for i in range(40)]            # 40..0 one component
     star = [(100, k) for k in range(101, 109)]
     cycle = [(200, 201), (201, 202), (202, 203), (203, 200)]
@@ -339,25 +339,24 @@ def test_cluster_pairs_contract_matches_iterate(spark):
         chain + star + cycle + extras, ["id_a", "id_b"]
     ).repartition(16)
     want = {r.doc_id: r.cluster_id
-            for r in dedup.cluster_pairs(pairs, impl="iterate").collect()}
+            for r in jvm_reference.cluster_pairs(pairs).collect()}
     for fan in (2, 64):
-        got = {r.doc_id: r.cluster_id
-               for r in dedup.cluster_pairs(pairs, impl="contract", fan_in=fan).collect()}
+        monkeypatch.setattr(dedup, "_FAN_IN", fan)
+        got = {r.doc_id: r.cluster_id for r in dedup.cluster_pairs(pairs).collect()}
         assert got == want, fan
     assert want[40] == 0 and want[108] == 100 and want[203] == 200
-    # string ids through the contract path too (comparable, not numeric)
+    # string ids through the ladder too (comparable, not numeric), and
+    # a half-NULL pair
     spairs = spark.createDataFrame(
-        [("b", "a"), ("c", "b"), ("y", "x")], ["id_a", "id_b"]
+        [("b", "a"), ("c", "b"), ("y", "x"), (None, "q"), ("r", None)],
+        "id_a string, id_b string",
     ).repartition(8)
     w2 = {r.doc_id: r.cluster_id
-          for r in dedup.cluster_pairs(spairs, impl="iterate").collect()}
-    g2 = {r.doc_id: r.cluster_id
-          for r in dedup.cluster_pairs(spairs, impl="contract", fan_in=2).collect()}
-    assert g2 == w2 == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-    with pytest.raises(ValueError, match="impl"):
-        dedup.cluster_pairs(spairs, impl="nope")
-    with pytest.raises(ValueError, match="fan_in"):
-        dedup.cluster_pairs(spairs, impl="contract", fan_in=1)
+          for r in jvm_reference.cluster_pairs(spairs).collect()}
+    monkeypatch.setattr(dedup, "_FAN_IN", 2)
+    g2 = {r.doc_id: r.cluster_id for r in dedup.cluster_pairs(spairs).collect()}
+    assert g2 == {k: v for k, v in w2.items() if k is not None}
+    assert g2 == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "q": "q", "r": "r"}
 
 
 def test_null_embeddings_survive_pandas_kernels(spark):
@@ -586,14 +585,26 @@ def test_lsh_cosine_near_pairs_subset_and_recall(spark, sf_dir):
     assert recall >= 0.8, f"LSH near-pair recall too low: {recall}"
 
 
-def test_lsh_verify_kernel_matches_jvm(spark):
+def _lsh_over_budget(monkeypatch, df, **kw):
+    """lsh_cosine_near_pairs with its verify matrix over budget, so the
+    JVM verify join answers."""
+    from datapipelineetl_spark.operators import similarity as sim
+
+    with monkeypatch.context() as mp:
+        mp.setattr(sim, "_LSH_VERIFY_BYTES", 0)
+        out = sim.lsh_cosine_near_pairs(df, **kw)
+        assert "_cos(" not in out._jdf.queryExecution().optimizedPlan().toString()
+        return [_nan_key(r) for r in out.collect()]
+
+
+def test_lsh_verify_kernel_matches_jvm(spark, monkeypatch):
     """Round 17: the broadcast-matrix verify kernel must emit the SAME
-    rows with the SAME rounded cosines as the JVM fold path (exact ==,
-    no tolerance — the kernel replays dot()/norm()'s sequential IEEE
-    add order), and the pre-round doubles of _lsh_verify_broadcast must
-    be bit-identical to the JVM cosine on every candidate pair,
-    including NULL vectors, NULL-element vectors and the zero-norm
-    0/0 → NaN case."""
+    rows with the SAME rounded cosines as the JVM join it falls back to
+    over budget (exact ==, no tolerance — the kernel replays
+    dot()/norm()'s sequential IEEE add order), and the pre-round doubles
+    of _lsh_verify_broadcast must be bit-identical to the JVM cosine on
+    every candidate pair, including NULL vectors, NULL-element vectors
+    and the zero-norm 0/0 → NaN case."""
     import math
 
     from datapipelineetl_spark.operators import similarity as sim
@@ -606,13 +617,10 @@ def test_lsh_verify_kernel_matches_jvm(spark):
     rows += [(91, None), (92, [1.0, None] + [0.5] * 6)]
     df = spark.createDataFrame(rows, schema)
     kw = dict(threshold=0.3, num_planes=2, num_tables=3, dim=8)
-    jvm = sorted(
-        tuple(r) for r in sim.lsh_cosine_near_pairs(df, verify_impl="jvm", **kw).collect()
-    )
-    ker = sorted(
-        tuple(r)
-        for r in sim.lsh_cosine_near_pairs(df, verify_impl="kernel", **kw).collect()
-    )
+    jvm = sorted(_lsh_over_budget(monkeypatch, df, **kw))
+    default = sim.lsh_cosine_near_pairs(df, **kw)
+    assert "_cos(" in default._jdf.queryExecution().optimizedPlan().toString()
+    ker = sorted(_nan_key(r) for r in default.collect())
     assert jvm == ker and len(ker) > 10
     # pre-round doubles, pair by pair (incl. pairs the threshold drops)
     vec = F.col("embedding").cast("array<double>")
@@ -622,7 +630,7 @@ def test_lsh_verify_kernel_matches_jvm(spark):
     )
     kdoubles = {
         (r.id_a, r.id_b): r["__cos"]
-        for r in sim._lsh_verify_broadcast(cand, df, "vec_id", vec).collect()
+        for r in sim._lsh_verify_broadcast(cand, df, "vec_id", vec, 8).collect()
     }
     v = df.select(F.col("vec_id"), vec.alias("__v"))
     jdoubles = {
@@ -656,7 +664,7 @@ def test_lsh_verify_kernel_matches_jvm(spark):
     zvec = F.col("embedding").cast("array<double>")
     got = {
         (r.id_a, r.id_b): r["__cos"]
-        for r in sim._lsh_verify_broadcast(zcand, zdf, "vec_id", zvec).collect()
+        for r in sim._lsh_verify_broadcast(zcand, zdf, "vec_id", zvec, 4).collect()
     }
     assert got[(1, 2)] is None or math.isnan(got[(1, 2)])
     assert got[(2, 3)] == 1.0
@@ -667,7 +675,7 @@ def _nan_key(row):
     return tuple("nan" if isinstance(v, float) and v != v else v for v in row)
 
 
-def test_lsh_verify_nan_vectors_match_jvm(spark):
+def test_lsh_verify_nan_vectors_match_jvm(spark, monkeypatch):
     """Vectors with NaN or inf elements: the JVM fold scores such a pair
     NaN, and Spark's NaN-greatest comparison passes it through the
     threshold — the kernel must emit the same rows (it used to turn the
@@ -679,21 +687,11 @@ def test_lsh_verify_nan_vectors_match_jvm(spark):
         (i, [float((i * 13 + j * 7) % 11) / 3.0 - 1.5 for j in range(8)])
         for i in range(30)
     ]
-    # built by SQL, not createDataFrame: the test session routes lists
-    # through pandas/Arrow, which reads a NaN element as NULL
     odd = [(93, [float("nan")] + [0.5] * 7), (94, [float("inf")] + [-0.25] * 7)]
-    df = spark.createDataFrame(rows, schema)
-    for i, v in odd:
-        df = df.unionByName(
-            spark.range(1).selectExpr(f"{i}L AS vec_id", f"{sim._sql_doubles(v)} AS embedding")
-        )
+    df = spark.createDataFrame(rows + odd, schema)
     kw = dict(threshold=0.3, num_planes=2, num_tables=3, dim=8)
-    jvm = sorted(
-        _nan_key(r) for r in sim.lsh_cosine_near_pairs(df, verify_impl="jvm", **kw).collect()
-    )
-    ker = sorted(
-        _nan_key(r) for r in sim.lsh_cosine_near_pairs(df, verify_impl="kernel", **kw).collect()
-    )
+    jvm = sorted(_lsh_over_budget(monkeypatch, df, **kw))
+    ker = sorted(_nan_key(r) for r in sim.lsh_cosine_near_pairs(df, **kw).collect())
     assert jvm == ker
     assert any(93 in r[:2] and r[2] == "nan" for r in ker)
     assert any(94 in r[:2] and r[2] == "nan" for r in ker)
@@ -715,7 +713,7 @@ def test_lsh_verify_absent_ids_score_null(spark):
     cand = spark.createDataFrame(pairs, "id_a long, id_b long")
     got = {
         (r.id_a, r.id_b): r["__cos"]
-        for r in sim._lsh_verify_broadcast(cand, df, "vec_id", vec).collect()
+        for r in sim._lsh_verify_broadcast(cand, df, "vec_id", vec, 3).collect()
     }
     v = df.select(F.col("vec_id"), vec.alias("__v"))
     jvm = {
@@ -734,21 +732,32 @@ def test_lsh_verify_absent_ids_score_null(spark):
     scand = spark.createDataFrame([("d2", "d4"), ("d2", "zz")], "id_a string, id_b string")
     sgot = {
         (r.id_a, r.id_b): r["__cos"]
-        for r in sim._lsh_verify_broadcast(scand, sdf, "vec_id", vec).collect()
+        for r in sim._lsh_verify_broadcast(scand, sdf, "vec_id", vec, 3).collect()
     }
     assert math.isclose(sgot[("d2", "d4")], jvm[(2, 4)], rel_tol=0, abs_tol=0)
     assert sgot[("d2", "zz")] is None
 
 
-def test_unknown_impl_values_raise(spark):
-    """A misspelled implementation switch fails fast instead of silently
-    taking the other branch."""
-    df = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="verify_impl"):
-        similarity.lsh_cosine_near_pairs(df, 0.5, dim=2, verify_impl="JVM")
-    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="impl"):
-        text.encode_tokens(docs, docs, impl="locale")
+def test_lsh_verify_repeated_ids_take_the_join(spark, monkeypatch):
+    """A repeated vector id sends the verify to the JVM join, which
+    scores every row of that id (the matrix would keep one): the
+    default rows equal the over-budget rows, and the repeated id's two
+    vectors both reach the output."""
+    from datapipelineetl_spark.operators import similarity as sim
+
+    rows = [(i, [float((i * 13 + j * 7) % 11) / 3.0 - 1.5 for j in range(8)])
+            for i in range(30)]
+    rows += [(3, [v + 0.01 for v in rows[3][1]]), (None, rows[4][1])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    vec = F.col("embedding").cast("array<double>")
+    cand = spark.createDataFrame([(1, 3)], "id_a long, id_b long")
+    assert sim._lsh_verify_broadcast(cand, df, "vec_id", vec, 8) is None
+    kw = dict(threshold=0.3, num_planes=2, num_tables=3, dim=8)
+    got = sorted(_nan_key(r) for r in sim.lsh_cosine_near_pairs(df, **kw).collect())
+    assert got == sorted(_lsh_over_budget(monkeypatch, df, **kw))
+    twice = [r for r in got if 3 in r[:2]]
+    assert len(twice) > len({r[:2] for r in twice})
+    assert all(None not in r[:2] for r in got)
 
 
 def test_fingerprint_collision_pairs_and_bucket_cap(spark):
@@ -1057,25 +1066,43 @@ def test_build_vocab_and_encode_tokens_round_trip(spark):
         t.encode_tokens(df, v.filter(v.token != "<unk>"))
 
 
-def test_encode_tokens_local_matches_checkpoint(spark):
-    """Round 17: the metadata-sized vocab collect + local-relation join
-    (impl='local', default) must encode identically to the distributed
-    localCheckpoint form — same ids, same order, same empty-doc and OOV
-    handling."""
+def test_encode_tokens_local_matches_checkpoint(spark, monkeypatch):
+    """A vocabulary over ``_VOCAB_ROWS`` is joined distributed from a
+    localCheckpoint instead of the fetched local table, and encodes
+    identically — same ids, same order — on NULL and empty texts, a
+    NULL and a repeated doc id, OOV tokens and a vocab token listed
+    twice; both paths raise for a vocab without <unk>."""
     from datapipelineetl_spark.operators import text as t
 
     df = spark.createDataFrame(
-        [(1, "the cat sat on the mat"), (2, "the dog ran wombat"), (3, ""), (4, None)],
+        [(1, "the cat sat on the mat"), (2, "the dog ran wombat"), (3, ""), (4, None),
+         (None, "the cat"), (5, "dog dog"), (5, "the mat")],
         "doc_id int, text string",
     )
     v = t.build_vocab(df, min_count=2)  # prunes hapax → OOV hits <unk>
-    loc = {r.doc_id: r.input_ids for r in t.encode_tokens(df, v, impl="local").collect()}
-    chk = {
-        r.doc_id: r.input_ids
-        for r in t.encode_tokens(df, v, impl="checkpoint").collect()
-    }
-    assert loc == chk and loc[3] == [] and loc[4] == []
-    assert 1 in loc[2]  # OOV tokens hit <unk> in the local form too
+    twice = v.unionByName(
+        v.filter(F.col("token") == "the").withColumn("token_id", F.lit(99).cast("long")))
+
+    def encode(vocab, budget):
+        with monkeypatch.context() as mp:
+            mp.setattr(t, "_VOCAB_ROWS", budget)
+            out = t.encode_tokens(df, vocab)
+            plan = out._jdf.queryExecution().optimizedPlan().toString()
+            return {r.doc_id: r.input_ids for r in out.collect()}, plan
+
+    for vocab in (v, twice):
+        loc, plan = encode(vocab, t._VOCAB_ROWS)
+        chk, chk_plan = encode(vocab, 1)
+        assert "LocalRelation" in plan and "LogicalRDD" in chk_plan
+        assert loc == chk and loc[3] == [] and loc[4] == []
+        assert 1 in loc[2]  # OOV tokens hit <unk>
+        assert None in loc and len(loc[5]) == (4 if vocab is v else 5)
+    assert loc[1].count(99) == 2  # 'the' fans out to both of its ids
+    for budget in (t._VOCAB_ROWS, 1):
+        with monkeypatch.context() as mp:
+            mp.setattr(t, "_VOCAB_ROWS", budget)
+            with pytest.raises(ValueError, match="unk"):
+                t.encode_tokens(df, v.filter(F.col("token") != "<unk>"))
 
 
 def test_normalize_text_pinned_examples(spark):
@@ -1553,38 +1580,47 @@ def _ref_bpe(texts, n_merges):
     ["répété répété déjà", "naïve café café café"],  # non-ascii chars
     ["x"],                                            # single char + </w>
 ])
-def test_train_bpe_matches_python_reference(spark, corpus, impl):
+def test_train_bpe_matches_python_reference(spark, monkeypatch, corpus, impl):
     """Distributed BPE == the sequential reference, merge for merge and
     symbol for symbol (the tiebreak, the </w> handling, and the
     left-to-right overlap rule all pinned) — for BOTH physical forms
-    (round 16: the single-pass kernel trainer and the per-merge job
-    loop must be indistinguishable in values)."""
+    (the single-pass kernel trainer and, with its word budget forced to
+    0, the per-merge job loop must be indistinguishable in values)."""
     df = spark.createDataFrame([(i, t) for i, t in enumerate(corpus)],
                                ["doc_id", "text"])
-    merges, words = text.train_bpe(df, n_merges=8, impl=impl)
+    if impl == "iterate":
+        monkeypatch.setattr(text, "_BPE_WORDS", 0)
+    merges, words = text.train_bpe(df, n_merges=8)
     ref_merges, ref_syms = _ref_bpe(corpus, 8)
     assert merges == ref_merges
     got_syms = {r.word: list(r.syms) for r in words.collect()}
     assert got_syms == ref_syms
 
 
-def test_train_bpe_kernel_matches_iterate(spark):
-    """Round-16 optimization guard: the kernel trainer's full output
-    (merge table AND final word state) equals the iterative form's on a
-    corpus exercising astral chars, marker-only words, min_pair_count
-    stops, and n_merges=0; invalid impl raises."""
-    corpus = ["😀a 😀a 😀a b", "aa aa ab", "ééé ß ß ß"]
+def test_train_bpe_kernel_matches_iterate(spark, monkeypatch):
+    """A word table over ``_BPE_WORDS`` makes the kernel emit its
+    over-budget marker and the driver run the per-merge loop; the full
+    output (merge table AND final word state) equals the kernel's on a
+    corpus exercising astral chars, marker-only words, NULL and empty
+    texts, repeated words, min_pair_count stops, and n_merges=0."""
+    corpus = ["😀a 😀a 😀a b", "aa aa ab", "ééé ß ß ß", None, "", "aa"]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(corpus)],
-                               ["doc_id", "text"])
+                               "doc_id int, text string")
+
+    def train(nm, mpc, budget):
+        with monkeypatch.context() as mp:
+            mp.setattr(text, "_BPE_WORDS", budget)
+            merges, words = text.train_bpe(df, n_merges=nm, min_pair_count=mpc)
+        plan = words._jdf.queryExecution().optimizedPlan().toString()
+        return merges, {r.word: (r["count"], list(r.syms)) for r in words.collect()}, plan
+
     for nm, mpc in [(0, 1), (3, 1), (6, 2), (12, 4)]:
-        mk, wk = text.train_bpe(df, n_merges=nm, min_pair_count=mpc, impl="kernel")
-        mi, wi = text.train_bpe(df, n_merges=nm, min_pair_count=mpc, impl="iterate")
+        mk, gk, kplan = train(nm, mpc, text._BPE_WORDS)
+        mi, gi, iplan = train(nm, mpc, 2)  # 7 distinct words
+        assert "kind" in kplan and "kind" not in iplan
         assert mk == mi, (nm, mpc)
-        gk = {r.word: (r["count"], list(r.syms)) for r in wk.collect()}
-        gi = {r.word: (r["count"], list(r.syms)) for r in wi.collect()}
         assert gk == gi, (nm, mpc)
-    with pytest.raises(ValueError, match="impl"):
-        text.train_bpe(df, n_merges=1, impl="nope")
+    assert gk["aa"][0] == 3 and "" not in gk
 
 
 def test_bpe_segment_applies_merges_in_order(spark):
@@ -1611,14 +1647,22 @@ def test_bpe_segment_applies_merges_in_order(spark):
 
 
 def test_bpe_segment_kernel_parity(spark):
-    """bpe_segment_kernel == bpe_segment piece-for-piece (the fold form
-    pins the semantics): on a trained table over a real-ish corpus, on
-    NULL/empty/whitespace-only texts, on a merge table with duplicate
-    pairs, and — the case that separates the fold semantics from
-    heap-style lowest-rank-anywhere inference — a later merge
+    """bpe_segment's Arrow kernel == the chained-fold reference
+    (tests/jvm_reference.py) piece-for-piece (the fold form pins the
+    semantics): on the empty table, on a trained table over a real-ish
+    corpus, on NULL/empty/whitespace-only texts, on a merge table with
+    duplicate pairs, and — the case that separates the fold semantics
+    from heap-style lowest-rank-anywhere inference — a later merge
     re-creating an earlier merge's pair string, which NEITHER form may
     go back and merge. Also exercises a multi-thousand-entry table,
     where the chained-fold plan would be impractical."""
+
+    def segment(frame, table, op):
+        return {r.doc_id: r.pieces and list(r.pieces)
+                for r in op(frame, table).collect()}
+
+    ref = jvm_reference.bpe_segment
+
     corpus = ["low low low lower lowest", "low lowest newer wider",
               "new newer newest wide wider widest"]
     rows = [(i, t) for i, t in enumerate(corpus)] + [
@@ -1627,10 +1671,12 @@ def test_bpe_segment_kernel_parity(spark):
         (97, None), (98, ""), (99, " \t\n ")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     merges, _ = text.train_bpe(df, n_merges=10)
-    want = {r.doc_id: r.pieces and list(r.pieces)
-            for r in text.bpe_segment(df, merges).collect()}
-    got = {r.doc_id: r.pieces and list(r.pieces)
-           for r in text.bpe_segment_kernel(df, merges).collect()}
+    for table in ([], merges):
+        plan = text.bpe_segment(df, table)._jdf.queryExecution().optimizedPlan()
+        assert "MapInPandas" in plan.toString()
+    assert segment(df, [], text.bpe_segment) == segment(df, [], ref)
+    want = segment(df, merges, ref)
+    got = segment(df, merges, text.bpe_segment)
     assert got == want
     assert got[97] is None and got[98] == [] and got[99] == []
 
@@ -1639,10 +1685,8 @@ def test_bpe_segment_kernel_parity(spark):
     # revisits merge 0: pieces are [a, bc, </w>], NOT [abc</w>-ish]
     tricky = spark.createDataFrame([(1, "abc")], ["doc_id", "text"])
     path_merges = [("a", "bc", 9), ("b", "c", 9)]
-    want_t = [list(r.pieces) for r in
-              text.bpe_segment(tricky, path_merges).collect()][0]
-    got_t = [list(r.pieces) for r in
-             text.bpe_segment_kernel(tricky, path_merges).collect()][0]
+    want_t = segment(tricky, path_merges, ref)[1]
+    got_t = segment(tricky, path_merges, text.bpe_segment)[1]
     assert got_t == want_t == ["a", "bc", "</w>"]
 
     # duplicate pair entries in the table: both forms apply the pass
@@ -1651,19 +1695,17 @@ def test_bpe_segment_kernel_parity(spark):
     docs = spark.createDataFrame(
         [(i, "a" * n) for i, n in enumerate((1, 2, 3, 4, 5, 6, 7))],
         ["doc_id", "text"])
-    want_d = {r.doc_id: list(r.pieces)
-              for r in text.bpe_segment(docs, dup).collect()}
-    got_d = {r.doc_id: list(r.pieces)
-             for r in text.bpe_segment_kernel(docs, dup).collect()}
+    want_d = segment(docs, dup, ref)
+    got_d = segment(docs, dup, text.bpe_segment)
     assert got_d == want_d
 
     # table-size headroom: 5000 synthetic merges (absent pairs beyond
     # the trained head) — the kernel's per-word cost is rank-dict
     # lookups, not 5000 chained passes; the fold form is NOT run here
-    # (its plan would be the very bottleneck this kernel removes)
+    # (its plan would be the very bottleneck)
     big = list(merges) + [(f"zz{i}", f"qq{i}", 1) for i in range(5000)]
-    got_big = {r.doc_id: r.pieces and list(r.pieces)
-               for r in text.bpe_segment_kernel(df, big).collect()}
+    big_df = text.bpe_segment(df, big)
+    got_big = {r.doc_id: r.pieces and list(r.pieces) for r in big_df.collect()}
     assert got_big == got  # the synthetic tail can never match
 
 
@@ -2040,9 +2082,8 @@ _EDGE_WANT = {
 
 
 def _vector_frame(spark, rows):
-    """(vec_id, embedding) rows built by SQL, not createDataFrame: the
-    test session routes lists through pandas/Arrow, which reads a NaN
-    element as NULL."""
+    """(vec_id, embedding) rows built from SQL literals
+    (``_sql_doubles``), every double bit for bit."""
     out = None
     for i, v in rows:
         row = spark.range(1).selectExpr(
