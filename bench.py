@@ -3,7 +3,11 @@
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
 line: ``{"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}``.
+"queries": {name: sec, ...}, "sf": ..., "master": ..., "cores": ...}``.
+``master`` and ``cores`` (the session's default parallelism) name the
+machine the timings were taken on: the ``EXPECTED_SEC`` pins were
+recorded on ``local[32]``, so an outlier on fewer cores may be the
+machine, not a regression.
 
 Each query is forced end-to-end with the ``noop`` sink (full plan execution,
 no driver-side collect). One warm-up run of the smallest query amortizes JVM
@@ -349,6 +353,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "master": spark.sparkContext.master,
+        "cores": spark.sparkContext.defaultParallelism,
         "outliers": outliers,
     }
     # long-horizon drift line vs the FROZEN round-4 anchor (only

@@ -103,10 +103,38 @@ zero query (cosine)            the Spark plan answers (ANSI raises
                                DIVIDE_BY_ZERO)
 =============================  =========================================
 
-A Python kernel that ``pq_encode`` or ``ivf_assign`` attaches runs in
-one task when the input's plan statistics say it holds at most
-``_ONE_TASK_BYTES`` (8 MiB): ``_one_task`` coalesces it to one
-partition.
+Which path builds an index column. ``pq_encode``, ``ivf_assign`` and
+``lsh_persist_signatures`` over a small materialized frame build on the
+driver; every other frame gets the Spark plan.
+
+- **Eligible frames** (``_frame_rows``). A ``LocalRelation`` or a
+  checkpointed RDD, as for a driver copy, whose columns an Arrow round
+  trip returns bit for bit: integral, float, double, boolean, string,
+  binary, date and decimal columns, and one-level arrays of those.
+  One ``limit(budget + 1)`` Arrow collect fetches every column, within
+  the driver copy's budget (32,768 rows, 64 MiB, at most 256 elements
+  an array cell, at most 2 KiB a string or binary cell). The rows, or
+  the verdict, are kept per DataFrame object; the fits
+  (``_driver_fit_rows``) read the same rows.
+- **The build** (``_driver_build``). The encode and assign steps run
+  their UDF's kernel over the Arrow batches the UDF would see (the
+  partitions, or the one ``_one_task`` coalesces to, ``maxRecordsPerBatch``
+  rows at a time); the signature replays the SQL fold. The result is a
+  ``LocalRelation`` built from Arrow with the schema ``withColumns``
+  would give (an existing column replaced in place), and its table is
+  kept, so the next step of a ``pq_fit`` … ``lsh_persist_signatures``
+  chain reads it without a job: the whole chain costs one fetch.
+- **What keeps the Spark plan.** A frame over budget, not materialized
+  or streaming, with a column of another type, a vector column that
+  is not array<float> / array<double> by its exact name, a vector wider
+  than ``_EXACT_FIT_DIM``, an output name that matches a column of
+  another spelling, or more than 63 hyperplanes. There a Python kernel
+  runs in one task when the input's plan statistics say it holds at
+  most ``_ONE_TASK_BYTES`` (8 MiB): ``_one_task`` coalesces it to one
+  partition. Returning a ``LocalRelation`` from the encode and assign
+  steps alone would cost more than it saves: the optimizer folds the
+  signature columns over a ``LocalRelation`` into one, evaluating every
+  fold interpreted on the driver each time a plan over it is optimized.
 """
 
 from __future__ import annotations
@@ -386,7 +414,9 @@ def _batched_topk(
     pandas NaN crosses Arrow as NULL, so the score column is put back
     to NaN after the pass: no scored row has a NULL input, so a NULL
     score IS a NaN score, and it must rank last as its single-query
-    twin ranks it, not first under ASC NULLS FIRST."""
+    twin ranks it, not first under ASC NULLS FIRST. A NULL id stays
+    NULL: it ranks first among equal scores and an exclusion drops it,
+    as in the single-query operators."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
@@ -398,22 +428,26 @@ def _batched_topk(
             rows, scores, ok = score(pdf)
             if not len(rows):
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)[rows]
+            # a NULL id crosses as NaN (the column turns float64): keep
+            # it NULL, ranked first among equal scores (id ASC NULLS
+            # FIRST), and dropped by an exclusion (NOT id IN (...))
+            id_null = pdf[id_col].isna().to_numpy()[rows]
+            ids = pdf[id_col].fillna(0).to_numpy(dtype=np.int64)[rows]
             if ok is None:
                 ok = np.ones(scores.shape, dtype=bool)
             if exclude_query_ids:
-                ok &= ids[:, None] != qid_arr[None, :]
+                ok &= ~id_null[:, None] & (ids[:, None] != qid_arr[None, :])
             r = _round_half_up_np(scores, round_dp)
             key = r if ascending else -r
             parts = []
             for qi, qid in enumerate(qids):
                 cand = np.flatnonzero(ok[:, qi])
-                top = cand[np.lexsort((ids[cand], key[cand, qi]))[:width]]
+                top = cand[np.lexsort((ids[cand], ~id_null[cand], key[cand, qi]))[:width]]
                 parts.append(
                     pd.DataFrame(
                         {
                             "query_id": np.full(top.size, qid, dtype=np.int32),
-                            id_col: ids[top],
+                            id_col: pd.arrays.IntegerArray(ids[top], id_null[top]),
                             score_col: r[top, qi],
                         }
                     )
@@ -940,24 +974,29 @@ _DRIVER_FIT_ROWS = 32768
 
 
 def _driver_fit_rows(
-    df: DataFrame, vec: Column, id_col: str, k: int, dim: int | None
+    df: DataFrame, vec_col: str, id_col: str, k: int, dim: int | None
 ) -> _FitRows | None:
     """The size probe of ``kmeans``, ``ivf_fit_centroids`` and
-    ``pq_fit``, which also fetches the fit's input: ONE Spark job
-    collects (partition id, id, vector) of at most
-    ``_DRIVER_FIT_ROWS + 1`` non-null vectors over Arrow. The rows come
-    back as ``_FitRows`` when they fit the budget and the fit is on the
-    exact side of ``_exact_fit(k, dim)``; the fit then runs its seeds
-    and every Lloyd iteration on the driver, with the kernels its
-    Spark loop runs. None — run the Spark loop — when the input is
-    over budget, on the scale side, holds a NULL element (``F.avg``
-    skips it per dimension), has vectors of unequal width or of a width
-    other than ``dim``, or has an id column the driver cannot order as
-    Spark does (not integral or string).
+    ``pq_fit``, which also fetches the fit's input: at most
+    ``_DRIVER_FIT_ROWS`` non-null vectors of ``vec_col`` (read as
+    array<double>) with their ids and partitions. The rows come back as
+    ``_FitRows`` when they fit the budget and the fit is on the exact
+    side of ``_exact_fit(k, dim)``; the fit then runs its seeds and
+    every Lloyd iteration on the driver, with the kernels its Spark
+    loop runs. None — run the Spark loop — when the input is over
+    budget, on the scale side, holds a NULL element (``F.avg`` skips it
+    per dimension), has vectors of unequal width or of a width other
+    than ``dim``, or has an id column the driver cannot order as Spark
+    does (not integral or string).
 
-    Vectors wider than the exact side allows come back NULL, so the
-    probe never ships more than the budget's 64 MiB; a ``dim`` already
-    on the scale side skips the probe."""
+    A small materialized frame is read from its driver build fetch
+    (``_frame_rows``), which the encode, assign and sign steps that
+    follow the fit read too. Any other frame costs ONE Spark job: an
+    Arrow collect of (partition id, id, vector) of at most
+    ``_DRIVER_FIT_ROWS + 1`` non-null vectors. Vectors wider than the
+    exact side allows come back NULL, so the probe never ships more
+    than the budget's 64 MiB; a ``dim`` already on the scale side
+    skips the probe."""
     import numpy as np  # noqa: PLC0415
     import pyarrow.compute as pc  # noqa: PLC0415
 
@@ -967,6 +1006,25 @@ def _driver_fit_rows(
     width = min(_EXACT_FIT_DIM, _EXACT_FIT_CELLS // k) if dim is None else dim
     if width < 1 or not _exact_fit(k, width):
         return None
+    rows = _frame_rows(df) if _vector_type(df, vec_col) else None
+    if rows is not None and id_col in rows.t.column_names:
+        v = rows.t.column(vec_col).combine_chunks()
+        keep = v.is_valid()
+        kept = keep.to_numpy(zero_copy_only=False)
+        n = int(kept.sum())
+        if n > _DRIVER_FIT_ROWS:
+            return None
+        # the Spark loop's filter of a LocalRelation folds into a
+        # relation of the kept rows, sliced anew
+        parts = _local_parts(df.sparkSession, n) if rows.local else rows.parts
+        part = np.repeat(np.arange(len(parts)), [hi - lo for lo, hi in parts])
+        if not rows.local:
+            part = part[kept]
+        v = v.filter(keep)
+        if len(v) and pc.max(pc.list_value_length(v)).as_py() > width:
+            return None
+        return _fit_rows(df, part, rows.t.column(id_col).filter(keep), v, dim)
+    vec = F.col(vec_col).cast("array<double>")
     t = _arrow_rows(
         df.filter(vec.isNotNull()).select(
             F.spark_partition_id().alias("p"),
@@ -977,8 +1035,18 @@ def _driver_fit_rows(
     )
     if t is None:
         return None
-    n = t.num_rows
-    v = t.column("v").combine_chunks()
+    return _fit_rows(df, t.column("p").to_numpy(), t.column("i"),
+                     t.column("v").combine_chunks(), dim)
+
+
+def _fit_rows(df: DataFrame, part, ids, v, dim: int | None) -> _FitRows | None:
+    """``_driver_fit_rows``' verdict on fetched rows: ``part`` their
+    partition ids, ``ids`` and ``v`` (Arrow) their ids and non-null
+    vectors."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    n = len(v)
     flat = v.flatten()
     if v.null_count or flat.null_count:
         return None
@@ -986,9 +1054,8 @@ def _driver_fit_rows(
     width = int(lengths[0]) if n else 0
     if (lengths != width).any() or (dim is not None and n and width != dim):
         return None
-    x = flat.to_numpy(zero_copy_only=False).reshape(n, width)
-    part = t.column("p").to_numpy()
-    ids = t.column("i").to_pylist()
+    x = flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(n, width)
+    ids = ids.to_pylist()
     if (part[1:] < part[:-1]).any():  # partition order, row order within
         perm = np.argsort(part, kind="stable")
         x, part, ids = x[perm], part[perm], [ids[i] for i in perm]
@@ -1126,7 +1193,7 @@ def ivf_fit_centroids(
     import numpy as np  # noqa: PLC0415
 
     vec = F.col(vec_col).cast("array<double>")
-    sample = _driver_fit_rows(df, vec, id_col, k_cells, dim)
+    sample = _driver_fit_rows(df, vec_col, id_col, k_cells, dim)
     seeds = _fit_seeds(df, vec, id_col, k_cells, sample)
     if not seeds:
         raise ValueError("cannot infer embedding dim from an empty/null column")
@@ -1245,9 +1312,21 @@ def ivf_assign(
     """Attach each vector's IVF cell id — the persistable narrow column a
     100 TB embedding store would ``partitionBy`` (or bucket by), so a
     probe becomes partition PRUNING instead of a scan. ``metric`` must
-    match the fit (`ivf_fit_centroids`). A NULL vector, or one of
-    another length than the centroids, gets a NULL cell. A small input
-    runs its kernel in one task (``_one_task``)."""
+    match the fit (`ivf_fit_centroids`).
+
+    Path: a small materialized input (``_frame_rows``) is assigned on
+    the driver from one fetch — the same kernel over the same Arrow
+    batches — and comes back as a ``LocalRelation`` with the Spark
+    plan's rows and schema (``_cell_build``); any other input runs the
+    kernel as a pandas UDF, in one task when small (``_one_task``).
+    Either way a NULL vector, or one of another length than the
+    centroids, gets a NULL cell; a NULL or NaN element makes every
+    score NaN, so the cell is 0; ±inf is assigned as the kernel's
+    arithmetic ranks it; ids are not read, so NULL and duplicate ids
+    are assigned like any other row."""
+    built = _cell_build(df, centroids, metric, vec_col, out)
+    if built is not None:
+        return built
     return _one_task(df).withColumn(
         out,
         _cell_assigner(df.sparkSession, centroids, metric)(
@@ -1264,15 +1343,19 @@ _ONE_TASK_BYTES = 8 << 20
 
 
 def _one_task(df: DataFrame) -> DataFrame:
-    """``df`` coalesced to one partition when its optimized plan's
-    ``sizeInBytes`` is at most ``_ONE_TASK_BYTES``, so the Python
-    kernel a caller attaches runs in one task; else ``df``. Spark's
-    estimate only errs high where it guesses (an RDD without statistics
-    reads as huge), so a large input never lands in one task."""
+    """``df`` coalesced to one partition when ``_fits_one_task(df)``, so
+    the Python kernel a caller attaches runs in one task; else ``df``."""
+    return df.coalesce(1) if _fits_one_task(df) else df
+
+
+def _fits_one_task(df: DataFrame) -> bool:
+    """True when ``df`` is not streaming and its optimized plan's
+    ``sizeInBytes`` is at most ``_ONE_TASK_BYTES``. Spark's estimate
+    only errs high where it guesses (an RDD without statistics reads as
+    huge), so a large input never lands in one task."""
     if df.isStreaming:
-        return df
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return df.coalesce(1) if size <= _ONE_TASK_BYTES else df
+        return False
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= _ONE_TASK_BYTES
 
 
 def ivf_assign_fold(
@@ -1525,9 +1608,25 @@ def lsh_persist_signatures(
     Scale: this is the ONE hashing pass over the corpus (the dominant
     sequential-serving cost the round-14 bench measured — 119× when
     amortized away); persist/bucket the output by a signature column
-    and every future probe is narrow-column pruning."""
+    and every future probe is narrow-column pruning.
+
+    Path: a small materialized input (``_frame_rows``) is signed on the
+    driver from one fetch, each dot product the SQL fold replayed term
+    for term, and comes back as a ``LocalRelation`` with the Spark
+    plan's rows and schema (``_sign_build``); ``dim=None`` then reads
+    the first non-null vector's length from the fetched rows instead of
+    a probe job. Any other input gets the ``lsh_signature`` columns, a
+    lazy Spark plan. Either way a NULL vector, a NULL element or a
+    length other than ``dim`` makes every dot product NULL and the
+    signature 0; a NaN dot product (a NaN element, inf·0, inf − inf)
+    sets its bit, as Spark orders NaN above every number; ids are not
+    read, so NULL and duplicate ids are signed like any other row."""
     if num_tables < 1:
         raise ValueError(f"num_tables must be >= 1, got {num_tables}")
+    cols = [f"{prefix}_{t}" for t in range(num_tables)]
+    built = _sign_build(df, num_planes, seed, vec_col, cols, dim)
+    if built is not None:
+        return built, cols
     if dim is None:
         row = (  # one row
             df.filter(F.col(vec_col).isNotNull())
@@ -1537,7 +1636,6 @@ def lsh_persist_signatures(
         if row is None:
             raise ValueError(f"no non-null {vec_col} rows to derive dim from")
         dim = int(row[0])
-    cols = [f"{prefix}_{t}" for t in range(num_tables)]
     out = df.withColumns(
         {
             col: lsh_signature(vec_col, _hyperplanes(num_planes, dim, seed + 1000003 * t))
@@ -1734,7 +1832,7 @@ def _kmeans(df: DataFrame, k: int, iters: int, id_col: str, vec_col: str,
     import numpy as np  # noqa: PLC0415
 
     vec = F.col(vec_col).cast("array<double>")
-    sample = _driver_fit_rows(df, vec, id_col, k, None)
+    sample = _driver_fit_rows(df, vec_col, id_col, k, None)
     seeds = _fit_seeds(df, vec, id_col, k, sample)
     if len(seeds) < k:
         raise ValueError(f"need >= {k} non-null vectors, got {len(seeds)}")
@@ -2293,7 +2391,7 @@ def pq_fit(
     if m < 1 or k_sub < 1 or iters < 0:
         raise ValueError(f"need m, k_sub >= 1 and iters >= 0, got {m}, {k_sub}, {iters}")
     vec = F.col(vec_col).cast("array<double>")
-    sample = _driver_fit_rows(df, vec, id_col, k_sub, dim)
+    sample = _driver_fit_rows(df, vec_col, id_col, k_sub, dim)
     seeds = _fit_seeds(df, vec, id_col, k_sub, sample)
     if not seeds:
         raise ValueError("cannot infer embedding dim from an empty/null column")
@@ -2380,10 +2478,21 @@ def pq_encode(
     One Arrow-batched kernel encodes all subspaces, picked by
     ``_exact_fit(k_sub, dim)`` (k_sub × dim ≤ 4096, dim ≤ 256) read
     from the codebooks, so a fit and its encode take the same side.
-    NULL vectors, and vectors of another length than the codebooks',
-    get NULL codes. A small input runs its kernel in one task
-    (``_one_task``).
+
+    Path: a small materialized input (``_frame_rows``) is encoded on
+    the driver from one fetch — the same kernel over the same Arrow
+    batches — and comes back as a ``LocalRelation`` with the Spark
+    plan's rows and schema (``_pq_build``); any other input runs the
+    kernel as a pandas UDF, in one task when small (``_one_task``).
+    Either way a NULL vector, or one of another length than the
+    codebooks', gets a NULL code; a NULL or NaN element makes every
+    distance of its subspace NaN, so that subspace codes 0; ±inf codes
+    as the kernel's arithmetic ranks it; ids are not read, so NULL and
+    duplicate ids are encoded like any other row.
     """
+    built = _pq_build(df, codebooks, vec_col, out)
+    if built is not None:
+        return built
     vec = F.col(vec_col).cast("array<double>")
     return _one_task(df).withColumn(out, _pq_codes_udf(codebooks)(vec))
 
@@ -2405,14 +2514,11 @@ def _pq_codes_udf(codebooks: list[list[list[float]]]):
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
     mats, norms = _pq_kernel_args(codebooks)
-    dim = len(mats) * mats[0].shape[1]
 
     def _encode(vecs):
-        x, null, length = _pad_rows(vecs, dim)
-        mask = null | (length != dim)
-        codes = _pq_codes(x, mats, norms)
+        codes, mask = _pq_batch(vecs, mats, norms)
         return pd.Series(
-            [None if mask[i] else codes[i].tolist() for i in range(len(x))]
+            [None if mask[i] else codes[i].tolist() for i in range(len(codes))]
         )
 
     udf = pandas_udf(_encode, "array<int>")
@@ -2428,6 +2534,15 @@ def _pq_codes_udf(codebooks: list[list[list[float]]]):
     # fixture is k excluded ids and at scale is irrelevant — persisted
     # stores carry codes as real columns with no UDF in the plan.
     return udf.asNondeterministic()
+
+
+def _pq_batch(vecs, mats, norms):
+    """One Arrow batch of vectors → (codes, mask): ``_pq_codes`` of the
+    (batch × dim) matrix, and True where the code is NULL — a NULL
+    vector or one of another length than the codebooks'."""
+    dim = len(mats) * mats[0].shape[1]
+    x, null, length = _pad_rows(vecs, dim)
+    return _pq_codes(x, mats, norms), null | (length != dim)
 
 
 def _pq_kernel_args(codebooks):
@@ -3205,18 +3320,19 @@ _DRIVER_TOPK_BYTES = 64 << 20
 _driver_copies: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def _materialized(df: DataFrame) -> bool:
-    """True when ``df``'s rows cannot change between two reads: its
-    optimized plan is a ``LocalRelation``, or a ``LogicalRDD`` whose
-    RDD is checkpointed (``localCheckpoint`` / ``checkpoint``). A file
-    scan, a cached relation or a store under a filter is not."""
+def _materialized(df: DataFrame) -> str:
+    """The kind of ``df``'s optimized plan — "LocalRelation", or
+    "LogicalRDD" when its RDD is checkpointed (``localCheckpoint`` /
+    ``checkpoint``) — when its rows cannot change between two reads,
+    else "". A file scan, a cached relation, a store under a filter and
+    a streaming frame are not."""
     if df.isStreaming:
-        return False
+        return ""
     plan = df._jdf.queryExecution().optimizedPlan()
     kind = plan.getClass().getSimpleName()
-    return kind == "LocalRelation" or (
-        kind == "LogicalRDD" and plan.rdd().isCheckpointed()
-    )
+    if kind == "LocalRelation" or (kind == "LogicalRDD" and plan.rdd().isCheckpointed()):
+        return kind
+    return ""
 
 
 def _driver_copy(df: DataFrame, id_col: str, vec_col: str | None,
@@ -3262,6 +3378,36 @@ def _list_matrix(arr, dtype):
     return values, missing, null, length
 
 
+def _vector_matrix(arr):
+    """An Arrow list array of vectors as (x, null, length, folds): the
+    float64 matrix of ``_list_matrix``, its NULL-list mask and lengths,
+    and True where a SQL fold over the vector is not NULL — the vector
+    is not NULL and holds no NULL element."""
+    import numpy as np  # noqa: PLC0415
+
+    x, missing, null, length = _list_matrix(arr, np.float64)
+    holes = (missing & (np.arange(x.shape[1])[None, :] < length[:, None])).any(axis=1)
+    return x, null, length, ~null & ~holes
+
+
+def _sql_fold(x, folds, length, q, term):
+    """The SQL ``aggregate(zip_with(v, q, term), 0D, +)`` of each row
+    ``v`` of ``x`` (``_vector_matrix``): a sequential left fold from
+    0.0, term for term, so the sums are the JVM's bits. NaN where the
+    fold is NULL (a NULL vector or element, or ``v`` and ``q`` of
+    unequal length — zip_with pads with NULL), with the NULL mask."""
+    import numpy as np  # noqa: PLC0415
+
+    null = ~folds | (length != len(q))
+    acc = np.zeros(len(x))
+    if len(q) <= x.shape[1]:
+        with np.errstate(all="ignore"):
+            for i, qi in enumerate(q):
+                acc = acc + term(x[:, i], qi)
+    acc[null] = np.nan
+    return acc, null
+
+
 _INT_MAX = (1 << 31) - 1
 
 
@@ -3277,11 +3423,9 @@ class _DriverCopy:
 
     @staticmethod
     def fetch(df, id_col, vec_col, codes_col, ints) -> _DriverCopy | None:
-        """ONE Spark job: at most ``_DRIVER_TOPK_ROWS + 1`` rows of the
-        columns read. None when a column has a type the copy does not
-        replay, or the rows are over budget."""
-        import pyarrow.compute as pc  # noqa: PLC0415
-
+        """ONE Spark job: ``_fetch_rows`` of the columns read. None when
+        a column has a type the copy does not replay, or the rows are
+        over budget."""
         read = [c for c in (id_col, vec_col, codes_col, *ints) if c]
         if any(c not in df.columns for c in read):
             return None  # a name Spark resolves case-insensitively
@@ -3294,39 +3438,21 @@ class _DriverCopy:
             return None
         if codes_col and names[codes_col] != "array<int>":
             return None
-        arrays = [c for c in (vec_col, codes_col) if c]
-        cols = [F.col(_sql_col(id_col))]
-        cols += [F.when(F.size(F.col(_sql_col(c))) <= _EXACT_FIT_DIM, F.col(_sql_col(c)))
-                 for c in arrays]
-        cols += [F.col(_sql_col(c)) for c in ints]
-        wide = " OR ".join(
-            f"coalesce(size({_sql_col(c)}) > {_EXACT_FIT_DIM}, false)" for c in arrays
-        )
-        t = _arrow_rows(
-            df.select(*[c.alias(f"c{i}") for i, c in enumerate(cols)],
-                      F.expr(wide or "false").alias("wide")),
-            _DRIVER_TOPK_ROWS,
-        )
-        if t is None or t.nbytes > _DRIVER_TOPK_BYTES or pc.any(t.column("wide")).as_py():
-            return None
-        return _DriverCopy(t, df.schema[id_col], vec_col, codes_col, ints)
+        rows = _fetch_rows(df.select(*[F.col(_sql_col(c)) for c in read]), "")
+        return None if rows is None else _DriverCopy(rows.t, df.schema[id_col], vec_col,
+                                                     codes_col, ints)
 
     def __init__(self, t, id_field, vec_col, codes_col, ints):
         import numpy as np  # noqa: PLC0415
 
-        col = iter(t.column(i).combine_chunks() for i in range(t.num_columns - 1))
+        col = iter(t.column(i).combine_chunks() for i in range(t.num_columns))
         self.n = t.num_rows
         self.id_field = id_field
         self.ids = next(col)
         self.id_null = self.ids.is_null().to_numpy(zero_copy_only=False)
         self.id64 = self.ids.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
         if vec_col:
-            self.x, missing, self.vec_null, self.length = _list_matrix(next(col), np.float64)
-            # a NULL element inside the list makes every fold over it NULL
-            self.holes = (
-                missing & (np.arange(self.x.shape[1])[None, :] < self.length[:, None])
-            ).any(axis=1)
-            self.folds = ~self.vec_null & ~self.holes
+            self.x, self.vec_null, self.length, self.folds = _vector_matrix(next(col))
             # ‖v‖², the query-independent half of the cosine: padding
             # zeros add +0.0 to a sum that started at +0.0
             with np.errstate(all="ignore"):
@@ -3362,21 +3488,8 @@ class _DriverCopy:
         return keep
 
     def _fold(self, rows, q, term):
-        """The SQL ``aggregate(zip_with(v, q, term), 0D, +)`` of each
-        row in ``rows``: NaN where it is NULL (a NULL element, or ``v``
-        and ``q`` of unequal length — zip_with pads with NULL), with the
-        NULL mask."""
-        import numpy as np  # noqa: PLC0415
-
-        null = ~self.folds[rows] | (self.length[rows] != len(q))
-        acc = np.zeros(len(rows))
-        if len(q) <= self.x.shape[1]:
-            x = self.x[rows]
-            with np.errstate(all="ignore"):
-                for i, qi in enumerate(q):
-                    acc = acc + term(x[:, i], qi)
-        acc[null] = np.nan
-        return acc, null
+        """``_sql_fold`` of each row in ``rows``."""
+        return _sql_fold(self.x[rows], self.folds[rows], self.length[rows], q, term)
 
     def cosine(self, keep, q):
         """``cosine_topk``'s candidates and scores: rows with
@@ -3541,3 +3654,240 @@ def _driver_topk(df, query_vec, k, id_col, exclude_ids, score, vec_col,
     )
     schema = T.StructType([copy.id_field, *[T.StructField(c, T.DoubleType()) for c in cols]])
     return df.sparkSession.createDataFrame(table, schema)
+
+
+# =============================================================================
+# Driver builds — encode, assign and sign a small materialized frame
+# =============================================================================
+
+# Column types an Arrow round trip (toArrow, then createDataFrame from
+# the table) returns bit for bit, alone or as a one-level array's
+# elements; a frame with a column of any other type keeps the Spark plan
+_ROUND_TRIP_TYPES = (*_INTEGRAL_TYPES, "float", "double", "boolean", "string", "binary",
+                     "date")
+# A string or binary cell of more bytes than this (64 MiB over 32,768
+# rows) makes a frame over budget before its fetch ships it
+_BUILD_CELL_BYTES = _DRIVER_TOPK_BYTES // _DRIVER_TOPK_ROWS
+
+# {frame: _Rows, or None (not materialized, over budget, or a column the
+# round trip does not keep)}, keyed by the caller's DataFrame object as
+# _driver_copies is; a frame a driver build returns is entered with the
+# table it was built from, so the next step of a chain fetches nothing
+_driver_rows: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+class _Rows:
+    """Every column of a small materialized frame on the driver: ``t``,
+    a ``pyarrow.Table`` in scan order, ``parts``, the (start, stop) rows
+    of each of the frame's partitions, and ``local``, True for a
+    ``LocalRelation`` (whose filter folds into a relation that slices
+    its rows anew)."""
+
+    def __init__(self, t, parts, local: bool):
+        self.t, self.parts, self.local = t, parts, local
+
+
+def _frame_rows(df: DataFrame) -> _Rows | None:
+    """``df``'s rows on the driver, or None: the Spark plan runs. A
+    materialized frame (``_materialized``) is fetched by its first
+    caller in ONE ``limit(budget + 1)`` Arrow collect of every column,
+    within the driver copy's budget (``_DRIVER_TOPK_ROWS`` rows,
+    ``_DRIVER_TOPK_BYTES``, ``_EXACT_FIT_DIM`` elements per array cell,
+    ``_BUILD_CELL_BYTES`` per string or binary cell); the rows, or the
+    verdict, are kept for every later caller. A row budget below 1
+    turns the path off."""
+    if _DRIVER_TOPK_ROWS < 1:
+        return None
+    if df not in _driver_rows:
+        kind = _materialized(df)
+        _driver_rows[df] = _fetch_rows(df, kind) if kind else None
+    return _driver_rows[df]
+
+
+def _fetch_rows(df: DataFrame, kind: str) -> _Rows | None:
+    """ONE Spark job: every column of ``df``, its partition ids and a
+    flag for a cell over the per-cell budget, which comes back NULL.
+    None when a column's type or name is one the round trip does not
+    keep (two names Spark resolves alike), or the rows are over
+    budget."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow.compute as pc  # noqa: PLC0415
+
+    names = df.columns
+    if len({n.lower() for n in names}) < len(names):
+        return None
+    cols, wide = [], ["false"]
+    for i, f in enumerate(df.schema.fields):
+        typ = f.dataType.simpleString()
+        array = typ.startswith("array<")
+        elem = typ[len("array<"):-1] if array else typ
+        if elem not in _ROUND_TRIP_TYPES and not elem.startswith("decimal("):
+            return None
+        c = _sql_col(f.name)
+        if array:
+            over = f"size({c}) > {_EXACT_FIT_DIM}"
+        elif typ in ("string", "binary"):
+            over = f"octet_length({c}) > {_BUILD_CELL_BYTES}"
+        else:
+            cols.append(F.col(c).alias(f"c{i}"))
+            continue
+        cols.append(F.when(~F.expr(over), F.col(c)).alias(f"c{i}"))
+        wide.append(f"coalesce({over}, false)")
+    t = _arrow_rows(
+        df.select(*cols, F.spark_partition_id().alias("p"),
+                  F.expr(" OR ".join(wide)).alias("wide")),
+        _DRIVER_TOPK_ROWS,
+    )
+    if t is None or t.nbytes > _DRIVER_TOPK_BYTES or pc.any(t.column("wide")).as_py():
+        return None
+    t, part = t.select(range(len(names))).rename_columns(names).combine_chunks(), t.column("p")
+    if kind == "LocalRelation":
+        # the optimizer folds spark_partition_id() over a LocalRelation to 0
+        return _Rows(t, _local_parts(df.sparkSession, t.num_rows), True)
+    bounds = [0, *(np.flatnonzero(np.diff(part.to_numpy())) + 1).tolist(), t.num_rows]
+    return _Rows(t, list(zip(bounds[:-1], bounds[1:])), False)
+
+
+def _local_parts(spark: SparkSession, n: int) -> list[tuple[int, int]]:
+    """The (start, stop) rows of each partition of a ``LocalRelation``
+    of ``n`` rows: its scan slices them into min(n, leaf parallelism)
+    partitions as ``parallelize`` does."""
+    conf = spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+    p = min(max(n, 1), int(conf) if conf else spark.sparkContext.defaultParallelism)
+    return [(i * n // p, (i + 1) * n // p) for i in range(p)]
+
+
+def _vector_type(df: DataFrame, vec_col: str) -> bool:
+    """True when ``vec_col`` is a column of ``df`` by its exact name, of
+    type array<float> or array<double>: the vectors the driver path
+    reads as Spark's ``CAST(… AS ARRAY<DOUBLE>)`` reads them."""
+    return vec_col in df.columns and df.schema[vec_col].dataType.simpleString() in (
+        "array<float>", "array<double>")
+
+
+def _udf_batches(df: DataFrame, rows: _Rows) -> list[tuple[int, int]]:
+    """The (start, stop) rows of each Arrow batch a scalar pandas UDF
+    attached to ``_one_task(df)`` sees: ``maxRecordsPerBatch`` rows at
+    a time within each partition — or within the one partition
+    ``_one_task`` coalesces the frame to — so a BLAS kernel sums each
+    row as a worker would. An empty frame is one empty batch."""
+    n = rows.t.num_rows
+    parts = [(0, n)] if _fits_one_task(df) else rows.parts
+    b = int(df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    b = b if b > 0 else max(n, 1)
+    return [(a, min(a + b, hi)) for lo, hi in parts for a in range(lo, hi, b)] or [(0, 0)]
+
+
+def _driver_build(df: DataFrame, vec_col: str, outs: dict, build) -> DataFrame | None:
+    """``df`` with the columns ``outs`` ({name: StructField}) set as
+    ``withColumns`` sets them — a column of the same name replaced in
+    place, a new one appended — from ``build(rows)`` ({name: Arrow
+    array}) over ``df``'s driver rows. The result is a ``LocalRelation``
+    built from Arrow, entered in ``_driver_rows`` with its table, so the
+    next build of a chain reads it without a job. None — the Spark plan
+    builds the columns — when ``vec_col`` is not an array<float> or
+    array<double> column of that exact name, an output name matches a
+    column of another spelling, or ``_frame_rows`` gives no rows."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql import types as T  # noqa: PLC0415
+
+    if not _vector_type(df, vec_col):
+        return None
+    spelled = {c.lower(): c for c in df.columns}
+    if any(spelled.get(o.lower(), o) != o for o in outs):
+        return None
+    rows = _frame_rows(df)
+    if rows is None:
+        return None
+    with np.errstate(all="ignore"):  # NaN rows, as a worker's kernel meets them
+        new = build(rows)
+    fields = [outs.get(f.name, f) for f in df.schema.fields]
+    fields += [f for name, f in outs.items() if name not in df.columns]
+    t = pa.Table.from_arrays(
+        [new[f.name] if f.name in outs else rows.t.column(f.name) for f in fields],
+        names=[f.name for f in fields],
+    )
+    out = df.sparkSession.createDataFrame(t, T.StructType(fields))
+    _driver_rows[out] = _Rows(t, _local_parts(df.sparkSession, t.num_rows), True)
+    return out
+
+
+def _pq_build(df: DataFrame, codebooks, vec_col: str, out: str) -> DataFrame | None:
+    """``pq_encode`` on the driver: ``_pq_batch`` over the batches its
+    UDF sees (``_udf_batches``), or None."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql import types as T  # noqa: PLC0415
+
+    mats, norms = _pq_kernel_args(codebooks)
+
+    def build(rows):
+        vecs = rows.t.column(vec_col).to_numpy()
+        done = [_pq_batch(vecs[a:b], mats, norms) for a, b in _udf_batches(df, rows)]
+        codes = np.concatenate([c for c, _ in done])
+        null = np.concatenate([m for _, m in done])
+        n, m = codes.shape
+        return {out: pa.ListArray.from_arrays(
+            pa.array(np.arange(0, n * m + 1, m, dtype=np.int32)),
+            pa.array(codes.ravel(), type=pa.int32()), mask=pa.array(null))}
+
+    field = T.StructField(out, T.ArrayType(T.IntegerType()))
+    return _driver_build(df, vec_col, {out: field}, build)
+
+
+def _cell_build(df: DataFrame, centroids, metric: str, vec_col: str,
+                out: str) -> DataFrame | None:
+    """``ivf_assign`` on the driver: ``_cell_series`` with
+    ``_cell_kernel`` over the batches its UDF sees, or None."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql import types as T  # noqa: PLC0415
+
+    shape = np.shape(centroids)
+    if len(shape) != 2 or min(shape) < 1:
+        return None  # the Spark path raises, or runs, as it always has
+    kernel, args = _cell_kernel(centroids, "l2" if metric == "l2" else "cosine")
+
+    def build(rows):
+        vecs = rows.t.column(vec_col).to_numpy()
+        return {out: pa.concat_arrays([
+            pa.array(_cell_series(vecs[a:b], shape[1], kernel, *args), type=pa.int32())
+            for a, b in _udf_batches(df, rows)])}
+
+    return _driver_build(df, vec_col, {out: T.StructField(out, T.IntegerType())}, build)
+
+
+def _sign_build(df: DataFrame, num_planes: int, seed: int, vec_col: str,
+                cols: list[str], dim: int | None) -> DataFrame | None:
+    """``lsh_persist_signatures`` on the driver: each plane's dot
+    product is ``_sql_fold`` — ``lsh_signature``'s SQL fold term for
+    term — and its bit is set where the dot is not NULL and ``>= 0``
+    (Spark ranks NaN above every number, so a NaN dot sets it). None
+    when a bit would not fit a signed long."""
+    import numpy as np  # noqa: PLC0415
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql import types as T  # noqa: PLC0415
+
+    if num_planes > 63:
+        return None
+
+    def build(rows):
+        x, null, length, folds = _vector_matrix(rows.t.column(vec_col).combine_chunks())
+        width = dim
+        if width is None:  # the first non-null vector's length
+            first = np.flatnonzero(~null)
+            if not len(first):
+                raise ValueError(f"no non-null {vec_col} rows to derive dim from")
+            width = int(length[first[0]])
+        sigs = {}
+        for t, col in enumerate(cols):
+            sig = np.zeros(len(x), dtype=np.int64)
+            for p, plane in enumerate(_hyperplanes(num_planes, width, seed + 1000003 * t)):
+                d, dot_null = _sql_fold(x, folds, length, plane, lambda a, b: a * b)
+                sig += np.where(~dot_null & ((d >= 0) | np.isnan(d)), 1 << p, 0)
+            sigs[col] = pa.array(sig)
+        return sigs
+
+    fields = {c: T.StructField(c, T.LongType(), False) for c in cols}
+    return _driver_build(df, vec_col, fields, build)

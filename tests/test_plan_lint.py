@@ -160,7 +160,8 @@ def test_lsh_cosine_near_pairs_single_repartition_exchange(plans):
 @pytest.fixture(scope="module")
 def topk_store(spark):
     """A fitted vector index in the vector_topk request shape: vectors,
-    PQ codes and IVF cells side by side in one checkpointed store."""
+    PQ codes and IVF cells side by side in one checkpointed store, built
+    by the Spark plans (the driver build turned off)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -174,9 +175,11 @@ def topk_store(spark):
                       "embedding": list(rng.normal(size=(n, dim)).astype(np.float32))}),
         schema,
     )
-    books = sim.pq_fit(df, m=4, k_sub=8, iters=1, dim=dim)
-    cents = sim.ivf_fit_centroids(df, k_cells=4, iters=1, dim=dim)
-    store = sim.ivf_assign(sim.pq_encode(df, books), cents).localCheckpoint(eager=True)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(sim, "_DRIVER_TOPK_ROWS", 0)
+        books = sim.pq_fit(df, m=4, k_sub=8, iters=1, dim=dim)
+        cents = sim.ivf_fit_centroids(df, k_cells=4, iters=1, dim=dim)
+        store = sim.ivf_assign(sim.pq_encode(df, books), cents).localCheckpoint(eager=True)
     q = [float(v) for v in rng.normal(size=dim)]
     return store, books, cents, q
 

@@ -1268,7 +1268,7 @@ def test_driver_fit_edge_rows(spark, monkeypatch):
     df = (spark.createDataFrame(rows, _SCHEMA).withColumn("embedding", F.expr(nan_elem))
           .repartition(3).localCheckpoint(eager=True))
     assert similarity._driver_fit_rows(
-        df, F.col("embedding"), "vec_id", 4, None).x.shape == (29, 4)
+        df, "embedding", "vec_id", 4, None).x.shape == (29, 4)
     fits = [
         lambda: similarity.pq_fit(df, m=2, k_sub=4, iters=3),
         lambda: similarity.ivf_fit_centroids(df, k_cells=4, iters=3),
@@ -1304,8 +1304,7 @@ def test_driver_fit_seed_ties_and_fallbacks(spark, monkeypatch):
 
     null_elem = spark.createDataFrame(
         [(0, a), (1, b), (2, [1.0, None]), (3, c)], _SCHEMA)
-    vec = F.col("embedding")
-    assert similarity._driver_fit_rows(null_elem, vec, "vec_id", 2, None) is None
+    assert similarity._driver_fit_rows(null_elem, "embedding", "vec_id", 2, None) is None
     assert similarity.pq_fit(null_elem, m=1, k_sub=2, iters=1) == _spark_loop(
         monkeypatch, lambda: similarity.pq_fit(null_elem, m=1, k_sub=2, iters=1))
 
@@ -1321,12 +1320,14 @@ def test_driver_fit_seed_ties_and_fallbacks(spark, monkeypatch):
 def test_driver_fit_job_counts(spark, monkeypatch):
     """A fit under budget is one Spark job, whatever its iters. Over
     budget it returns the Spark loop's result for at most one job more
-    than the Spark loop alone (the probe)."""
-    df = _random_frame(spark, 200, 8, 4)
+    than the Spark loop alone (the probe). Each fit reads a frame of
+    its own: a later fit of a small checkpointed frame reads the rows
+    the first one fetched, and runs no job."""
+    dfs = {name: _random_frame(spark, 200, 8, 4) for name in ("pq", "ivf", "kmeans")}
     fits = {
-        "pq": lambda: similarity.pq_fit(df, m=2, k_sub=4, iters=3),
-        "ivf": lambda: similarity.ivf_fit_centroids(df, k_cells=4, iters=3),
-        "kmeans": lambda: similarity.kmeans(df, k=4, iters=3),
+        "pq": lambda: similarity.pq_fit(dfs["pq"], m=2, k_sub=4, iters=3),
+        "ivf": lambda: similarity.ivf_fit_centroids(dfs["ivf"], k_cells=4, iters=3),
+        "kmeans": lambda: similarity.kmeans(dfs["kmeans"], k=4, iters=3),
     }
     for name, fit in fits.items():
         _, n = _jobs(spark, fit, f"driver-fit-{name}")

@@ -15,6 +15,7 @@ import re
 import struct
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -321,10 +322,9 @@ def test_batched_rows_match_single_on_edge_store(spark):
     code edges (a NULL element, indexes outside the table) as their
     single-query twins do, with the one difference the module docstring
     states: the batched pass carries no NULL score, so a single-query
-    NULL ADC, ranked first, comes back NaN, ranked last. Rows with a
-    NULL id are left out: the batched kernels read ids as int64."""
-    rows = [r for r in _edge_rows() if r[0] is not None]
-    store = _store(spark, rows)
+    NULL ADC, ranked first, comes back NaN, ranked last. NULL ids come
+    back NULL."""
+    store = _store(spark, _edge_rows())
     books = _books()
     queries = {0: [0.5, -0.25, 1.0, 0.75], 1: [0.25, 0.5, -0.5, 1.0]}
     k = 50
@@ -345,9 +345,10 @@ def test_batched_rows_match_single_on_edge_store(spark):
 
     def ranked(pairs):
         return sorted(((i, NAN if v is None else v) for i, v in pairs),
-                      key=lambda p: (p[1] != p[1], 0.0 if p[1] != p[1] else p[1], p[0]))
+                      key=lambda p: (p[1] != p[1], 0.0 if p[1] != p[1] else p[1],
+                                     p[0] is not None, p[0] or 0))
 
-    edges = {"l2": {101, 102, 107}, "pq": {109, 110, 111, 112, 113},
+    edges = {"l2": {101, 102, 107, None}, "pq": {109, 110, 111, 112, 113, None},
              "ivfpq": {109, 111, 113}, "ivfpq-res": {109, 111, 113}}
     for name, (batched, single) in ops.items():
         got: dict = {}
@@ -378,8 +379,9 @@ def test_ragged_vectors_get_null_codes_and_cells(spark):
 def test_small_input_runs_its_kernel_in_one_task(spark, monkeypatch):
     """pq_encode and ivf_assign (both metrics) coalesce an input whose
     plan statistics fit _ONE_TASK_BYTES to one partition; a larger one
-    keeps its partitions, with the same codes and cells."""
-    import pandas as pd
+    keeps its partitions, with the same codes and cells. The driver
+    build is turned off: these are the Spark plans."""
+    monkeypatch.setattr(sim, "_DRIVER_TOPK_ROWS", 0)
 
     rng = np.random.default_rng(9)
     # from pandas: a LocalRelation, whose size statistics the checkpoint keeps
@@ -404,3 +406,227 @@ def test_small_input_runs_its_kernel_in_one_task(spark, monkeypatch):
         assert out.rdd.getNumPartitions() == 4, name
         assert sorted(map(tuple, out.drop("embedding").collect())) == sorted(
             map(tuple, one[name].drop("embedding").collect())), name
+
+
+# One column of every type the driver build keeps, besides the edge
+# store's own: NULLs, NaN, −0.0, a leap day and non-ASCII text included
+_EXTRA = {
+    "c_tinyint": "CAST(vec_id % 100 AS TINYINT)",
+    "c_smallint": "CAST(vec_id AS SMALLINT)",
+    "c_float": "CAST(vec_id / 3 AS FLOAT)",
+    "c_double": ("CASE WHEN vec_id = 100 THEN double('NaN') WHEN vec_id = 101 THEN -0.0D "
+                 "ELSE vec_id / 7 END"),
+    "c_bool": "vec_id % 2 = 0",
+    "c_string": "CASE WHEN vec_id % 5 = 0 THEN NULL ELSE concat('s', vec_id, 'é') END",
+    "c_binary": "CAST(concat('b', vec_id) AS BINARY)",
+    "c_date": "date_add(DATE'2020-02-28', CAST(vec_id AS INT))",
+    "c_decimal": "CAST(vec_id / 8 AS DECIMAL(12, 3))",
+    "a_float": "CAST(embedding AS ARRAY<FLOAT>)",
+    "a_long": "array(vec_id, NULL)",
+    "a_string": "array(CAST(vec_id AS STRING), NULL)",
+    "a_bool": "array(vec_id > 5, NULL)",
+    "a_binary": "array(CAST(CAST(vec_id AS STRING) AS BINARY))",
+    "a_date": "array(DATE'2024-02-29', NULL)",
+    "a_decimal": "array(CAST(vec_id / 3 AS DECIMAL(9, 4)), NULL)",
+}
+
+
+def _build_frame(spark, kind):
+    """The edge store with the extra columns, as a LocalRelation built
+    from Arrow ("local") or a checkpointed RDD ("checkpoint")."""
+    df = _store(spark, _edge_rows(), checkpoint=False).withColumns(
+        {c: F.expr(e) for c, e in _EXTRA.items()})
+    if kind == "local":
+        return spark.createDataFrame(df.toArrow(), df.schema)
+    return df.repartition(3).localCheckpoint(eager=True)
+
+
+def _deep_bits(v):
+    if isinstance(v, list):
+        return [_deep_bits(x) for x in v]
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v)
+    return _bits(v)
+
+
+def _rows_of(df):
+    """(schema, rows by bit pattern as a multiset) of a frame."""
+    return df.schema, sorted((tuple(_deep_bits(v) for v in r) for r in df.collect()), key=repr)
+
+
+def _built(df) -> bool:
+    """True when ``df`` came from a driver build."""
+    plan = df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+    return sim._driver_rows.get(df) is not None and plan == "LocalRelation"
+
+
+def _builds(frame, books, vec):
+    """Every driver-build shape: new columns and columns that already
+    exist (pq_code, ivf_cell, sig_0 and sig_1), both PQ sides, both IVF
+    metrics, the LSH width given and derived, and the whole chain."""
+    rng = np.random.default_rng(8)
+    scale = [[[float(v) for v in rng.normal(size=DIM // M)] for _ in range(1100)]
+             for _ in range(M)]  # k_sub x dim over 4096: the BLAS side
+    assert not sim._exact_fit(1100, DIM)
+
+    def chain():
+        out = sim.pq_encode(frame, books, vec_col=vec, out="code")
+        out = sim.ivf_assign(out, _CENTS, vec_col=vec, out="cell", metric="l2")
+        return sim.lsh_persist_signatures(out, num_planes=PLANES, num_tables=2,
+                                          vec_col=vec, prefix="s")[0]
+
+    return {
+        "pq-replace": lambda: sim.pq_encode(frame, books, vec_col=vec),
+        "pq-new": lambda: sim.pq_encode(frame, books, vec_col=vec, out="code"),
+        "pq-scale": lambda: sim.pq_encode(frame, scale, vec_col=vec, out="code"),
+        "ivf-cos": lambda: sim.ivf_assign(frame, _CENTS, vec_col=vec),
+        "ivf-l2": lambda: sim.ivf_assign(frame, _CENTS, vec_col=vec, out="cell",
+                                         metric="l2"),
+        "lsh": lambda: sim.lsh_persist_signatures(frame, num_planes=PLANES, num_tables=3,
+                                                  vec_col=vec, prefix="sig", dim=DIM)[0],
+        "lsh-derived": lambda: sim.lsh_persist_signatures(frame, num_planes=5, num_tables=1,
+                                                          vec_col=vec, seed=9)[0],
+        "chain": chain,
+    }
+
+
+@pytest.mark.parametrize("kind, split", [("local", False), ("checkpoint", False),
+                                         ("checkpoint", True)],
+                         ids=["local", "checkpoint", "checkpoint-batches"])
+def test_driver_build_matches_spark_on_edge_frame(spark, monkeypatch, kind, split):
+    """pq_encode, ivf_assign (both metrics) and lsh_persist_signatures
+    over a small materialized frame build on the driver, and return the
+    Spark plan's rows (floats by bit pattern) and schema, nullability
+    included: NULL, NaN, ±inf and −0.0 elements, a NULL vector, a vector
+    of another length, NULL and duplicate ids, extra columns of every
+    type the path keeps, output columns that replace existing ones, and
+    an empty frame. "checkpoint-batches" runs the kernels per partition (the input over
+    the one-task size) in Arrow batches of 7 rows, as the UDFs do."""
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(batch)
+    if split:
+        monkeypatch.setattr(sim, "_ONE_TASK_BYTES", -1)
+        spark.conf.set(batch, "7")
+    try:
+        frame = _build_frame(spark, kind)
+        books = _books()
+        for vec in ("embedding", "a_float"):
+            for name, make in _builds(frame, books, vec).items():
+                got = make()
+                assert _built(got), (vec, name)
+                with monkeypatch.context() as mp:
+                    mp.setattr(sim, "_DRIVER_TOPK_ROWS", 0)
+                    want = make()
+                    assert not _built(want), (vec, name)
+                    want = _rows_of(want)
+                assert _rows_of(got) == want, (vec, name)
+        # an empty frame: no rows, or the Spark plan's error (no width to derive)
+        for name, make in _builds(frame.limit(0), books, "embedding").items():
+            assert _outcome(make) == _spark_side(monkeypatch, make), ("empty", name)
+    finally:
+        spark.conf.set(batch, before)
+
+
+def test_driver_build_keeps_spark_plan(spark, monkeypatch, tmp_path):
+    """An input over the row budget, a Parquet scan, a streaming frame,
+    a vector wider than _EXACT_FIT_DIM, a column type outside the
+    round trip, a vector column of integers and an output name of
+    another spelling keep the Spark plan, with the same rows."""
+    books = _books()
+    frame = _build_frame(spark, "checkpoint")
+
+    def spark_side(fn, df):
+        with monkeypatch.context() as mp:
+            mp.setattr(sim, "_DRIVER_TOPK_ROWS", 0)
+            return _rows_of(fn(df))
+
+    ops = {
+        "pq": lambda df: sim.pq_encode(df, books, out="code"),
+        "ivf": lambda df: sim.ivf_assign(df, _CENTS, out="cell"),
+        "lsh": lambda df: sim.lsh_persist_signatures(df, num_planes=PLANES, dim=DIM)[0],
+    }
+    path = str(tmp_path / "frame")
+    frame.select("vec_id", "embedding").write.parquet(path)
+    wide = spark.createDataFrame(pd.DataFrame({"vec_id": [1, 2], "embedding": [
+        [1.0] * (sim._EXACT_FIT_DIM + 1), [1.0] * DIM]}), "vec_id long, embedding array<double>")
+    others = {
+        "parquet": spark.read.parquet(path),
+        "wide": wide,
+        "map": frame.withColumn("m", F.create_map(F.lit("k"), F.col("vec_id"))),
+        "timestamp": frame.withColumn("t", F.expr("TIMESTAMP'2020-01-01 00:00:00'")),
+        "int-vectors": frame.withColumn("embedding", F.expr("array(1, 2, 3, 4)")),
+        "spelling": frame.withColumns({"CODE": F.lit(1), "CELL": F.lit(1),
+                                       "LSH_SIG_0": F.lit(1)}),
+    }
+    for label, df in others.items():
+        df = df if label in ("parquet", "wide") else df.localCheckpoint(eager=True)
+        for name, op in ops.items():
+            got = op(df)
+            assert not _built(got), (label, name)
+            assert _rows_of(got) == spark_side(op, df), (label, name)
+    monkeypatch.setattr(sim, "_DRIVER_TOPK_ROWS", 10)
+    for name, op in ops.items():
+        got = op(frame)
+        assert not _built(got), ("over budget", name)
+        assert _rows_of(got) == spark_side(op, frame), ("over budget", name)
+    stream = spark.readStream.schema("vec_id long, embedding array<double>").parquet(path)
+    monkeypatch.setattr(sim, "_DRIVER_TOPK_ROWS", 1000)
+    for name, op in ops.items():
+        assert op(stream).isStreaming, name
+    assert sim._driver_rows[stream] is None
+
+
+def test_index_build_job_counts(spark, monkeypatch):
+    """The benchmark's index build at its shape (2,000 x 32 float32 from
+    pandas): pq_fit ... lsh_persist_signatures and the checkpoint run 2
+    Spark jobs (one fetch, the checkpoint) and no Python kernel, where
+    the Spark plans run 3 (two fit fetches, the checkpoint) with an
+    ArrowEvalPython stage; codebooks, centroids and stores are equal."""
+    rng = np.random.default_rng(2)
+    n, dim = 2000, 32
+    x = rng.normal(size=(n, dim)).astype(np.float32)
+    schema = T.StructType([T.StructField("vec_id", T.LongType()),
+                           T.StructField("embedding", T.ArrayType(T.FloatType()))])
+
+    def build():
+        df = spark.createDataFrame(
+            pd.DataFrame({"vec_id": np.arange(n, dtype=np.int64), "embedding": list(x)}), schema)
+        books = sim.pq_fit(df, m=8, k_sub=16, iters=1, dim=dim)
+        cents = sim.ivf_fit_centroids(df, k_cells=8, iters=1, dim=dim)
+        store = sim.ivf_assign(sim.pq_encode(df, books), cents)
+        store, _ = sim.lsh_persist_signatures(store, num_planes=8, num_tables=4, dim=dim)
+        return books, cents, store, store.localCheckpoint(eager=True)
+
+    (books, cents, store, ck), jobs = _jobs(spark, build, "index-build-driver")
+    assert jobs == 2 and _built(store)
+    plan = store._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan
+    with monkeypatch.context() as mp:
+        mp.setattr(sim, "_DRIVER_TOPK_ROWS", 0)
+        (books_s, cents_s, store_s, ck_s), jobs_s = _jobs(spark, build, "index-build-spark")
+        assert "ArrowEvalPython" in store_s._jdf.queryExecution().executedPlan().toString()
+    assert jobs_s == 3
+    assert (books, cents) == (books_s, cents_s)
+    assert _rows_of(ck) == _rows_of(ck_s)
+
+
+def test_driver_fit_of_local_relation_matches_spark_loop(spark, monkeypatch):
+    """A fit over a LocalRelation of float64 vectors, NULL vectors
+    among them, replays F.avg over the slices of the relation its
+    filter folds to (spark_partition_id() reads 0 there), so its
+    centroids equal the Spark loop's bit for bit."""
+    rng = np.random.default_rng(12)
+    x = [None if i % 7 == 3 else v for i, v in enumerate(rng.normal(size=(1000, 8)))]
+    df = spark.createDataFrame(pd.DataFrame({"vec_id": np.arange(1000), "embedding": x}),
+                               "vec_id long, embedding array<double>")
+    fits = {
+        "ivf": lambda: sim.ivf_fit_centroids(df, k_cells=6, iters=2, dim=8),
+        "ivf-l2": lambda: sim.ivf_fit_centroids(df, k_cells=6, iters=2, dim=8, metric="l2"),
+        "pq": lambda: sim.pq_fit(df, m=2, k_sub=4, iters=2, dim=8, round_dp=17),
+    }
+    for name, fit in fits.items():
+        got = fit()
+        with monkeypatch.context() as mp:
+            mp.setattr(sim, "_DRIVER_FIT_ROWS", 0)
+            want = fit()
+        assert _deep_bits(got) == _deep_bits(want), name

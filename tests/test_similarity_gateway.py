@@ -63,7 +63,8 @@ def _compilations(spark) -> int:
 @pytest.fixture(scope="module")
 def index(spark):
     """A fitted store in the serving geometry of the vector_topk
-    benchmark: PQ m=8 × 16 codes, 8 IVF cells, 8 planes × 4 LSH tables."""
+    benchmark: PQ m=8 × 16 codes, 8 IVF cells, 8 planes × 4 LSH tables,
+    built by the Spark plans (the driver build turned off)."""
     rng = np.random.default_rng(7)
     x = rng.normal(size=(N, DIM)).astype(np.float32)
     schema = T.StructType([
@@ -74,15 +75,17 @@ def index(spark):
         pd.DataFrame({"vec_id": np.arange(N, dtype=np.int64), "embedding": list(x)}),
         schema,
     )
-    books = sim.pq_fit(df, m=8, k_sub=16, iters=1, dim=DIM)
-    cents = sim.ivf_fit_centroids(df, k_cells=8, iters=1, dim=DIM)
-    store = sim.ivf_assign(sim.pq_encode(df, books), cents)
-    with _gateway_calls(spark) as n:
-        store, sig_cols = sim.lsh_persist_signatures(
-            store, num_planes=8, num_tables=4, dim=DIM
-        )
-    persist_calls = n[0]
-    store = store.localCheckpoint(eager=True)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(sim, "_DRIVER_TOPK_ROWS", 0)
+        books = sim.pq_fit(df, m=8, k_sub=16, iters=1, dim=DIM)
+        cents = sim.ivf_fit_centroids(df, k_cells=8, iters=1, dim=DIM)
+        store = sim.ivf_assign(sim.pq_encode(df, books), cents)
+        with _gateway_calls(spark) as n:
+            store, sig_cols = sim.lsh_persist_signatures(
+                store, num_planes=8, num_tables=4, dim=DIM
+            )
+        persist_calls = n[0]
+        store = store.localCheckpoint(eager=True)
     queries = [[float(v) for v in rng.normal(size=DIM)] for _ in range(3)]
     return {"store": store, "books": books, "cents": cents, "sig_cols": sig_cols,
             "queries": queries, "persist_calls": persist_calls}
