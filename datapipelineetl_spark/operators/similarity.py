@@ -80,6 +80,12 @@ the Spark plan above.
   ``LocalRelation`` built from Arrow (pandas would turn NaN into NULL)
   with the Spark plan's schema; rows tied on score and id may come in
   another order, as Spark's may.
+- **The crossing.** The answer goes to the JVM through
+  ``operators._arrow_frame``: the two ``PythonSQLUtils`` calls
+  ``createDataFrame`` ends in, without the 19 conf, session and class
+  lookups it makes around them, so a request and its ``collect`` cost
+  9 gateway round trips (SCALING.md "Driver answers in one gateway
+  crossing").
 
 Edge values on the driver path, as in the Spark plan:
 
@@ -120,10 +126,11 @@ driver; every other frame gets the Spark plan.
   their UDF's kernel over the Arrow batches the UDF would see (the
   partitions, or the one ``_one_task`` coalesces to, ``maxRecordsPerBatch``
   rows at a time); the signature replays the SQL fold. The result is a
-  ``LocalRelation`` built from Arrow with the schema ``withColumns``
-  would give (an existing column replaced in place), and its table is
-  kept, so the next step of a ``pq_fit`` … ``lsh_persist_signatures``
-  chain reads it without a job: the whole chain costs one fetch.
+  ``LocalRelation`` built from Arrow in the same two-call crossing
+  (``_arrow_frame``), with the schema ``withColumns`` would give (an
+  existing column replaced in place), and its table is kept, so the
+  next step of a ``pq_fit`` … ``lsh_persist_signatures`` chain reads
+  it without a job: the whole chain costs one fetch.
 - **What keeps the Spark plan.** A frame over budget, not materialized
   or streaming, with a column of another type, a vector column that
   is not array<float> / array<double> by its exact name, a vector wider
@@ -139,6 +146,7 @@ driver; every other frame gets the Spark plan.
 
 from __future__ import annotations
 
+import functools
 import math
 import weakref
 from decimal import ROUND_HALF_UP, Context, Decimal
@@ -146,7 +154,7 @@ from decimal import ROUND_HALF_UP, Context, Decimal
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datapipelineetl_spark.operators import _arrow_rows
+from datapipelineetl_spark.operators import _arrow_frame, _arrow_rows
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -911,9 +919,12 @@ def _lsh_signatures_pandas(planes_t: list[list[list[float]]]):
     return pandas_udf(_sig, "array<long>")
 
 
-def _hyperplanes(num_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
+@functools.lru_cache(maxsize=128)
+def _hyperplanes(num_planes: int, dim: int, seed: int = 42) -> tuple[tuple[float, ...], ...]:
     """Deterministic pseudo-random unit hyperplanes (LCG-based — no RNG
-    state, reproducible across runs/engines)."""
+    state, reproducible across runs/engines). Cached: every LSH request
+    asks for the same tables, and tuples keep a caller from changing
+    them."""
     planes = []
     state = seed
     for _ in range(num_planes):
@@ -923,8 +934,8 @@ def _hyperplanes(num_planes: int, dim: int, seed: int = 42) -> list[list[float]]
             # map to (-1, 1)
             row.append(((state >> 11) / float(1 << 53)) * 2.0 - 1.0)
         n = math.sqrt(sum(x * x for x in row)) or 1.0
-        planes.append([x / n for x in row])
-    return planes
+        planes.append(tuple(x / n for x in row))
+    return tuple(planes)
 
 
 def lsh_signature(vec_col: str, planes: list[list[float]]) -> Column:
@@ -3093,7 +3104,10 @@ def _local_vectors(spark: SparkSession, rows: dict[int, list[float]], key: str,
     included — arrives bit for bit, and an action runs no Python worker
     (a list ``createDataFrame`` is a pickled-row RDD)."""
     values = ", ".join(f"({int(i)}, {_sql_doubles(v)})" for i, v in rows.items())
-    return spark.sql(f"SELECT * FROM VALUES {values} AS t({_sql_col(key)}, {_sql_col(vec)})")
+    text = f"SELECT * FROM VALUES {values} AS t({_sql_col(key)}, {_sql_col(vec)})"
+    # the JVM session's sql, not spark.sql: one gateway call, where the
+    # Python wrapper adds a lookup and an empty argument array
+    return DataFrame(spark._jsparkSession.sql(text), spark)
 
 
 def residualize(
@@ -3653,14 +3667,14 @@ def _driver_topk(df, query_vec, k, id_col, exclude_ids, score, vec_col,
         names=[id_col, *cols],
     )
     schema = T.StructType([copy.id_field, *[T.StructField(c, T.DoubleType()) for c in cols]])
-    return df.sparkSession.createDataFrame(table, schema)
+    return _arrow_frame(df.sparkSession, table, schema)
 
 
 # =============================================================================
 # Driver builds — encode, assign and sign a small materialized frame
 # =============================================================================
 
-# Column types an Arrow round trip (toArrow, then createDataFrame from
+# Column types an Arrow round trip (toArrow, then _arrow_frame from
 # the table) returns bit for bit, alone or as a one-level array's
 # elements; a frame with a column of any other type keeps the Spark plan
 _ROUND_TRIP_TYPES = (*_INTEGRAL_TYPES, "float", "double", "boolean", "string", "binary",
@@ -3808,7 +3822,7 @@ def _driver_build(df: DataFrame, vec_col: str, outs: dict, build) -> DataFrame |
         [new[f.name] if f.name in outs else rows.t.column(f.name) for f in fields],
         names=[f.name for f in fields],
     )
-    out = df.sparkSession.createDataFrame(t, T.StructType(fields))
+    out = _arrow_frame(df.sparkSession, t, T.StructType(fields))
     _driver_rows[out] = _Rows(t, _local_parts(df.sparkSession, t.num_rows), True)
     return out
 

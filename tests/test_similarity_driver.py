@@ -6,20 +6,30 @@ reads. These tests pin that the copy answers with the Spark plan's rows
 and schema — every float by bit pattern, rows tied on score and id as a
 multiset — on an edge store, that the first request runs one Spark job
 and later ones none, and that every other store keeps its Spark plan.
-The Spark side is reached by setting the copy's row budget to 0.
+The Spark side is reached by setting the copy's row budget to 0. The
+answers and built frames cross to the JVM through
+``operators._arrow_frame``, which must give what ``createDataFrame``
+gives and leave no temp file behind.
 """
 
 from __future__ import annotations
 
+import os
 import re
 import struct
+import subprocess
+import sys
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datapipelineetl_spark import operators as ops
 from datapipelineetl_spark.operators import similarity as sim
 
 NAN, INF = float("nan"), float("inf")
@@ -630,3 +640,100 @@ def test_driver_fit_of_local_relation_matches_spark_loop(spark, monkeypatch):
             mp.setattr(sim, "_DRIVER_FIT_ROWS", 0)
             want = fit()
         assert _deep_bits(got) == _deep_bits(want), name
+
+
+def _jvm_frame(df):
+    """(optimized plan class, the schema the JVM holds) of a frame."""
+    qe = df._jdf.queryExecution()
+    return (qe.optimizedPlan().getClass().getSimpleName(),
+            T._parse_datatype_json_string(df._jdf.schema().json()))
+
+
+def test_arrow_frame_matches_create_dataframe(spark):
+    """``_arrow_frame`` gives what ``createDataFrame(table, schema)``
+    gives — a LocalRelation, the schema (nullability and field metadata
+    included) and the rows by bit pattern — on a table of every column
+    type a driver build keeps (NULL ids, NaN, ±inf and −0.0 doubles
+    among them), on that table empty, and on a non-nullable id with
+    field metadata."""
+    frame = _build_frame(spark, "checkpoint")
+    kept = {f.dataType.simpleString() for f in frame.schema.fields}
+    kept |= {t[len("array<"):-1] for t in kept if t.startswith("array<")}
+    assert set(sim._ROUND_TRIP_TYPES) <= kept
+    assert any(t.startswith("decimal(") for t in kept)
+    table = frame.toArrow()
+    assert table.column("vec_id").null_count > 0
+    meta = T.StructType([
+        T.StructField("vec_id", T.LongType(), False, {"comment": "row id"}),
+        T.StructField("score", T.DoubleType(), True, {"tags": ["a", "b"]}),
+    ])
+    cases = {
+        "every type": (table, frame.schema),
+        "empty": (table.slice(0, 0), frame.schema),
+        "non-nullable id": (pa.table({"vec_id": [3, 1, 2, 4, 5],
+                                      "score": [NAN, -0.0, INF, -INF, 0.0]}), meta),
+    }
+    for name, (t, schema) in cases.items():
+        got = ops._arrow_frame(spark, t, schema)
+        want = spark.createDataFrame(t, schema)
+        assert _jvm_frame(got) == _jvm_frame(want) == ("LocalRelation", schema), name
+        assert got.schema == schema, name
+        rows = _rows_of(got)
+        assert rows == _rows_of(want) and len(rows[1]) == t.num_rows, name
+
+
+def test_arrow_frame_leaves_no_temp_file(spark, monkeypatch):
+    """The Arrow stream ``_arrow_frame`` writes for the JVM is gone
+    after the call, when it succeeds and when the JVM call raises."""
+    temp = spark.sparkContext._temp_dir
+    before = set(os.listdir(temp))
+    schema = T.StructType([T.StructField("x", T.LongType())])
+    assert ops._arrow_frame(spark, pa.table({"x": [1, 2]}), schema).count() == 2
+    assert set(os.listdir(temp)) == before
+    gateway = spark.sparkContext._gateway
+    read, to_frame = ops._arrow_entry[gateway]
+    monkeypatch.setitem(ops._arrow_entry, gateway,
+                        (lambda path: read(path + ".missing"), to_frame))
+    with pytest.raises(Py4JJavaError):
+        ops._arrow_frame(spark, pa.table({"x": [1, 2]}), schema)
+    assert set(os.listdir(temp)) == before
+
+
+_RESTART = """
+import pyarrow as pa
+from pyspark.sql import SparkSession
+from pyspark.sql import types as T
+
+from datapipelineetl_spark import operators as ops
+
+schema = T.StructType([T.StructField("x", T.LongType())])
+
+
+def answer():
+    spark = (SparkSession.builder.master("local[1]")
+             .config("spark.ui.enabled", "false").getOrCreate())
+    rows = ops._arrow_frame(spark, pa.table({"x": [2, 1]}), schema).collect()
+    return spark, [r.x for r in rows]
+
+
+spark, first = answer()
+entry = ops._arrow_entry[spark.sparkContext._gateway]
+spark.stop()
+spark, second = answer()
+assert ops._arrow_entry[spark.sparkContext._gateway] is entry
+spark.stop()
+print(first, second)
+"""
+
+
+def test_arrow_frame_entry_survives_session_restart():
+    """The JVM entry points ``_arrow_frame`` keeps per gateway still
+    answer after the session is stopped and a new one started in the
+    same JVM (a fresh process, so the suite's session stays up)."""
+    root = Path(__file__).resolve().parent.parent
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        p for p in (str(root), os.environ.get("PYTHONPATH")) if p)}
+    r = subprocess.run([sys.executable, "-c", _RESTART], cwd=root, env=env,
+                       capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert r.stdout.split("\n")[-2] == "[2, 1] [2, 1]", r.stdout

@@ -6,7 +6,9 @@ a fold spelled with Python lambdas, costs one or more gateway round
 trips per element. These tests pin the one-call spelling: the SQL array
 literal round-trips every double exactly, signatures are unchanged, a
 request stays inside a gateway-call budget, and a second request with a
-different query vector reuses the generated code of the first.
+different query vector reuses the generated code of the first. An
+answer or an index column built on the driver crosses back as Arrow in
+two calls, and the request or build step stays inside a budget too.
 """
 
 from __future__ import annotations
@@ -183,6 +185,50 @@ def test_single_query_gateway_budget(spark, monkeypatch, index, kind, budget):
         rows = _request(kind, index, index["queries"][1]).collect()
     assert len(rows) == K
     assert n[0] <= budget, f"{kind}: {n[0]} gateway calls > {budget}"
+
+
+@pytest.mark.parametrize("kind", ["exact", "pq_adc", "ivfpq", "lsh"])
+def test_driver_answer_gateway_budget(spark, index, kind):
+    """One request answered from the driver copy of the small
+    checkpointed index, and its collect, cost at most 9 gateway calls:
+    the answer crosses as Arrow in two (``_arrow_frame``) and the
+    collect takes the other 7. Through ``createDataFrame`` the answer
+    alone took 21, and the request 28."""
+    _request(kind, index, index["queries"][0]).collect()  # warm: the copy's fetch
+    with _gateway_calls(spark) as n:
+        df = _request(kind, index, index["queries"][1])
+        rows = df.collect()
+    assert len(rows) == K
+    assert df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == \
+        "LocalRelation", kind
+    assert n[0] <= 9, f"{kind}: {n[0]} gateway calls > 9"
+
+
+def test_driver_build_gateway_budget(spark):
+    """Each step of a driver-built index (pq_encode, ivf_assign,
+    lsh_persist_signatures over a small frame whose rows the fits
+    fetched) costs at most 16 gateway calls; through
+    ``createDataFrame`` the steps took 30, 32 and 26."""
+    rng = np.random.default_rng(5)
+    x = rng.normal(size=(N, DIM)).astype(np.float32)
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(N, dtype=np.int64), "embedding": list(x)}),
+        "vec_id long, embedding array<float>",
+    )
+    books = sim.pq_fit(df, m=8, k_sub=16, iters=1, dim=DIM)
+    cents = sim.ivf_fit_centroids(df, k_cells=8, iters=1, dim=DIM)
+    steps = {
+        "pq_encode": lambda f: sim.pq_encode(f, books),
+        "ivf_assign": lambda f: sim.ivf_assign(f, cents),
+        "lsh_persist_signatures": lambda f: sim.lsh_persist_signatures(
+            f, num_planes=8, num_tables=4, dim=DIM)[0],
+    }
+    out = df
+    for name, step in steps.items():
+        with _gateway_calls(spark) as n:
+            out = step(out)
+        assert sim._driver_rows.get(out) is not None, name
+        assert n[0] <= 16, f"{name}: {n[0]} gateway calls > 16"
 
 
 def test_lsh_persist_signatures_gateway_budget(index):
